@@ -1,0 +1,12 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+
+  /** Blocks until every queued listener event has been delivered, so the
+    * counters read afterwards are complete. Never called inside a timed op.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
