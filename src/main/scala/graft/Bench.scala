@@ -26,13 +26,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus()
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     // stamped into the outputs: capture at actual run START, not at
     // serialization time (which is the run's END)
     val startedAt = java.time.Instant.now().toString
     val spark = GraftSession
-      .builder(master = Some(s"local[$cpus]"), shufflePartitions = cpus.toInt)
+      .builder(master = Some(s"local[$cpus]"), shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -13,12 +13,26 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Core count from a raw `SPARK_GRAFT_CPUS` value: `default` when
+    * unset, otherwise a positive integer — anything else fails here,
+    * naming the variable, instead of as a bare NumberFormatException
+    * or a `local[0]` master further down.
+    */
+  def parseCpus(raw: Option[String], default: Int): Int = raw.fold(default) { v =>
+    val n = v.toIntOption
+    require(n.exists(_ >= 1), s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+    n.get
+  }
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, or `default` when unset. */
+  def cpus(default: Int = 32): Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), default)
+
   /** Default local parallelism; on a real cluster this is driven by
     * spark-submit and the values below only set sane SQL defaults.
     */
   def builder(
       master: Option[String] = None,
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+      shufflePartitions: Int = cpus()
   ): SparkSession.Builder = {
     // Catalog state (bucketed tables, derby metastore) lives under tmp, not
     // the working directory.
@@ -43,10 +57,10 @@ object GraftSession {
       // 100 TB the advisory target produces the same many-partition
       // plans either way; CPU-dense narrow-byte verify stages keep their
       // parallelism via the explicit verifyFanout repartition, which AQE
-      // never coalesces. Env knob for A/B and for clusters that truly
-      // want parallelism-first.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
+      // never coalesces. Settled by r13's interleaved A/B
+      // (OPTIMIZATION_r13.md, "kill the per-task accumulator tax"):
+      // tasks per query fell 5-20x.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       // Let cache materialization run under full AQE too (upstream flag,
       // default false): without it every persisted frame pins its
       // pre-AQE partition count and all downstream scans of the cache
@@ -55,8 +69,7 @@ object GraftSession {
       // their data (r13). Cache-partitioning-dependent joins still plan
       // correctly — Spark inserts an exchange when a consumer needs a
       // different distribution.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLAN", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // 64 MiB split target keeps scan tasks balanced on wide parquet.
       .config("spark.sql.files.maxPartitionBytes", "67108864")
@@ -75,8 +88,7 @@ object GraftSession {
   }
 
   def getOrCreate(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = builder(master = Some(s"local[$cpus]")).getOrCreate()
+    val s = builder(master = Some(s"local[${cpus()}]")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1699,10 +1699,10 @@ object SparkEntry {
     * cosine ≥ 0.94 to its query assigns to the query's own nearest cell
     * (or one adjacent); the margin is measured, not guessed: the worst
     * clone cell across all SFs sits 0.0414 below the best cell's sim
-    * (tools.Probe r9 sweep), so 0.1 carries 2.4× headroom while mean
-    * probed cells drop from 6.0 fixed to 3.4-4.6 — the contract
-    * certifies the production adaptive config itself (0 misses at all
-    * three SFs).
+    * (r9 margin sweep, SURVEY §7.0 item 7), so 0.1 carries 2.4×
+    * headroom while mean probed cells drop from 6.0 fixed to 3.4-4.6 —
+    * the contract certifies the production adaptive config itself
+    * (0 misses at all three SFs).
     */
   private def qIvfRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = wh(s, dir).loadTable("embeddings")

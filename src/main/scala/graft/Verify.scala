@@ -9,9 +9,9 @@ object Verify {
     // Optional extra args: run only the named queries (local dev loop);
     // the driver passes exactly (sfDir, outDir) and gets everything.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(default = 4)
     val spark = GraftSession
-      .builder(master = Some(s"local[$cpus]"), shufflePartitions = cpus.toInt)
+      .builder(master = Some(s"local[$cpus]"), shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

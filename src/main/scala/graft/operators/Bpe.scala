@@ -120,8 +120,8 @@ object Bpe {
       // of the 16-merge fold chain for a frame nothing consumes (r13).
       // A broadcast-param fold (codegen-cache-stable across rounds) and
       // lazy interval checkpoints were probed interleaved and REGRESSED
-      // (2.64 -> 3.00 s, jobs 38 -> 70, ProbeR13): the per-round
-      // broadcast-join jobs cost more than the Janino recompiles they
+      // (2.64 -> 3.00 s, jobs 38 -> 70, OPTIMIZATION_r13.md §5): the
+      // per-round broadcast-join jobs cost more than the Janino recompiles they
       // save at vocabulary scale. Literal fold + eager truncation kept.
       words =
         if (k % 4 == 0 && k < numMerges) merged.localCheckpoint(true) else merged

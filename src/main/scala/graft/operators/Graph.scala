@@ -180,10 +180,12 @@ object Graph {
         // Per-round plan (r12 shape): the base term UNIONS into the
         // contribution aggregation instead of a nodes-join after it —
         // one exchange per round (the groupBy) and no per-round
-        // broadcast-build job; the edge join itself is exchange-free
-        // (ranks emerge hash(node)-partitioned from the previous
-        // round's groupBy, the alias to src matches edgeDeg's cached
-        // hash(src) layout). Math unchanged: s is summed over contrib
+        // broadcast-build job; the edge join itself is meant to be
+        // exchange-free (ranks emerge hash(node)-partitioned from the
+        // previous round's groupBy, the alias to src matches edgeDeg's
+        // cached hash(src) layout) — but with broadcast joins off a
+        // hashpartitioning(src) exchange still appears under it each
+        // round (ROADMAP item 4). Math unchanged: s is summed over contrib
         // rows only, base ridden in on its own tagged row, same floor
         // division — bit-identical ranks.
         val contribs = edgeDeg
@@ -665,14 +667,16 @@ object Graph {
     val nodes = persistIf(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
         .distinct())
-    // LAZY-CHAINED phases (r13, interleaved ProbeR13 on the q_hits trade
-    // graph): every phase frame is a LAZY localCheckpoint — the logical
-    // plan is truncated to a leaf each phase (no exponential tree growth)
-    // but nothing materializes until the caller's single eager action,
-    // whose cascade computes every phase RDD exactly once and stores its
-    // blocks. Each phase's raw-sum subtree appears twice in its plan
-    // (stream + sup-norm broadcast), so ReusedExchange computes the
-    // shuffle once; the r10/r12 shapes additionally paid two eager
+    // LAZY-CHAINED phases (r13, interleaved A/B on the q_hits trade
+    // graph, OPTIMIZATION_r13.md §2): every phase frame is a LAZY
+    // localCheckpoint — the logical plan is truncated to a leaf each
+    // phase (no exponential tree growth) but nothing materializes until
+    // the caller's single eager action, whose cascade computes every
+    // phase RDD exactly once and stores its blocks. Each phase's raw-sum
+    // subtree appears twice in its plan (stream + sup-norm broadcast);
+    // the two copies sit over different AQE table-cache stages, so they
+    // are NOT exchange-reused and the raw-sum shuffle runs twice (ROADMAP
+    // item 4). The r10/r12 shapes additionally paid two eager
     // checkpoint ACTIONS per phase (raw + rescale). Measured honestly:
     // the scheduler-job count barely moves (111 -> 110 — jobs here are
     // AQE stage materializations plus the per-phase broadcast, not the

@@ -36,25 +36,18 @@ object Relational {
     * An explicit round-robin repartition to defaultParallelism before
     * the verify join pins one wave of right-sized tasks; the exchanged
     * rows are narrow ids, so the extra shuffle is noise next to the
-    * verify CPU at any scale.
+    * verify CPU at gate scale.
     *
-    * SCALE GUARD (r13, VERDICT item 6): an explicit repartition is never
-    * split by AQE, so at 100 TB a blocking-bounded-but-huge candidate
-    * stream would land in exactly one wave of potentially multi-GB
-    * tasks. `graft.verify.fanout.multiplier` (session conf, default 1 =
-    * the committed gate-scale plan) multiplies the wave count; size it
-    * to ceil(expected candidate volume / (cores × target task size)) in
-    * production. A conf knob rather than a stats-derived size on
-    * purpose: Catalyst size estimates for self-join candidate frames
-    * are join-products that overshoot by orders of magnitude, and a
-    * fanout of 2^31 partitions is worse than the cliff it prevents.
+    * Known limit: AQE never splits an explicit repartition, so at
+    * 100 TB a blocking-bounded-but-huge candidate stream still lands in
+    * exactly one wave of potentially multi-GB tasks. Replacing the five
+    * hand-placed pins with one session-level posture is open (ROADMAP
+    * item 2); a stats-derived size is not the answer — Catalyst size
+    * estimates for self-join candidate frames are join-products that
+    * overshoot by orders of magnitude.
     */
-  private[operators] def verifyFanout(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val mult = math.max(1,
-      spark.conf.get("graft.verify.fanout.multiplier", "1").toInt)
-    math.max(1, mult * spark.sparkContext.defaultParallelism)
-  }
+  private[operators] def verifyFanout(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
 
   /** join with Fugue's how-vocabulary. `on` columns are equi-join keys and,
     * per Fugue semantics, appear once in the output (via USING-style join).

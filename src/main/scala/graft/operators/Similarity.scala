@@ -214,7 +214,8 @@ object Similarity {
     * that cannot matter — a query whose best cell dominates scans one
     * cell, a boundary query near several centroids keeps all numProbe.
     * Mean probed cells (= scanned corpus fraction × numCells) drops
-    * measurably at equal recall; see [[graft.tools.Probe]] margin sweep.
+    * measurably at equal recall; the r9 margin sweep is in SURVEY §7.0
+    * (round-9 second session, item 7).
     */
   private def assignCells(
       c: DataFrame, q: DataFrame, centroids: Array[(Int, Seq[Float])],
@@ -382,10 +383,10 @@ object Similarity {
     * approximate score at rank k — a candidate further below cannot be
     * promoted into the true top-k unless the ADC error on that pair
     * exceeds the margin, so the margin is the measured ADC-error budget
-    * (tools.Probe r9b sweep), not a guess. NaN = off (keep the full
-    * shortlist). The per-query kth score is taken from the shortlist
-    * itself (bounded rows); queries with fewer than k shortlist rows
-    * keep everything.
+    * (the r9 shortlist sweep, SURVEY §7.0 round-9 second session), not
+    * a guess. NaN = off (keep the full shortlist). The per-query kth
+    * score is taken from the shortlist itself (bounded rows); queries
+    * with fewer than k shortlist rows keep everything.
     */
   private def pruneShortlist(shortlist: DataFrame, k: Int,
       margin: Double): DataFrame = {

@@ -835,8 +835,13 @@ object Stats {
       .filter(col("pair_count") >= minSupport)
     val ic = store.filter(col("kind") === "i")
       .select(col("a").as("it"), col("cnt"))
+    // at most ONE basket-total row: several `n` rows (a store unioned
+    // without updateAssociationStore's roll-up) sum under its additive
+    // rule instead of multiplying the result; grouping on `kind` keeps
+    // a store with no `n` row at zero rows
     val nB = store.filter(col("kind") === "n")
-      .select(col("cnt").as("n_baskets"))
+      .groupBy("kind").agg(sum("cnt").as("n_baskets"))
+      .select("n_baskets")
     // The top-K order key is (pair_count desc, item_a, item_b) — a total
     // order over the joined rows that never reads a derived metric, so
     // EVERY projection (confidences, lift, LLR) belongs ABOVE the limit:

@@ -2,8 +2,6 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 
-import org.apache.spark.sql.execution.FormattedMode
-
 /** Optimization-round probe: time named SparkEntry queries with the
   * bench's noop-sink methodology, INTERLEAVED (rep loop outer, queries
   * inner) so same-JVM A/B comparisons see the same block-manager /
@@ -11,8 +9,6 @@ import org.apache.spark.sql.execution.FormattedMode
   * per-variant timing on this box fabricates 2x differences.
   *
   * Usage: runMain graft.tools.ProbeOpt <sfDir> <reps> <name> [name...]
-  * Env: SPARK_GRAFT_PLANS_DIR — also dump .explain("formatted") of each
-  * query to <dir>/<name>.txt (plan shape evidence for plans/r12/).
   */
 object ProbeOpt {
   def main(args: Array[String]): Unit = {
@@ -87,20 +83,6 @@ object ProbeOpt {
     try SparkEntry.queries("q1_pricing_summary")(s, dir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-
-    sys.env.get("SPARK_GRAFT_PLANS_DIR").foreach { pd =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pd))
-      names.foreach { n =>
-        try {
-          val plan = SparkEntry.queries(n)(s, dir)
-            .queryExecution.explainString(FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(pd, s"$n.txt"), plan.getBytes("UTF-8"))
-        } catch { case e: Throwable =>
-          System.err.println(s"plan dump failed for $n: $e")
-        }
-      }
-    }
 
     val times = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
     names.foreach(n => times(n) = Vector())

@@ -25,12 +25,12 @@ object Scaling {
     // group sizes stay 10, rows scale 10×
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     require(mult % 10 == 0 && mult > 0, s"mult must be a positive multiple of 10: $mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus()
     // On a real cluster shuffle partitions scale with data, not cores —
     // the third arg measures exactly that (SURVEY §5: fixed-32 vs
     // data-scaled partitions at the 100× tier). Default keeps the
     // historical cores-count behavior.
-    val shufflePartitions = args.lift(2).map(_.toInt).getOrElse(cpus.toInt)
+    val shufflePartitions = args.lift(2).map(_.toInt).getOrElse(cpus)
     val spark = GraftSession
       .builder(master = Some(s"local[$cpus]"), shufflePartitions = shufflePartitions)
       .getOrCreate()
@@ -70,7 +70,7 @@ object Scaling {
         (col("base_id") * 10 + col("v")).as("doc_id"),
         when(col("v") === 0, col("base_text"))
           .otherwise(concat(col("base_text"), lit(" variant"), col("v"))).as("text"))
-      .repartition(cpus.toInt * (mult / 10))
+      .repartition(cpus * (mult / 10))
       .persist()
     val n = big.count()
     println(s"corpus: $n docs, shuffle.partitions=$shufflePartitions")

@@ -37,14 +37,11 @@ class GraftEngineSpec extends AnyFunSuite with SparkTestBase {
   test("session AQE posture (r13): advisory-size coalescing + cached-plan AQE") {
     // parallelismFirst=false lets AQE respect the advisory partition size
     // instead of pinning tiny post-shuffle partitions at defaultParallelism;
-    // cached-plan AQE lets persisted frames coalesce too. Both are
-    // env-overridable (SPARK_GRAFT_AQE_PARALLELISM_FIRST / _CACHED_PLAN).
+    // cached-plan AQE lets persisted frames coalesce too
     assert(spark.conf.get(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst") ===
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst") === "false")
     assert(spark.conf.get(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") ===
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLAN", "true"))
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") === "true")
     // and the coalescing actually bites: a tiny groupBy's post-shuffle
     // read collapses below the session's shuffle-partition setting
     import org.apache.spark.sql.functions._
@@ -53,5 +50,15 @@ class GraftEngineSpec extends AnyFunSuite with SparkTestBase {
     g.write.format("noop").mode("overwrite").save()
     assert(g.rdd.getNumPartitions === 1,
       "advisory-size coalescing collapses a tiny aggregate to one partition")
+  }
+
+  test("SPARK_GRAFT_CPUS: default if unset, loud failure if malformed") {
+    assert(GraftSession.parseCpus(None, 32) === 32)
+    assert(GraftSession.parseCpus(Some("8"), 32) === 8)
+    Seq("eight", "", "8 ", "0", "-4", "99999999999").foreach { bad =>
+      val e = intercept[IllegalArgumentException](GraftSession.parseCpus(Some(bad), 4))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
   }
 }

@@ -1,0 +1,170 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{Dedup, Graph, Relational, Stats, TextAnalysis}
+
+/** The physical-plan structure each past optimization depends on,
+  * asserted on `executedPlan` at sf0.001 — a reverted restructure fails
+  * here instead of surviving as a stale `explain` dump.
+  */
+class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
+  import spark.implicits._
+
+  /** A node's children, looking through AQE wrappers and query stages;
+    * a ReusedExchange is a leaf, so no exchange is counted twice, and
+    * cached relations are leaves too. */
+  private def children(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case _ => p.children
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+
+  /** The plan skeleton — joins, exchanges, scans, aggregates — for
+    * failure messages. */
+  private def skeleton(p: SparkPlan, depth: Int = 1): String = {
+    val interesting = Seq("Join", "Exchange", "Scan", "HashAggregate",
+      "ObjectHashAggregate", "SortAggregate", "Window", "Generate", "TakeOrdered")
+    val line =
+      if (!interesting.exists(p.nodeName.contains)) ""
+      else "\n" + "  " * depth + p.simpleString(8).replaceAll("#\\d+L?", "").take(160)
+    line + children(p).map(skeleton(_, depth + 1)).mkString
+  }
+
+  /** Names of the columns computed (aliased) by any node of `p`. */
+  private def computed(p: SparkPlan): Set[String] =
+    nodes(p).flatMap(_.expressions.flatMap(_.collect { case a: Alias => a.name })).toSet
+
+  /** The executed plan of every action `body` runs — localCheckpoints
+    * included — in the order they ran. */
+  private def actionPlans(body: => Unit): Seq[(String, SparkPlan)] = {
+    val seen = new ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(funcName -> qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** The symmetrized customer-supplier trade graph of q_pagerank. */
+  private def tradeEdges: DataFrame = {
+    val e = wh.loadTable("orders").join(wh.loadTable("lineitem"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  test("association and collocation scores sit above the top-K limit") {
+    def check(plan: SparkPlan, above: Seq[String], below: Seq[String]): Unit = {
+      val tops = nodes(plan).collect { case t: TakeOrderedAndProjectExec => t }
+      assert(tops.size === 1, skeleton(plan))
+      val underTop = computed(tops.head)
+      above.foreach { c =>
+        assert(computed(plan)(c), s"$c is computed somewhere${skeleton(plan)}")
+        assert(!underTop(c), s"$c is computed at or below the limit${skeleton(plan)}")
+      }
+      below.foreach(c => assert(underTop(c), s"$c ranks, so it stays below${skeleton(plan)}"))
+    }
+    val store = Stats.associationStore(wh.loadTable("lineitem"), "l_orderkey", "l_partkey")
+      .localCheckpoint()
+    check(Stats.associationFromStore(store, minSupport = 2L, topK = 50)
+        .queryExecution.executedPlan,
+      above = Seq("conf_ab_e6", "conf_ba_e6", "lift_e6", "llr_u20"), below = Nil)
+    // lift_e6 IS the collocation rank key: only the LLR margins move up
+    val colloc = actionPlans {
+      TextAnalysis.collocations(wh.loadTable("documents"), "text", minCount = 5, topK = 100)
+    }.collect { case ("localCheckpoint", p) => p }
+    assert(colloc.size === 1)
+    check(colloc.head, above = Seq("llr_u20"), below = Seq("lift_e6"))
+  }
+
+  test("verify pins: round-robin to defaultParallelism under the join") {
+    val dp = spark.sparkContext.defaultParallelism
+    val rows = (0 until 30).flatMap { i =>
+      val b = (0 until 24).map(j => "abcdefgh"((i * 31 + j * 7) % 8)).mkString
+      Seq((i * 3L, b), (i * 3L + 1, b.updated(i % 24, 'Z')),
+        (i * 3L + 2, b.updated((i + 5) % 24, 'Y')))
+    }
+    val all = rows.toDF("id", "s")
+    val hist = rows.filter(_._1 % 10 != 0).toDF("id", "s")
+    val batch = rows.filter(_._1 % 10 == 0).toDF("id", "s")
+    val pins: Seq[(String, () => DataFrame)] = Seq(
+      "fuzzyJoin" -> (() => Relational.fuzzyJoin(hist, batch, "id", "s", "id", "s", 4L, 5L)),
+      "fuzzySelfPairs" -> (() => Relational.fuzzySelfPairs(all, "id", "s", 4L, 5L)),
+      "fuzzyJoinIncremental" -> (() => Relational.fuzzyJoinIncremental(batch, "id", "s",
+        Relational.fuzzyGramStore(hist, "id", "s"), hist, 4L, 5L)),
+      "editDistanceJoin" -> (() => Relational.editDistanceJoin(all, "id", "s", maxDist = 2)),
+      "editDistanceJoinIncremental" -> (() => Relational.editDistanceJoinIncremental(batch,
+        "id", "s", Relational.editSegmentStore(hist, "id", "s", maxDist = 2), hist,
+        maxDist = 2)),
+      "ngramJaccard" -> (() => Dedup.ngramJaccard(
+        all.withColumn("s", regexp_replace(col("s"), "(...)", "$1 ")), "id", "s")))
+    def pinned(plan: SparkPlan): Boolean =
+      nodes(plan).collect { case j: BaseJoinExec => j }.exists { j =>
+        nodes(j).exists {
+          case s: ShuffleExchangeExec => s.outputPartitioning == RoundRobinPartitioning(dp)
+          case _ => false
+        }
+      }
+    // an operator may checkpoint its result: check the plans its own
+    // actions ran as well as the frame it returns
+    val unpinned = pins.flatMap { case (name, op) =>
+      var out: DataFrame = null
+      val plans = actionPlans { out = op() }.map(_._2) :+ out.queryExecution.executedPlan
+      if (plans.exists(pinned)) None else Some(s"$name:${plans.map(skeleton(_)).mkString}")
+    }
+    if (unpinned.nonEmpty)
+      fail(s"no RoundRobinPartitioning($dp) under a join in\n${unpinned.mkString("\n")}")
+  }
+
+  test("graph rounds: one join each; one shuffle per pageRank round") {
+    val edges = tradeEdges
+    // rounds below checkpointInterval chain into the ONE localCheckpoint
+    // the last round materializes, so its plan holds every round
+    def lastRound(run: Int => DataFrame, rounds: Int): SparkPlan = {
+      val plans = actionPlans(run(rounds)).collect { case ("localCheckpoint", p) => p }
+      assert(plans.size === 1)
+      plans.head
+    }
+    def oneAndTwo(run: Int => DataFrame) = (lastRound(run, 1), lastRound(run, 2))
+    val graphs = Seq(
+      "pageRank" -> oneAndTwo(k => Graph.pageRank(edges, "src", "dst", iters = k)),
+      "labelPropagation" -> oneAndTwo(k => Graph.labelPropagation(edges, "src", "dst", iters = k)))
+    def check(name: String, plans: (SparkPlan, SparkPlan), what: String,
+        count: SparkPlan => Int): Unit =
+      assert(count(plans._2) - count(plans._1) === 1,
+        s"$name $what per round${skeleton(plans._1)}\n  ---${skeleton(plans._2)}")
+    // the base term / self vote unions into the round's aggregate: no
+    // per-round join back to the node list
+    graphs.foreach { case (name, plans) =>
+      check(name, plans, "joins", nodes(_).count(_.isInstanceOf[BaseJoinExec]))
+    }
+    // and the groupBy is pageRank's only per-round shuffle (at this scale
+    // the edge join broadcasts the cached edge list)
+    check("pageRank", graphs.head._2, "shuffles",
+      nodes(_).count(_.isInstanceOf[ShuffleExchangeExec]))
+  }
+}

@@ -1109,21 +1109,4 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.filter(_._2 == 1L).forall(r => r._3 == 1L && r._4 == 3L),
       "each unique gram ranks FIRST among uncapped (df, g) per string")
   }
-
-  test("verifyFanout: graft.verify.fanout.multiplier scales the verify wave (r13 scale guard)") {
-    val df = Seq((1L, "abcdefgh"), (2L, "abcdefgx"), (3L, "abcdefgy"))
-      .toDF("id", "s")
-    def rrCount(): Int = {
-      val plan = Relational.fuzzySelfPairs(df, "id", "s", 4L, 5L, 3, 0L)
-        .queryExecution.executedPlan.toString
-      "RoundRobinPartitioning\\((\\d+)".r.findFirstMatchIn(plan)
-        .map(_.group(1).toInt).getOrElse(-1)
-    }
-    val p0 = spark.sparkContext.defaultParallelism
-    assert(rrCount() === p0, "default multiplier 1: one wave of cores")
-    spark.conf.set("graft.verify.fanout.multiplier", "4")
-    try assert(rrCount() === 4 * p0,
-      "multiplier widens the explicit verify repartition (AQE never splits it)")
-    finally spark.conf.unset("graft.verify.fanout.multiplier")
-  }
 }

@@ -125,7 +125,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // a zero margin keeps only the ADC top-k — results may differ, but
     // stay well-formed (k rows per query) and are a subset of the
     // corpus; this is the measured-and-rejected operating point
-    // (tools.Probe r9b: natural-corpus parity needs margin >= 0.2)
+    // (r9 shortlist sweep, SURVEY §7.0: natural-corpus parity needs
+    // margin >= 0.2)
     val zero = rerank(0.0)
     assert(zero.groupBy(_._1).forall(_._2.size == 5))
     assertThrows[IllegalArgumentException] { rerank(-0.1) }

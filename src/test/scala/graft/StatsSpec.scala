@@ -779,4 +779,25 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(_.toSeq).toSet
     assert(merged.collect().map(_.toSeq).toSet === whole)
   }
+
+  test("associationFromStore: basket totals sum; no total, no rows") {
+    import spark.implicits._
+    val rows = Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), (3L, 1L), (3L, 3L),
+      (4L, 2L)).toDF("bk", "it")
+    val store = Stats.associationStore(rows, "bk", "it").localCheckpoint()
+    val total = store.filter(col("kind") === "n")
+    val noTotal = store.filter(col("kind") =!= "n")
+    // the 4-basket total split over two `n` rows — what a plain union
+    // of two batch stores leaves without updateAssociationStore
+    val split = noTotal
+      .unionByName(total.withColumn("cnt", lit(1L)))
+      .unionByName(total.withColumn("cnt", col("cnt") - 1L))
+    def read(st: org.apache.spark.sql.DataFrame) =
+      Stats.associationFromStore(st, minSupport = 1L, topK = 10)
+        .collect().map(_.toSeq).toSeq
+    val expect = read(store)
+    assert(expect.size === 2, "pairs (1,2) and (1,3)")
+    assert(read(split) === expect, "the two n rows sum to the one-row result")
+    assert(read(noTotal).isEmpty, "no basket total, no rows")
+  }
 }
