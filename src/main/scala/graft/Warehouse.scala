@@ -145,14 +145,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     val raw =
       if (isDir) reader.parquet(tablePath)
       else reader.option("pathGlobFilter", hp.getName).parquet(hp.getParent.toString)
-    val nanos = Warehouse.nanosTimestampColumns(spark, tablePath, baseDir)
-      .filter(c => raw.schema.fieldNames.contains(c) &&
-        raw.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    val denanosed = nanos.foldLeft(raw)((d, c) =>
-      d.withColumn(c, org.apache.spark.sql.functions.timestamp_micros(
-        org.apache.spark.sql.functions.expr(
-          s"${Warehouse.encodeColumnName(c)} div 1000"))))
-    Warehouse.normalizeVectors(Warehouse.normalizeNtz(denanosed))
+    normalized(tablePath, raw)
   }
 
   /** Register every known table as a temp view and run arbitrary SQL —
@@ -341,20 +334,25 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     normalizedRead(Warehouse.versionDir(base, eligible.last._1))
   }
 
-  /** THE load-boundary normalization chain — every read path (loadTable,
-    * version/as-of reads) goes through here so the three accreted
-    * generator-drift defenses can never diverge between paths:
-    * TIMESTAMP(NANOS)-as-long → microsecond timestamps; TIMESTAMP_NTZ →
-    * LTZ (unix_micros, watermarks and Timestamp encoders reject NTZ);
-    * array<double> vectors → the engine's array<float> contract.
-    */
+  /** Batch read of the parquet at `p` through [[normalized]]. */
   private def normalizedRead(p: String, mergeSchema: Boolean = false): DataFrame = {
-    var df =
+    val df =
       if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(p)
       else spark.read.parquet(p)
-    df = Warehouse.normalizeNanos(spark, p, baseDir, df)
-    Warehouse.normalizeVectors(Warehouse.normalizeNtz(df))
+    normalized(p, df)
   }
+
+  /** THE load-boundary normalization chain — every read path (loadTable,
+    * version/as-of reads, loadTableStream) goes through here so the
+    * three accreted generator-drift defenses can never diverge between
+    * paths: TIMESTAMP(NANOS)-as-long → microsecond timestamps;
+    * TIMESTAMP_NTZ → LTZ (unix_micros, watermarks and Timestamp encoders
+    * reject NTZ); array<double> vectors → the engine's array<float>
+    * contract. `p` is the parquet path `df` was read from.
+    */
+  private def normalized(p: String, df: DataFrame): DataFrame =
+    Warehouse.normalizeVectors(Warehouse.normalizeNtz(
+      Warehouse.normalizeNanos(spark, p, baseDir, df)))
 
   /** COMPACTION — rewrite a table's (or a versioned table's latest
     * version's) small files into ~`targetBytes` files: the OPTIMIZE /
@@ -447,8 +445,15 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     val base = Warehouse.tablePath(dir, table)
     val vs = Warehouse.committedVersions(spark, base)
     require(vs.nonEmpty, s"table $table is not versioned — nothing to vacuum")
-    val drop = vs.dropRight(keepLast)
+    deleteVersions(dir, table, Warehouse.dropByCount(vs, keepLast))
+  }
+
+  /** Delete the given committed version dirs of `table` and invalidate
+    * its registrations — the one delete loop of both vacuum verbs.
+    * Returns `drop`. */
+  private def deleteVersions(dir: String, table: String, drop: Seq[Long]): Seq[Long] = {
     if (drop.nonEmpty) {
+      val base = Warehouse.tablePath(dir, table)
       val hp = new HPath(base)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       drop.foreach { v =>
@@ -511,11 +516,8 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     val base = Warehouse.tablePath(dir, table)
     val vs = Warehouse.committedVersionTimes(spark, base)
     require(vs.nonEmpty, s"table $table is not versioned — nothing to plan")
-    val byCount = vs.map(_._1).dropRight(keepLast).toSet
-    val newest = vs.last._1
-    val byAge = vs.filter { case (v, t) =>
-      t < olderThanMillis && v != newest
-    }.map(_._1).toSet
+    val byCount = Warehouse.dropByCount(vs.map(_._1), keepLast).toSet
+    val byAge = Warehouse.dropByAge(vs, olderThanMillis).toSet
     describeHistory(dir, table)
       .withColumn("drop_by_count",
         col("version").isInCollection(
@@ -544,18 +546,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     val base = Warehouse.tablePath(dir, table)
     val vs = Warehouse.committedVersionTimes(spark, base)
     require(vs.nonEmpty, s"table $table is not versioned — nothing to vacuum")
-    val newest = vs.last._1
-    val drop = vs.filter { case (v, t) => t < cutoffMillis && v != newest }
-      .map(_._1)
-    if (drop.nonEmpty) {
-      val hp = new HPath(base)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      drop.foreach { v =>
-        fs.delete(new HPath(Warehouse.versionDir(base, v)), true)
-      }
-      Warehouse.invalidate(dir, table)
-    }
-    drop
+    deleteVersions(dir, table, Warehouse.dropByAge(vs, cutoffMillis))
   }
 
   /** RIGHT-TO-BE-FORGOTTEN erasure for VERSIONED tables — the composed
@@ -895,6 +886,19 @@ object Warehouse {
         case _ => None
       }
     }.sortBy(_._1)
+  }
+
+  /** Count retention: every committed version (oldest first) but the
+    * newest `keepLast` — [[Warehouse.vacuumTable]]'s drop set. */
+  private[graft] def dropByCount(versions: Seq[Long], keepLast: Int): Seq[Long] =
+    versions.dropRight(keepLast)
+
+  /** Age retention: every (version, commit millis) committed STRICTLY
+    * before `cutoffMillis`, never the newest — [[Warehouse.vacuumTableOlderThan]]'s
+    * drop set. */
+  private[graft] def dropByAge(versions: Seq[(Long, Long)], cutoffMillis: Long): Seq[Long] = {
+    val newest = versions.last._1
+    versions.collect { case (v, t) if t < cutoffMillis && v != newest => v }
   }
 
   /** The newest committed version's directory, or None for plain tables. */

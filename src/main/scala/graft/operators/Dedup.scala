@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -17,6 +17,14 @@ import graft.functions.GraftFunctions
   * are tunable (bands/bits) and cappable (`maxBucketSize` drops pathological
   * buckets, e.g. boilerplate-identical shards, instead of letting one key
   * quadratically dominate the round).
+  *
+  * Caching: a one-shot operator (minhashLsh, simhash, ngramJaccard,
+  * sharedSpans, ...) persists what its returned LAZY plan reads more
+  * than once and leaves it cached — there is no safe point to release
+  * it before the caller's action — until `unpersist` or
+  * `spark.catalog.clearCache()`. The steady-state `*Incremental`
+  * operators materialize their bounded result eagerly and release their
+  * intermediates, so a long-running ingest loop accumulates nothing.
   */
 object Dedup {
 
@@ -318,26 +326,17 @@ object Dedup {
     * ContextCleaner.
     *
     * `checkpointDir`: when set, per-round materialization uses RELIABLE
-    * checkpoints (`Dataset.checkpoint` into that directory) instead of
-    * `localCheckpoint`. localCheckpoint stores blocks on executors with
-    * NO recompute path — any executor loss mid-iteration fails the whole
-    * run — so it is the fast single-process/local default, while cluster
-    * runs at scale should pass a durable directory (HDFS/S3) and trade
-    * per-round write cost for fault tolerance. Sets the session's
-    * checkpoint dir if none is configured; an already-configured dir wins.
+    * checkpoints into that directory instead of `localCheckpoint`
+    * ([[RoundCheckpoints]]) — cluster runs at scale should pass a
+    * durable directory (HDFS/S3) and trade per-round write cost for
+    * tolerance of executor loss.
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 50,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       checkpointDir: Option[String] = None): DataFrame = {
     requireIntegralId(pairs, aCol)
     requireIntegralId(pairs, bCol)
-    // StorageLevel.NONE disables the per-round lineage truncation below,
-    // re-exposing the doubling-plan driver OOM beyond ~15 rounds — bound
-    // it instead of failing mysteriously mid-round
-    require(persistLevel != StorageLevel.NONE || checkpointDir.isDefined || maxIters <= 15,
-      s"persistLevel=NONE disables lineage truncation; maxIters must be <= 15 (got $maxIters)")
     // symmetric edge list, narrow (long, long). The projected pair frame
     // is persisted BEFORE the symmetrizing union: the union references it
     // twice, and `pairs` is routinely an expensive lazy plan (a PPJoin /
@@ -345,56 +344,25 @@ object Dedup {
     // exchange reuse does not dedupe it) — un-cached, the whole pair
     // generation computed TWICE inside the edges materialization (r12).
     // The cache is narrow 16 B rows, O(matches).
-    val e = persistIf(
-      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")),
-      persistLevel)
-    val edges = persistIf(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
-      persistLevel)
-    // Each round's labels are localCheckpoint'ed AT THE CALLER'S LEVEL:
-    // the lineage of an iterative plan doubles per round (labels joins
+    val e = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Each round's labels are checkpointed ([[RoundCheckpoints]]): the
+    // lineage of an iterative plan doubles per round (labels joins
     // viaNbr which joins labels...) — without truncation a 30-round
     // graph OOMs the DRIVER just formatting the plan, let alone
     // optimizing it. The checkpoint also supersedes explicit unpersist:
     // a .drop() view is NOT the cached handle (cascade=false unpersist
     // is a silent no-op on it), while superseded checkpoint RDDs are
     // reclaimed by the ContextCleaner once unreferenced.
-    checkpointDir.foreach { dir =>
-      val sc = pairs.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-    }
-    // Reliable-checkpoint path: the checkpoint WRITE is a second job over
-    // the round's plan, which would recompute the join+aggregate from
-    // scratch unless the frame is cached — so cache it, and release the
-    // superseded round's cache once the next round is materialized.
-    // Checkpoint FILES of superseded rounds are reclaimed by the
-    // ContextCleaner only under spark.cleaner.referenceTracking
-    // .cleanCheckpoints=true (GraftSession sets it); on sessions without
-    // the flag, rounds accumulate in checkpointDir until app exit —
-    // that's the durability trade the option buys.
-    var pendingCaches: List[DataFrame] = Nil
-    def materialize(plan: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) {
-        val cached =
-          if (persistLevel == StorageLevel.NONE) plan else plan.persist(persistLevel)
-        if (persistLevel != StorageLevel.NONE) pendingCaches ::= cached
-        cached.checkpoint(eager = false) // reliable: survives executor loss
-      }
-      else if (persistLevel == StorageLevel.NONE) plan
-      else plan.localCheckpoint(eager = false, storageLevel = persistLevel)
-    // after an action, every marked RDD in its lineage has its checkpoint
-    // files written (doCheckpoint recurses ancestors), so the caches that
-    // fed the writes are redundant and can go
-    def releaseCheckpointedCaches(): Unit = {
-      pendingCaches.foreach(_.unpersist())
-      pendingCaches = Nil
-    }
+    val rounds = new RoundCheckpoints(pairs.sparkSession, checkpointDir)
     // Round 1 folded into initialization: every node starts at
     // least(own id, min neighbor id) — exactly the state one propagation
     // round over all-nodes-as-frontier would produce, for the price of
     // the groupBy the node list needed anyway (the symmetric edge list
     // contains every node as src). Saves one full join+count round.
-    var next = materialize(
+    var next = rounds.materialize(
       edges.groupBy(col("src").as("id"))
         .agg(min(col("dst")).as("__nm"))
         .select(col("id"),
@@ -420,14 +388,14 @@ object Dedup {
         .join(frontier.select(col("id").as("dst"), col("component").as("fc")), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("fc")).as("nbr_min"))
-      next = materialize(
+      next = rounds.materialize(
         labels.join(viaNbr, Seq("id"), "left")
           .select(col("id"),
             least(col("component"), coalesce(col("nbr_min"), col("component")))
               .as("component"),
             coalesce(col("nbr_min") < col("component"), lit(false)).as("__changed")))
         val changed = next.filter(col("__changed")).count() // materializes next
-        releaseCheckpointedCaches() // reliable path: files now back the reads
+        rounds.releaseCheckpointedCaches() // reliable path: files now back the reads
         labels = next.drop("__changed")
         frontier = next.filter(col("__changed")).drop("__changed")
         converged = changed == 0
@@ -449,8 +417,47 @@ object Dedup {
       // a checkpoint, so dropping the edge CACHE never breaks them; the
       // lineage stays intact for recompute-after-eviction), nor any
       // round cache still pending on the reliable path
-      releaseCheckpointedCaches()
-      if (persistLevel != StorageLevel.NONE) { e.unpersist(); edges.unpersist() }
+      rounds.releaseCheckpointedCaches()
+      e.unpersist(); edges.unpersist()
+    }
+  }
+
+  /** Per-round materialization of an iterative operator's state — the
+    * one contract of [[connectedComponents]] and [[Graph.pageRank]].
+    * Without a `checkpointDir` a round is a lazy `localCheckpoint`: fast
+    * and single-process, but its blocks have NO recompute path, so any
+    * executor loss mid-iteration fails the run. With one, a round is a
+    * RELIABLE checkpoint into that directory (survives executor loss);
+    * its write is a second job over the round's plan, which would
+    * recompute the round from scratch unless the frame is cached — so it
+    * is cached, and [[releaseCheckpointedCaches]] drops those caches
+    * after an action (which writes the checkpoint of every marked RDD in
+    * its lineage — doCheckpoint recurses ancestors). Checkpoint FILES of
+    * superseded rounds are reclaimed by the ContextCleaner only under
+    * spark.cleaner.referenceTracking.cleanCheckpoints=true (GraftSession
+    * sets it); on sessions without the flag they accumulate in
+    * `checkpointDir` until app exit — the durability trade the option
+    * buys. Sets the session's checkpoint dir if none is configured; an
+    * already-configured dir wins.
+    */
+  private[operators] final class RoundCheckpoints(
+      spark: SparkSession, checkpointDir: Option[String]) {
+    checkpointDir.foreach { dir =>
+      val sc = spark.sparkContext
+      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+    }
+    private var pendingCaches: List[DataFrame] = Nil
+
+    def materialize(plan: DataFrame): DataFrame =
+      if (checkpointDir.isDefined) {
+        val cached = plan.persist(StorageLevel.MEMORY_AND_DISK)
+        pendingCaches ::= cached
+        cached.checkpoint(eager = false)
+      } else plan.localCheckpoint(eager = false, storageLevel = StorageLevel.MEMORY_AND_DISK)
+
+    def releaseCheckpointedCaches(): Unit = {
+      pendingCaches.foreach(_.unpersist())
+      pendingCaches = Nil
     }
   }
 
@@ -872,15 +879,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, numPerms: Int = 128, bands: Int = 32,
       threshold: Double = 0.5, seed: Long = 42L,
-      maxBucketSize: Int = 100000, shingler: String = "word",
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxBucketSize: Int = 100000, shingler: String = "word"): DataFrame = {
     require(numPerms % bands == 0, s"bands ($bands) must divide numPerms ($numPerms)")
     // sigs feed the banding branch AND both verify joins — persist the
     // narrow (id, sig) frame (docs × numPerms × 8 B) so the corpus scan +
     // kernel run once, not three times
-    val sigs = persistIf(
-      minhashSignatures(df, idCol, textCol, shingleWidth, numPerms, seed, shingler),
-      persistLevel)
+    val sigs = minhashSignatures(df, idCol, textCol, shingleWidth, numPerms, seed, shingler)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     bandedAgreement(sigs, numPerms, bands, threshold, maxBucketSize, "est_jaccard")
   }
 
@@ -897,15 +902,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, numPerms: Int = 128, bands: Int = 32,
       threshold: Double = 0.5, seed: Long = 42L,
-      maxBucketSize: Int = 100000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxBucketSize: Int = 100000): DataFrame = {
     require(numPerms % bands == 0, s"bands ($bands) must divide numPerms ($numPerms)")
     GraftFunctions.ensure(df.sparkSession)
-    val sigs = persistIf(
-      df.select(col(idCol).cast("long").as("id"),
-          GraftFunctions.icwsMinhash(col(textCol), shingleWidth, numPerms, seed).as("sig"))
-        .filter(size(col("sig")) > 0), // gram-less docs: empty sig, dropped
-      persistLevel)
+    val sigs = df.select(col(idCol).cast("long").as("id"),
+        GraftFunctions.icwsMinhash(col(textCol), shingleWidth, numPerms, seed).as("sig"))
+      .filter(size(col("sig")) > 0) // gram-less docs: empty sig, dropped
+      .persist(StorageLevel.MEMORY_AND_DISK)
     bandedAgreement(sigs, numPerms, bands, threshold, maxBucketSize, "est_wjaccard")
   }
 
@@ -933,14 +936,13 @@ object Dedup {
       existingSigs: DataFrame,
       shingleWidth: Int = 3, numPerms: Int = 128, bands: Int = 32,
       threshold: Double = 0.5, seed: Long = 42L,
-      maxBucketSize: Int = 100000, shingler: String = "word",
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxBucketSize: Int = 100000, shingler: String = "word"): DataFrame = {
     require(numPerms % bands == 0, s"bands ($bands) must divide numPerms ($numPerms)")
     requireIntegralId(newDocs, idCol)
     requireIntegralId(existingSigs, "id")
-    val newSigs = persistIf(
-      minhashSignatures(newDocs, idCol, textCol, shingleWidth, numPerms, seed, shingler),
-      persistLevel)
+    val newSigs =
+      minhashSignatures(newDocs, idCol, textCol, shingleWidth, numPerms, seed, shingler)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val oldSigs = existingSigs.select(col("id").cast("long").as("id"), col("sig"))
       .join(broadcast(newSigs.select("id")), Seq("id"), "left_anti")
     val allSigs = oldSigs.unionByName(newSigs)
@@ -958,15 +960,15 @@ object Dedup {
     // capped feeds the candidate join TWICE (new side + all side) and
     // the hot aggregate consumed taggedAll once more — persist so the
     // store scan + banding run once per snapshot, not three times
-    val capped = persistIf(
+    val capped = (
       if (maxBucketSize > 0) {
         val hot = taggedAll.groupBy("band", "bucket")
           .agg(count(lit(1)).as("__bsz"))
           .filter(col("__bsz") > maxBucketSize)
           .select("band", "bucket")
         taggedAll.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-      } else taggedAll,
-      persistLevel)
+      } else taggedAll
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     val cand = capped.filter(col("__new")).select(col("band"), col("bucket"), col("id").as("__nid"))
       .join(capped.select(col("band"), col("bucket"), col("id").as("__mid")),
         Seq("band", "bucket"))
@@ -988,15 +990,10 @@ object Dedup {
     // so materialize it eagerly, release the per-snapshot intermediates,
     // and hand back the checkpointed result — lineage is cut, and the
     // caller composes pairs without re-triggering the store scan.
-    // persistLevel=NONE opts out: fully lazy, nothing cached, nothing
-    // eager (recompute-on-use semantics, as in minhashLsh).
-    if (persistLevel == StorageLevel.NONE) result
-    else {
-      val out = result.localCheckpoint(eager = true, storageLevel = persistLevel)
-      newSigs.unpersist()
-      capped.unpersist()
-      out
-    }
+    val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    newSigs.unpersist()
+    capped.unpersist()
+    out
   }
 
   /** Positional LSH band buckets of an (id, sig) frame: one (id, band,
@@ -1084,16 +1081,14 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, maxHamming: Int = 3,
       maxBucketSize: Int = 100000, shingler: String = "word",
-      weighted: Boolean = false,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      weighted: Boolean = false): DataFrame = {
     GraftFunctions.ensure(df.sparkSession)
     require(!weighted || shingler == "word",
       "weighted simhash requires the word shingler")
     require(maxHamming >= 0 && maxHamming <= 63,
       s"maxHamming must be in [0, 63], got $maxHamming")
-    val sigs = persistIf(
-      simhashSignatures(df, idCol, textCol, shingleWidth, shingler, weighted),
-      persistLevel) // 3 consumers, 16 B/doc
+    val sigs = simhashSignatures(df, idCol, textCol, shingleWidth, shingler, weighted)
+      .persist(StorageLevel.MEMORY_AND_DISK) // 3 consumers, 16 B/doc
     hammingPairsOverSigs(sigs, maxHamming, maxBucketSize)
   }
 
@@ -1139,14 +1134,12 @@ object Dedup {
     */
   def hammingNearDup(
       df: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 100000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 63,
       s"maxHamming must be in [0, 63], got $maxHamming")
-    val sigs = persistIf(
-      df.filter(col(sigCol).isNotNull)
-        .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig")),
-      persistLevel) // 3 consumers, 16 B/doc
+    val sigs = df.filter(col(sigCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // 3 consumers, 16 B/doc
     hammingPairsOverSigs(sigs, maxHamming, maxBucketSize)
   }
 
@@ -1213,23 +1206,20 @@ object Dedup {
   def hammingNearDupIncremental(
       newSigs: DataFrame, idCol: String, sigCol: String,
       existingSigs: DataFrame,
-      maxHamming: Int = 3, maxBucketSize: Int = 100000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 63,
       s"maxHamming must be in [0, 63], got $maxHamming")
     requireIntegralId(newSigs, idCol)
     requireIntegralId(existingSigs, "id")
-    val newBase = persistIf(
-      newSigs.filter(col(sigCol).isNotNull)
-        .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig")),
-      persistLevel)
+    val newBase = newSigs.filter(col(sigCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val oldBase = existingSigs.filter(col("sig").isNotNull)
       .select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig"))
       .join(broadcast(newBase.select("id")), Seq("id"), "left_anti")
-    val allSigs = persistIf(
-      oldBase.withColumn("__new", lit(false))
-        .unionByName(newBase.withColumn("__new", lit(true))),
-      persistLevel)
+    val allSigs = oldBase.withColumn("__new", lit(false))
+      .unionByName(newBase.withColumn("__new", lit(true)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val blocks = pigeonholeBlocks(maxHamming + 1)
     val blockStructs = blocks.zipWithIndex.map { case ((off, width), i) =>
       struct(lit(i).as("blk"),
@@ -1264,13 +1254,10 @@ object Dedup {
         greatest(col("__nid"), col("__mid")).as("id_b"), col("hamming"))
       .distinct()
     // steady-state ingestion: eager bounded pair frame, caches released
-    if (persistLevel == StorageLevel.NONE) result
-    else {
-      val out = result.localCheckpoint(eager = true, storageLevel = persistLevel)
-      newBase.unpersist()
-      allSigs.unpersist()
-      out
-    }
+    val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    newBase.unpersist()
+    allSigs.unpersist()
+    out
   }
 
   /** Exact n-gram Jaccard pairs (jaccard ≥ threshold), via PPJoin-style
@@ -1284,8 +1271,7 @@ object Dedup {
     */
   def ngramJaccard(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5, shingler: String = "word",
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      n: Int = 3, threshold: Double = 0.5, shingler: String = "word"): DataFrame = {
     // Grams are hashed to longs in one kernel pass: every downstream
     // shuffle/join keys on 8 bytes instead of ~20-byte strings, the verify
     // intersect runs on long arrays, and no gram string is ever built.
@@ -1296,7 +1282,7 @@ object Dedup {
       .select(col(idCol).cast("long").as("id"),
         shingleHashes(col(textCol), n, shingler).as("g"))
       .filter(size(col("g")) > 0)
-    val grams = persistIf(grams0, persistLevel) // candidates + both verify joins
+    val grams = grams0.persist(StorageLevel.MEMORY_AND_DISK) // candidates + both verify joins
     // the doc's gram-set size rides along from size(g) — no window count
     val exploded = grams.select(col("id"), size(col("g")).as("sz"), explode(col("g")).as("gram"))
     val freq = exploded.groupBy("gram").agg(count(lit(1)).as("gram_df"))
@@ -1336,12 +1322,10 @@ object Dedup {
   def embeddingNearDup(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.4, numBits: Int = 8, numTables: Int = 16,
-      seed: Long = 42L, maxBucketSize: Int = 100000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      seed: Long = 42L, maxBucketSize: Int = 100000): DataFrame = {
     GraftFunctions.ensure(df.sparkSession)
-    val base = persistIf(
-      df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
-      persistLevel) // bucketing + both verify joins
+    val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // bucketing + both verify joins
     val bucketed = base
       .withColumn("bks", GraftFunctions.hyperplaneLshMulti(col("vec"), numBits, numTables, seed))
       .select(col("id"), posexplode(col("bks")).as(Seq("tbl", "bucket")))
@@ -1372,21 +1356,18 @@ object Dedup {
       newVecs: DataFrame, idCol: String, vecCol: String,
       existingVecs: DataFrame,
       threshold: Double = 0.4, numBits: Int = 8, numTables: Int = 16,
-      seed: Long = 42L, maxBucketSize: Int = 100000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      seed: Long = 42L, maxBucketSize: Int = 100000): DataFrame = {
     GraftFunctions.ensure(newVecs.sparkSession)
     requireIntegralId(newVecs, idCol)
     requireIntegralId(existingVecs, "id")
-    val newBase = persistIf(
-      newVecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
-      persistLevel)
+    val newBase = newVecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val oldBase = existingVecs.select(col("id").cast("long").as("id"), col("vec"))
       .join(broadcast(newBase.select("id")), Seq("id"), "left_anti")
     // one persisted all-vectors frame: bucketing + both verify joins
-    val allBase = persistIf(
-      oldBase.withColumn("__new", lit(false))
-        .unionByName(newBase.withColumn("__new", lit(true))),
-      persistLevel)
+    val allBase = oldBase.withColumn("__new", lit(false))
+      .unionByName(newBase.withColumn("__new", lit(true)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val bucketed = allBase
       .withColumn("bks",
         GraftFunctions.hyperplaneLshMulti(col("vec"), numBits, numTables, seed))
@@ -1400,13 +1381,10 @@ object Dedup {
       .select("id_a", "id_b", "cosine")
     // steady-state ingestion path: eagerly materialize the small pair
     // frame and release the per-snapshot caches (the minhash form's rule)
-    if (persistLevel == StorageLevel.NONE) result
-    else {
-      val out = result.localCheckpoint(eager = true, storageLevel = persistLevel)
-      newBase.unpersist()
-      allBase.unpersist()
-      out
-    }
+    val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    newBase.unpersist()
+    allBase.unpersist()
+    out
   }
 
   /** Semantic near-dup pairs, SemDeDup-style (Abbas et al. 2023,
@@ -1443,7 +1421,6 @@ object Dedup {
       threshold: Double, numCells: Int = 16, numProbe: Int = 2,
       iters: Int = 10, sampleSize: Int = 10000, maxCellSize: Int = 100000,
       seed: Long = 42L,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       trainedCentroids: Option[Array[Seq[Float]]] = None): DataFrame = {
     GraftFunctions.ensure(df.sparkSession)
     require(numProbe >= 1, s"numProbe must be >= 1, got $numProbe")
@@ -1451,9 +1428,8 @@ object Dedup {
     // once, dedup arriving corpora for months against the same cells
     val cents = trainedCentroids.getOrElse(Similarity.trainCentroidsKMeans(
       df, idCol, vecCol, numCells, iters, sampleSize, seed))
-    val base = persistIf(
-      df.select(col(idCol).cast("long").as("__id"), col(vecCol).as("__vec")),
-      persistLevel) // assignment + both verify joins
+    val base = df.select(col(idCol).cast("long").as("__id"), col(vecCol).as("__vec"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // assignment + both verify joins
     // top-numProbe cells over literal centroids: struct(sim, cell) sorts
     // field-by-field, so reverse(array_sort(...)) ranks sim desc with
     // ties → largest cell id — numProbe=1 reproduces the argmax order of
@@ -1517,14 +1493,13 @@ object Dedup {
   def fingerprintOverlap(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4, threshold: Double = 0.5,
-      maxHashDocs: Int = 100, minSurvivingFp: Int = 10,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxHashDocs: Int = 100, minSurvivingFp: Int = 10): DataFrame = {
     GraftFunctions.ensure(df.sparkSession)
     val exploded = df.select(col(idCol).cast("long").as("id"),
         GraftFunctions.winnow(col(textCol), k, w).as("fp"))
       .filter(size(col("fp")) > 0)
       .select(col("id"), size(col("fp")).as("n_total"), explode(col("fp")).as("h"))
-    val capped = persistIf({
+    val capped = {
       val filtered =
         if (maxHashDocs > 0) {
           val byHash = Window.partitionBy("h")
@@ -1542,7 +1517,7 @@ object Dedup {
       filtered.withColumn("n_fp", count(lit(1)).over(byId))
         .filter(col("n_fp") >= math.max(1, minSurvivingFp) ||
           col("n_fp") === col("n_total"))
-    }, persistLevel) // feeds both sides of the pair join
+    }.persist(StorageLevel.MEMORY_AND_DISK) // feeds both sides of the pair join
     capped.select(col("id").as("id_a"), col("n_fp").as("n_fp_a"), col("h"))
       .join(capped.select(col("id").as("id_b"), col("n_fp").as("n_fp_b"), col("h")), "h")
       .filter(col("id_a") < col("id_b"))
@@ -1614,23 +1589,21 @@ object Dedup {
   def sharedSpans(
       df: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40, k: Int = 20, maxHashDocs: Int = 100,
-      maxHashOccurrences: Int = 1000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxHashOccurrences: Int = 1000): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
     GraftFunctions.ensure(df.sparkSession)
     val w = minLen - k + 1 // guarantee: every shared span >= minLen anchors
-    val base = persistIf(
-      df.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
-      persistLevel) // anchor pass + two text joins
+    val base = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + two text joins
     // narrow (id, pos, h) anchor rows feed the hot-hash aggregate AND both
     // sides of the pair join — persist so the winnowPos corpus scan runs
     // once, not three times
-    val anchors = persistIf(base
+    val anchors = base
       .select(col("id"), explode(GraftFunctions.winnowPos(col("text"), k, w))
         .as("a"))
-      .select(col("id"), col("a.pos").as("pos"), col("a.h").as("h")),
-      persistLevel)
+      .select(col("id"), col("a.pos").as("pos"), col("a.h").as("h"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val capped =
       if (maxHashDocs > 0 || maxHashOccurrences > 0) {
         // per-hash doc AND occurrence counts, aggregated (map-side
@@ -1718,17 +1691,15 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String,
       store: DataFrame, history: DataFrame,
       minLen: Int = 40, k: Int = 20, maxHashDocs: Int = 100,
-      maxHashOccurrences: Int = 1000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxHashOccurrences: Int = 1000): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
     GraftFunctions.ensure(newDocs.sparkSession)
-    val newBase = persistIf(
-      newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
-      persistLevel) // anchor pass + two text joins
-    val newAnchors = persistIf(
-      spanAnchorStore(newBase, "id", "text", minLen, k).withColumn("__new", lit(true)),
-      persistLevel)
+    val newBase = newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + two text joins
+    val newAnchors = spanAnchorStore(newBase, "id", "text", minLen, k)
+      .withColumn("__new", lit(true))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // store probe: only hashes the batch actually carries can pair with
     // it. The batch hash set BROADCASTS (a micro-batch's distinct anchor
     // hashes are bounded by design — ~2/(w+1) per char of batch text);
@@ -1739,7 +1710,7 @@ object Dedup {
     val probed = store.select(col("id"), col("pos"), col("h"))
       .join(broadcast(newAnchors.select("h").distinct()), Seq("h"), "left_semi")
       .withColumn("__new", lit(false))
-    val combined = persistIf(newAnchors.unionByName(probed), persistLevel)
+    val combined = newAnchors.unionByName(probed).persist(StorageLevel.MEMORY_AND_DISK)
     val capped =
       if (maxHashDocs > 0 || maxHashOccurrences > 0) {
         // identical counts to the one-shot pass: for any hash present in
@@ -1769,10 +1740,10 @@ object Dedup {
     // bounded) broadcast into the pair join
     val needed = cand
       .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val fetched = persistIf(texts.join(broadcast(needed), Seq("id")),
-      persistLevel)
+    val fetched = texts.join(broadcast(needed), Seq("id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val m = GraftFunctions.extendMatch(col("ta"), col("tb"), col("pa"), col("pb"), k)
-    cand
+    val result = cand
       .join(broadcast(fetched.select(col("id").as("id_a"), col("text").as("ta"))), "id_a")
       .join(broadcast(fetched.select(col("id").as("id_b"), col("text").as("tb"))), "id_b")
       .withColumn("m", m)
@@ -1782,6 +1753,14 @@ object Dedup {
         col("m.start_b").cast("long").as("pos_b"),
         col("m.len").cast("long").as("span_len"))
       .distinct()
+    // steady-state ingestion (SpanDedupStream calls this once per
+    // micro-batch): eager bounded span frame, per-batch caches released
+    val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    newBase.unpersist()
+    newAnchors.unpersist()
+    combined.unpersist()
+    fetched.unpersist()
+    out
   }
 
   /** WITHIN-document repeated spans — the intra-doc complement of
@@ -1806,15 +1785,13 @@ object Dedup {
     */
   def selfSpans(
       df: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 20, k: Int = 10, maxHashOccurrences: Int = 1000,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      minLen: Int = 20, k: Int = 10, maxHashOccurrences: Int = 1000): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
     GraftFunctions.ensure(df.sparkSession)
     val w = minLen - k + 1
-    val base = persistIf(
-      df.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
-      persistLevel) // anchor pass + text join
+    val base = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + text join
     val anchors = base
       .select(col("id"), explode(GraftFunctions.winnowPos(col("text"), k, w)).as("a"))
       .select(col("id"), col("a.pos").as("pos"), col("a.h").as("h"))
@@ -1941,18 +1918,6 @@ object Dedup {
         (length(text) - length(col("text_clean"))).cast("long"))
       .drop("__cut", "__rs_id")
   }
-
-  /** Persist unless the caller opted out with StorageLevel.NONE.
-    *
-    * The cached intermediates (signatures/grams) are not unpersisted by the
-    * operator — the returned frame is lazy, so there is no safe point to
-    * release them here. Long-running services that call these operators
-    * repeatedly should pass StorageLevel.NONE (recompute instead of cache)
-    * or periodically clear the cache (spark.catalog.clearCache); one-shot
-    * pipeline jobs can keep the default.
-    */
-  private def persistIf(df: DataFrame, level: StorageLevel): DataFrame =
-    if (level == StorageLevel.NONE) df else df.persist(level)
 
   /** Distinct candidate pairs (id_a < id_b) from a narrow blocked frame
     * (id + bucket key columns): one shuffle on the bucket key, optional

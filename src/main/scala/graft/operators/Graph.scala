@@ -24,12 +24,18 @@ import org.apache.spark.storage.StorageLevel
   * `src`; each iteration shuffles only the rank frame (O(nodes), narrow
   * (long, long) rows) to the edge partitioning, then one groupBy(dst)
   * with map-side partial sums. localCheckpoint (or reliable checkpoints
-  * under `checkpointDir`) every `checkpointInterval` rounds truncates
+  * under `checkpointDir`) every `checkpointInterval` (4) rounds truncates
   * the linearly-growing iterative lineage (the Dedup.connectedComponents
   * pattern) — rounds between checkpoints chain into one job, removing
   * the per-round job-scheduling floor without changing any value.
   */
 object Graph {
+
+  /** Rounds between lineage-truncating checkpoints in the fixed-round
+    * iterations ([[pageRank]], [[personalizedPageRank]],
+    * [[labelPropagation]], [[pageRankWeighted]]); the last round always
+    * checkpoints. Settled at 4 by the r12 A/B (OPTIMIZATION_r12.md). */
+  private val checkpointInterval = 4
 
   /** PageRank with fixed iteration count.
     *
@@ -54,11 +60,9 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 8, dampNum: Long = 85, dampDen: Long = 100,
       scale: Long = 1000000000L,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      checkpointDir: Option[String] = None,
-      checkpointInterval: Int = 4): DataFrame =
+      checkpointDir: Option[String] = None): DataFrame =
     pageRankCore(edges, srcCol, dstCol, None, iters, dampNum, dampDen,
-      scale, persistLevel, checkpointDir, checkpointInterval)
+      scale, checkpointDir)
 
   /** PERSONALIZED PageRank: the teleport term lands only on `seeds`
     * (random surfer restarts at the seed set, not uniformly) — the
@@ -80,83 +84,58 @@ object Graph {
       seeds: DataFrame, seedCol: String,
       iters: Int = 8, dampNum: Long = 85, dampDen: Long = 100,
       scale: Long = 1000000000L,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      checkpointDir: Option[String] = None,
-      checkpointInterval: Int = 4): DataFrame =
+      checkpointDir: Option[String] = None): DataFrame =
     pageRankCore(edges, srcCol, dstCol,
       Some(seeds.select(col(seedCol).cast("long").as("node"))
         .where(col("node").isNotNull).distinct()),
-      iters, dampNum, dampDen, scale, persistLevel, checkpointDir,
-      checkpointInterval)
+      iters, dampNum, dampDen, scale, checkpointDir)
 
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
       seedsOpt: Option[DataFrame],
       iters: Int, dampNum: Long, dampDen: Long, scale: Long,
-      persistLevel: StorageLevel,
-      checkpointDir: Option[String],
-      checkpointInterval: Int): DataFrame = {
+      checkpointDir: Option[String]): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1 (got $checkpointInterval)")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping must satisfy 0 <= dampNum <= dampDen (got $dampNum/$dampDen)")
-    val spark = edges.sparkSession
-
-    checkpointDir.foreach { dir =>
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-    }
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
-    // Same materialization contract as Dedup.connectedComponents:
+    // the Dedup.connectedComponents materialization contract:
     // localCheckpoint for single-process speed, reliable checkpoint files
-    // for executor-loss tolerance on real clusters.
-    var pendingCaches: List[DataFrame] = Nil
-    def materialize(plan: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) {
-        val cached = persistIf(plan)
-        if (persistLevel != StorageLevel.NONE) pendingCaches ::= cached
-        cached.checkpoint(eager = false)
-      } else if (persistLevel == StorageLevel.NONE) plan
-      else plan.localCheckpoint(eager = false, storageLevel = persistLevel)
-    def releaseCheckpointedCaches(): Unit = {
-      pendingCaches.foreach(_.unpersist())
-      pendingCaches = Nil
-    }
+    // for executor-loss tolerance on real clusters
+    val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, checkpointDir)
 
     // e is read by FOUR consumers (edgeDeg's join + degree sides, nodeIds'
     // src + dst arms): the distinct's exchange is stage-reused, but its
     // post-exchange dedup aggregate recomputed once per consumer — the
     // cache makes that one pass (r12, the CC persist-before-reuse rule)
-    val e = persistIf(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct())
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // (src, dst, outdeg), pre-partitioned AND pre-sorted on the per-round
     // join key: the big side never reshuffles after the first
     // materialization, and the per-round sort-merge join sorts only the
     // O(nodes) rank frame — the cached edge partitions are already in
     // src order (r12: the per-round edge sort was 8× the rank sort)
-    val edgeDeg = persistIf(
-      e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-        .repartition(col("src"))
-        .sortWithinPartitions("src"))
+    val edgeDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+      .repartition(col("src"))
+      .sortWithinPartitions("src")
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // persisted so the personalized branch's eager count (needed for the
     // teleport LITERAL — inherent to the exact-integer contract) and the
     // base-frame build below read one materialization, not two distinct
     // passes over the edge union
-    val nodeIds = persistIf {
+    val nodeIds = {
       val base = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
       seedsOpt match {
         case Some(s) => base.union(s).distinct()
         case None => base.distinct()
       }
-    }
+    }.persist(StorageLevel.MEMORY_AND_DISK)
     // per-node teleport base: uniform for the global form; concentrated
     // on the seed set for the personalized form (one floor division so
     // both engines replay the constant)
-    val nodes = persistIf(seedsOpt match {
+    val nodes = (seedsOpt match {
       case None =>
         nodeIds.withColumn("base", lit((dampDen - dampNum) * scale / dampDen))
       case Some(s) =>
@@ -171,7 +150,7 @@ object Graph {
           .select(col("node"),
             when(col("__seed").isNotNull, lit(t.toLong)).otherwise(lit(0L))
               .as("base"))
-    })
+    }).persist(StorageLevel.MEMORY_AND_DISK)
 
     var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
     try {
@@ -211,19 +190,17 @@ object Graph {
         // way. The action writes the checkpoint (reliable path) / stores
         // the blocks (local path), then superseded caches can go.
         if (k == iters - 1 || (k + 1) % checkpointInterval == 0) {
-          val next = materialize(plan)
+          val next = rounds.materialize(plan)
           next.count()
-          releaseCheckpointedCaches()
+          rounds.releaseCheckpointedCaches()
           ranks = next
         } else ranks = plan
         k += 1
       }
       ranks
     } finally {
-      releaseCheckpointedCaches()
-      if (persistLevel != StorageLevel.NONE) {
-        e.unpersist(); edgeDeg.unpersist(); nodes.unpersist(); nodeIds.unpersist()
-      }
+      rounds.releaseCheckpointedCaches()
+      e.unpersist(); edgeDeg.unpersist(); nodes.unpersist(); nodeIds.unpersist()
     }
   }
 
@@ -245,23 +222,18 @@ object Graph {
     * per round.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 4,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      checkpointInterval: Int = 4): DataFrame = {
+      iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1 (got $checkpointInterval)")
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
-    val e = persistIf(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .repartition(col("src"))
-      .sortWithinPartitions("src"))
-    val nodes = persistIf(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct())
+      .sortWithinPartitions("src")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     var labels = nodes.withColumn("label", col("node"))
     try {
       var k = 0
@@ -286,19 +258,18 @@ object Graph {
         // round references the prior labels once, so intermediate rounds
         // chain into one job with linear plan growth; bit-identical.
         val next =
-          if (persistLevel == StorageLevel.NONE ||
-              !(k == iters - 1 || (k + 1) % checkpointInterval == 0)) plan
-          else {
-            val c = plan.localCheckpoint(eager = false, storageLevel = persistLevel)
+          if (k == iters - 1 || (k + 1) % checkpointInterval == 0) {
+            val c = plan.localCheckpoint(eager = false,
+              storageLevel = StorageLevel.MEMORY_AND_DISK)
             c.count()
             c
-          }
+          } else plan
         labels = next
         k += 1
       }
       labels
     } finally {
-      if (persistLevel != StorageLevel.NONE) { e.unpersist(); nodes.unpersist() }
+      e.unpersist(); nodes.unpersist()
     }
   }
 
@@ -316,23 +287,22 @@ object Graph {
     * The triangle SET is orientation-invariant, so a plain id-ordered
     * replay (the oracle) must produce identical counts.
     */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val s = col(srcCol).cast("long"); val d = col(dstCol).cast("long")
     // und feeds the degree aggregate AND the orientation join; deg feeds
     // both orientation sides AND the final node list — persist both so
     // the distinct-edge collapse and the degree shuffle run once
-    val und = persistIf(edges
+    val und = edges
       .select(least(s, d).as("u"), greatest(s, d).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct())
-    val deg = persistIf(und.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("dg")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("dg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // orient low rank → high rank, rank = (deg, id); carry the head's
     // rank for the wedge ordering below
-    val oriented = persistIf(und
+    val oriented = und
       .join(deg.select(col("node").as("u"), col("dg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("dg").as("dv")), "v")
       .select(
@@ -341,7 +311,8 @@ object Graph {
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           col("v")).otherwise(col("u")).as("b"),
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          col("dv")).otherwise(col("du")).as("rb")))
+          col("dv")).otherwise(col("du")).as("rb"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // `oriented` feeds the returned LAZY plan three times (two wedge arms
     // + the closing semi-join) — the cache is what makes that one compute;
     // it is reclaimed by the ContextCleaner once the caller's result drops
@@ -403,25 +374,23 @@ object Graph {
     * frame is lineage-truncated (the pageRank materialization contract).
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIters: Int = 16,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      maxIters: Int = 16): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(maxIters >= 1, s"maxIters must be >= 1 (got $maxIters)")
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
     // undirected simple graph: symmetrize, drop self-loops, dedup. The
     // projected base persists BEFORE the symmetrizing union (the CC r12
     // rule): the union references it twice, and post-exchange compute of
     // an expensive caller plan (a join's merge, a verify filter) is NOT
     // deduped by exchange reuse — un-cached it ran twice inside e0's
     // materialization. Narrow (long, long) rows.
-    val base = persistIf(edges
+    val base = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst")))
-    val e0 = persistIf(
-      base.union(base.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(col("src")))
+      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e0 = base.union(base.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     var alive = e0
     var lastCount = -1L
     try {
@@ -437,9 +406,8 @@ object Graph {
         // one action per round: the count that drives convergence IS the
         // materializing action for the lazy checkpoint (r12: the separate
         // materialize-then-recount paid one extra scheduler job per peel)
-        val next =
-          if (persistLevel == StorageLevel.NONE) plan
-          else plan.localCheckpoint(eager = false, storageLevel = persistLevel)
+        val next = plan.localCheckpoint(eager = false,
+          storageLevel = StorageLevel.MEMORY_AND_DISK)
         val n = next.count()
         converged = n == lastCount
         lastCount = n
@@ -448,7 +416,7 @@ object Graph {
       }
       alive.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
     } finally {
-      if (persistLevel != StorageLevel.NONE) { base.unpersist(); e0.unpersist() }
+      base.unpersist(); e0.unpersist()
     }
   }
 
@@ -473,32 +441,27 @@ object Graph {
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int = 8,
       dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000L,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      checkpointInterval: Int = 4): DataFrame = {
+      scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1 (got $checkpointInterval)")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping must satisfy 0 <= dampNum <= dampDen (got $dampNum/$dampDen)")
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
     // four consumers of e (edgeW join + weight-sum sides, nodes' two
     // arms): persist so the merge aggregate runs once (pageRankCore r12)
-    val e = persistIf(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    val edgeW = persistIf(
-      e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src")
-        .repartition(col("src"))
-        .sortWithinPartitions("src"))
-    val nodes = persistIf(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct()
-        .withColumn("base", lit((dampDen - dampNum) * scale / dampDen)))
+      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgeW = e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src")
+      .repartition(col("src"))
+      .sortWithinPartitions("src")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .distinct()
+      .withColumn("base", lit((dampDen - dampNum) * scale / dampDen))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
       .localCheckpoint(true)
     var k = 0
@@ -528,9 +491,7 @@ object Graph {
         else plan
       k += 1
     }
-    if (persistLevel != StorageLevel.NONE) {
-      e.unpersist(); edgeW.unpersist(); nodes.unpersist()
-    }
+    e.unpersist(); edgeW.unpersist(); nodes.unpersist()
     ranks
   }
 
@@ -599,27 +560,20 @@ object Graph {
     */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, sourceCol: String,
-      weightCol: Option[String] = None, maxIters: Int = 20,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      weightCol: Option[String] = None, maxIters: Int = 20): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1 (got $maxIters)")
-    require(persistLevel != StorageLevel.NONE || maxIters <= 15,
-      s"persistLevel=NONE disables lineage truncation; maxIters must be <= 15 (got $maxIters)")
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
     val w = weightCol.map(c => col(c).cast("long")).getOrElse(lit(1L))
-    val e = persistIf(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
       .groupBy("src", "dst").agg(min(col("w")).as("w"))
-      .repartition(col("src")))
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val minW = e.agg(min(col("w"))).collect()(0)
     if (!minW.isNullAt(0))
       require(minW.getLong(0) >= 0L,
         s"shortestPaths: negative edge weight ${minW.getLong(0)} refused")
-    def materialize(plan: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) plan
-      else plan.localCheckpoint(eager = false, storageLevel = persistLevel)
     var dist = sources
       .select(col(sourceCol).cast("long").as("node"))
       .where(col("node").isNotNull).distinct()
@@ -634,13 +588,13 @@ object Graph {
           .join(frontier.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node"), (col("dist") + col("w")).as("nd"))
           .groupBy("node").agg(min(col("nd")).as("nd"))
-        val next = materialize(
-          dist.join(relaxed, Seq("node"), "full_outer")
-            .select(col("node"),
-              least(col("dist"), col("nd")).as("dist"),
-              (col("dist").isNull ||
-                (col("nd").isNotNull && col("nd") < col("dist")))
-                .as("__changed")))
+        val next = dist.join(relaxed, Seq("node"), "full_outer")
+          .select(col("node"),
+            least(col("dist"), col("nd")).as("dist"),
+            (col("dist").isNull ||
+              (col("nd").isNotNull && col("nd") < col("dist")))
+              .as("__changed"))
+          .localCheckpoint(eager = false, storageLevel = StorageLevel.MEMORY_AND_DISK)
         val changed = next.filter(col("__changed")).count() // materializes
         dist = next.drop("__changed")
         frontier = next.filter(col("__changed")).drop("__changed")
@@ -649,24 +603,22 @@ object Graph {
       }
       dist
     } finally {
-      if (persistLevel != StorageLevel.NONE) e.unpersist()
+      e.unpersist()
     }
   }
 
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 8, scale: Long = 1000000L,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      iters: Int = 8, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
     require(scale >= 1, s"scale must be >= 1 (got $scale)")
-    def persistIf(df: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) df else df.persist(persistLevel)
-    val e = persistIf(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct())
-    val nodes = persistIf(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct())
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // LAZY-CHAINED phases (r13, interleaved A/B on the q_hits trade
     // graph, OPTIMIZATION_r13.md §2): every phase frame is a LAZY
     // localCheckpoint — the logical plan is truncated to a leaf each
@@ -717,7 +669,7 @@ object Graph {
         coalesce(col("authority_e6"), lit(0L)).as("authority_e6"),
         coalesce(col("hub_e6"), lit(0L)).as("hub_e6"))
       .localCheckpoint(true)
-    if (persistLevel != StorageLevel.NONE) { e.unpersist(); nodes.unpersist() }
+    e.unpersist(); nodes.unpersist()
     out
   }
 

@@ -201,7 +201,7 @@ object Relational {
       thresholdNum: Long, thresholdDen: Long,
       n: Int = 3, maxGramFreq: Long = 10000L): DataFrame =
     fuzzyJoinImpl(left, Some(right), lIdCol, lStrCol, rIdCol, rStrCol,
-      thresholdNum, thresholdDen, n, maxGramFreq)
+      thresholdNum, thresholdDen, n, maxGramFreq)._1
 
   /** SELF fuzzy join — each undirected near-match pair of ONE frame,
     * emitted once (l_id < r_id). Same semantics as
@@ -221,7 +221,7 @@ object Relational {
       thresholdNum: Long, thresholdDen: Long,
       n: Int = 3, maxGramFreq: Long = 10000L): DataFrame =
     fuzzyJoinImpl(df, None, idCol, strCol, idCol, strCol,
-      thresholdNum, thresholdDen, n, maxGramFreq)
+      thresholdNum, thresholdDen, n, maxGramFreq)._1
 
   /** Hashed distinct-gram arrays — one row per string:
     * `(side_id, side_gs: array<bigint>, side_grams)`. The ONE gram
@@ -251,10 +251,14 @@ object Relational {
       .withColumn(s"${side}_grams", size(col(s"${side}_gs")).cast("long"))
       .filter(col(s"${side}_grams") > 0)
 
+  /** The PPJoin pair plan plus the frames it persisted: the one-shot
+    * verbs leave those cached (the Dedup convention), while
+    * [[fuzzyJoinIncremental]] unpersists them once its result is
+    * checkpointed. */
   private def fuzzyJoinImpl(left: DataFrame, rightOpt: Option[DataFrame],
       lIdCol: String, lStrCol: String, rIdCol: String, rStrCol: String,
       thresholdNum: Long, thresholdDen: Long,
-      n: Int, maxGramFreq: Long): DataFrame = {
+      n: Int, maxGramFreq: Long): (DataFrame, Seq[DataFrame]) = {
     require(thresholdDen > 0 && thresholdNum >= 0, "threshold must be >= 0")
     // gram ARRAYS are the one persisted artifact: freq, both prefixes and
     // the verification all derive from them, so the gram generation runs
@@ -265,12 +269,10 @@ object Relational {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // self mode: the right stream is a RENAME of the cached left frame —
     // gram generation and persistence happen once
-    val rArr = rightOpt match {
-      case Some(right) => gramArrays(right, rIdCol, rStrCol, "r")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      case None => lArr.select(col("l_id").as("r_id"),
-        col("l_gs").as("r_gs"), col("l_grams").as("r_grams"))
-    }
+    val rCached = rightOpt.map(right => gramArrays(right, rIdCol, rStrCol, "r")
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val rArr = rCached.getOrElse(lArr.select(col("l_id").as("r_id"),
+      col("l_gs").as("r_gs"), col("l_grams").as("r_grams")))
     def explodedGrams(side: String) =
       (if (side == "l") lArr else rArr)
         .select(col(s"${side}_id"), col(s"${side}_grams"),
@@ -340,7 +342,7 @@ object Relational {
       .repartition(verifyFanout(left))
     val shared = size(array_intersect(col("l_gs"), col("r_gs"))).cast("long")
     val union = col("l_grams") + col("r_grams") - col("shared_grams")
-    cand
+    val pairs = cand
       .join(lArr, Seq("l_id"))
       .join(rArr, Seq("r_id"))
       .withColumn("shared_grams", shared)
@@ -349,6 +351,7 @@ object Relational {
         "CAST((CAST(shared_grams AS decimal(38,0)) * 1000000) div " +
           "(l_grams + r_grams - shared_grams) AS long)"))
       .select("l_id", "r_id", "shared_grams", "l_grams", "r_grams", "jaccard_e6")
+    (pairs, Seq(lArr, freq) ++ rCached)
   }
 
   /** GRAM-INDEX STORE for [[fuzzyJoinIncremental]]: the PPJoin index
@@ -423,17 +426,15 @@ object Relational {
       newDf: DataFrame, idCol: String, strCol: String,
       store: DataFrame, history: DataFrame,
       thresholdNum: Long, thresholdDen: Long,
-      n: Int = 3, maxGramFreq: Long = 0L,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      n: Int = 3, maxGramFreq: Long = 0L): DataFrame = {
     require(thresholdDen > 0 && thresholdNum >= 0, "threshold must be >= 0")
-    def persistIf(d: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) d else d.persist(persistLevel)
     // sz − ⌈t·sz⌉ + 1 in exact integer arithmetic (the fuzzyJoinImpl
     // prefix bound), parameterized by the size column's name
     def prefixBound(szName: String): Column =
       expr(s"$szName - (($thresholdNum * $szName + $thresholdDen - 1) " +
         s"div $thresholdDen) + 1")
-    val bArr = persistIf(hashedGramArrays(newDf, idCol, strCol, "b", n))
+    val bArr = hashedGramArrays(newDf, idCol, strCol, "b", n)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val bg = bArr.select(col("b_id"), col("b_grams"),
       explode(col("b_gs")).as("g"))
     // df lookup under the FROZEN store order: the store's (g, df) rows
@@ -449,11 +450,12 @@ object Relational {
     val bFreq = if (maxGramFreq <= 0L) bFreq0
       else bFreq0.filter(col("df") <= maxGramFreq)
     val byStr = Window.partitionBy("b_id").orderBy(col("df"), col("g"))
-    val bPrefix = persistIf(bFreq
+    val bPrefix = bFreq
       .withColumn("b_rk", row_number().over(byStr).cast("long"))
       .filter(col("b_rk") <= prefixBound("b_grams"))
       .select(col("b_id"), col("g"), col("b_rk"),
-        col("b_grams").as("b_sz")))
+        col("b_grams").as("b_sz"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // store prefix: rk filter is map-side; only grams in the BATCH
     // prefix can collide, so their broadcast set prunes the store scan
     // (and the store's buckets, when bucketed by g) pre-join
@@ -476,7 +478,8 @@ object Relational {
       lcol(strCol).cast("string").as("str"))
     val fetched = oldText
       .join(broadcast(cand.select(col("id_o").as("id")).distinct()), Seq("id"))
-    val oArr = persistIf(hashedGramArrays(fetched, "id", "str", "o", n))
+    val oArr = hashedGramArrays(fetched, "id", "str", "o", n)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val shared = size(array_intersect(col("o_gs"), col("b_gs"))).cast("long")
     // the verify join is NOT hinted: the fetched-old array frame is
     // bounded by the CANDIDATE set, which on dense corpora can approach
@@ -502,18 +505,14 @@ object Relational {
         when(col("o_id") < col("b_id"), col("b_grams"))
           .otherwise(col("o_grams")).as("r_grams"),
         col("jaccard_e6"))
-    val newNew = fuzzySelfPairs(newDf, idCol, strCol,
-      thresholdNum, thresholdDen, n, maxGramFreq)
+    // new×new: the fuzzySelfPairs plan over the batch alone
+    val (newNew, newNewCaches) = fuzzyJoinImpl(newDf, None, idCol, strCol,
+      idCol, strCol, thresholdNum, thresholdDen, n, maxGramFreq)
     val result = mixedPairs.unionByName(newNew)
     // steady-state ingestion: eager bounded pair frame, caches released
-    if (persistLevel == StorageLevel.NONE) result
-    else {
-      val out = result.localCheckpoint(eager = true, storageLevel = persistLevel)
-      bArr.unpersist()
-      bPrefix.unpersist()
-      oArr.unpersist()
-      out
-    }
+    val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    (Seq(bArr, bPrefix, oArr) ++ newNewCaches).foreach(_.unpersist())
+    out
   }
 
   /** ENTITY RESOLUTION within one table: the composed record-linkage
@@ -745,11 +744,12 @@ object Relational {
     * full stratum, so the exact-N contract is unconditional. The
     * survivor set (~margin × Σtargets rows — sample-sized, not
     * corpus-sized) and the tiny per-stratum count table are persisted so
-    * the shortfall check does not rescan the corpus (opt out with
-    * `persistLevel = StorageLevel.NONE` in long-running services — the
-    * entries are not unpersisted, the Dedup convention); the rescue branch's
-    * scan is eliminated at runtime by AQE empty-relation propagation
-    * whenever no stratum fell short (the overwhelmingly common case).
+    * the shortfall check does not rescan the corpus; the returned plan
+    * is lazy, so they stay cached until `unpersist` or
+    * `spark.catalog.clearCache()` (the Dedup one-shot convention). The
+    * rescue branch's scan is eliminated at runtime by AQE empty-relation
+    * propagation whenever no stratum fell short (the overwhelmingly
+    * common case).
     *
     * PRECONDITION: `keyCols` must uniquely identify rows — duplicate key
     * tuples tie in both the hash fraction and the tie-break, leaving
@@ -758,18 +758,10 @@ object Relational {
     */
   def mixtureSample(df: DataFrame, stratumCol: String,
       targets: Map[String, Long], keyCols: Seq[String],
-      seed: Long = 42L, margin: Double = 4.0,
-      persistLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      seed: Long = 42L, margin: Double = 4.0): DataFrame = {
     require(targets.nonEmpty, "targets must be non-empty")
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(margin >= 1.0, s"margin must be >= 1, got $margin")
-    // NONE opts out of caching for long-running services that cannot
-    // accumulate cache entries across calls (the Dedup persistLevel
-    // convention) — at the price of recomputed scans per consumer
-    def persistIf(d: DataFrame): DataFrame =
-      if (persistLevel == org.apache.spark.storage.StorageLevel.NONE) d
-      else d.persist(persistLevel)
     val spark = df.sparkSession
     import spark.implicits._
     val targetDf = broadcast(targets.toSeq.toDF(stratumCol, "__target"))
@@ -786,15 +778,15 @@ object Relational {
       rows.withColumn("__rk", row_number().over(rankW))
         .where(col("__rk") <= col("__target"))
         .drop("__rk", "__target")
-    val counts = persistIf(
-      df.groupBy(lcol(stratumCol)).agg(count(lit(1)).as("__cnt"))) // tiny: one row per stratum
+    val counts = df.groupBy(lcol(stratumCol)).agg(count(lit(1)).as("__cnt"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // tiny: one row per stratum
     val rate = least(lit(1.0),
       greatest(lit(64.0), col("__target") * margin) / col("__cnt"))
-    val pre = persistIf(
-      df.join(targetDf, Seq(stratumCol))
-        .join(broadcast(counts), Seq(stratumCol))
-        .where(frac < rate)
-        .drop("__cnt")) // sample-sized survivor set
+    val pre = df.join(targetDf, Seq(stratumCol))
+      .join(broadcast(counts), Seq(stratumCol))
+      .where(frac < rate)
+      .drop("__cnt")
+      .persist(StorageLevel.MEMORY_AND_DISK) // sample-sized survivor set
     // strata whose survivor count fell short of min(target, available):
     // empty at margin 4 in practice, but the contract must not depend on
     // a tail bound — re-rank those strata from the full input
@@ -1831,19 +1823,16 @@ object Relational {
     */
   def editDistanceJoinIncremental(
       newDf: DataFrame, idCol: String, strCol: String,
-      store: DataFrame, history: DataFrame, maxDist: Int,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      store: DataFrame, history: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 1 && maxDist <= 8,
       s"maxDist must be in [1, 8] (got $maxDist)")
     val k = maxDist
     val q = k + 1
-    def persistIf(d: DataFrame): DataFrame =
-      if (persistLevel == StorageLevel.NONE) d else d.persist(persistLevel)
-    val newBase = persistIf(
-      newDf.select(col(idCol).cast("long").as("id"),
-          col(strCol).cast("string").as("str"))
-        .where(col("id").isNotNull && col("str").isNotNull)
-        .withColumn("len", length(col("str"))))
+    val newBase = newDf.select(col(idCol).cast("long").as("id"),
+        col(strCol).cast("string").as("str"))
+      .where(col("id").isNotNull && col("str").isNotNull)
+      .withColumn("len", length(col("str")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val oldBase = history.select(col(idCol).cast("long").as("id"),
         col(strCol).cast("string").as("str"))
       .where(col("id").isNotNull && col("str").isNotNull)
@@ -1855,7 +1844,7 @@ object Relational {
       s"1 + $i * ($l div $q) + greatest($i - ($q - $l % $q), 0)"
     val segLen = (l: String, i: String) =>
       s"($l div $q) + IF($i >= $q - $l % $q, 1, 0)"
-    val probes = persistIf(newBase.filter(col("len") >= q)
+    val probes = newBase.filter(col("len") >= q)
       .select(col("id").as("id_n"), col("str"), col("len"),
         explode(expr(
           s"""flatten(transform(
@@ -1872,7 +1861,8 @@ object Relational {
              |      p -> struct(L AS src_len, i AS seg_idx,
              |        substring(str, p, ${segLen("L", "i")}) AS seg))))))"""
             .stripMargin)).as("pr"))
-      .select(col("id_n"), col("pr.src_len"), col("pr.seg_idx"), col("pr.seg")))
+      .select(col("id_n"), col("pr.src_len"), col("pr.seg_idx"), col("pr.seg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // store probe: only keys the batch actually enumerates can pair with
     // it; the distinct key set broadcasts so the store NEVER shuffles
     // (post-distinct stats can push the planner to sort-merge otherwise —
@@ -1896,8 +1886,9 @@ object Relational {
     // text fetch in the O(batch + matches) shape: bounded old candidate
     // ids broadcast into one map-side history scan
     val neededOld = mixed.select(col("id_o").as("id")).distinct()
-    val fetchedOld = persistIf(oldBase.join(broadcast(neededOld), Seq("id"))
-      .select(col("id"), col("str")))
+    val fetchedOld = oldBase.join(broadcast(neededOld), Seq("id"))
+      .select(col("id"), col("str"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // no broadcast() hint on the fetched-history side: the candidate id
     // set can approach full history on dense corpora (driver OOM risk —
     // fuzzyJoinIncremental removed the same hint after a measured OOM at
@@ -1918,13 +1909,10 @@ object Relational {
     val newNew = editDistanceJoin(newBase, "id", "str", k)
     val result = mixedPairs.unionByName(newNew)
     // steady-state ingestion: eager bounded pair frame, caches released
-    if (persistLevel == StorageLevel.NONE) result
-    else {
-      val out = result.localCheckpoint(eager = true, storageLevel = persistLevel)
-      newBase.unpersist()
-      probes.unpersist()
-      fetchedOld.unpersist()
-      out
-    }
+    val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    newBase.unpersist()
+    probes.unpersist()
+    fetchedOld.unpersist()
+    out
   }
 }

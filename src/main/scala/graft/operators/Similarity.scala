@@ -677,14 +677,12 @@ object Similarity {
     * units.
     */
   def clusterMedoid(df: DataFrame, idCol: String, vecCol: String,
-      clusterCol: String,
-      persistLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      clusterCol: String): DataFrame = {
     // the quantized frame feeds THREE consumers (S vectors, cluster
     // aggregates, the scoring join) — persist it so the upstream vector
     // derivation runs once, release after the bounded per-cluster
     // result checkpoints (the editDistanceJoinIncremental discipline)
-    val base0 = df.select(col(clusterCol).cast("long").as("c"),
+    val base = df.select(col(clusterCol).cast("long").as("c"),
         col(idCol).cast("long").as("id"),
         expr(s"transform(`$vecCol`, x -> IF(abs(x) <= 1.0D, " +
           "CAST(round(CAST(x AS double) * 10000.0D) AS bigint), " +
@@ -692,9 +690,7 @@ object Similarity {
           "unit-normalize the embeddings')))").as("q"))
       .where(col("c").isNotNull && col("id").isNotNull && col("q").isNotNull)
       .withColumn("nq", expr("aggregate(q, 0L, (a, x) -> a + x * x)"))
-    val base =
-      if (persistLevel == org.apache.spark.storage.StorageLevel.NONE) base0
-      else base0.persist(persistLevel)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val agg = base.groupBy("c")
       .agg(count(lit(1)).as("n"), sum("nq").as("sumn"),
         min(size(col("q"))).as("__dmin"), max(size(col("q"))).as("__dmax"))
@@ -731,12 +727,9 @@ object Similarity {
       .where(col("__pick") === 1)
       .select(col("c").as(clusterCol), col("id").as("medoid_id"),
         col("n"), col("score_e8"))
-    if (persistLevel == org.apache.spark.storage.StorageLevel.NONE) result
-    else {
-      val out = result.localCheckpoint(eager = true,
-        storageLevel = persistLevel)
-      base.unpersist()
-      out
-    }
+    val out = result.localCheckpoint(eager = true,
+      storageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    base.unpersist()
+    out
   }
 }

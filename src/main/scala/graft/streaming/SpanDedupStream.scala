@@ -79,9 +79,10 @@ object SpanDedupStream {
         b.join(history.select("id"), Seq("id"), "left_anti")
       else b)
       .localCheckpoint(true) // frozen: batch sources are spent after the trigger
+    // eagerly checkpointed by the operator: materialized BEFORE the
+    // store writes below
     val spans = Dedup.sharedSpansIncremental(fresh, "id", "text",
       storeAnchors, history, minLen, k, maxHashDocs, maxHashOccurrences)
-      .localCheckpoint(true) // materialize BEFORE the store writes below
     wh.saveDf(Dedup.spanAnchorStore(fresh, "id", "text", minLen, k),
       partitionPath(wh, dir, aT, batchId))
     wh.saveDf(fresh, partitionPath(wh, dir, tT, batchId))

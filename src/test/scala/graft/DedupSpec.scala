@@ -1215,31 +1215,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
     // steady-state ingestion must not accumulate cache entries: after the
     // call, only the returned (eagerly checkpointed) pair list may remain
-    // cached — the per-snapshot signature/bucket intermediates are freed.
-    // Growth checks poll with a drain window: suites share the context
-    // and run concurrently, so unrelated transient caches may be in
-    // flight at any instant — a GENUINE leak never drains, transient
-    // churn does.
-    def awaitNoGrowth(base: Int, slack: Int, what: String): Unit = {
-      def now = spark.sparkContext.getPersistentRDDs.size
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (now - base > slack && System.nanoTime() < deadline) Thread.sleep(200)
-      assert(now - base <= slack, s"$what: $base -> $now cached RDDs")
-    }
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // cached — the per-snapshot signature/bucket intermediates are freed
+    val before = cachedRddIds
     val snap = Dedup.minhashLshIncremental(batch, "doc_id", "text", store,
       shingleWidth = 3, numPerms = 128, bands = 32, threshold = 0.5)
-    awaitNoGrowth(before, 1, "per-snapshot intermediates leaked")
+    val added = cachedSince(before, 1)
+    assert(added <= 1, s"per-snapshot intermediates leaked: $added cached RDDs")
     assert(snap.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === got,
       "eager-checkpoint path changed the results")
-    // NONE opts out of caching AND eagerness entirely (no growth beyond
-    // the eager run's retained pair checkpoint)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    val lazyRun = Dedup.minhashLshIncremental(batch, "doc_id", "text", store,
-      shingleWidth = 3, numPerms = 128, bands = 32, threshold = 0.5,
-      persistLevel = org.apache.spark.storage.StorageLevel.NONE)
-    assert(lazyRun.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === got)
-    awaitNoGrowth(after, 0, "StorageLevel.NONE must not cache anything")
   }
 
   test("connectedComponents converges on deep chains, errors past maxIters, rejects string ids") {
@@ -1433,9 +1416,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val batch = history.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000L).as("doc_id"), col("text"))
     val store = Dedup.spanAnchorStore(history, "doc_id", "text")
-    val plan = Dedup.sharedSpansIncremental(batch, "doc_id", "text",
-        store, history)
-      .queryExecution.executedPlan.toString
+    // the operator checkpoints its result eagerly: inspect the plan that
+    // checkpoint ran
+    val plans = plansRunBy {
+      Dedup.sharedSpansIncremental(batch, "doc_id", "text", store, history)
+    }.collect { case ("localCheckpoint", p) => p }
+    assert(plans.size === 1)
+    val plan = plans.head.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"store probe must be a broadcast semi-join:\n$plan")
     assert(!"SortMergeJoin[^\\n]*LeftSemi".r.findFirstIn(plan).isDefined,

@@ -988,24 +988,9 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     // the brute-force corpus split 90/10: the incremental result over
     // (store of history, batch) must equal the one-shot pairs with at
     // least one batch side — and never emit an old-old pair
-    def base(i: Int): String = {
-      val chars = "abcdefgh"
-      (0 until 9 + i % 5).map(j => chars((i * 31 + j * 7) % 8)).mkString
-    }
-    def mutate(s: String, m: Int, i: Int): String = {
-      val p = (i * 13 + m * 5) % s.length
-      m % 3 match {
-        case 0 => s.updated(p, 'z')
-        case 1 => s.take(p) + s.drop(p + 1)
-        case _ => s.take(p) + "q" + s.drop(p)
-      }
-    }
-    val rows = (0 until 40).flatMap { i =>
-      Seq((i * 3L, base(i)), (i * 3L + 1, mutate(base(i), i, i)),
-        (i * 3L + 2, mutate(mutate(base(i), i, i), i + 1, i)))
-    } ++ Seq((1000L, "ab"), (1001L, "abcd")) // short rows on both sides
+    val rows = IncrementalFixtures.editRows
     val k = 3
-    val isNew = (id: Long) => id % 10 == 0 || id == 1000L
+    val isNew = IncrementalFixtures.editIsNew _
     val hist = rows.filterNot(r => isNew(r._1)).toDF("id", "s")
     val batch = rows.filter(r => isNew(r._1)).toDF("id", "s")
     val store = Relational.editSegmentStore(hist, "id", "s", maxDist = k)
@@ -1027,25 +1012,13 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fuzzyJoinIncremental == one-shot new-involving pairs; no old-old") {
-    // 30 base strings (30 chars over an 8-char alphabet) with two
-    // single-'Z'-substitution variants each — 'Z' never appears in a
-    // base, so batch variants carry grams history has NEVER seen (the
-    // df-0 novel-gram path in the frozen store order is exercised on
-    // every mixed pair). 90/10 split by id % 10; a planted new-new
-    // matching pair (2000/2010) plus its old twin (id 3) gives
-    // batch-internal AND exact-duplicate mixed coverage; sub-n strings
-    // (no grams) must vanish from both paths.
-    def base(i: Int): String = {
-      val chars = "abcdefgh"
-      (0 until 30).map(j => chars((i * 31 + j * 7) % 8)).mkString
-    }
-    def sub(s: String, p: Int): String = s.updated(p % s.length, 'Z')
-    val rows = (0 until 30).flatMap { i =>
-      Seq((i * 3L, base(i)), (i * 3L + 1, sub(base(i), i * 7 + 1)),
-        (i * 3L + 2, sub(base(i), i * 11 + 17)))
-    } ++ Seq((2000L, base(1)), (2010L, sub(base(1), 5)),
-      (3001L, "ab"), (3010L, "ab"))
-    val isNew = (id: Long) => id % 10 == 0
+    // batch variants carry grams history has NEVER seen (the df-0
+    // novel-gram path in the frozen store order is exercised on every
+    // mixed pair). 90/10 split by id % 10; the planted new-new pair plus
+    // its old twin gives batch-internal AND exact-duplicate mixed
+    // coverage; sub-n strings (no grams) must vanish from both paths.
+    val rows = IncrementalFixtures.fuzzyRows
+    val isNew = IncrementalFixtures.fuzzyIsNew _
     val hist = rows.filterNot(r => isNew(r._1)).toDF("id", "s")
     val batch = rows.filter(r => isNew(r._1)).toDF("id", "s")
     val store = Relational.fuzzyGramStore(hist, "id", "s", n = 3)

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for every suite (Test/fork runs them in a
   * single JVM — reusing the session avoids ~5 s of startup per suite).
@@ -17,4 +24,36 @@ trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
   def wh: Warehouse = Warehouse(spark, sfDir)
+
+  def cachedRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** How many cached RDDs absent from `before` are still cached, polled
+    * for up to 30 s until at most `slack`: unrelated transient caches may
+    * be in flight at any instant (unpersist is asynchronous) — a GENUINE
+    * leak never drains, transient churn does. Comparing ids, not counts,
+    * keeps RDDs released meanwhile from masking new ones. */
+  def cachedSince(before: Set[Int], slack: Int): Int = {
+    def added = (cachedRddIds -- before).size
+    val deadline = System.nanoTime() + 30_000_000_000L
+    while (added > slack && System.nanoTime() < deadline) Thread.sleep(200)
+    added
+  }
+
+  /** The executed plan of every action `body` runs — localCheckpoints
+    * included — in the order they ran. */
+  def plansRunBy(body: => Unit): Seq[(String, SparkPlan)] = {
+    val seen = new ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(funcName -> qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
 }
