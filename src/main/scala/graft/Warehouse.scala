@@ -132,8 +132,11 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     // up; the plain-table path tails new files/partitions live)
     val tablePath =
       Warehouse.latestVersionDir(spark, path(table)).getOrElse(path(table))
-    val schema = spark.read.parquet(tablePath).schema
-    val hp = new org.apache.hadoop.fs.Path(tablePath)
+    val footer = Warehouse.footerSchema(spark, tablePath)
+    // the stream needs partition columns in its schema: take them from a
+    // driver-side batch relation over the footer schema (no job)
+    val schema = spark.read.schema(footer.schema).parquet(tablePath).schema
+    val hp = new HPath(tablePath)
     val isDir = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(hp).isDirectory
     var reader = spark.readStream.schema(schema)
@@ -145,7 +148,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     val raw =
       if (isDir) reader.parquet(tablePath)
       else reader.option("pathGlobFilter", hp.getName).parquet(hp.getParent.toString)
-    normalized(tablePath, raw)
+    normalized(raw, footer.nanosCols)
   }
 
   /** Register every known table as a temp view and run arbitrary SQL —
@@ -207,12 +210,9 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     if (Warehouse.isSelectQuery(tableOrQuery)) loadSql(tableOrQuery)
     else loadTable(tableOrQuery)
 
-  def getSchema(table: String): StructType = {
-    // versioned tables resolve to their latest committed version (their
-    // base dir holds only underscore-hidden version dirs)
-    val p = Warehouse.latestVersionDir(spark, path(table)).getOrElse(path(table))
-    spark.read.parquet(p).schema
-  }
+  /** The schema [[loadTable]] returns — normalized, and for a versioned
+    * table that of its latest committed version. Runs no Spark job. */
+  def getSchema(table: String): StructType = loadTable(table).schema
 
   /** describe: compiled plan + output schema, mirroring
     * fugue_trino/api.py:14 `describe` (SQL + schema dump).
@@ -336,10 +336,11 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
 
   /** Batch read of the parquet at `p` through [[normalized]]. */
   private def normalizedRead(p: String, mergeSchema: Boolean = false): DataFrame = {
+    val footer = Warehouse.footerSchema(spark, p)
     val df =
       if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(p)
-      else spark.read.parquet(p)
-    normalized(p, df)
+      else spark.read.schema(footer.schema).parquet(p)
+    normalized(df, footer.nanosCols)
   }
 
   /** THE load-boundary normalization chain — every read path (loadTable,
@@ -348,11 +349,11 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     * paths: TIMESTAMP(NANOS)-as-long → microsecond timestamps;
     * TIMESTAMP_NTZ → LTZ (unix_micros, watermarks and Timestamp encoders
     * reject NTZ); array<double> vectors → the engine's array<float>
-    * contract. `p` is the parquet path `df` was read from.
+    * contract. `nanosCols` are the footer's TIMESTAMP(NANOS) columns.
     */
-  private def normalized(p: String, df: DataFrame): DataFrame =
+  private def normalized(df: DataFrame, nanosCols: Set[String]): DataFrame =
     Warehouse.normalizeVectors(Warehouse.normalizeNtz(
-      Warehouse.normalizeNanos(spark, p, baseDir, df)))
+      Warehouse.normalizeNanos(df, nanosCols)))
 
   /** COMPACTION — rewrite a table's (or a versioned table's latest
     * version's) small files into ~`targetBytes` files: the OPTIMIZE /
@@ -392,7 +393,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
         "compact each partition directory instead")
     val total = entries.map(_.getLen).sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(p)
+    val df = Warehouse.readStored(spark, p)
     val tmp = new HPath(p + "__compact_tmp")
     df.repartition(n).write.mode("overwrite").parquet(tmp.toString)
     // For a VERSIONED table the commit timestamp IS the _SUCCESS marker's
@@ -652,7 +653,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     saveTable(df, outDir, t, mode = "overwrite")
     // direct path read, not loadTable: the table may live outside baseDir,
     // and nanos normalization is keyed to source tables, not intermediates
-    spark.read.parquet(Warehouse.tablePath(outDir, t))
+    Warehouse.readStored(spark, Warehouse.tablePath(outDir, t))
   }
 
   /** Z-ORDERED table write: cluster rows along a Morton (Z) space-filling
@@ -718,7 +719,8 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
             val meta = spark.sessionState.catalog.getTableMetadata(
               org.apache.spark.sql.catalyst.TableIdentifier(t, Some(ns)))
             meta.location == st.getPath.toUri &&
-              spark.table(qualified).schema == spark.read.parquet(st.getPath.toString).schema
+              spark.table(qualified).schema ==
+                Warehouse.readStored(spark, st.getPath.toString).schema
           } catch { case _: Exception => false })
         if (sameTable) spark.sql(s"REFRESH TABLE $qualified")
         else {
@@ -957,41 +959,74 @@ object Warehouse {
     (Seq(dir) ++ parts.init :+ s"${parts.last}.parquet").mkString("/")
   }
 
-  /** TIMESTAMP(NANOS) columns arrive as plain long under the
-    * `nanosAsLong` legacy flag (GraftSession sets it — Spark's
-    * vectorized reader rejects nanos outright without it). Which columns
-    * those are is detected from the PARQUET FOOTER of one leaf file, not
-    * hardcoded per table: the round-8 NTZ break proved that pinning
-    * normalization to a (table, column) pair breaks silently the moment
-    * the data generator changes an encoding, and a footer check is one
-    * bounded metadata read per loadTable. Conversion truncates
-    * nanos → micros (Spark timestamps are microsecond; sub-microsecond
-    * precision is below every oracle's resolution).
+  /** One parquet footer's Spark schema and its TIMESTAMP(NANOS) column
+    * names (longs in that schema under the `nanosAsLong` legacy flag). */
+  private[graft] final case class FooterSchema(schema: StructType, nanosCols: Set[String])
+
+  /** THE schema rule for table reads: a table's schema is its first data
+    * file's parquet footer, read on the driver — the path itself for a
+    * single-file table, else the first listed file not named `_*` or `.*`,
+    * searching into partition dirs. Reads hand that schema to Spark, so
+    * Spark runs no footer-inference job (partition columns still come from
+    * the dir names); `loadTable(mergeSchema = true)` unions EVERY footer
+    * ([[mergedSchemaOf]]). Nothing is cached, so a table rewritten outside
+    * graft reads the footer now on disk. A table dir without a data file,
+    * or an unreadable footer, fails naming the path.
     */
-  private[graft] def normalizeNanos(spark: SparkSession, path: String,
-      dir: String, df: DataFrame): DataFrame = {
-    val longCols = df.schema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.LongType => f.name
+  private[graft] def footerSchema(spark: SparkSession, path: String): FooterSchema = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val hp = new HPath(path)
+    val fs = hp.getFileSystem(conf)
+    def firstFile(dir: HPath): Option[HPath] =
+      fs.listStatus(dir).iterator
+        .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+        .flatMap(s => if (s.isDirectory) firstFile(s.getPath) else Some(s.getPath))
+        .nextOption()
+    val leaf =
+      if (!fs.getFileStatus(hp).isDirectory) hp
+      else firstFile(hp).getOrElse(
+        throw new IllegalStateException(s"no parquet data file under table path $path"))
+    val meta =
+      try {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(leaf, conf))
+        try reader.getFooter finally reader.close()
+      } catch {
+        case e: Exception => throw new IllegalStateException(s"unreadable parquet footer in $leaf", e)
+      }
+    val nanos = meta.getFileMetaData.getSchema.getFields.asScala.collect {
+      case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      }) => f.getName
     }.toSet
-    if (longCols.isEmpty) return df
-    val nanosCols = nanosTimestampColumns(spark, path, dir).filter(longCols)
-    nanosCols.foldLeft(df) { (d, c) =>
-      val q = encodeColumnName(c)
-      d.withColumn(c, org.apache.spark.sql.functions.timestamp_micros(
-        org.apache.spark.sql.functions.expr(s"$q div 1000")))
-    }
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(leaf, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    FooterSchema(schema, nanos)
   }
 
-  /** Footer-detected TIMESTAMP(NANOS) column names of one leaf parquet
-    * file under `path` (bounded recursive search — partitioned layouts
-    * nest part files under key directories). Cached per (path, dir
-    * epoch): one bounded metadata read per table per write generation,
-    * and a [[invalidate]]-bumping rewrite re-reads the footer instead of
-    * serving a stale column set. Unreadable/absent footers yield the
-    * empty set — loadTable then behaves exactly as a plain parquet read.
+  /** Un-normalized read of the parquet at `path` with its [[footerSchema]]. */
+  private[graft] def readStored(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path).schema).parquet(path)
+
+  /** Convert the long-typed `nanosCols` ([[footerSchema]]; GraftSession
+    * sets `nanosAsLong`, as Spark's vectorized reader rejects nanos
+    * outright without it) back to timestamps, truncating nanos → micros
+    * (below every oracle's resolution). Detected per footer, never
+    * hardcoded per (table, column): the round-8 NTZ break showed such a
+    * pin breaks silently once the data generator changes an encoding.
     */
-  private val nanosColsCache =
-    new ConcurrentHashMap[(String, Long), Set[String]]()
+  private[graft] def normalizeNanos(df: DataFrame, nanosCols: Set[String]): DataFrame =
+    df.schema.fields.collect {
+      case f if f.dataType == org.apache.spark.sql.types.LongType && nanosCols(f.name) => f.name
+    }.foldLeft(df) { (d, c) =>
+      d.withColumn(c, org.apache.spark.sql.functions.timestamp_micros(
+        org.apache.spark.sql.functions.expr(s"${encodeColumnName(c)} div 1000")))
+    }
 
   /** Union (merged) schema per (path, write-epoch) — the appendTable
     * evolution check needs the union of EVERY file's footer, which is
@@ -1018,48 +1053,6 @@ object Warehouse {
     mergedSchemaCache.keySet.removeIf(k => k._1 == path && k._2 != epoch)
     mergedSchemaCache.put((path, epoch), schema)
   }
-  private[graft] def nanosTimestampColumns(
-      spark: SparkSession, path: String, dir: String): Set[String] = {
-    val epoch = epochOf(dir).get()
-    // evict superseded epochs for this path so append-heavy streams
-    // (one epoch bump per micro-batch) don't grow the cache unboundedly
-    nanosColsCache.keySet.removeIf(k => k._1 == path && k._2 != epoch)
-    nanosColsCache.computeIfAbsent((path, epoch), _ => try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val hp = new HPath(path)
-      val fs = hp.getFileSystem(conf)
-      def findLeaf(p: HPath, depth: Int): Option[HPath] = {
-        val st = fs.getFileStatus(p)
-        if (!st.isDirectory) Some(p)
-        else if (depth <= 0) None
-        else fs.listStatus(p).iterator
-          .filterNot(_.getPath.getName.startsWith("_"))
-          .flatMap { s =>
-            if (s.isDirectory) findLeaf(s.getPath, depth - 1)
-            else if (s.getPath.getName.endsWith(".parquet")) Some(s.getPath)
-            else None
-          }
-          .take(1).toSeq.headOption
-      }
-      findLeaf(hp, 3) match {
-        case None => Set.empty[String]
-        case Some(leaf) =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(leaf, conf))
-          try {
-            import scala.jdk.CollectionConverters._
-            import org.apache.parquet.schema.LogicalTypeAnnotation
-            reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-              case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
-                case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-                case _ => false
-              }) => f.getName
-            }.toSet
-          } finally reader.close()
-      }
-    } catch { case _: Exception => Set.empty[String] })
-  }
 
   /** Cast every TIMESTAMP_NTZ column to TIMESTAMP_LTZ. Warehouse parquet
     * written by other engines (pandas/pyarrow default) carries
@@ -1077,14 +1070,6 @@ object Warehouse {
     }
   }
 
-  /** Cast ARRAY<DOUBLE> columns that are VECTORS BY NAME CONTRACT
-    * ("embedding", "vec", "vector", or a `_embedding`/`_vec`/`_vector`
-    * suffix) to ARRAY<FLOAT> — the engine's vector representation
-    * (float32: half the bytes at negligible cosine error, and what every
-    * ANN kernel reads). Deliberately NOT a blanket element-type cast: a
-    * legitimate double-array column that is not a vector (probability
-    * lists, stats arrays) must keep its precision.
-    */
   /** Morton interleave of pre-quantized values: bit b of `qs(i)` lands at
     * output bit b·cols + i. Pure long shift/mask column arithmetic —
     * codegen'd, and replayable verbatim with any engine's integer bit ops.
@@ -1144,6 +1129,14 @@ object Warehouse {
     val n = name.toLowerCase
     Seq("embedding", "vec", "vector").exists(s => n == s || n.endsWith("_" + s))
   }
+  /** Cast ARRAY<DOUBLE> columns that are VECTORS BY NAME CONTRACT
+    * ("embedding", "vec", "vector", or a `_embedding`/`_vec`/`_vector`
+    * suffix) to ARRAY<FLOAT> — the engine's vector representation
+    * (float32: half the bytes at negligible cosine error, and what every
+    * ANN kernel reads). Deliberately NOT a blanket element-type cast: a
+    * legitimate double-array column that is not a vector (probability
+    * lists, stats arrays) must keep its precision.
+    */
   private[graft] def normalizeVectors(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
     val dbl = df.schema.fields.collect {

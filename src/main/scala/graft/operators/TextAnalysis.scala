@@ -28,11 +28,6 @@ object TextAnalysis {
   val stopwords: Map[String, Seq[String]] =
     graft.functions.LangIdHits.defaultStopwords
 
-  /** Count of marker-stopword occurrences for `lang` in lowercased text. */
-  def langHits(text: Column, lang: String): Column =
-    size(regexp_extract_all(lower(text),
-      lit("\\b(" + stopwords(lang).mkString("|") + ")\\b"), lit(0)))
-
   /** Count of CJK (U+4E00–U+9FFF) characters — the zh signal. */
   def cjkHits(text: Column): Column =
     size(regexp_extract_all(text, lit("[一-鿿]"), lit(0)))

@@ -6,7 +6,7 @@ import java.time.LocalDateTime
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Events
@@ -28,22 +28,22 @@ class NtzEventsSpec extends AnyFunSuite with SparkTestBase {
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  test("loadTable normalizes NTZ parquet timestamps to LTZ, instants intact") {
+  // Each fixture writes one table into a fresh warehouse dir and returns
+  // the dir: NTZ `events`, TIMESTAMP(NANOS) `readings`, double-vector
+  // `embeddings`.
+
+  private def ntzFixture(): String = {
     val tmp = Files.createTempDirectory("graft-ntz").toString
     ntz.write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    // pin the fixture: the file on disk must actually be NTZ, or this suite
-    // silently stops guarding the type family
-    assert(spark.read.parquet(s"$tmp/events.parquet").schema("ts").dataType == TimestampNTZType)
-    val loaded = Warehouse(spark, tmp).loadTable("events")
-    assert(loaded.schema("ts").dataType == TimestampType)
-    assert(rows(loaded.select(col("event_id"), unix_micros(col("ts")))) ===
-      rows(ltz.select(col("event_id"), unix_micros(col("ts")))))
+    tmp
   }
 
-  test("loadTable detects TIMESTAMP(NANOS) columns from the footer, any table/column") {
-    // genuine nanos parquet, written with the low-level writer (Spark
-    // cannot produce one) — on a table name and column names the old
-    // hardcoded events.ts rule would never have matched
+  private val baseNanos = 1700000000000000000L // 2023-11-14T22:13:20Z
+
+  /** Genuine nanos parquet, written with the low-level writer (Spark
+    * cannot produce one) — on a table name and column names the old
+    * hardcoded events.ts rule would never have matched. */
+  private def nanosFixture(): String = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -61,29 +61,47 @@ class NtzEventsSpec extends AnyFunSuite with SparkTestBase {
           spark.sparkContext.hadoopConfiguration))
       .withType(schema).build()
     val fac = new SimpleGroupFactory(schema)
-    val baseNanos = 1700000000000000000L // 2023-11-14T22:13:20Z
     try (1 to 3).foreach { i =>
       val g = fac.newGroup()
       g.add("created_at", baseNanos + i * 1500L) // sub-micro tails truncate
       g.add("row_id", i.toLong)
       writer.write(g)
     } finally writer.close()
-    val loaded = Warehouse(spark, tmp).loadTable("readings")
-    assert(loaded.schema("created_at").dataType == TimestampType)
-    assert(rows(loaded.select(col("row_id"), unix_micros(col("created_at")))) ===
-      (1 to 3).map(i => Seq(i.toLong, (baseNanos + i * 1500L) / 1000L)).toSet)
-    // plain long columns stay long — only footer-annotated nanos convert
-    assert(loaded.schema("row_id").dataType ==
-      org.apache.spark.sql.types.LongType)
+    tmp
   }
 
-  test("loadTable normalizes array<double> vector columns to array<float>") {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+  private def dblVecFixture(): String = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val tmp = Files.createTempDirectory("graft-dblvec").toString
     wh.loadTable("embeddings").limit(50)
       .withColumn("embedding", col("embedding").cast(ArrayType(DoubleType)))
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val loaded = Warehouse(spark, tmp).loadTable("embeddings")
+    tmp
+  }
+
+  test("loadTable normalizes NTZ parquet timestamps to LTZ, instants intact") {
+    val tmp = ntzFixture()
+    // pin the fixture: the file on disk must actually be NTZ, or this suite
+    // silently stops guarding the type family
+    assert(spark.read.parquet(s"$tmp/events.parquet").schema("ts").dataType == TimestampNTZType)
+    val loaded = Warehouse(spark, tmp).loadTable("events")
+    assert(loaded.schema("ts").dataType == TimestampType)
+    assert(rows(loaded.select(col("event_id"), unix_micros(col("ts")))) ===
+      rows(ltz.select(col("event_id"), unix_micros(col("ts")))))
+  }
+
+  test("loadTable detects TIMESTAMP(NANOS) columns from the footer, any table/column") {
+    val loaded = Warehouse(spark, nanosFixture()).loadTable("readings")
+    assert(loaded.schema("created_at").dataType == TimestampType)
+    assert(rows(loaded.select(col("row_id"), unix_micros(col("created_at")))) ===
+      (1 to 3).map(i => Seq(i.toLong, (baseNanos + i * 1500L) / 1000L)).toSet)
+    // plain long columns stay long — only footer-annotated nanos convert
+    assert(loaded.schema("row_id").dataType == LongType)
+  }
+
+  test("loadTable normalizes array<double> vector columns to array<float>") {
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val loaded = Warehouse(spark, dblVecFixture()).loadTable("embeddings")
     assert(loaded.schema("embedding").dataType.asInstanceOf[ArrayType]
       .elementType == FloatType)
     // the whole ANN family must run over the re-float frame — and since
@@ -98,6 +116,47 @@ class NtzEventsSpec extends AnyFunSuite with SparkTestBase {
         "vec_id", "embedding", k = 3)
       .collect().map(_.toSeq).toSet
     assert(got === want)
+  }
+
+  test("getSchema is the normalized schema loadTable returns") {
+    Seq(ntzFixture() -> "events", nanosFixture() -> "readings",
+        dblVecFixture() -> "embeddings").foreach { case (dir, t) =>
+      val w = Warehouse(spark, dir)
+      assert(w.getSchema(t) === w.loadTable(t).schema, t)
+    }
+  }
+
+  test("a table rewritten outside graft reads the nanos columns now on disk") {
+    val dir = nanosFixture()
+    val w = Warehouse(spark, dir)
+    assert(w.loadTable("readings").schema("created_at").dataType == TimestampType)
+    // a plain Spark overwrite leaves created_at a plain long and does not
+    // bump the dir's write epoch: nothing keyed by epoch may survive it
+    spark.range(1, 4).select(col("id").as("created_at"), col("id").as("row_id"))
+      .write.mode("overwrite").parquet(Warehouse.tablePath(dir, "readings"))
+    assert(w.loadTable("readings").schema("created_at").dataType == LongType)
+  }
+
+  test("the footer schema matches Spark's inference on every sf0.001 table and fixture") {
+    val tmp = Files.createTempDirectory("graft-parity").toString
+    val w = Warehouse(spark, tmp)
+    val o = wh.loadTable("orders")
+    w.saveTable(o.withColumn("yr", year(col("o_orderdate"))), tmp, "op", partitionBy = Seq("yr"))
+    w.saveTableVersioned(o, tmp, "ov")
+    val paths = Warehouse.knownTables.map(Warehouse.tablePath(sfDir, _)) ++ Seq(
+      Warehouse.tablePath(ntzFixture(), "events"),
+      Warehouse.tablePath(nanosFixture(), "readings"),
+      Warehouse.tablePath(dblVecFixture(), "embeddings"),
+      Warehouse.tablePath(tmp, "op"),
+      Warehouse.latestVersionDir(spark, Warehouse.tablePath(tmp, "ov")).get)
+    paths.foreach { p =>
+      val inferred = spark.read.parquet(p).schema // Spark's own inference, the reference
+      val footer = Warehouse.footerSchema(spark, p).schema
+      // the footer holds the data columns; Spark appends partition columns
+      assert(footer.map(f => f.name -> f.dataType) ===
+        inferred.take(footer.size).map(f => f.name -> f.dataType), p)
+      assert(spark.read.schema(footer).parquet(p).schema === inferred, p)
+    }
   }
 
   test("sessionizeBatch accepts raw NTZ frames and matches the LTZ result") {

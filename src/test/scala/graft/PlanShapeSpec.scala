@@ -1,19 +1,13 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Graph, Relational, Stats, TextAnalysis}
@@ -51,24 +45,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   private def computed(p: SparkPlan): Set[String] =
     nodes(p).flatMap(_.expressions.flatMap(_.collect { case a: Alias => a.name })).toSet
 
-  /** The executed plan of every action `body` runs — localCheckpoints
-    * included — in the order they ran. */
-  private def actionPlans(body: => Unit): Seq[(String, SparkPlan)] = {
-    val seen = new ConcurrentLinkedQueue[(String, SparkPlan)]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        seen.add(funcName -> qe.executedPlan); ()
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      ListenerBus.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toSeq
-  }
-
   /** The symmetrized customer-supplier trade graph of q_pagerank. */
   private def tradeEdges: DataFrame = {
     val e = wh.loadTable("orders").join(wh.loadTable("lineitem"),
@@ -94,7 +70,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
         .queryExecution.executedPlan,
       above = Seq("conf_ab_e6", "conf_ba_e6", "lift_e6", "llr_u20"), below = Nil)
     // lift_e6 IS the collocation rank key: only the LLR margins move up
-    val colloc = actionPlans {
+    val colloc = plansRunBy {
       TextAnalysis.collocations(wh.loadTable("documents"), "text", minCount = 5, topK = 100)
     }.collect { case ("localCheckpoint", p) => p }
     assert(colloc.size === 1)
@@ -133,7 +109,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // actions ran as well as the frame it returns
     val unpinned = pins.flatMap { case (name, op) =>
       var out: DataFrame = null
-      val plans = actionPlans { out = op() }.map(_._2) :+ out.queryExecution.executedPlan
+      val plans = plansRunBy { out = op() }.map(_._2) :+ out.queryExecution.executedPlan
       if (plans.exists(pinned)) None else Some(s"$name:${plans.map(skeleton(_)).mkString}")
     }
     if (unpinned.nonEmpty)
@@ -145,7 +121,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // rounds below checkpointInterval chain into the ONE localCheckpoint
     // the last round materializes, so its plan holds every round
     def lastRound(run: Int => DataFrame, rounds: Int): SparkPlan = {
-      val plans = actionPlans(run(rounds)).collect { case ("localCheckpoint", p) => p }
+      val plans = plansRunBy(run(rounds)).collect { case ("localCheckpoint", p) => p }
       assert(plans.size === 1)
       plans.head
     }

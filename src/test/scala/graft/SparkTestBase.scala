@@ -1,10 +1,12 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -55,5 +57,21 @@ trait SparkTestBase {
       ListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq
+  }
+
+  /** How many Spark jobs `body` starts. Events already queued are
+    * delivered before counting begins, so earlier jobs are not counted. */
+  def jobsRunBy(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
   }
 }

@@ -614,6 +614,49 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.table("ttv_out").count() === n.count())
   }
 
+  test("table reads start no Spark job: loadTable, getSchema, the first registerAll") {
+    import org.apache.spark.sql.functions.{col, year}
+    val tmp = Files.createTempDirectory("graft_nojob").toString
+    val w = Warehouse(spark, tmp)
+    val o = wh.loadTable("orders")
+    w.saveTable(o.withColumn("yr", year(col("o_orderdate"))), tmp, "op", partitionBy = Seq("yr"))
+    w.saveTableVersioned(o, tmp, "ov")
+    // the counter sees Spark's own footer inference, the job graft skips
+    assert(jobsRunBy(spark.read.parquet(Warehouse.tablePath(sfDir, "nation"))) >= 1)
+    assert(jobsRunBy(wh.loadTable("lineitem")) === 0, "single-file table")
+    assert(jobsRunBy(w.loadTable("op")) === 0, "hive-partitioned table")
+    assert(jobsRunBy(w.loadTable("ov")) === 0, "versioned table")
+    assert(jobsRunBy(wh.getSchema("events")) === 0, "getSchema")
+    // drop every session's ownership of the sf0.001 views, so the next
+    // registerAll registers each table afresh
+    Warehouse.knownTables.foreach(Warehouse.invalidate(sfDir, _))
+    assert(jobsRunBy(wh.registerAll()) === 0, "first registerAll")
+  }
+
+  test("loadTable fails naming the path on a malformed store") {
+    import org.apache.hadoop.fs.Path
+    val tmp = Files.createTempDirectory("graft_bad").toString
+    val w = Warehouse(spark, tmp)
+    val fs = new Path(tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a table dir that holds only the commit marker
+    val onlyMarker = Warehouse.tablePath(tmp, "marker")
+    fs.create(new Path(onlyMarker, "_SUCCESS")).close()
+    val e1 = intercept[IllegalStateException](w.loadTable("marker"))
+    assert(e1.getMessage.contains(onlyMarker), e1.getMessage)
+    // a table whose one data file has a truncated footer
+    w.saveTable(wh.loadTable("nation").coalesce(1), tmp, "cut")
+    val cut = Warehouse.tablePath(tmp, "cut")
+    val data = fs.listStatus(new Path(cut)).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    assert(data.length === 1)
+    val file = java.nio.file.Paths.get(data.head.toUri)
+    val bytes = Files.readAllBytes(file)
+    Files.write(file, bytes.take(bytes.length - 16))
+    fs.delete(new Path(cut, s".${data.head.getName}.crc"), false)
+    val e2 = intercept[IllegalStateException](w.loadTable("cut"))
+    assert(e2.getMessage.contains(cut), e2.getMessage)
+  }
+
   test("appendTable evolves schema by added columns; merged read NULL-fills") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft_evo").toString
