@@ -95,7 +95,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
       if (fsExists(p)) {
         // cached union schema — incrementally maintained below, so N
         // appends cost ONE real footer-union read, not N (O(N²) files)
-        val existing = Warehouse.mergedSchemaOf(spark, p, outDir)
+        val existing = Warehouse.mergedSchemaOf(spark, p)
         val exNames = existing.fieldNames.toSet
         val dfNames = df.schema.fieldNames.toSet
         require(exNames.subsetOf(dfNames) || dfNames.subsetOf(exNames),
@@ -115,7 +115,7 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     Warehouse.invalidate(outDir, table)
     // prime the union cache at the new epoch — evolution only widens, so
     // the in-memory union is exactly what a footer re-scan would derive
-    Warehouse.recordMergedSchema(p, outDir, union)
+    Warehouse.recordMergedSchema(p, union)
   }
 
   /** Streaming read of a warehouse table: the same parquet layout
@@ -393,7 +393,11 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
         "compact each partition directory instead")
     val total = entries.map(_.getLen).sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val df = Warehouse.readStored(spark, p)
+    // a plain table's files may differ by the columns appendTable added:
+    // read (and so write) the union of every footer. A version dir is
+    // one write, so its first footer is its schema.
+    val union = if (p == base) Some(Warehouse.mergedSchemaOf(spark, p)) else None
+    val df = union.fold(Warehouse.readStored(spark, p))(spark.read.schema(_).parquet(p))
     val tmp = new HPath(p + "__compact_tmp")
     df.repartition(n).write.mode("overwrite").parquet(tmp.toString)
     // For a VERSIONED table the commit timestamp IS the _SUCCESS marker's
@@ -420,6 +424,9 @@ final class Warehouse(val spark: SparkSession, val baseDir: String) {
     }
     fs.delete(old, true)
     Warehouse.invalidate(dir, table)
+    // every rewritten file carries the union: the next append needs no
+    // footer scan
+    union.foreach(Warehouse.recordMergedSchema(p, _))
     spark.catalog.refreshByPath(p)
     n
   }
@@ -856,6 +863,15 @@ object Warehouse {
   private[graft] def epochOf(dir: String): java.util.concurrent.atomic.AtomicLong =
     epochs.computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
 
+  /** Per-table write epoch, keyed by table path — bumped with its dir's
+    * epoch by every write to that table. It keys [[mergedSchemaOf]], so
+    * a write to one table keeps its siblings' cached union schemas. */
+  private val tableEpochs =
+    new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+
+  private def tableEpochOf(path: String): java.util.concurrent.atomic.AtomicLong =
+    tableEpochs.computeIfAbsent(path, _ => new java.util.concurrent.atomic.AtomicLong())
+
   // ---- time-travel layout helpers ----------------------------------------
 
   private val VersionDirPattern = "_graft_v=(\\d{5,})".r
@@ -914,6 +930,7 @@ object Warehouse {
     */
   private[graft] def invalidate(dir: String, table: String): Unit = {
     epochOf(dir).incrementAndGet()
+    tableEpochOf(tablePath(dir, table)).incrementAndGet()
     viewOwner.forEach { (key, owner) =>
       if (key._2 == table && owner == dir) viewOwner.remove(key)
     }
@@ -1028,28 +1045,30 @@ object Warehouse {
         org.apache.spark.sql.functions.expr(s"${encodeColumnName(c)} div 1000")))
     }
 
-  /** Union (merged) schema per (path, write-epoch) — the appendTable
-    * evolution check needs the union of EVERY file's footer, which is
-    * O(files) to derive; re-deriving it per append would make N appends
-    * O(N²) footer reads. The cache is primed incrementally by
-    * [[recordMergedSchema]] after each append (evolution only widens, so
-    * union(old, appended) is exact without touching storage); a
-    * cold/foreign-writer epoch falls back to one real mergeSchema read.
+  /** Union (merged) schema per (table path, table write-epoch) — the
+    * appendTable evolution check and compactTable's read need the union
+    * of EVERY file's footer, which is O(files) to derive; re-deriving it
+    * per append would make N appends O(N²) footer reads. The cache is
+    * primed incrementally by [[recordMergedSchema]] after each append
+    * (evolution only widens, so union(old, appended) is exact without
+    * touching storage) and after a compaction; a cold/foreign-writer
+    * epoch falls back to one real mergeSchema read. A write to another
+    * table of the same dir leaves the entry valid.
     */
   private val mergedSchemaCache =
     new ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
 
-  private[graft] def mergedSchemaOf(spark: SparkSession, path: String,
-      dir: String): org.apache.spark.sql.types.StructType = {
-    val epoch = epochOf(dir).get()
+  private[graft] def mergedSchemaOf(spark: SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
+    val epoch = tableEpochOf(path).get()
     mergedSchemaCache.keySet.removeIf(k => k._1 == path && k._2 != epoch)
     mergedSchemaCache.computeIfAbsent((path, epoch),
       _ => spark.read.option("mergeSchema", "true").parquet(path).schema)
   }
 
-  private[graft] def recordMergedSchema(path: String, dir: String,
+  private[graft] def recordMergedSchema(path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val epoch = epochOf(dir).get()
+    val epoch = tableEpochOf(path).get()
     mergedSchemaCache.keySet.removeIf(k => k._1 == path && k._2 != epoch)
     mergedSchemaCache.put((path, epoch), schema)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -18,13 +19,17 @@ import graft.functions.GraftFunctions
   * buckets, e.g. boilerplate-identical shards, instead of letting one key
   * quadratically dominate the round).
   *
-  * Caching: a one-shot operator (minhashLsh, simhash, ngramJaccard,
-  * sharedSpans, ...) persists what its returned LAZY plan reads more
-  * than once and leaves it cached — there is no safe point to release
-  * it before the caller's action — until `unpersist` or
-  * `spark.catalog.clearCache()`. The steady-state `*Incremental`
-  * operators materialize their bounded result eagerly and release their
-  * intermediates, so a long-running ingest loop accumulates nothing.
+  * Caching: a one-shot operator returns a LAZY plan, so there is no safe
+  * point to release what that plan reads more than once before the
+  * caller's action. minhashLsh, icwsLsh and ngramJaccard build that
+  * frame (signatures, grams) in the call, as one eager checkpoint
+  * ([[RoundCheckpoints.materializeNow]] — one job, where a lazy persist
+  * read three times costs three), and leave it to the ContextCleaner.
+  * The others (simhash, sharedSpans, ...) persist it and leave it cached
+  * until `unpersist` or `spark.catalog.clearCache()`. The steady-state
+  * `*Incremental` operators materialize their bounded result eagerly and
+  * release their intermediates, so a long-running ingest loop
+  * accumulates nothing.
   */
 object Dedup {
 
@@ -354,8 +359,8 @@ object Dedup {
     // graph OOMs the DRIVER just formatting the plan, let alone
     // optimizing it. The checkpoint also supersedes explicit unpersist:
     // a .drop() view is NOT the cached handle (cascade=false unpersist
-    // is a silent no-op on it), while superseded checkpoint RDDs are
-    // reclaimed by the ContextCleaner once unreferenced.
+    // is a silent no-op on it), while a superseded round's checkpoint is
+    // dropped once the next round is built.
     val rounds = new RoundCheckpoints(pairs.sparkSession, checkpointDir)
     // Round 1 folded into initialization: every node starts at
     // least(own id, min neighbor id) — exactly the state one propagation
@@ -395,7 +400,7 @@ object Dedup {
               .as("component"),
             coalesce(col("nbr_min") < col("component"), lit(false)).as("__changed")))
         val changed = next.filter(col("__changed")).count() // materializes next
-        rounds.releaseCheckpointedCaches() // reliable path: files now back the reads
+        rounds.releaseSuperseded() // files / next's blocks now back the reads
         labels = next.drop("__changed")
         frontier = next.filter(col("__changed")).drop("__changed")
         converged = changed == 0
@@ -417,22 +422,40 @@ object Dedup {
       // a checkpoint, so dropping the edge CACHE never breaks them; the
       // lineage stays intact for recompute-after-eviction), nor any
       // round cache still pending on the reliable path
-      rounds.releaseCheckpointedCaches()
+      rounds.releaseSuperseded()
       e.unpersist(); edges.unpersist()
     }
   }
 
-  /** Per-round materialization of an iterative operator's state — the
-    * one contract of [[connectedComponents]] and [[Graph.pageRank]].
+  /** THE materialization helper of the graph and dedup operators, in two
+    * forms.
+    *
+    * [[materializeNow]] builds a SHARED frame — one that later queries
+    * read several times (a graph's adjacency, a corpus's signatures) —
+    * eagerly, once, as a checkpoint. A lazy `persist` read N times costs
+    * N jobs under AQE: each scan of the not-yet-built cache plans its own
+    * table-cache stage, and all but the first block on the first one's
+    * block lock. A checkpoint is a plain leaf scan, built before any
+    * reader is planned. (Its hash partitioning is not kept: AQE reports
+    * none for the plan it checkpoints, so a join on its key still plans
+    * an exchange.) [[release]] drops what `materializeNow` built: an
+    * operator that returns a materialized result calls it before
+    * returning; one that returns a LAZY plan over the frame leaves it to
+    * the ContextCleaner, which unpersists it once the plan is
+    * unreferenced.
+    *
+    * [[materialize]] is the per-round form for an iterative operator's
+    * state ([[connectedComponents]], [[Graph.pageRank]], [[Graph.kCore]]).
     * Without a `checkpointDir` a round is a lazy `localCheckpoint`: fast
     * and single-process, but its blocks have NO recompute path, so any
     * executor loss mid-iteration fails the run. With one, a round is a
     * RELIABLE checkpoint into that directory (survives executor loss);
     * its write is a second job over the round's plan, which would
     * recompute the round from scratch unless the frame is cached — so it
-    * is cached, and [[releaseCheckpointedCaches]] drops those caches
-    * after an action (which writes the checkpoint of every marked RDD in
-    * its lineage — doCheckpoint recurses ancestors). Checkpoint FILES of
+    * is cached, and [[releaseSuperseded]], called after the action that
+    * built the newest round (which writes the checkpoint of every marked
+    * RDD in its lineage — doCheckpoint recurses ancestors), drops those
+    * caches and the blocks of every earlier round. Checkpoint FILES of
     * superseded rounds are reclaimed by the ContextCleaner only under
     * spark.cleaner.referenceTracking.cleanCheckpoints=true (GraftSession
     * sets it); on sessions without the flag they accumulate in
@@ -447,17 +470,51 @@ object Dedup {
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
     }
     private var pendingCaches: List[DataFrame] = Nil
+    private var rounds: List[DataFrame] = Nil // newest first
+    private var shared: List[DataFrame] = Nil
 
-    def materialize(plan: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) {
-        val cached = plan.persist(StorageLevel.MEMORY_AND_DISK)
-        pendingCaches ::= cached
-        cached.checkpoint(eager = false)
-      } else plan.localCheckpoint(eager = false, storageLevel = StorageLevel.MEMORY_AND_DISK)
+    def materialize(plan: DataFrame): DataFrame = {
+      val out =
+        if (checkpointDir.isDefined) {
+          val cached = plan.persist(StorageLevel.MEMORY_AND_DISK)
+          pendingCaches ::= cached
+          cached.checkpoint(eager = false)
+        } else plan.localCheckpoint(eager = false, storageLevel = StorageLevel.MEMORY_AND_DISK)
+      rounds ::= out
+      out
+    }
 
-    def releaseCheckpointedCaches(): Unit = {
+    /** `plan`, computed now, once (see the class doc). The reliable form
+      * needs no cache: its eager write job is the only pass over `plan`. */
+    def materializeNow(plan: DataFrame): DataFrame = {
+      val out =
+        if (checkpointDir.isDefined) plan.checkpoint(eager = true)
+        else plan.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
+      shared ::= out
+      out
+    }
+
+    /** After the action that built the newest round: drop the pending
+      * round caches and every earlier round's blocks. */
+    def releaseSuperseded(): Unit = {
       pendingCaches.foreach(_.unpersist())
       pendingCaches = Nil
+      rounds.drop(1).foreach(dropBlocks)
+      rounds = rounds.take(1)
+    }
+
+    /** [[releaseSuperseded]], then drop every [[materializeNow]] frame. */
+    def release(): Unit = {
+      releaseSuperseded()
+      shared.foreach(dropBlocks)
+      shared = Nil
+    }
+
+    /** Unpersist a checkpoint's RDD: a local checkpoint's blocks (a
+      * reliable checkpoint's RDD holds none). */
+    private def dropBlocks(df: DataFrame): Unit = df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
     }
   }
 
@@ -881,11 +938,11 @@ object Dedup {
       threshold: Double = 0.5, seed: Long = 42L,
       maxBucketSize: Int = 100000, shingler: String = "word"): DataFrame = {
     require(numPerms % bands == 0, s"bands ($bands) must divide numPerms ($numPerms)")
-    // sigs feed the banding branch AND both verify joins — persist the
-    // narrow (id, sig) frame (docs × numPerms × 8 B) so the corpus scan +
-    // kernel run once, not three times
-    val sigs = minhashSignatures(df, idCol, textCol, shingleWidth, numPerms, seed, shingler)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // sigs feed the banding branch AND both verify joins — build the
+    // narrow (id, sig) frame (docs × numPerms × 8 B) once, now, so the
+    // corpus scan + kernel run once ([[RoundCheckpoints.materializeNow]])
+    val sigs = new RoundCheckpoints(df.sparkSession, None).materializeNow(
+      minhashSignatures(df, idCol, textCol, shingleWidth, numPerms, seed, shingler))
     bandedAgreement(sigs, numPerms, bands, threshold, maxBucketSize, "est_jaccard")
   }
 
@@ -905,10 +962,10 @@ object Dedup {
       maxBucketSize: Int = 100000): DataFrame = {
     require(numPerms % bands == 0, s"bands ($bands) must divide numPerms ($numPerms)")
     GraftFunctions.ensure(df.sparkSession)
-    val sigs = df.select(col(idCol).cast("long").as("id"),
-        GraftFunctions.icwsMinhash(col(textCol), shingleWidth, numPerms, seed).as("sig"))
-      .filter(size(col("sig")) > 0) // gram-less docs: empty sig, dropped
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sigs = new RoundCheckpoints(df.sparkSession, None).materializeNow(
+      df.select(col(idCol).cast("long").as("id"),
+          GraftFunctions.icwsMinhash(col(textCol), shingleWidth, numPerms, seed).as("sig"))
+        .filter(size(col("sig")) > 0)) // gram-less docs: empty sig, dropped
     bandedAgreement(sigs, numPerms, bands, threshold, maxBucketSize, "est_wjaccard")
   }
 
@@ -1278,11 +1335,11 @@ object Dedup {
     // Distinct counts are preserved modulo 64-bit collisions
     // (~|grams|²/2⁶⁴ ≈ 0 — far below any oracle's noise floor).
     GraftFunctions.ensure(df.sparkSession)
-    val grams0 = df
+    // read by the candidate branch and both verify joins: built once, now
+    val grams = new RoundCheckpoints(df.sparkSession, None).materializeNow(df
       .select(col(idCol).cast("long").as("id"),
         shingleHashes(col(textCol), n, shingler).as("g"))
-      .filter(size(col("g")) > 0)
-    val grams = grams0.persist(StorageLevel.MEMORY_AND_DISK) // candidates + both verify joins
+      .filter(size(col("g")) > 0))
     // the doc's gram-set size rides along from size(g) — no window count
     val exploded = grams.select(col("id"), size(col("g")).as("sz"), explode(col("g")).as("gram"))
     val freq = exploded.groupBy("gram").agg(count(lit(1)).as("gram_df"))

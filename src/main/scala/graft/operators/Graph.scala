@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,15 +20,22 @@ import org.apache.spark.storage.StorageLevel
   * contract as the trained quality classifier
   * (TextAnalysis.trainQualityClassifier).
   *
-  * Scale posture (100 TB): the edge list is the big side — it is
-  * distincted once, degree-joined once, and persisted pre-partitioned on
-  * `src`; each iteration shuffles only the rank frame (O(nodes), narrow
-  * (long, long) rows) to the edge partitioning, then one groupBy(dst)
-  * with map-side partial sums. localCheckpoint (or reliable checkpoints
-  * under `checkpointDir`) every `checkpointInterval` (4) rounds truncates
-  * the linearly-growing iterative lineage (the Dedup.connectedComponents
-  * pattern) — rounds between checkpoints chain into one job, removing
-  * the per-round job-scheduling floor without changing any value.
+  * Scale posture (100 TB): the edge list is the big side. Its setup is
+  * ONE exchange: the edges, their endpoints (and any seeds) hash-partition
+  * on node once and dedup in those partitions, and the result is
+  * checkpointed once, eagerly (`Dedup.RoundCheckpoints.materializeNow`) —
+  * the edge list and the node list are filters of that one frame, so no
+  * later query re-plans the dedup or waits on a table-cache job. Each
+  * iteration shuffles the rank frame (O(nodes), narrow (long, long)
+  * rows) to the edge join, then one groupBy(dst) with map-side partial
+  * sums. localCheckpoint (or reliable checkpoints under `checkpointDir`)
+  * every `checkpointInterval` (4) rounds truncates the linearly-growing
+  * iterative lineage (the Dedup.connectedComponents pattern) — rounds
+  * between checkpoints chain into one job, removing the per-round
+  * job-scheduling floor without changing any value. A superseded round's
+  * checkpoint is dropped once the next is built, and an operator that
+  * returns a materialized result drops its setup checkpoint before
+  * returning: a call leaves at most its result cached.
   */
 object Graph {
 
@@ -87,7 +95,7 @@ object Graph {
       checkpointDir: Option[String] = None): DataFrame =
     pageRankCore(edges, srcCol, dstCol,
       Some(seeds.select(col(seedCol).cast("long").as("node"))
-        .where(col("node").isNotNull).distinct()),
+        .where(col("node").isNotNull)),
       iters, dampNum, dampDen, scale, checkpointDir)
 
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
@@ -101,59 +109,35 @@ object Graph {
     // localCheckpoint for single-process speed, reliable checkpoint files
     // for executor-loss tolerance on real clusters
     val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, checkpointDir)
-
-    // e is read by FOUR consumers (edgeDeg's join + degree sides, nodeIds'
-    // src + dst arms): the distinct's exchange is stage-reused, but its
-    // post-exchange dedup aggregate recomputed once per consumer — the
-    // cache makes that one pass (r12, the CC persist-before-reuse rule)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // (src, dst, outdeg), pre-partitioned AND pre-sorted on the per-round
-    // join key: the big side never reshuffles after the first
-    // materialization, and the per-round sort-merge join sorts only the
-    // O(nodes) rank frame — the cached edge partitions are already in
-    // src order (r12: the per-round edge sort was 8× the rank sort)
-    val edgeDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // persisted so the personalized branch's eager count (needed for the
-    // teleport LITERAL — inherent to the exact-integer contract) and the
-    // base-frame build below read one materialization, not two distinct
-    // passes over the edge union
-    val nodeIds = {
-      val base = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node")))
-      seedsOpt match {
-        case Some(s) => base.union(s).distinct()
-        case None => base.distinct()
-      }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    // per-node teleport base: uniform for the global form; concentrated
-    // on the seed set for the personalized form (one floor division so
-    // both engines replay the constant)
-    val nodes = (seedsOpt match {
-      case None =>
-        nodeIds.withColumn("base", lit((dampDen - dampNum) * scale / dampDen))
-      case Some(s) =>
-        val n = nodeIds.count()
-        val nSeeds = s.count()
-        require(nSeeds > 0, "personalizedPageRank: empty seed set")
-        val t = (BigInt(dampDen - dampNum) * BigInt(scale) * BigInt(n) /
-          (BigInt(nSeeds) * BigInt(dampDen)))
-        require(t.isValidLong && BigInt(dampNum) * n * scale < BigInt(Long.MaxValue),
-          s"teleport mass overflows long (N=$n, seeds=$nSeeds) — reduce scale")
-        nodeIds.join(s.withColumn("__seed", lit(1L)), Seq("node"), "left")
-          .select(col("node"),
-            when(col("__seed").isNotNull, lit(t.toLong)).otherwise(lit(0L))
-              .as("base"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-
-    var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
     try {
+      // (node, nbr, seed, outdeg) ([[adjacency]]): its nbr rows are the
+      // edge list, its null-nbr rows the node list; outdeg counts the
+      // distinct out-neighbours inside the adjacency's hash(node)
+      // partitions — a window, not a join and its exchanges
+      val adj = rounds.materializeNow(adjacency(edges, srcCol, dstCol, seedsOpt)
+        .withColumn("outdeg", count(col("nbr")).over(Window.partitionBy("node"))))
+      val edgeDeg = adj.where(col("nbr").isNotNull)
+        .select(col("node").as("src"), col("nbr").as("dst"), col("outdeg"))
+      val nodeRows = adj.where(col("nbr").isNull)
+      // per-node teleport base: uniform for the global form; concentrated
+      // on the seed set for the personalized form (one floor division so
+      // both engines replay the constant — the eager count is inherent to
+      // the exact-integer contract)
+      val base = seedsOpt match {
+        case None => lit((dampDen - dampNum) * scale / dampDen)
+        case Some(_) =>
+          val c = nodeRows.agg(count(lit(1)), count(when(col("seed"), 1))).head()
+          val (n, nSeeds) = (c.getLong(0), c.getLong(1))
+          require(nSeeds > 0, "personalizedPageRank: empty seed set")
+          val t = (BigInt(dampDen - dampNum) * BigInt(scale) * BigInt(n) /
+            (BigInt(nSeeds) * BigInt(dampDen)))
+          require(t.isValidLong && BigInt(dampNum) * n * scale < BigInt(Long.MaxValue),
+            s"teleport mass overflows long (N=$n, seeds=$nSeeds) — reduce scale")
+          when(col("seed"), lit(t.toLong)).otherwise(lit(0L))
+      }
+      val nodes = nodeRows.select(col("node"), base.as("base"))
+
+      var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
       var k = 0
       while (k < iters) {
         // Per-round plan (r12 shape): the base term UNIONS into the
@@ -161,10 +145,11 @@ object Graph {
         // one exchange per round (the groupBy) and no per-round
         // broadcast-build job; the edge join itself is meant to be
         // exchange-free (ranks emerge hash(node)-partitioned from the
-        // previous round's groupBy, the alias to src matches edgeDeg's
-        // cached hash(src) layout) — but with broadcast joins off a
-        // hashpartitioning(src) exchange still appears under it each
-        // round (ROADMAP item 4). Math unchanged: s is summed over contrib
+        // previous round's groupBy) — but the edge side is a checkpoint
+        // scan with no known partitioning, so a hashpartitioning(src)
+        // exchange appears under it each round, and AQE turns the join
+        // into a broadcast only after that shuffle ran (ROADMAP item
+        // 4). Math unchanged: s is summed over contrib
         // rows only, base ridden in on its own tagged row, same floor
         // division — bit-identical ranks.
         val contribs = edgeDeg
@@ -192,16 +177,39 @@ object Graph {
         if (k == iters - 1 || (k + 1) % checkpointInterval == 0) {
           val next = rounds.materialize(plan)
           next.count()
-          rounds.releaseCheckpointedCaches()
+          rounds.releaseSuperseded()
           ranks = next
         } else ranks = plan
         k += 1
       }
       ranks
-    } finally {
-      rounds.releaseCheckpointedCaches()
-      e.unpersist(); edgeDeg.unpersist(); nodes.unpersist(); nodeIds.unpersist()
-    }
+    } finally rounds.release()
+  }
+
+  /** The one-exchange graph setup of [[pageRank]] and
+    * [[labelPropagation]]: every non-null edge emits (src, dst), (src,
+    * null) and (dst, null) — plus (seed, null) per seed — and ONE
+    * hash(node) exchange feeds the dedup, which needs no second exchange
+    * (hash(node) already clusters (node, nbr)). Output `(node, nbr,
+    * seed)`, one row per distinct edge (nbr = its dst) and one null-nbr
+    * row per node, `seed` set on seed nodes. A node's neighbours stay one
+    * row each — never one array row per node — so a hub's adjacency
+    * streams.
+    */
+  private def adjacency(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[DataFrame] = None): DataFrame = {
+    val e = edges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+    def row(node: String, nbr: Column) =
+      struct(col(node).as("node"), nbr.as("nbr"), lit(false).as("seed"))
+    val none = lit(null).cast("long")
+    val rows = e.select(explode(array(row("src", col("dst")), row("src", none),
+      row("dst", none))).as("r")).select("r.*")
+    seeds.fold(rows)(s =>
+        rows.unionByName(s.select(col("node"), none.as("nbr"), lit(true).as("seed"))))
+      .repartition(col("node"))
+      .groupBy("node", "nbr").agg(max(col("seed")).as("seed"))
   }
 
   /** DETERMINISTIC synchronous label propagation (community detection,
@@ -216,26 +224,22 @@ object Graph {
     * synchronous rounds already group dense near-dup neighborhoods that
     * connected components would over-merge through one bridge edge).
     *
-    * Plan: same shape as [[pageRank]] — edges persisted pre-partitioned
-    * on src, per round one (dst, label) groupBy count + one argmax
-    * aggregate + one left join back to the node list, lineage truncated
-    * per round.
+    * Plan: same shape as [[pageRank]] — the one-exchange setup
+    * checkpoint, then per round one (dst, label) groupBy count + one
+    * argmax aggregate, lineage truncated every `checkpointInterval`
+    * rounds.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.withColumn("label", col("node"))
+    val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, None)
     try {
+      // the [[pageRank]] setup: one exchange, edges and nodes are filters
+      // of one checkpoint
+      val adj = rounds.materializeNow(adjacency(edges, srcCol, dstCol).select("node", "nbr"))
+      val e = adj.where(col("nbr").isNotNull).select(col("node").as("src"), col("nbr").as("dst"))
+      val nodes = adj.where(col("nbr").isNull).select("node")
+      var labels = nodes.withColumn("label", col("node"))
       var k = 0
       while (k < iters) {
         // count in-neighbor labels per node, argmax(count, tie min label).
@@ -257,20 +261,17 @@ object Graph {
         // periodic lineage truncation only (pageRankCore contract): each
         // round references the prior labels once, so intermediate rounds
         // chain into one job with linear plan growth; bit-identical.
-        val next =
+        labels =
           if (k == iters - 1 || (k + 1) % checkpointInterval == 0) {
-            val c = plan.localCheckpoint(eager = false,
-              storageLevel = StorageLevel.MEMORY_AND_DISK)
+            val c = rounds.materialize(plan)
             c.count()
+            rounds.releaseSuperseded()
             c
           } else plan
-        labels = next
         k += 1
       }
       labels
-    } finally {
-      e.unpersist(); nodes.unpersist()
-    }
+    } finally rounds.release()
   }
 
   /** Per-node triangle counts over the UNDIRECTED graph (direction and
@@ -370,30 +371,30 @@ object Graph {
     *
     * Scale shape per round: one degree aggregation over surviving edges
     * (map-side partial) + two semi joins to drop edges of removed nodes;
-    * edges persist pre-partitioned on src and every round's survivor
-    * frame is lineage-truncated (the pageRank materialization contract).
+    * the symmetric edge list is checkpointed once (one hash(src) exchange),
+    * and every round's survivor frame is lineage-truncated (the pageRank
+    * materialization contract).
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIters: Int = 16): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(maxIters >= 1, s"maxIters must be >= 1 (got $maxIters)")
-    // undirected simple graph: symmetrize, drop self-loops, dedup. The
-    // projected base persists BEFORE the symmetrizing union (the CC r12
-    // rule): the union references it twice, and post-exchange compute of
-    // an expensive caller plan (a join's merge, a verify filter) is NOT
-    // deduped by exchange reuse — un-cached it ran twice inside e0's
-    // materialization. Narrow (long, long) rows.
-    val base = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e0 = base.union(base.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var alive = e0
-    var lastCount = -1L
+    // undirected simple graph: both directions of every non-loop edge,
+    // deduped behind ONE hash(src) exchange (it already clusters
+    // (src, dst)) and built once, now — one scan of the caller's plan,
+    // narrow (long, long) rows
+    val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, None)
     try {
+      val e0 = rounds.materializeNow(edges
+        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
+        .select(explode(array(struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select("e.*")
+        .repartition(col("src"))
+        .distinct())
+      var alive = e0
+      var lastCount = -1L
       var i = 0
       var converged = false
       while (i < maxIters && !converged) {
@@ -406,18 +407,17 @@ object Graph {
         // one action per round: the count that drives convergence IS the
         // materializing action for the lazy checkpoint (r12: the separate
         // materialize-then-recount paid one extra scheduler job per peel)
-        val next = plan.localCheckpoint(eager = false,
-          storageLevel = StorageLevel.MEMORY_AND_DISK)
+        val next = rounds.materialize(plan)
         val n = next.count()
+        rounds.releaseSuperseded()
         converged = n == lastCount
         lastCount = n
         alive = next
         i += 1
       }
+      // the result reads the last round's checkpoint, never e0
       alive.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-    } finally {
-      base.unpersist(); e0.unpersist()
-    }
+    } finally rounds.release()
   }
 
   /** WEIGHTED PageRank: [[pageRank]] with each node's rank distributed

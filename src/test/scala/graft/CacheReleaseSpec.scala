@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
-import graft.operators.{Dedup, Relational, Similarity}
+import graft.operators.{Dedup, Graph, Relational, Similarity}
 
 /** The steady-state operators run once per arriving batch for the life
   * of a session, so each call may leave at most its own (eagerly
   * checkpointed) result cached — every intermediate it persisted must be
-  * released. One-shot operators are exempt: their lazy result still
-  * reads their caches.
+  * released. The iterative graph operators are held to the same rule:
+  * their setup checkpoint and superseded rounds go, their result stays.
+  * One-shot operators are exempt: their lazy result still reads their
+  * caches.
   */
 class CacheReleaseSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -70,8 +72,25 @@ class CacheReleaseSpec extends AnyFunSuite with SparkTestBase {
         spanHistory)),
       "clusterMedoid" -> (() => Similarity.clusterMedoid(clustered, "id", "v", "c")))
 
-    // the count materializes a lazily returned result, so caches its
-    // plan reads show up too
+    assertNoLeaks(ops)
+  }
+
+  test("graph operators cache at most their result per call") {
+    val edges = tradeEdges.localCheckpoint()
+    val seeds = Seq(1L, 2L, 1000001L).toDF("seed")
+    // enough rounds that a superseded round checkpoint exists
+    assertNoLeaks(Seq(
+      "pageRank" -> (() => Graph.pageRank(edges, "src", "dst")),
+      "personalizedPageRank" -> (() =>
+        Graph.personalizedPageRank(edges, "src", "dst", seeds, "seed")),
+      "kCore" -> (() => Graph.kCore(edges, "src", "dst", k = 2)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, "src", "dst", iters = 5))))
+  }
+
+  /** Each op, run once, leaves at most one cached RDD behind. The count
+    * materializes a lazily returned result, so caches its plan reads show
+    * up too. */
+  private def assertNoLeaks(ops: Seq[(String, () => DataFrame)]): Unit = {
     val leaks = ops.flatMap { case (name, op) =>
       val before = cachedRddIds
       assert(op().count() > 0, s"$name: the fixture yields rows")

@@ -58,6 +58,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val out = Graph.pageRank(edges(pairs: _*), "src", "dst", iters = 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == expected)
+    // the reliable-checkpoint path: setup and rounds 4 and 6 go to files
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-ckpt").toString
+    val reliable = Graph.pageRank(edges(pairs: _*), "src", "dst", iters = 6,
+        checkpointDir = Some(dir))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(reliable == expected)
   }
 
   test("duplicate edges collapse: ranks are multiplicity-invariant") {

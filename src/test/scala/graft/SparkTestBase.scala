@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for every suite (Test/fork runs them in a
@@ -26,6 +27,14 @@ trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
   def wh: Warehouse = Warehouse(spark, sfDir)
+
+  /** The symmetrized customer-supplier trade graph of q_pagerank. */
+  def tradeEdges: DataFrame = {
+    val e = wh.loadTable("orders").join(wh.loadTable("lineitem"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+  }
 
   def cachedRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 

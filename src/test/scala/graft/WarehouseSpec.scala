@@ -683,6 +683,56 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("appendTable after a write to a sibling table reads no footer") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_sib").toString
+    val w = Warehouse(spark, tmp)
+    w.saveTable(Seq((1L, 10.0)).toDF("id", "v"), tmp, "log")
+    w.appendTable(Seq((2L, 20.0, "x")).toDF("id", "v", "tag"), tmp, "log")
+    w.saveTableVersioned(Seq((1L, 1.0)).toDF("k", "x"), tmp, "cur")
+    // the write itself is the one job: the union schema is still cached
+    assert(jobsRunBy(w.appendTable(Seq((3L, 30.0)).toDF("id", "v"), tmp, "log")) === 1)
+    assert(w.loadTable("log", mergeSchema = true).count() === 3)
+  }
+
+  test("compactTable keeps the columns appendTable added, whichever file lists first") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val narrow = Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
+    val wide = Seq((3L, 30.0, "x")).toDF("id", "v", "tag")
+    val tmp = Files.createTempDirectory("graft_cmpevo").toString
+    val w = Warehouse(spark, tmp)
+    // a table's first listed file decides a single-footer read; build
+    // tables until one lists its narrow file first and one its wide file
+    // first, alternating the write order so either listing rule yields both
+    val byFirst = scala.collection.mutable.Map[Boolean, String]()
+    var i = 0
+    while (byFirst.size < 2 && i < 40) {
+      val t = s"t$i"
+      val (first, second): (DataFrame, DataFrame) =
+        if (i % 2 == 0) (narrow, wide) else (wide, narrow)
+      w.saveTable(first.coalesce(1), tmp, t)
+      w.appendTable(second.coalesce(1), tmp, t)
+      val wideFirst = Warehouse.footerSchema(spark, Warehouse.tablePath(tmp, t))
+        .schema.fieldNames.contains("tag")
+      byFirst.getOrElseUpdate(wideFirst, t)
+      i += 1
+    }
+    assert(byFirst.size === 2, "both listing orders built")
+    def rows(t: String) =
+      w.loadTable(t, mergeSchema = true).collect().map(_.toSeq).toSet
+    byFirst.foreach { case (wideFirst, t) =>
+      val before = rows(t)
+      assert(before.exists(_.contains("x")))
+      // the union schema is cached by the append: the compaction's
+      // shuffle and write are its only jobs
+      assert(jobsRunBy(w.compactTable(tmp, t, targetBytes = 1L << 40)) === 2)
+      assert(w.loadTable(t, mergeSchema = true).schema.fieldNames.sorted.toSeq ===
+        Seq("id", "tag", "v"), s"wide file listed first: $wideFirst")
+      assert(rows(t) === before, s"wide file listed first: $wideFirst")
+    }
+  }
+
   test("appendTable refuses a versioned table (base-path rows would be invisible)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft_appver").toString
