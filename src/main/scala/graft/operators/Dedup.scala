@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -324,17 +323,18 @@ object Dedup {
     * GROUP, and pair-transitivity (a~b, b~c but a≁c) must resolve into
     * one cluster, which per-pair filtering cannot express.
     *
-    * NOTE: runs Spark jobs while building (one count per round — the
-    * convergence test), like the other bounded iterative fits (k-means,
-    * BPE). Labels localCheckpoint per round (lineage truncation — see
-    * the in-body comment); superseded rounds are reclaimed by the
-    * ContextCleaner.
+    * NOTE: runs Spark jobs while building (the setup cache, then one
+    * count per round — the convergence test), like the other bounded
+    * iterative fits (k-means, BPE). The symmetric edge list is cached
+    * once (every round joins it: [[RoundCheckpoints.cacheNow]]) and each
+    * round's labels are checkpointed ([[RoundCheckpoints]]); the call
+    * leaves only its returned labels cached.
     *
-    * `checkpointDir`: when set, per-round materialization uses RELIABLE
-    * checkpoints into that directory instead of `localCheckpoint`
-    * ([[RoundCheckpoints]]) — cluster runs at scale should pass a
-    * durable directory (HDFS/S3) and trade per-round write cost for
-    * tolerance of executor loss.
+    * `checkpointDir`: when set, every round uses a RELIABLE checkpoint
+    * into that directory instead of `localCheckpoint` — cluster runs at
+    * scale should pass a durable directory (HDFS/S3) and trade per-round
+    * write cost for tolerance of executor loss (the edge list is a
+    * cache, recomputable from `pairs`).
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
@@ -342,63 +342,55 @@ object Dedup {
       checkpointDir: Option[String] = None): DataFrame = {
     requireIntegralId(pairs, aCol)
     requireIntegralId(pairs, bCol)
-    // symmetric edge list, narrow (long, long). The projected pair frame
-    // is persisted BEFORE the symmetrizing union: the union references it
-    // twice, and `pairs` is routinely an expensive lazy plan (a PPJoin /
-    // blocking join whose exact verify runs AFTER its last exchange, so
-    // exchange reuse does not dedupe it) — un-cached, the whole pair
-    // generation computed TWICE inside the edges materialization (r12).
-    // The cache is narrow 16 B rows, O(matches).
-    val e = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Each round's labels are checkpointed ([[RoundCheckpoints]]): the
-    // lineage of an iterative plan doubles per round (labels joins
-    // viaNbr which joins labels...) — without truncation a 30-round
-    // graph OOMs the DRIVER just formatting the plan, let alone
-    // optimizing it. The checkpoint also supersedes explicit unpersist:
-    // a .drop() view is NOT the cached handle (cascade=false unpersist
-    // is a silent no-op on it), while a superseded round's checkpoint is
-    // dropped once the next round is built.
     val rounds = new RoundCheckpoints(pairs.sparkSession, checkpointDir)
-    // Round 1 folded into initialization: every node starts at
-    // least(own id, min neighbor id) — exactly the state one propagation
-    // round over all-nodes-as-frontier would produce, for the price of
-    // the groupBy the node list needed anyway (the symmetric edge list
-    // contains every node as src). Saves one full join+count round.
-    var next = rounds.materialize(
-      edges.groupBy(col("src").as("id"))
-        .agg(min(col("dst")).as("__nm"))
-        .select(col("id"),
-          least(col("id"), col("__nm")).as("component"),
-          (col("__nm") < col("id")).as("__changed")))
-    var labels = next.drop("__changed")
-    // Delta propagation: only nodes whose label CHANGED last round can
-    // lower a neighbor's label this round, so the neighbor join runs
-    // against the frontier, not all nodes — after round 1 the frontier
-    // collapses to the still-converging fringe (end-to-end cluster pass
-    // on the 50k clone corpus: 78 s → 48 s; per-round localCheckpoint
-    // lineage truncation then took it to 24 s, the remainder being the
-    // PPJoin pair generation itself, not the rounds). The initial
-    // frontier is init's changed set — the same set round 1 would have
-    // produced, so the delta invariant (only changed nodes can lower a
-    // neighbor) holds from the first loop iteration.
-    var frontier = next.filter(col("__changed")).drop("__changed")
-    var iter = 0
-    var converged = false
     try {
-      while (iter < maxIters && !converged) {
-      val viaNbr = edges
-        .join(frontier.select(col("id").as("dst"), col("component").as("fc")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("fc")).as("nbr_min"))
-      next = rounds.materialize(
-        labels.join(viaNbr, Seq("id"), "left")
+      // symmetric edge list, narrow (long, long), self-loops kept: one
+      // scan of `pairs` — routinely an expensive lazy plan (a PPJoin /
+      // blocking join whose exact verify runs after its last exchange)
+      val edges = rounds.cacheNow(Graph.undirected(
+        pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))))
+      // Each round's labels are checkpointed: the lineage of an iterative
+      // plan doubles per round (labels joins viaNbr which joins
+      // labels...) — without truncation a 30-round graph OOMs the DRIVER
+      // just formatting the plan, let alone optimizing it.
+      //
+      // Round 1 folded into initialization: every node starts at
+      // least(own id, min neighbor id) — exactly the state one
+      // propagation round over all-nodes-as-frontier would produce, for
+      // the price of the groupBy the node list needed anyway (the
+      // symmetric edge list contains every node as src). Saves one full
+      // join+count round.
+      var next = rounds.materialize(
+        edges.groupBy(col("src").as("id"))
+          .agg(min(col("dst")).as("__nm"))
           .select(col("id"),
-            least(col("component"), coalesce(col("nbr_min"), col("component")))
-              .as("component"),
-            coalesce(col("nbr_min") < col("component"), lit(false)).as("__changed")))
+            least(col("id"), col("__nm")).as("component"),
+            (col("__nm") < col("id")).as("__changed")))
+      var labels = next.drop("__changed")
+      // Delta propagation: only nodes whose label CHANGED last round can
+      // lower a neighbor's label this round, so the neighbor join runs
+      // against the frontier, not all nodes — after round 1 the frontier
+      // collapses to the still-converging fringe (end-to-end cluster pass
+      // on the 50k clone corpus: 78 s → 48 s; per-round localCheckpoint
+      // lineage truncation then took it to 24 s, the remainder being the
+      // PPJoin pair generation itself, not the rounds). The initial
+      // frontier is init's changed set — the same set round 1 would have
+      // produced, so the delta invariant (only changed nodes can lower a
+      // neighbor) holds from the first loop iteration.
+      var frontier = next.filter(col("__changed")).drop("__changed")
+      var iter = 0
+      var converged = false
+      while (iter < maxIters && !converged) {
+        val viaNbr = edges
+          .join(frontier.select(col("id").as("dst"), col("component").as("fc")), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("fc")).as("nbr_min"))
+        next = rounds.materialize(
+          labels.join(viaNbr, Seq("id"), "left")
+            .select(col("id"),
+              least(col("component"), coalesce(col("nbr_min"), col("component")))
+                .as("component"),
+              coalesce(col("nbr_min") < col("component"), lit(false)).as("__changed")))
         val changed = next.filter(col("__changed")).count() // materializes next
         rounds.releaseSuperseded() // files / next's blocks now back the reads
         labels = next.drop("__changed")
@@ -416,106 +408,7 @@ object Dedup {
           s"connectedComponents did not converge in $maxIters rounds — " +
             "component diameter exceeds maxIters; raise maxIters")
       labels
-    } finally {
-      // also on the non-convergence throw — a caught-and-retried failure
-      // must not leak the cached symmetric edge list (returned labels are
-      // a checkpoint, so dropping the edge CACHE never breaks them; the
-      // lineage stays intact for recompute-after-eviction), nor any
-      // round cache still pending on the reliable path
-      rounds.releaseSuperseded()
-      e.unpersist(); edges.unpersist()
-    }
-  }
-
-  /** THE materialization helper of the graph and dedup operators, in two
-    * forms.
-    *
-    * [[materializeNow]] builds a SHARED frame — one that later queries
-    * read several times (a graph's adjacency, a corpus's signatures) —
-    * eagerly, once, as a checkpoint. A lazy `persist` read N times costs
-    * N jobs under AQE: each scan of the not-yet-built cache plans its own
-    * table-cache stage, and all but the first block on the first one's
-    * block lock. A checkpoint is a plain leaf scan, built before any
-    * reader is planned. (Its hash partitioning is not kept: AQE reports
-    * none for the plan it checkpoints, so a join on its key still plans
-    * an exchange.) [[release]] drops what `materializeNow` built: an
-    * operator that returns a materialized result calls it before
-    * returning; one that returns a LAZY plan over the frame leaves it to
-    * the ContextCleaner, which unpersists it once the plan is
-    * unreferenced.
-    *
-    * [[materialize]] is the per-round form for an iterative operator's
-    * state ([[connectedComponents]], [[Graph.pageRank]], [[Graph.kCore]]).
-    * Without a `checkpointDir` a round is a lazy `localCheckpoint`: fast
-    * and single-process, but its blocks have NO recompute path, so any
-    * executor loss mid-iteration fails the run. With one, a round is a
-    * RELIABLE checkpoint into that directory (survives executor loss);
-    * its write is a second job over the round's plan, which would
-    * recompute the round from scratch unless the frame is cached — so it
-    * is cached, and [[releaseSuperseded]], called after the action that
-    * built the newest round (which writes the checkpoint of every marked
-    * RDD in its lineage — doCheckpoint recurses ancestors), drops those
-    * caches and the blocks of every earlier round. Checkpoint FILES of
-    * superseded rounds are reclaimed by the ContextCleaner only under
-    * spark.cleaner.referenceTracking.cleanCheckpoints=true (GraftSession
-    * sets it); on sessions without the flag they accumulate in
-    * `checkpointDir` until app exit — the durability trade the option
-    * buys. Sets the session's checkpoint dir if none is configured; an
-    * already-configured dir wins.
-    */
-  private[operators] final class RoundCheckpoints(
-      spark: SparkSession, checkpointDir: Option[String]) {
-    checkpointDir.foreach { dir =>
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-    }
-    private var pendingCaches: List[DataFrame] = Nil
-    private var rounds: List[DataFrame] = Nil // newest first
-    private var shared: List[DataFrame] = Nil
-
-    def materialize(plan: DataFrame): DataFrame = {
-      val out =
-        if (checkpointDir.isDefined) {
-          val cached = plan.persist(StorageLevel.MEMORY_AND_DISK)
-          pendingCaches ::= cached
-          cached.checkpoint(eager = false)
-        } else plan.localCheckpoint(eager = false, storageLevel = StorageLevel.MEMORY_AND_DISK)
-      rounds ::= out
-      out
-    }
-
-    /** `plan`, computed now, once (see the class doc). The reliable form
-      * needs no cache: its eager write job is the only pass over `plan`. */
-    def materializeNow(plan: DataFrame): DataFrame = {
-      val out =
-        if (checkpointDir.isDefined) plan.checkpoint(eager = true)
-        else plan.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
-      shared ::= out
-      out
-    }
-
-    /** After the action that built the newest round: drop the pending
-      * round caches and every earlier round's blocks. */
-    def releaseSuperseded(): Unit = {
-      pendingCaches.foreach(_.unpersist())
-      pendingCaches = Nil
-      rounds.drop(1).foreach(dropBlocks)
-      rounds = rounds.take(1)
-    }
-
-    /** [[releaseSuperseded]], then drop every [[materializeNow]] frame. */
-    def release(): Unit = {
-      releaseSuperseded()
-      shared.foreach(dropBlocks)
-      shared = Nil
-    }
-
-    /** Unpersist a checkpoint's RDD: a local checkpoint's blocks (a
-      * reliable checkpoint's RDD holds none). */
-    private def dropBlocks(df: DataFrame): Unit = df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+    } finally rounds.release() // also on the non-convergence throw
   }
 
   private def requireIntegralId(df: DataFrame, colName: String): Unit = {

@@ -20,30 +20,26 @@ import org.apache.spark.storage.StorageLevel
   * contract as the trained quality classifier
   * (TextAnalysis.trainQualityClassifier).
   *
-  * Scale posture (100 TB): the edge list is the big side. Its setup is
-  * ONE exchange: the edges, their endpoints (and any seeds) hash-partition
-  * on node once and dedup in those partitions, and the result is
-  * checkpointed once, eagerly (`Dedup.RoundCheckpoints.materializeNow`) —
-  * the edge list and the node list are filters of that one frame, so no
-  * later query re-plans the dedup or waits on a table-cache job. Each
-  * iteration shuffles the rank frame (O(nodes), narrow (long, long)
-  * rows) to the edge join, then one groupBy(dst) with map-side partial
-  * sums. localCheckpoint (or reliable checkpoints under `checkpointDir`)
-  * every `checkpointInterval` (4) rounds truncates the linearly-growing
-  * iterative lineage (the Dedup.connectedComponents pattern) — rounds
-  * between checkpoints chain into one job, removing the per-round
-  * job-scheduling floor without changing any value. A superseded round's
-  * checkpoint is dropped once the next is built, and an operator that
-  * returns a materialized result drops its setup checkpoint before
-  * returning: a call leaves at most its result cached.
+  * Scale posture (100 TB): the edge list is the big side. Every
+  * iterative operator here materializes through ONE helper,
+  * [[RoundCheckpoints]]: its setup frames (the deduped edge list, the
+  * node list) are built once, eagerly ([[RoundCheckpoints.materializeNow]];
+  * [[shortestPaths]]' and connectedComponents' edge lists, which every
+  * round joins, as a cache: [[RoundCheckpoints.cacheNow]]), so no later
+  * query re-plans the dedup or waits on a table-cache job;
+  * its round state is checkpointed to truncate the iterative lineage —
+  * the fixed-round iterations every [[RoundCheckpoints.interval]] rounds
+  * and on the last, letting the rounds between chain into one job, the
+  * convergence-tested ones ([[kCore]], [[shortestPaths]]) every round,
+  * where the count that tests convergence builds the round. A superseded
+  * round is dropped once the next is built, and the setup in a
+  * `finally`: a call leaves at most its result cached. The pageRank
+  * family, [[labelPropagation]] and [[hits]] share one setup
+  * ([[adjacency]]: one exchange, edges and nodes are filters of one
+  * checkpoint); each round shuffles the O(nodes) narrow (long, long)
+  * state to the edge join, then one groupBy with map-side partial sums.
   */
 object Graph {
-
-  /** Rounds between lineage-truncating checkpoints in the fixed-round
-    * iterations ([[pageRank]], [[personalizedPageRank]],
-    * [[labelPropagation]], [[pageRankWeighted]]); the last round always
-    * checkpoints. Settled at 4 by the r12 A/B (OPTIMIZATION_r12.md). */
-  private val checkpointInterval = 4
 
   /** PageRank with fixed iteration count.
     *
@@ -69,7 +65,7 @@ object Graph {
       iters: Int = 8, dampNum: Long = 85, dampDen: Long = 100,
       scale: Long = 1000000000L,
       checkpointDir: Option[String] = None): DataFrame =
-    pageRankCore(edges, srcCol, dstCol, None, iters, dampNum, dampDen,
+    pageRankCore(edges, srcCol, dstCol, None, None, iters, dampNum, dampDen,
       scale, checkpointDir)
 
   /** PERSONALIZED PageRank: the teleport term lands only on `seeds`
@@ -93,31 +89,61 @@ object Graph {
       iters: Int = 8, dampNum: Long = 85, dampDen: Long = 100,
       scale: Long = 1000000000L,
       checkpointDir: Option[String] = None): DataFrame =
-    pageRankCore(edges, srcCol, dstCol,
+    pageRankCore(edges, srcCol, dstCol, None,
       Some(seeds.select(col(seedCol).cast("long").as("node"))
         .where(col("node").isNotNull)),
       iters, dampNum, dampDen, scale, checkpointDir)
 
+  /** WEIGHTED PageRank: [[pageRank]] with each node's rank distributed
+    * proportional to EDGE WEIGHT instead of uniformly — the form real
+    * interaction graphs need (weight = number of orders, links,
+    * co-occurrences; an edge clicked a million times should carry more
+    * authority than one clicked once). Parallel (src, dst) edges MERGE
+    * by summing weights, so raw event logs feed in directly;
+    * non-positive weights drop.
+    *
+    * Integer semantics mirror [[pageRank]] exactly: per-edge share =
+    * ⌊rank·w ÷ W(u)⌋ (the multiply in decimal(38,0) — rank·w can pass
+    * 2^63), damped sums and the uniform teleport base unchanged. With
+    * all weights equal it reproduces [[pageRank]] BIT-FOR-BIT
+    * (⌊r·w ÷ (d·w)⌋ = ⌊r ÷ d⌋ — spec-pinned), so the weighted form is
+    * a strict generalization. It IS [[pageRank]]'s plan: the weight only
+    * changes how the setup merges parallel edges and how a round splits
+    * a node's rank.
+    */
+  def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String, iters: Int = 8,
+      dampNum: Long = 85, dampDen: Long = 100,
+      scale: Long = 1000000000L): DataFrame =
+    pageRankCore(edges, srcCol, dstCol, Some(weightCol), None, iters, dampNum,
+      dampDen, scale, None)
+
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
-      seedsOpt: Option[DataFrame],
+      weightCol: Option[String], seedsOpt: Option[DataFrame],
       iters: Int, dampNum: Long, dampDen: Long, scale: Long,
       checkpointDir: Option[String]): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping must satisfy 0 <= dampNum <= dampDen (got $dampNum/$dampDen)")
-    // the Dedup.connectedComponents materialization contract:
     // localCheckpoint for single-process speed, reliable checkpoint files
     // for executor-loss tolerance on real clusters
-    val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, checkpointDir)
+    val rounds = new RoundCheckpoints(edges.sparkSession, checkpointDir)
     try {
-      // (node, nbr, seed, outdeg) ([[adjacency]]): its nbr rows are the
-      // edge list, its null-nbr rows the node list; outdeg counts the
-      // distinct out-neighbours inside the adjacency's hash(node)
-      // partitions — a window, not a join and its exchanges
-      val adj = rounds.materializeNow(adjacency(edges, srcCol, dstCol, seedsOpt)
-        .withColumn("outdeg", count(col("nbr")).over(Window.partitionBy("node"))))
-      val edgeDeg = adj.where(col("nbr").isNotNull)
-        .select(col("node").as("src"), col("nbr").as("dst"), col("outdeg"))
+      // how a node splits its rank over its out-edges: evenly (rank div
+      // outdeg) or by weight (⌊rank·w ÷ wsum⌋). The node's total is a
+      // window over the adjacency's hash(node) partitions, not a join
+      // and its exchanges.
+      val (total, totalOf, share) = weightCol match {
+        case None => ("outdeg", count(col("nbr")), "rank_fp div outdeg")
+        case Some(_) => ("wsum", sum(col("w")),
+          "CAST((CAST(rank_fp AS decimal(38,0)) * w) div wsum AS long)")
+      }
+      // (node, nbr, seed[, w], total): its nbr rows are the edge list,
+      // its null-nbr rows the node list
+      val adj = rounds.materializeNow(adjacency(edges, srcCol, dstCol, seedsOpt, weightCol)
+        .withColumn(total, totalOf.over(Window.partitionBy("node"))))
+      val edgeDeg = adj.where(col("nbr").isNotNull).drop("seed")
+        .withColumnRenamed("node", "src").withColumnRenamed("nbr", "dst")
       val nodeRows = adj.where(col("nbr").isNull)
       // per-node teleport base: uniform for the global form; concentrated
       // on the seed set for the personalized form (one floor division so
@@ -143,19 +169,16 @@ object Graph {
         // Per-round plan (r12 shape): the base term UNIONS into the
         // contribution aggregation instead of a nodes-join after it —
         // one exchange per round (the groupBy) and no per-round
-        // broadcast-build job; the edge join itself is meant to be
-        // exchange-free (ranks emerge hash(node)-partitioned from the
-        // previous round's groupBy) — but the edge side is a checkpoint
-        // scan with no known partitioning, so a hashpartitioning(src)
-        // exchange appears under it each round, and AQE turns the join
-        // into a broadcast only after that shuffle ran (ROADMAP item
-        // 4). Math unchanged: s is summed over contrib
-        // rows only, base ridden in on its own tagged row, same floor
-        // division — bit-identical ranks.
+        // broadcast-build job. The edge side is a checkpoint scan with
+        // no known partitioning and the size estimate of the plan it
+        // ran, so the edge join is planned with a hashpartitioning(src)
+        // exchange under it each round, and AQE turns the join into a
+        // broadcast only after that shuffle ran (ROADMAP item 2).
+        // s is summed over contrib rows only, base rides in on its own
+        // tagged row, one floor division.
         val contribs = edgeDeg
           .join(ranks.select(col("node").as("src"), col("rank_fp")), "src")
-          .select(col("dst").as("node"),
-            expr("rank_fp div outdeg").as("share"), lit(false).as("__b"))
+          .select(col("dst").as("node"), expr(share).as("share"), lit(false).as("__b"))
         val plan = contribs
           .unionByName(nodes.select(col("node"), col("base").as("share"),
             lit(true).as("__b")))
@@ -166,50 +189,50 @@ object Graph {
             (col("__base") + expr(
               s"($dampNum * coalesce(s, cast(0 as bigint))) div $dampDen"))
               .as("rank_fp"))
-        // materialize every `checkpointInterval` rounds (and on the last):
-        // each round references the prior frame exactly ONCE, so the
-        // un-truncated lineage grows linearly, not exponentially —
-        // letting a few rounds chain into one job removes the per-round
-        // job-scheduling floor while the periodic checkpoint still bounds
-        // lineage depth for long runs. Results are bit-identical either
-        // way. The action writes the checkpoint (reliable path) / stores
-        // the blocks (local path), then superseded caches can go.
-        if (k == iters - 1 || (k + 1) % checkpointInterval == 0) {
-          val next = rounds.materialize(plan)
-          next.count()
-          rounds.releaseSuperseded()
-          ranks = next
-        } else ranks = plan
+        ranks = rounds.fixedRound(plan, k, iters)
         k += 1
       }
       ranks
     } finally rounds.release()
   }
 
-  /** The one-exchange graph setup of [[pageRank]] and
-    * [[labelPropagation]]: every non-null edge emits (src, dst), (src,
-    * null) and (dst, null) — plus (seed, null) per seed — and ONE
-    * hash(node) exchange feeds the dedup, which needs no second exchange
-    * (hash(node) already clusters (node, nbr)). Output `(node, nbr,
-    * seed)`, one row per distinct edge (nbr = its dst) and one null-nbr
-    * row per node, `seed` set on seed nodes. A node's neighbours stay one
-    * row each — never one array row per node — so a hub's adjacency
-    * streams.
+  /** The one-exchange graph setup of the pageRank family,
+    * [[labelPropagation]] and [[hits]]: every non-null edge emits (src,
+    * dst), (src, null) and (dst, null) — plus (seed, null) per seed — and
+    * ONE hash(node) exchange feeds the dedup, which needs no second
+    * exchange (hash(node) already clusters (node, nbr)). Output `(node,
+    * nbr, seed)`, one row per distinct edge (nbr = its dst) and one
+    * null-nbr row per node, `seed` set on seed nodes. A node's neighbours
+    * stay one row each — never one array row per node — so a hub's
+    * adjacency streams.
+    *
+    * With a `weightCol`, an edge needs a positive weight (dropped before
+    * the explode, so a node reached only by such edges is no node), the
+    * weight rides on its (src, dst) row, and parallel edges merge into a
+    * `w` column by summing it.
     */
   private def adjacency(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: Option[DataFrame] = None): DataFrame = {
+      seeds: Option[DataFrame] = None, weightCol: Option[String] = None): DataFrame = {
+    val ends = col("src").isNotNull && col("dst").isNotNull
+    // the weight's branch: which edges count, and how parallel ones merge
+    val (w, kept, merged) = weightCol match {
+      case None => (Nil, ends, Nil)
+      case Some(c) => (Seq(col(c).cast("long").as("w")), ends && col("w") > 0,
+        Seq(sum(col("w")).as("w")))
+    }
     val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-    def row(node: String, nbr: Column) =
-      struct(col(node).as("node"), nbr.as("nbr"), lit(false).as("seed"))
+      .select(Seq(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")) ++ w: _*)
+      .where(kept)
     val none = lit(null).cast("long")
-    val rows = e.select(explode(array(row("src", col("dst")), row("src", none),
-      row("dst", none))).as("r")).select("r.*")
+    def row(node: String, nbr: Column, weight: Column) = struct(Seq(col(node).as("node"),
+      nbr.as("nbr"), lit(false).as("seed")) ++ w.map(_ => weight.as("w")): _*)
+    val rows = e.select(explode(array(row("src", col("dst"), col("w")), row("src", none, none),
+      row("dst", none, none))).as("r")).select("r.*")
     seeds.fold(rows)(s =>
         rows.unionByName(s.select(col("node"), none.as("nbr"), lit(true).as("seed"))))
       .repartition(col("node"))
-      .groupBy("node", "nbr").agg(max(col("seed")).as("seed"))
+      .groupBy("node", "nbr")
+      .agg(max(col("seed")).as("seed"), merged: _*)
   }
 
   /** DETERMINISTIC synchronous label propagation (community detection,
@@ -226,13 +249,13 @@ object Graph {
     *
     * Plan: same shape as [[pageRank]] — the one-exchange setup
     * checkpoint, then per round one (dst, label) groupBy count + one
-    * argmax aggregate, lineage truncated every `checkpointInterval`
-    * rounds.
+    * argmax aggregate, lineage truncated on the fixed-round cadence
+    * ([[RoundCheckpoints.fixedRound]]).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, None)
+    val rounds = new RoundCheckpoints(edges.sparkSession, None)
     try {
       // the [[pageRank]] setup: one exchange, edges and nodes are filters
       // of one checkpoint
@@ -258,16 +281,7 @@ object Graph {
           .groupBy("node")
           .agg(max(struct(col("c").as("c"), (-col("label")).as("n"))).as("__m"))
           .select(col("node"), (-col("__m.n")).as("label"))
-        // periodic lineage truncation only (pageRankCore contract): each
-        // round references the prior labels once, so intermediate rounds
-        // chain into one job with linear plan growth; bit-identical.
-        labels =
-          if (k == iters - 1 || (k + 1) % checkpointInterval == 0) {
-            val c = rounds.materialize(plan)
-            c.count()
-            rounds.releaseSuperseded()
-            c
-          } else plan
+        labels = rounds.fixedRound(plan, k, iters)
         k += 1
       }
       labels
@@ -371,28 +385,20 @@ object Graph {
     *
     * Scale shape per round: one degree aggregation over surviving edges
     * (map-side partial) + two semi joins to drop edges of removed nodes;
-    * the symmetric edge list is checkpointed once (one hash(src) exchange),
-    * and every round's survivor frame is lineage-truncated (the pageRank
-    * materialization contract).
+    * the symmetric edge list ([[undirected]]) is checkpointed once, and
+    * every round's survivor frame is checkpointed by the count that tests
+    * convergence.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIters: Int = 16): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(maxIters >= 1, s"maxIters must be >= 1 (got $maxIters)")
-    // undirected simple graph: both directions of every non-loop edge,
-    // deduped behind ONE hash(src) exchange (it already clusters
-    // (src, dst)) and built once, now — one scan of the caller's plan,
-    // narrow (long, long) rows
-    val rounds = new Dedup.RoundCheckpoints(edges.sparkSession, None)
+    val rounds = new RoundCheckpoints(edges.sparkSession, None)
     try {
-      val e0 = rounds.materializeNow(edges
+      // the undirected simple graph, built once: self-loops drop here
+      val e0 = rounds.materializeNow(undirected(edges
         .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-        .select(explode(array(struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select("e.*")
-        .repartition(col("src"))
-        .distinct())
+        .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))))
       var alive = e0
       var lastCount = -1L
       var i = 0
@@ -420,80 +426,19 @@ object Graph {
     } finally rounds.release()
   }
 
-  /** WEIGHTED PageRank: [[pageRank]] with each node's rank distributed
-    * proportional to EDGE WEIGHT instead of uniformly — the form real
-    * interaction graphs need (weight = number of orders, links,
-    * co-occurrences; an edge clicked a million times should carry more
-    * authority than one clicked once). Parallel (src, dst) edges MERGE
-    * by summing weights, so raw event logs feed in directly;
-    * non-positive weights drop.
-    *
-    * Integer semantics mirror [[pageRank]] exactly: per-edge share =
-    * ⌊rank·w ÷ W(u)⌋ (the multiply in decimal(38,0) — rank·w can pass
-    * 2^63), damped sums and the uniform teleport base unchanged. With
-    * all weights equal it reproduces [[pageRank]] BIT-FOR-BIT
-    * (⌊r·w ÷ (d·w)⌋ = ⌊r ÷ d⌋ — spec-pinned), so the weighted form is
-    * a strict generalization. Same plan shape: weighted edge list
-    * persisted pre-partitioned on src, per-round O(nodes) rank shuffle
-    * + partial-aggregated groupBy, per-round eager localCheckpoint
-    * lineage truncation.
+  /** The undirected simple-graph setup of [[kCore]] and
+    * [[Dedup.connectedComponents]]: both directions of every `(src, dst)`
+    * row, deduped behind ONE hash(src) exchange (it already clusters
+    * (src, dst)) — one scan of the caller's plan, narrow (long, long)
+    * rows. Self-loops and nulls stay; a caller that drops them filters
+    * first.
     */
-  def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, iters: Int = 8,
-      dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000L): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
-      s"damping must satisfy 0 <= dampNum <= dampDen (got $dampNum/$dampDen)")
-    // four consumers of e (edgeW join + weight-sum sides, nodes' two
-    // arms): persist so the merge aggregate runs once (pageRankCore r12)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        col(weightCol).cast("long").as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeW = e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src")
+  private[operators] def undirected(e: DataFrame): DataFrame =
+    e.select(explode(array(struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select("e.*")
       .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
       .distinct()
-      .withColumn("base", lit((dampDen - dampNum) * scale / dampDen))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
-      .localCheckpoint(true)
-    var k = 0
-    while (k < iters) {
-      // base unioned into the aggregation — one exchange per round, no
-      // per-round join (the pageRankCore r12 shape; bit-identical)
-      val contribs = edgeW
-        .join(ranks.select(col("node").as("src"), col("rank_fp")), "src")
-        .select(col("dst").as("node"), expr(
-          "CAST((CAST(rank_fp AS decimal(38,0)) * w) div wsum AS long)")
-          .as("share"), lit(false).as("__b"))
-      val plan = contribs
-        .unionByName(nodes.select(col("node"), col("base").as("share"),
-          lit(true).as("__b")))
-        .groupBy("node")
-        .agg(sum(when(!col("__b"), col("share"))).as("s"),
-          max(when(col("__b"), col("share"))).as("__base"))
-        .select(col("node"),
-          (col("__base") + expr(
-            s"($dampNum * coalesce(s, cast(0 as bigint))) div $dampDen"))
-            .as("rank_fp"))
-      // periodic truncation (pageRankCore contract) — rounds chain with
-      // linear plan growth between checkpoints; bit-identical results
-      ranks =
-        if (k == iters - 1 || (k + 1) % checkpointInterval == 0)
-          plan.localCheckpoint(true)
-        else plan
-      k += 1
-    }
-    e.unpersist(); edgeW.unpersist(); nodes.unpersist()
-    ranks
-  }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999): the DIRECTED
     * complement of [[pageRank]] — a node is a good AUTHORITY when good
@@ -512,14 +457,56 @@ object Graph {
     * (order-free), so any engine replays every score bit-for-bit.
     * Nodes with no in-edges score authority 0, no out-edges hub 0.
     *
-    * Plan shape: distinct narrow edge list persisted once; each phase
-    * is ONE equi-join of the O(nodes) score frame with the edges + a
+    * Plan shape: the [[pageRank]] setup ([[adjacency]]: one exchange,
+    * edges and nodes are filters of one checkpoint); each phase is ONE
+    * equi-join of the O(nodes) score frame with the edges + a
     * partial-aggregated groupBy, with the phase max as a broadcast
-    * single row; per-round localCheckpoint truncates the doubling
-    * lineage (the CC/pageRank contract). Overflow bound:
-    * max-degree · scale · scale < 2^63 is avoided entirely — the
-    * normalization multiply runs in decimal(38,0).
+    * single row — never a literal, which would make every phase's plan
+    * new code (r12: fewer jobs, slower). A phase's plan reads its raw
+    * sum twice (stream + max), so every phase is a lazy checkpoint
+    * ([[RoundCheckpoints.materialize]]) that keeps the plan from
+    * doubling; nothing is stored until the count that builds the
+    * result, whose cascade computes each phase once. The result is the
+    * one frame a call leaves cached. Overflow bound: max-degree · scale
+    * · scale < 2^63 is avoided entirely — the normalization multiply
+    * runs in decimal(38,0).
     */
+  def hits(edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int = 8, scale: Long = 1000000L): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1 (got $iters)")
+    require(scale >= 1, s"scale must be >= 1 (got $scale)")
+    val rounds = new RoundCheckpoints(edges.sparkSession, None)
+    try {
+      val adj = rounds.materializeNow(adjacency(edges, srcCol, dstCol).select("node", "nbr"))
+      val e = adj.where(col("nbr").isNotNull).select(col("node").as("src"), col("nbr").as("dst"))
+      val nodes = adj.where(col("nbr").isNull).select("node")
+      def normalized(rawPlan: DataFrame): DataFrame = rounds.materialize(
+        rawPlan.crossJoin(broadcast(rawPlan.agg(max(col("s")).as("__m"))))
+          .select(col("node"), expr(
+            s"CAST((CAST(s AS decimal(38,0)) * $scale) div __m AS long)").as("v")))
+      var h = nodes.select(col("node"), lit(scale).as("v"))
+      var a: DataFrame = null
+      var i = 0
+      while (i < iters) {
+        a = normalized(
+          e.join(h.withColumnRenamed("node", "src"), Seq("src"))
+            .groupBy(col("dst").as("node")).agg(sum(col("v")).as("s")))
+        h = normalized(
+          e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
+            .groupBy(col("src").as("node")).agg(sum(col("v")).as("s")))
+        i += 1
+      }
+      val out = rounds.materialize(nodes
+        .join(a.withColumnRenamed("v", "authority_e6"), Seq("node"), "left")
+        .join(h.withColumnRenamed("v", "hub_e6"), Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("authority_e6"), lit(0L)).as("authority_e6"),
+          coalesce(col("hub_e6"), lit(0L)).as("hub_e6")))
+      out.count() // builds every phase; release() keeps this newest round
+      out
+    } finally rounds.release()
+  }
+
   /** MULTI-SOURCE SHORTEST PATHS (Bellman-Ford relaxation): the exact
     * distance from the NEAREST source to every reachable node over
     * DIRECTED edges with non-negative integer weights — "how far is
@@ -534,27 +521,28 @@ object Graph {
     *
     * Integer semantics:
     *  - weight = `weightCol` cast to long; NEGATIVE weights are refused
-    *    loudly (one aggregate over the persisted edge list — Bellman-
-    *    Ford under negative cycles has no shortest paths); parallel
-    *    (src, dst) edges collapse to their MIN weight; no weightCol
-    *    means unit weights, i.e. dist = hop count.
+    *    loudly (one aggregate over the built edge list — Bellman-Ford
+    *    under negative cycles has no shortest paths); parallel (src,
+    *    dst) edges collapse to their MIN weight; no weightCol means unit
+    *    weights, i.e. dist = hop count.
     *  - dist_0(s) = 0 for every distinct source id (a source absent
     *    from the edge list still scores 0 — the pure-seed PPR
     *    convention); unreachable nodes are ABSENT from the output.
     *  - dist_{k+1}(v) = min(dist_k(v), min_{u→v}(dist_k(u) + w(u,v))).
     *
-    * Scale shape (the connectedComponents pattern): the edge list is
-    * min-collapsed and persisted pre-partitioned on src ONCE; each
-    * round joins only the FRONTIER — nodes whose distance improved last
-    * round — against the edges (delta relaxation is exactly equivalent
-    * to full relaxation round-for-round: an unchanged node's
-    * contribution was already applied when it last changed, and
-    * distances only decrease). Past the wavefront, rounds touch the
-    * fringe, not the graph. Per-round localCheckpoint is REQUIRED here
-    * (unlike pageRank's interval): dist and frontier both read each
-    * round's frame, so untruncated lineage doubles per round; the same
-    * action counts the frontier for the early exit. Overflow bound:
-    * maxIters · max(w) < 2^63.
+    * Scale shape (the connectedComponents pattern): the min-collapsed
+    * edge list (a cache, which every round joins:
+    * [[RoundCheckpoints.cacheNow]]) and the source frame are built
+    * once; each round joins only the FRONTIER — nodes whose distance
+    * improved last round — against the edges (delta relaxation is
+    * exactly equivalent to full relaxation round-for-round: an
+    * unchanged node's contribution was already applied when it last
+    * changed, and distances only decrease). Past the wavefront, rounds touch the fringe, not the
+    * graph. Every round is checkpointed (unlike pageRank's interval):
+    * dist and frontier both read each round's frame, so untruncated
+    * lineage doubles per round; the count of the frontier, which drives
+    * the early exit, builds it. Overflow bound: maxIters · max(w) <
+    * 2^63.
     *
     * Returns `(node, dist)`.
     */
@@ -563,114 +551,44 @@ object Graph {
       weightCol: Option[String] = None, maxIters: Int = 20): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1 (got $maxIters)")
     val w = weightCol.map(c => col(c).cast("long")).getOrElse(lit(1L))
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), w.as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
-      .groupBy("src", "dst").agg(min(col("w")).as("w"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val minW = e.agg(min(col("w"))).collect()(0)
-    if (!minW.isNullAt(0))
-      require(minW.getLong(0) >= 0L,
-        s"shortestPaths: negative edge weight ${minW.getLong(0)} refused")
-    var dist = sources
-      .select(col(sourceCol).cast("long").as("node"))
-      .where(col("node").isNotNull).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var frontier = dist
-    var k = 0
-    var done = false
+    val rounds = new RoundCheckpoints(edges.sparkSession, None)
     try {
+      val e = rounds.cacheNow(edges
+        .select(col(srcCol).cast("long").as("src"),
+          col(dstCol).cast("long").as("dst"), w.as("w"))
+        .where(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
+        .groupBy("src", "dst").agg(min(col("w")).as("w")))
+      val minW = e.agg(min(col("w"))).head()
+      if (!minW.isNullAt(0))
+        require(minW.getLong(0) >= 0L,
+          s"shortestPaths: negative edge weight ${minW.getLong(0)} refused")
+      var dist = rounds.materializeNow(sources
+        .select(col(sourceCol).cast("long").as("node"))
+        .where(col("node").isNotNull).distinct()
+        .withColumn("dist", lit(0L)))
+      var frontier = dist
+      var k = 0
+      var done = false
       while (k < maxIters && !done) {
         val relaxed = e
           .join(frontier.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node"), (col("dist") + col("w")).as("nd"))
           .groupBy("node").agg(min(col("nd")).as("nd"))
-        val next = dist.join(relaxed, Seq("node"), "full_outer")
+        val next = rounds.materialize(dist.join(relaxed, Seq("node"), "full_outer")
           .select(col("node"),
             least(col("dist"), col("nd")).as("dist"),
             (col("dist").isNull ||
               (col("nd").isNotNull && col("nd") < col("dist")))
-              .as("__changed"))
-          .localCheckpoint(eager = false, storageLevel = StorageLevel.MEMORY_AND_DISK)
-        val changed = next.filter(col("__changed")).count() // materializes
+              .as("__changed")))
+        val changed = next.filter(col("__changed")).count() // builds next
+        rounds.releaseSuperseded()
         dist = next.drop("__changed")
         frontier = next.filter(col("__changed")).drop("__changed")
         done = changed == 0
         k += 1
       }
       dist
-    } finally {
-      e.unpersist()
-    }
-  }
-
-  def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 8, scale: Long = 1000000L): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    require(scale >= 1, s"scale must be >= 1 (got $scale)")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // LAZY-CHAINED phases (r13, interleaved A/B on the q_hits trade
-    // graph, OPTIMIZATION_r13.md §2): every phase frame is a LAZY
-    // localCheckpoint — the logical plan is truncated to a leaf each
-    // phase (no exponential tree growth) but nothing materializes until
-    // the caller's single eager action, whose cascade computes every
-    // phase RDD exactly once and stores its blocks. Each phase's raw-sum
-    // subtree appears twice in its plan (stream + sup-norm broadcast);
-    // the two copies sit over different AQE table-cache stages, so they
-    // are NOT exchange-reused and the raw-sum shuffle runs twice (ROADMAP
-    // item 4). The r10/r12 shapes additionally paid two eager
-    // checkpoint ACTIONS per phase (raw + rescale). Measured honestly:
-    // the scheduler-job count barely moves (111 -> 110 — jobs here are
-    // AQE stage materializations plus the per-phase broadcast, not the
-    // removed actions) and the interleaved win is modest but consistent
-    // (10.96 vs 11.78 s median, better in 3/3 reps, same-JVM). Still
-    // shape-stable across rounds — the sup-norm rides as a broadcast
-    // row, never a literal (the r12 Janino lesson: per-round literals
-    // cut jobs 113 → 85 but measured SLOWER, medians 11.8 vs 9.7 s;
-    // never commit on job counts alone). Values are bit-identical:
-    // same sums, same decimal floor division, only materialization moved.
-    // Also probed and REJECTED here (r13): per-direction pre-partitioned
-    // edge caches — the phase join is a broadcast-hash join of the tiny
-    // score frame against the cached edge list, so the edges never
-    // re-shuffle per phase anyway and the two cache builds are pure
-    // overhead (jobs 111 -> 117, no median gain).
-    def normalized(rawPlan: DataFrame): DataFrame =
-      rawPlan.crossJoin(broadcast(rawPlan.agg(max(col("s")).as("__m"))))
-        .select(col("node"), expr(
-          s"CAST((CAST(s AS decimal(38,0)) * $scale) div __m AS long)").as("v"))
-    var h = nodes.select(col("node"), lit(scale).as("v")).localCheckpoint(true)
-    var a: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      a = normalized(
-        e.join(h.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(sum(col("v")).as("s")))
-        .localCheckpoint(eager = false)
-      h = normalized(
-        e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(sum(col("v")).as("s")))
-        .localCheckpoint(eager = false)
-      i += 1
-    }
-    val out = nodes
-      .join(a.withColumnRenamed("v", "authority_e6"), Seq("node"), "left")
-      .join(h.withColumnRenamed("v", "hub_e6"), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("authority_e6"), lit(0L)).as("authority_e6"),
-        coalesce(col("hub_e6"), lit(0L)).as("hub_e6"))
-      .localCheckpoint(true)
-    e.unpersist(); nodes.unpersist()
-    out
+    } finally rounds.release()
   }
 
   /** LINK PREDICTION by common-neighborhood scoring (Liben-Nowell &
@@ -705,8 +623,8 @@ object Graph {
     require(maxDegree >= 2, s"linkPrediction: maxDegree must be >= 2 (got $maxDegree)")
     require(minCommon >= 1, s"linkPrediction: minCommon must be >= 1 (got $minCommon)")
     val spark = edges.sparkSession
-    // persisted before the symmetrizing union (the CC r12 rule): the two
-    // arms would re-run the caller plan's post-exchange compute twice
+    // persisted before the symmetrizing union: the two arms would re-run
+    // the caller plan's post-exchange compute twice
     val und = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))

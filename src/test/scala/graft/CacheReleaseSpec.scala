@@ -77,14 +77,29 @@ class CacheReleaseSpec extends AnyFunSuite with SparkTestBase {
 
   test("graph operators cache at most their result per call") {
     val edges = tradeEdges.localCheckpoint()
+    val weighted = edges.withColumn("w", col("src") % 5 + 1)
     val seeds = Seq(1L, 2L, 1000001L).toDF("seed")
     // enough rounds that a superseded round checkpoint exists
     assertNoLeaks(Seq(
       "pageRank" -> (() => Graph.pageRank(edges, "src", "dst")),
       "personalizedPageRank" -> (() =>
         Graph.personalizedPageRank(edges, "src", "dst", seeds, "seed")),
+      "pageRankWeighted" -> (() => Graph.pageRankWeighted(weighted, "src", "dst", "w")),
       "kCore" -> (() => Graph.kCore(edges, "src", "dst", k = 2)),
-      "labelPropagation" -> (() => Graph.labelPropagation(edges, "src", "dst", iters = 5))))
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, "src", "dst", iters = 5)),
+      "hits" -> (() => Graph.hits(edges, "src", "dst")),
+      "shortestPaths" -> (() =>
+        Graph.shortestPaths(weighted, "src", "dst", seeds, "seed", Some("w"))),
+      "connectedComponents" -> (() => Dedup.connectedComponents(edges, "src", "dst"))))
+  }
+
+  test("shortestPaths caches nothing when it refuses a negative weight") {
+    val edges = tradeEdges.withColumn("w", col("src") % 5 - 1).localCheckpoint()
+    val before = cachedRddIds
+    intercept[IllegalArgumentException] {
+      Graph.shortestPaths(edges, "src", "dst", Seq(1L).toDF("seed"), "seed", Some("w"))
+    }
+    assert(cachedSince(before, 0) === 0)
   }
 
   /** Each op, run once, leaves at most one cached RDD behind. The count

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Graph}
@@ -20,6 +21,7 @@ class JobsPerCallSpec extends AnyFunSuite with SparkTestBase {
 
   test("graph and dedup operators: jobs per call") {
     val edges = tradeEdges.localCheckpoint()
+    val weighted = edges.withColumn("w", col("src") % 5 + 1)
     val seeds = Seq(1L, 2L, 3L, 1000001L, 9999999L).toDF("seed")
     val docs = wh.loadTable("documents").select("doc_id", "text").localCheckpoint()
     val ops: Seq[(String, Int, () => DataFrame)] = Seq(
@@ -30,6 +32,12 @@ class JobsPerCallSpec extends AnyFunSuite with SparkTestBase {
       ("kCore, 2 rounds", 16, () => Graph.kCore(edges, "src", "dst", k = 3, maxIters = 2)),
       ("labelPropagation, 2 rounds", 15, () =>
         Graph.labelPropagation(edges, "src", "dst", iters = 2)),
+      ("pageRankWeighted, 2 rounds", 13, () =>
+        Graph.pageRankWeighted(weighted, "src", "dst", "w", iters = 2)),
+      ("hits, 2 iters", 36, () => Graph.hits(edges, "src", "dst", iters = 2)),
+      ("shortestPaths", 24, () =>
+        Graph.shortestPaths(weighted, "src", "dst", seeds, "seed", Some("w"))),
+      ("connectedComponents", 18, () => Dedup.connectedComponents(edges, "src", "dst")),
       ("minhashLsh", 8, () => Dedup.minhashLsh(docs, "doc_id", "text")),
       ("ngramJaccard", 10, () => Dedup.ngramJaccard(docs, "doc_id", "text")))
     // the call, then the caller's action on what it returns

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,7 +110,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
   test("graph rounds: one join each; one shuffle per pageRank round") {
     val edges = tradeEdges
-    // rounds below checkpointInterval chain into the ONE localCheckpoint
+    // rounds below RoundCheckpoints.interval chain into the ONE localCheckpoint
     // the last round materializes, so its plan holds every round; it
     // reads the setup's checkpoint, while the setup reads the tables
     def lastRound(run: Int => DataFrame, rounds: Int): SparkPlan = {
@@ -137,5 +137,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // the edge join broadcasts the cached edge list)
     check("pageRank", graphs.head._2, "shuffles",
       nodes(_).count(_.isInstanceOf[ShuffleExchangeExec]))
+  }
+
+
+  test("hits: each phase runs its raw-sum shuffle once") {
+    // a phase divides its raw sums by their max: the max's input reads
+    // the sums' shuffle as a reused exchange instead of running it again
+    val phases = plansRunBy(Graph.hits(tradeEdges, "src", "dst", iters = 2)).collect {
+      case ("localCheckpoint", p) if nodes(p).exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]) => p
+    }
+    assert(phases.size === 4)
+    phases.foreach { p =>
+      val reused = nodes(p).collect { case r: ReusedExchangeExec => r.child }
+      assert(reused.exists(_.isInstanceOf[ShuffleExchangeExec]), skeleton(p))
+    }
   }
 }
