@@ -42,6 +42,8 @@ class GraftEngineSpec extends AnyFunSuite with SparkTestBase {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst") === "false")
     assert(spark.conf.get(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") === "true")
+    // the compiled-class cache holds the working set of generated code
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
     // and the coalescing actually bites: a tiny groupBy's post-shuffle
     // read collapses below the session's shuffle-partition setting
     import org.apache.spark.sql.functions._
