@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import SequentialFolds.{Keyed, perEvent, perKey, unstored}
 
 /** Warehouse event analytics: ordered funnels and retention cohorts —
   * the two queries every product-analytics warehouse deployment runs
@@ -10,6 +14,52 @@ import org.apache.spark.sql.functions._
   * here they are first-class, declarative, and oracle-replayable).
   */
 object EventAnalytics {
+
+  /** Every keyed verb's input: `(k, id, us, vc)` — key and id as longs,
+    * epoch micros, the value in integer cents (SQL round, half away from
+    * zero) — with NULL key, time or value rows dropped. `idCol` None
+    * leaves the id out.
+    */
+  private def keyedCents(events: DataFrame, keyCol: String, tsCol: String,
+      idCol: Option[String], valueCol: String): DataFrame =
+    graft.streaming.Events.tsLtz(events)
+      .withColumn("us", unix_micros(col(tsCol)))
+      .select(col(keyCol).cast("long").as("k") +:
+        idCol.toSeq.map(c => col(c).cast("long").as("id")) :+ col("us") :+
+        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"): _*)
+      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+
+  /** A sequential fold's order: ONE exchange on the key, then
+    * (k, us, id) within each partition — a TOTAL order per key, so the
+    * fold resets at key boundaries and replays in any engine. */
+  private def byKey(events: DataFrame): DataFrame =
+    events.repartition(col("k")).sortWithinPartitions("k", "us", "id")
+
+  private def emptyStore[S <: Product : TypeTag](spark: SparkSession): DataFrame =
+    spark.createDataFrame(Seq.empty[S])
+
+  /** The batch's `keyedCents` rows, each with its key's stored row
+    * (None for a key the store has not seen), sorted for the fold: the
+    * store paths' one join. An empty store plans away, so a store built
+    * from scratch keeps the one-shot plan — one key exchange, no join. */
+  private def withStored[S <: Product : TypeTag](batch: DataFrame,
+      store: DataFrame): Dataset[Keyed[S]] = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val stored = struct(Encoders.product[S].schema.fieldNames.toSeq.map(col): _*)
+    byKey(batch.join(store.select(col("k"), stored.as("stored")), Seq("k"), "left"))
+      .as[Keyed[S]]
+  }
+
+  /** A continuation verb: folds the batch into one new stored row per
+    * batch key; keys the batch does not touch pass through. */
+  private def continueStore[S <: Product : TypeTag](store: DataFrame,
+      batch: DataFrame)(fold: Iterator[Keyed[S]] => Iterator[S]): DataFrame = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    store.join(batch.select("k").distinct(), Seq("k"), "left_anti")
+      .unionByName(withStored[S](batch, store).mapPartitions(fold).toDF())
+  }
 
   /** Ordered funnel: how many users complete `steps` in order, anchored
     * at each user's FIRST occurrence of the first step. A user reaches
@@ -403,39 +453,18 @@ object EventAnalytics {
   def cusum(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String, targetCents: Long,
       slackCents: Long, threshCents: Long): DataFrame = {
-    require(slackCents >= 0 && threshCents > 0,
-      s"cusum: need slackCents >= 0 and threshCents > 0 " +
-        s"(got $slackCents, $threshCents)")
+    val cusum = new CusumFold("cusum", targetCents, slackCents, threshCents)
     val spark = events.sparkSession
     import spark.implicits._
-    val up = targetCents + slackCents
-    val dn = targetCents - slackCents
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
+    byKey(keyedCents(events, keyCol, tsCol, Some(idCol), valueCol))
       .as[(Long, Long, Long, Long)]
-      .mapPartitions { it =>
-        var cur = 0L
-        var fresh = true
-        var sp = 0L
-        var sn = 0L
-        it.map { case (k, id, us, vc) =>
-          if (fresh || k != cur) { cur = k; fresh = false; sp = 0L; sn = 0L }
-          sp = math.max(0L, sp + (vc - up))
-          sn = math.max(0L, sn + (dn - vc))
-          (id, k, us, vc, sp, sn, sp > threshCents, sn > threshCents)
-        }
-      }
-      .toDF("id", "k", "us", "value_cents", "cusum_pos", "cusum_neg",
+      .mapPartitions(it => perEvent("cusum", unstored(it))(_ => cusum.fresh) {
+        (f, k, id, us, vc) =>
+          f.step(vc)
+          (id, k, us, vc, f.sp, f.sn, f.up, f.down)
+      })
+      .toDF(idCol, keyCol, "us", "value_cents", "cusum_pos", "cusum_neg",
         "shift_up", "shift_down")
-      .select(col("id").as(idCol), col("k").as(keyCol), col("us"),
-        col("value_cents"), col("cusum_pos"), col("cusum_neg"),
-        col("shift_up"), col("shift_down"))
   }
 
   /** EXPONENTIALLY-WEIGHTED MOVING AVERAGE smoothing + deviation flag
@@ -477,44 +506,17 @@ object EventAnalytics {
   def ewma(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String, alphaPpm: Long,
       devThreshCents: Long): DataFrame = {
-    require(alphaPpm > 0 && alphaPpm <= 1000000L,
-      s"ewma: alphaPpm must be in (0, 1000000] (got $alphaPpm)")
-    require(devThreshCents > 0,
-      s"ewma: devThreshCents must be > 0 (got $devThreshCents)")
+    val ewma = new EwmaFold("ewma", alphaPpm, devThreshCents)
     val spark = events.sparkSession
     import spark.implicits._
-    val beta = 1000000L - alphaPpm
-    val devE6 = devThreshCents * 1000000L
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
+    byKey(keyedCents(events, keyCol, tsCol, Some(idCol), valueCol))
       .as[(Long, Long, Long, Long)]
-      .mapPartitions { it =>
-        var cur = 0L
-        var fresh = true
-        var seeded = false
-        var s = 0L
-        it.map { case (k, id, us, vc) =>
-          if (fresh || k != cur) { cur = k; fresh = false; seeded = false }
-          if (math.abs(vc) > 9000000L)
-            throw new IllegalArgumentException(
-              s"ewma: |value_cents| $vc exceeds the 9,000,000-cent " +
-                "overflow bound (event id " + id + ")")
-          val dev = seeded && math.abs(vc * 1000000L - s) > devE6
-          s = if (seeded) alphaPpm * vc + beta * s / 1000000L
-              else vc * 1000000L
-          seeded = true
-          (id, k, us, vc, s, dev)
-        }
-      }
-      .toDF("id", "k", "us", "value_cents", "ewma_e6", "deviation")
-      .select(col("id").as(idCol), col("k").as(keyCol), col("us"),
-        col("value_cents"), col("ewma_e6"), col("deviation"))
+      .mapPartitions(it => perEvent("ewma", unstored(it))(_ => ewma.fresh) {
+        (f, k, id, us, vc) =>
+          val dev = f.step(id, vc)
+          (id, k, us, vc, f.s, dev)
+      })
+      .toDF(idCol, keyCol, "us", "value_cents", "ewma_e6", "deviation")
   }
 
   /** HOLT DOUBLE-EXPONENTIAL smoothing (Holt 1957): per-key level AND
@@ -558,54 +560,18 @@ object EventAnalytics {
   def holt(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String, alphaPpm: Long, betaPpm: Long,
       devThreshCents: Long): DataFrame = {
-    require(alphaPpm > 0 && alphaPpm <= 1000000L,
-      s"holt: alphaPpm must be in (0, 1000000] (got $alphaPpm)")
-    require(betaPpm > 0 && betaPpm <= 1000000L,
-      s"holt: betaPpm must be in (0, 1000000] (got $betaPpm)")
-    require(devThreshCents > 0,
-      s"holt: devThreshCents must be > 0 (got $devThreshCents)")
+    val holt = new HoltFold("holt", alphaPpm, betaPpm, devThreshCents)
     val spark = events.sparkSession
     import spark.implicits._
-    val betaA = BigInt(1000000L - alphaPpm)
-    val betaB = BigInt(1000000L - betaPpm)
-    val devE6 = BigInt(devThreshCents) * 1000000L
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
+    byKey(keyedCents(events, keyCol, tsCol, Some(idCol), valueCol))
       .as[(Long, Long, Long, Long)]
-      .mapPartitions { it =>
-        var cur = 0L
-        var fresh = true
-        var seeded = false
-        var l = BigInt(0)
-        var b = BigInt(0)
-        it.map { case (k, id, us, vc) =>
-          if (fresh || k != cur) { cur = k; fresh = false; seeded = false }
-          val f = l + b
-          val dev = seeded && (BigInt(vc) * 1000000L - f).abs > devE6
-          if (seeded) {
-            val lNew = BigInt(alphaPpm) * vc + (betaA * f) / 1000000L
-            b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-              (betaB * b) / 1000000L
-            l = lNew
-          } else { l = BigInt(vc) * 1000000L; b = BigInt(0); seeded = true }
-          if (!l.isValidLong || !b.isValidLong)
-            throw new ArithmeticException(
-              s"holt: level/trend exceeds long at event id $id — " +
-                "rescale the input")
-          (id, k, us, vc, l.toLong, b.toLong, dev)
-        }
-      }
-      .toDF("id", "k", "us", "value_cents", "level_e6", "trend_e6",
+      .mapPartitions(it => perEvent("holt", unstored(it))(_ => holt.fresh) {
+        (f, k, id, us, vc) =>
+          val dev = f.step(id, vc)
+          (id, k, us, vc, f.l.toLong, f.b.toLong, dev)
+      })
+      .toDF(idCol, keyCol, "us", "value_cents", "level_e6", "trend_e6",
         "deviation")
-      .select(col("id").as(idCol), col("k").as(keyCol), col("us"),
-        col("value_cents"), col("level_e6"), col("trend_e6"),
-        col("deviation"))
   }
 
   /** HOLT-WINTERS TRIPLE-EXPONENTIAL smoothing (additive seasonality,
@@ -664,160 +630,45 @@ object EventAnalytics {
       idCol: String, valueCol: String, alphaPpm: Long, betaPpm: Long,
       gammaPpm: Long, slotSeconds: Long = 3600L, slotModulus: Int = 24,
       warmupEvents: Long = 0L, devThreshCents: Long = 10000L): DataFrame = {
-    require(alphaPpm > 0 && alphaPpm <= 1000000L,
-      s"holtWinters: alphaPpm must be in (0, 1000000] (got $alphaPpm)")
-    require(betaPpm > 0 && betaPpm <= 1000000L,
-      s"holtWinters: betaPpm must be in (0, 1000000] (got $betaPpm)")
-    require(gammaPpm > 0 && gammaPpm <= 1000000L,
-      s"holtWinters: gammaPpm must be in (0, 1000000] (got $gammaPpm)")
-    require(slotSeconds >= 1 && slotModulus >= 1,
-      s"holtWinters: slotSeconds/slotModulus must be >= 1 " +
-        s"(got $slotSeconds, $slotModulus)")
-    require(devThreshCents > 0,
-      s"holtWinters: devThreshCents must be > 0 (got $devThreshCents)")
-    val warmup = if (warmupEvents > 0) warmupEvents else slotModulus.toLong
+    val hw = new HoltWintersFold("holtWinters", alphaPpm, betaPpm, gammaPpm,
+      slotSeconds, slotModulus, warmupEvents, devThreshCents)
     val spark = events.sparkSession
     import spark.implicits._
-    val oneMinusA = BigInt(1000000L - alphaPpm)
-    val oneMinusB = BigInt(1000000L - betaPpm)
-    val oneMinusG = BigInt(1000000L - gammaPpm)
-    val devE6 = BigInt(devThreshCents) * 1000000L
-    val usPerSlot = slotSeconds * 1000000L
-    val m = slotModulus
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
+    byKey(keyedCents(events, keyCol, tsCol, Some(idCol), valueCol))
       .as[(Long, Long, Long, Long)]
-      .mapPartitions { it =>
-        var cur = 0L
-        var fresh = true
-        var seeded = false
-        var rn = 0L
-        var l = BigInt(0)
-        var b = BigInt(0)
-        var seas: Array[BigInt] = null
-        it.map { case (k, id, us, vc) =>
-          if (us < 0) throw new ArithmeticException(
-            s"holtWinters: pre-1970 timestamp at event id $id")
-          if (fresh || k != cur) {
-            cur = k; fresh = false; seeded = false; rn = 0L
-            seas = Array.fill(m)(BigInt(0))
-          }
-          rn += 1
-          val slot = ((us / usPerSlot) % m).toInt
-          val x = BigInt(vc) * 1000000L
-          val sc = seas(slot)
-          val f = l + b + sc
-          val dev = seeded && rn > warmup && (x - f).abs > devE6
-          if (seeded) {
-            val lNew = (BigInt(alphaPpm) * (x - sc)) / 1000000L +
-              (oneMinusA * (l + b)) / 1000000L
-            b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-              (oneMinusB * b) / 1000000L
-            seas(slot) = (BigInt(gammaPpm) * (x - lNew)) / 1000000L +
-              (oneMinusG * sc) / 1000000L
-            l = lNew
-          } else { l = x; b = BigInt(0); seeded = true }
-          if (!l.isValidLong || !b.isValidLong || !seas(slot).isValidLong)
-            throw new ArithmeticException(
-              s"holtWinters: level/trend/seasonal exceeds long at event " +
-                s"id $id — rescale the input")
-          (id, k, us, slot.toLong, vc, l.toLong, b.toLong,
-            seas(slot).toLong, dev)
-        }
-      }
-      .toDF("id", "k", "us", "slot", "value_cents", "level_e6", "trend_e6",
-        "seasonal_e6", "deviation")
-      .select(col("id").as(idCol), col("k").as(keyCol), col("us"),
-        col("slot"), col("value_cents"), col("level_e6"), col("trend_e6"),
-        col("seasonal_e6"), col("deviation"))
+      .mapPartitions(it => holtWintersEvents(hw, unstored(it)))
+      .toDF(idCol +: keyCol +: holtWintersCols: _*)
   }
+
+  private val holtWintersCols = Seq("us", "slot", "value_cents", "level_e6",
+    "trend_e6", "seasonal_e6", "deviation")
+
+  /** The fold body of [[holtWinters]] and [[holtWintersIncremental]]:
+    * each event judged against its key's prior forecast, then folded in,
+    * from the key's stored state when there is one. */
+  private def holtWintersEvents(hw: HoltWintersFold,
+      rows: Iterator[Keyed[HoltWintersStoreRow]]) =
+    perEvent(hw.who, rows)(hw.from) { (f, k, id, us, vc) =>
+      val dev = f.step(id, us, vc)
+      (id, k, us, f.slot.toLong, vc, f.l.toLong, f.b.toLong, f.seasonal, dev)
+    }
 
   /** TERMINAL Holt-Winters fold state, one narrow row per key —
     * `(k, l_e6, b_e6, seas, rn, last_us, last_id)` — the persistable
     * store behind [[holtWintersIncremental]] (the packStore /
     * editSegmentStore pattern for the SEQUENTIAL family: nightly
-    * smoothing continues from disk instead of rescanning history).
-    * Same one-key-exchange fold as [[holtWinters]], emitting only each
-    * key's final state; `rn` carries so the warmup gate counts TOTAL
-    * events, and (last_us, last_id) pins the append-order contract.
+    * smoothing continues from disk instead of rescanning history):
+    * [[updateHoltWintersStore]] of an empty store. `rn` carries so the
+    * warmup gate counts TOTAL events, and (last_us, last_id) pins the
+    * append-order contract.
     */
   def holtWintersStore(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String, alphaPpm: Long, betaPpm: Long,
       gammaPpm: Long, slotSeconds: Long = 3600L,
-      slotModulus: Int = 24): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val oneMinusA = BigInt(1000000L - alphaPpm)
-    val oneMinusB = BigInt(1000000L - betaPpm)
-    val oneMinusG = BigInt(1000000L - gammaPpm)
-    val usPerSlot = slotSeconds * 1000000L
-    val m = slotModulus
-    require(alphaPpm > 0 && alphaPpm <= 1000000L &&
-      betaPpm > 0 && betaPpm <= 1000000L &&
-      gammaPpm > 0 && gammaPpm <= 1000000L &&
-      slotSeconds >= 1 && slotModulus >= 1,
-      "holtWintersStore: ppm params in (0, 1000000], slot params >= 1")
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
-      .as[(Long, Long, Long, Long)]
-      .mapPartitions { it =>
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Long, Seq[Long], Long, Long, Long)]()
-        var cur = 0L
-        var fresh = true
-        var rn = 0L
-        var l = BigInt(0)
-        var b = BigInt(0)
-        var seas: Array[BigInt] = null
-        var lastUs = 0L
-        var lastId = 0L
-        def emit(): Unit = if (!fresh) out +=
-          ((cur, l.toLong, b.toLong, seas.map(_.toLong).toSeq, rn,
-            lastUs, lastId))
-        it.foreach { case (k, id, us, vc) =>
-          if (us < 0) throw new ArithmeticException(
-            s"holtWintersStore: pre-1970 timestamp at event id $id")
-          if (fresh || k != cur) {
-            emit()
-            cur = k; fresh = false; rn = 0L
-            l = BigInt(0); b = BigInt(0)
-            seas = Array.fill(m)(BigInt(0))
-          }
-          rn += 1; lastUs = us; lastId = id
-          val slot = ((us / usPerSlot) % m).toInt
-          val x = BigInt(vc) * 1000000L
-          val sc = seas(slot)
-          if (rn > 1) {
-            val lNew = (BigInt(alphaPpm) * (x - sc)) / 1000000L +
-              (oneMinusA * (l + b)) / 1000000L
-            b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-              (oneMinusB * b) / 1000000L
-            seas(slot) = (BigInt(gammaPpm) * (x - lNew)) / 1000000L +
-              (oneMinusG * sc) / 1000000L
-            l = lNew
-          } else { l = x; b = BigInt(0) }
-          if (!l.isValidLong || !b.isValidLong || !seas(slot).isValidLong)
-            throw new ArithmeticException(
-              s"holtWintersStore: state exceeds long at event id $id")
-          ()
-        }
-        emit()
-        out.iterator
-      }
-      .toDF("k", "l_e6", "b_e6", "seas", "rn", "last_us", "last_id")
-  }
+      slotModulus: Int = 24): DataFrame =
+    updateHoltWintersStore(emptyStore[HoltWintersStoreRow](events.sparkSession),
+      events, keyCol, tsCol, idCol, valueCol, alphaPpm, betaPpm, gammaPpm,
+      slotSeconds, slotModulus)
 
   /** FORECAST emission from a persisted [[holtWintersStore]]: for each
     * key, the next `horizon` slot-stepped point forecasts
@@ -829,6 +680,8 @@ object EventAnalytics {
     * explode over the m-slot store rows, no shuffle beyond the final
     * ordering a caller adds. All integer; h·b is bounded by
     * horizon ≤ 10000 · a long state, far from 2⁶³ for any real series.
+    * A store trained with another slot count is refused (train/score
+    * mismatch), as the update verbs refuse it.
     *
     * Returns (k, h, slot, forecast_e6).
     */
@@ -846,6 +699,10 @@ object EventAnalytics {
     // the three-term sum ≤ 9.0018·10¹⁸ < 2⁶³−1 — each addend is bounded,
     // so no partial sum can wrap either
     store
+      .withColumn("seas", expr(
+        s"IF(size(seas) = $slotModulus, seas, raise_error(concat(" +
+          "'holtWintersForecast: store has ', size(seas), ' slots, " +
+          s"operator given $slotModulus — train/score mismatch')))"))
       .withColumn("b_e6", expr(
         "IF(abs(b_e6) <= 900000000000000L, b_e6, " +
           "assert_true(false, 'holtWintersForecast: |trend| too large " +
@@ -880,99 +737,12 @@ object EventAnalytics {
       keyCol: String, tsCol: String, idCol: String, valueCol: String,
       alphaPpm: Long, betaPpm: Long, gammaPpm: Long,
       slotSeconds: Long = 3600L, slotModulus: Int = 24): DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    require(alphaPpm > 0 && alphaPpm <= 1000000L &&
-      betaPpm > 0 && betaPpm <= 1000000L &&
-      gammaPpm > 0 && gammaPpm <= 1000000L &&
-      slotSeconds >= 1 && slotModulus >= 1,
-      "updateHoltWintersStore: ppm params in (0, 1000000], slot params >= 1")
-    val oneMinusA = BigInt(1000000L - alphaPpm)
-    val oneMinusB = BigInt(1000000L - betaPpm)
-    val oneMinusG = BigInt(1000000L - gammaPpm)
-    val usPerSlot = slotSeconds * 1000000L
-    val m = slotModulus
-    val batchBase = graft.streaming.Events.tsLtz(batch)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-    val updated = batchBase
-      .join(store.select(col("k"),
-        col("l_e6").as("s_l"), col("b_e6").as("s_b"), col("seas").as("s_seas"),
-        col("rn").as("s_rn"), col("last_us").as("s_us"),
-        col("last_id").as("s_id")), Seq("k"), "left")
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
-      .as[(Long, Long, Long, Long, Option[Long], Option[Long],
-        Option[Seq[Long]], Option[Long], Option[Long], Option[Long])]
-      .mapPartitions { it =>
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Long, Seq[Long], Long, Long, Long)]()
-        var cur = 0L
-        var fresh = true
-        var seeded = false
-        var rn = 0L
-        var l = BigInt(0)
-        var b = BigInt(0)
-        var seas: Array[BigInt] = null
-        var lastUs = 0L
-        var lastId = 0L
-        def emit(): Unit = if (!fresh) out +=
-          ((cur, l.toLong, b.toLong, seas.map(_.toLong).toSeq, rn,
-            lastUs, lastId))
-        it.foreach { case (k, id, us, vc, sL, sB, sSeas, sRn, sUs, sId) =>
-          if (us < 0) throw new ArithmeticException(
-            s"updateHoltWintersStore: pre-1970 timestamp at event id $id")
-          if (fresh || k != cur) {
-            emit()
-            cur = k; fresh = false
-            sL match {
-              case Some(l0) =>
-                val storedSeas = sSeas.get
-                require(storedSeas.length == m,
-                  s"updateHoltWintersStore: store has ${storedSeas.length} " +
-                    s"slots, operator given $m — train/score mismatch")
-                if (us < sUs.get || (us == sUs.get && id <= sId.get))
-                  throw new IllegalStateException(
-                    s"updateHoltWintersStore: batch event id $id at us=$us " +
-                      s"does not sort after key $k's stored frontier " +
-                      s"(${sUs.get}, ${sId.get}) — the append-order " +
-                      "contract is violated; rebuild the store instead")
-                l = BigInt(l0); b = BigInt(sB.get)
-                seas = storedSeas.map(BigInt(_)).toArray
-                rn = sRn.get; seeded = true
-              case None =>
-                l = BigInt(0); b = BigInt(0)
-                seas = Array.fill(m)(BigInt(0))
-                rn = 0L; seeded = false
-            }
-          }
-          rn += 1; lastUs = us; lastId = id
-          val slot = ((us / usPerSlot) % m).toInt
-          val x = BigInt(vc) * 1000000L
-          val sc = seas(slot)
-          if (seeded) {
-            val lNew = (BigInt(alphaPpm) * (x - sc)) / 1000000L +
-              (oneMinusA * (l + b)) / 1000000L
-            b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-              (oneMinusB * b) / 1000000L
-            seas(slot) = (BigInt(gammaPpm) * (x - lNew)) / 1000000L +
-              (oneMinusG * sc) / 1000000L
-            l = lNew
-          } else { l = x; b = BigInt(0); seeded = true }
-          if (!l.isValidLong || !b.isValidLong || !seas(slot).isValidLong)
-            throw new ArithmeticException(
-              s"updateHoltWintersStore: state exceeds long at event id $id")
-          ()
-        }
-        emit()
-        out.iterator
-      }
-      .toDF("k", "l_e6", "b_e6", "seas", "rn", "last_us", "last_id")
-    store.join(batchBase.select("k").distinct(), Seq("k"), "left_anti")
-      .unionByName(updated)
+    val hw = new HoltWintersFold("updateHoltWintersStore", alphaPpm, betaPpm,
+      gammaPpm, slotSeconds, slotModulus)
+    continueStore[HoltWintersStoreRow](store,
+        keyedCents(batch, keyCol, tsCol, Some(idCol), valueCol))(
+      perKey(hw.who, _)(hw.from)((f, id, us, vc) => f.step(id, us, vc))(
+        (f, k, lastUs, lastId) => f.row(k, lastUs, lastId)))
   }
 
   /** INCREMENTAL Holt-Winters: an arriving batch continues each key's
@@ -995,96 +765,14 @@ object EventAnalytics {
       alphaPpm: Long, betaPpm: Long, gammaPpm: Long,
       slotSeconds: Long = 3600L, slotModulus: Int = 24,
       warmupEvents: Long = 0L, devThreshCents: Long = 10000L): DataFrame = {
+    val hw = new HoltWintersFold("holtWintersIncremental", alphaPpm, betaPpm,
+      gammaPpm, slotSeconds, slotModulus, warmupEvents, devThreshCents)
     val spark = batch.sparkSession
     import spark.implicits._
-    require(alphaPpm > 0 && alphaPpm <= 1000000L &&
-      betaPpm > 0 && betaPpm <= 1000000L &&
-      gammaPpm > 0 && gammaPpm <= 1000000L &&
-      slotSeconds >= 1 && slotModulus >= 1 && devThreshCents > 0,
-      "holtWintersIncremental: ppm params in (0, 1000000], " +
-        "slot params >= 1, devThreshCents > 0")
-    val warmup = if (warmupEvents > 0) warmupEvents else slotModulus.toLong
-    val oneMinusA = BigInt(1000000L - alphaPpm)
-    val oneMinusB = BigInt(1000000L - betaPpm)
-    val oneMinusG = BigInt(1000000L - gammaPpm)
-    val devE6 = BigInt(devThreshCents) * 1000000L
-    val usPerSlot = slotSeconds * 1000000L
-    val m = slotModulus
-    graft.streaming.Events.tsLtz(batch)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .join(store.select(col("k"),
-        col("l_e6").as("s_l"), col("b_e6").as("s_b"), col("seas").as("s_seas"),
-        col("rn").as("s_rn"), col("last_us").as("s_us"),
-        col("last_id").as("s_id")), Seq("k"), "left")
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
-      .as[(Long, Long, Long, Long, Option[Long], Option[Long],
-        Option[Seq[Long]], Option[Long], Option[Long], Option[Long])]
-      .mapPartitions { it =>
-        var cur = 0L
-        var fresh = true
-        var seeded = false
-        var rn = 0L
-        var l = BigInt(0)
-        var b = BigInt(0)
-        var seas: Array[BigInt] = null
-        it.map { case (k, id, us, vc, sL, sB, sSeas, sRn, sUs, sId) =>
-          if (us < 0) throw new ArithmeticException(
-            s"holtWintersIncremental: pre-1970 timestamp at event id $id")
-          if (fresh || k != cur) {
-            cur = k; fresh = false
-            sL match {
-              case Some(l0) =>
-                val storedSeas = sSeas.get
-                require(storedSeas.length == m,
-                  s"holtWintersIncremental: store has ${storedSeas.length} " +
-                    s"slots, operator given $m — train/score mismatch")
-                if (us < sUs.get || (us == sUs.get && id <= sId.get))
-                  throw new IllegalStateException(
-                    s"holtWintersIncremental: batch event id $id at us=$us " +
-                      s"does not sort after key $k's stored frontier " +
-                      s"(${sUs.get}, ${sId.get}) — the append-order " +
-                      "contract is violated; rebuild the store instead")
-                l = BigInt(l0); b = BigInt(sB.get)
-                seas = storedSeas.map(BigInt(_)).toArray
-                rn = sRn.get; seeded = true
-              case None =>
-                l = BigInt(0); b = BigInt(0)
-                seas = Array.fill(m)(BigInt(0))
-                rn = 0L; seeded = false
-            }
-          }
-          rn += 1
-          val slot = ((us / usPerSlot) % m).toInt
-          val x = BigInt(vc) * 1000000L
-          val sc = seas(slot)
-          val f = l + b + sc
-          val dev = seeded && rn > warmup && (x - f).abs > devE6
-          if (seeded) {
-            val lNew = (BigInt(alphaPpm) * (x - sc)) / 1000000L +
-              (oneMinusA * (l + b)) / 1000000L
-            b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-              (oneMinusB * b) / 1000000L
-            seas(slot) = (BigInt(gammaPpm) * (x - lNew)) / 1000000L +
-              (oneMinusG * sc) / 1000000L
-            l = lNew
-          } else { l = x; b = BigInt(0); seeded = true }
-          if (!l.isValidLong || !b.isValidLong || !seas(slot).isValidLong)
-            throw new ArithmeticException(
-              s"holtWintersIncremental: state exceeds long at event id $id")
-          (id, k, us, slot.toLong, vc, l.toLong, b.toLong,
-            seas(slot).toLong, dev)
-        }
-      }
-      .toDF("id", "k", "us", "slot", "value_cents", "level_e6", "trend_e6",
-        "seasonal_e6", "deviation")
-      .select(col("id").as(idCol), col("k").as(keyCol), col("us"),
-        col("slot"), col("value_cents"), col("level_e6"), col("trend_e6"),
-        col("seasonal_e6"), col("deviation"))
+    withStored[HoltWintersStoreRow](
+        keyedCents(batch, keyCol, tsCol, Some(idCol), valueCol), store)
+      .mapPartitions(holtWintersEvents(hw, _))
+      .toDF(idCol +: keyCol +: holtWintersCols: _*)
   }
 
   /** ROBUST MEDIAN/MAD anomaly: each event judged against its key's
@@ -1145,12 +833,7 @@ object EventAnalytics {
   private def robustEvents(events: DataFrame, keyCol: String,
       tsCol: String, idColOpt: Option[String], valueCol: String): DataFrame = {
     val maxAbs = 1000000000000L
-    val idCols = idColOpt.toSeq.map(c => col(c).cast("long").as("id"))
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k") +: idCols :+ col("us") :+
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"): _*)
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+    keyedCents(events, keyCol, tsCol, idColOpt, valueCol)
       .withColumn("vc", expr(
         s"IF(abs(vc) <= ${maxAbs}L, vc, " +
           "assert_true(false, 'robust: |value| too large for the " +
@@ -1301,12 +984,7 @@ object EventAnalytics {
       s"seasonal: slotSeconds/slotModulus must be >= 1 " +
         s"(got $slotSeconds, $slotModulus)")
     val usPerSlot = slotSeconds * 1000000L
-    val idCols = idColOpt.toSeq.map(c => col(c).cast("long").as("id"))
-    graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k") +: idCols :+ col("us") :+
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"): _*)
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+    keyedCents(events, keyCol, tsCol, idColOpt, valueCol)
       // epoch micros are non-negative for any post-1970 event stream;
       // a pre-epoch timestamp would flip the mod's sign differently
       // per engine — refuse rather than diverge
@@ -1434,43 +1112,15 @@ object EventAnalytics {
     * enforced LOUDLY at fold time; the scoring products live in
     * DECIMAL(38,0) like the one-shot verb.
     *
+    * Built as [[updateAcfStore]] of an empty store.
+    *
     * Returns (k, n, s, sq, cross[maxLag], head[≤maxLag],
     * tail[≤maxLag], last_us, last_id) — one row per key.
     */
   def acfStore(events: DataFrame, keyCol: String, tsCol: String,
-      idCol: String, valueCol: String, maxLag: Int = 24): DataFrame = {
-    require(maxLag >= 1 && maxLag <= 10000,
-      s"acfStore: maxLag must be in [1, 10000] (got $maxLag)")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val base = graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
-      .as[(Long, Long, Long, Long)]
-    base.mapPartitions { it =>
-      val L = maxLag
-      val out = new scala.collection.mutable.ArrayBuffer[
-        (Long, Long, Long, Long, Seq[Long], Seq[Long], Seq[Long], Long, Long)]()
-      var cur = 0L; var fresh = true
-      var st: AcfFoldState = null
-      var lastUs = 0L; var lastId = 0L
-      def emit(): Unit = if (!fresh) out += st.row(cur, lastUs, lastId)
-      it.foreach { case (k, id, us, vc) =>
-        if (fresh || k != cur) { emit(); cur = k; fresh = false
-          st = new AcfFoldState(L) }
-        st.fold(vc, id)
-        lastUs = us; lastId = id
-      }
-      emit()
-      out.iterator
-    }.toDF("k", "n", "s", "sq", "cross", "head", "tail",
-      "last_us", "last_id")
-  }
+      idCol: String, valueCol: String, maxLag: Int = 24): DataFrame =
+    updateAcfStore(emptyStore[AcfStoreRow](events.sparkSession), events,
+      keyCol, tsCol, idCol, valueCol, maxLag)
 
   /** Fold an arriving batch INTO a persisted [[acfStore]] — keys
     * untouched pass through, batch-new keys seed fresh, and every batch
@@ -1482,64 +1132,10 @@ object EventAnalytics {
       maxLag: Int = 24): DataFrame = {
     require(maxLag >= 1 && maxLag <= 10000,
       s"updateAcfStore: maxLag must be in [1, 10000] (got $maxLag)")
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val batchBase = graft.streaming.Events.tsLtz(batch)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-    val updated = batchBase
-      .join(store.select(col("k"), col("n").as("s_n"), col("s").as("s_s"),
-        col("sq").as("s_sq"), col("cross").as("s_cross"),
-        col("head").as("s_head"), col("tail").as("s_tail"),
-        col("last_us").as("s_us"), col("last_id").as("s_id")),
-        Seq("k"), "left")
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
-      .as[(Long, Long, Long, Long, Option[Long], Option[Long], Option[Long],
-        Option[Seq[Long]], Option[Seq[Long]], Option[Seq[Long]],
-        Option[Long], Option[Long])]
-      .mapPartitions { it =>
-        val L = maxLag
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Long, Long, Seq[Long], Seq[Long], Seq[Long], Long, Long)]()
-        var cur = 0L; var fresh = true
-        var st: AcfFoldState = null
-        var lastUs = 0L; var lastId = 0L
-        def emit(): Unit = if (!fresh) out += st.row(cur, lastUs, lastId)
-        it.foreach { case (k, id, us, vc, sN, sS, sSq, sCross, sHead,
-            sTail, sUs, sId) =>
-          if (fresh || k != cur) {
-            emit(); cur = k; fresh = false
-            st = new AcfFoldState(L)
-            sN.foreach { n0 =>
-              require(sCross.get.length == L,
-                s"updateAcfStore: store has ${sCross.get.length} lags, " +
-                  s"operator given $L — train/score mismatch")
-              st.seed(n0, sS.get, sSq.get, sCross.get.toArray,
-                sHead.get.toArray, sTail.get.toArray)
-            }
-          }
-          sN.foreach { _ =>
-            if (us < sUs.get || (us == sUs.get && id <= sId.get))
-              throw new IllegalStateException(
-                s"updateAcfStore: batch event id $id at us=$us does not " +
-                  s"sort after key $k's stored frontier (${sUs.get}, " +
-                  s"${sId.get}) — the append-order contract is violated; " +
-                  "rebuild the store instead")
-          }
-          st.fold(vc, id)
-          lastUs = us; lastId = id
-        }
-        emit()
-        out.iterator
-      }
-      .toDF("k", "n", "s", "sq", "cross", "head", "tail",
-        "last_us", "last_id")
-    store.join(batchBase.select("k").distinct(), Seq("k"), "left_anti")
-      .unionByName(updated)
+    continueStore[AcfStoreRow](store,
+        keyedCents(batch, keyCol, tsCol, Some(idCol), valueCol))(
+      perKey("updateAcfStore", _)(st => new AcfFoldState(maxLag).resume(st))(
+        (f, id, _, vc) => f.fold(vc, id))((f, k, lastUs, lastId) => f.row(k, lastUs, lastId)))
   }
 
   /** Score every lag off a persisted [[acfStore]] WITHOUT touching the
@@ -1601,12 +1197,7 @@ object EventAnalytics {
     */
   def trendFit(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String): DataFrame = {
-    val base = graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+    val base = keyedCents(events, keyCol, tsCol, Some(idCol), valueCol)
     val ord = Window.partitionBy("k").orderBy("us", "id")
     base
       .withColumn("x", row_number().over(ord).cast("long"))
@@ -1656,15 +1247,8 @@ object EventAnalytics {
     */
   def trendStore(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String): DataFrame =
-    updateTrendStore(emptyTrendStore(events.sparkSession), events,
+    updateTrendStore(emptyStore[TrendStoreRow](events.sparkSession), events,
       keyCol, tsCol, idCol, valueCol)
-
-  /** An empty [[trendStore]] frame (schema-complete, zero rows). */
-  def emptyTrendStore(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Long, Long, Long, Long)]
-      .toDF("k", "n", "s", "sxy", "last_us", "last_id")
-  }
 
   /** Fold an arriving batch INTO a persisted [[trendStore]] — untouched
     * keys pass through, new keys seed fresh, batch events must sort
@@ -1672,60 +1256,11 @@ object EventAnalytics {
     */
   def updateTrendStore(store: DataFrame, batch: DataFrame,
       keyCol: String, tsCol: String, idCol: String, valueCol: String)
-      : DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val batchBase = graft.streaming.Events.tsLtz(batch)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-    val updated = batchBase
-      .join(store.select(col("k"), col("n").as("s_n"), col("s").as("s_s"),
-        col("sxy").as("s_sxy"), col("last_us").as("s_us"),
-        col("last_id").as("s_id")), Seq("k"), "left")
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "us", "id")
-      .as[(Long, Long, Long, Long, Option[Long], Option[Long], Option[Long],
-        Option[Long], Option[Long])]
-      .mapPartitions { it =>
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Long, Long, Long, Long)]()
-        var cur = 0L; var fresh = true
-        var n = 0L; var s = 0L; var sxy = 0L
-        var lastUs = 0L; var lastId = 0L
-        def emit(): Unit = if (!fresh) out += ((cur, n, s, sxy, lastUs, lastId))
-        it.foreach { case (k, id, us, vc, sN, sS, sSxy, sUs, sId) =>
-          if (fresh || k != cur) {
-            emit(); cur = k; fresh = false
-            n = sN.getOrElse(0L); s = sS.getOrElse(0L)
-            sxy = sSxy.getOrElse(0L)
-          }
-          sN.foreach { _ =>
-            if (us < sUs.get || (us == sUs.get && id <= sId.get))
-              throw new IllegalStateException(
-                s"updateTrendStore: batch event id $id at us=$us does not " +
-                  s"sort after key $k's stored frontier (${sUs.get}, " +
-                  s"${sId.get}) — the append-order contract is violated; " +
-                  "rebuild the store instead")
-          }
-          if (math.abs(vc) > 3000000L) throw new ArithmeticException(
-            s"trendStore: |value| > 3*10^6 cents at event id $id — the " +
-              "long-safe store contract; rescale the values")
-          if (n >= 100000L) throw new ArithmeticException(
-            s"trendStore: per-key series exceeds 10^5 events at event " +
-              s"id $id — bucket upstream (resample) before storing")
-          n += 1; s += vc; sxy += n * vc
-          lastUs = us; lastId = id
-        }
-        emit()
-        out.iterator
-      }
-      .toDF("k", "n", "s", "sxy", "last_us", "last_id")
-    store.join(batchBase.select("k").distinct(), Seq("k"), "left_anti")
-      .unionByName(updated)
-  }
+      : DataFrame =
+    continueStore[TrendStoreRow](store,
+        keyedCents(batch, keyCol, tsCol, Some(idCol), valueCol))(
+      perKey("updateTrendStore", _)(new TrendFold(_))((f, id, _, vc) => f.step(id, vc))(
+        (f, k, lastUs, lastId) => TrendStoreRow(k, f.n, f.s, f.sxy, lastUs, lastId)))
 
   /** Score a persisted [[trendStore]] WITHOUT the event history — emits
     * exactly [[trendFit]]'s rows (parity spec-pinned): Σx and Σx²
@@ -1785,12 +1320,7 @@ object EventAnalytics {
       idCol: String, valueCol: String, maxN: Int = 1000): DataFrame = {
     require(maxN >= 2 && maxN <= 100000,
       s"robustTrend: maxN must be in [2, 100000] (got $maxN)")
-    val base = graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+    val base = keyedCents(events, keyCol, tsCol, Some(idCol), valueCol)
       .withColumn("vc", expr(
         "IF(abs(vc) <= 9000000000L, vc, assert_true(false, " +
           "'robustTrend: |value| > 9*10^9 cents — the slope scaling " +
@@ -1865,12 +1395,7 @@ object EventAnalytics {
       idCol: String, valueCol: String, maxLag: Int = 24): DataFrame = {
     require(maxLag >= 1 && maxLag <= 10000,
       s"autocorrelation: maxLag must be in [1, 10000] (got $maxLag)")
-    val base = graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+    val base = keyedCents(events, keyCol, tsCol, Some(idCol), valueCol)
     val byK = Window.partitionBy("k")
     val ord = Window.partitionBy("k").orderBy("us", "id")
     val y = base
@@ -1946,12 +1471,7 @@ object EventAnalytics {
   def changepoint(events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valueCol: String, minGainE6: Long): DataFrame = {
     require(minGainE6 >= 0, s"minGainE6 must be >= 0 (got $minGainE6)")
-    val base = graft.streaming.Events.tsLtz(events)
-      .withColumn("us", unix_micros(col(tsCol)))
-      .select(col(keyCol).cast("long").as("k"),
-        col(idCol).cast("long").as("id"), col("us"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
+    val base = keyedCents(events, keyCol, tsCol, Some(idCol), valueCol)
     val byK = Window.partitionBy("k")
     val ord = Window.partitionBy("k").orderBy("us", "id")
     base
@@ -1987,64 +1507,5 @@ object EventAnalytics {
         col("id").as("split_id"), col("us").as("split_us"),
         col("s1").as("s_left"), (col("s") - col("s1")).as("s_right"),
         col("gain_e6"), (col("gain_e6") >= minGainE6).as("shifted"))
-  }
-}
-
-/** Mutable per-key fold state shared by [[EventAnalytics.acfStore]] and
-  * [[EventAnalytics.updateAcfStore]]: counts/sums, per-lag cross sums,
-  * the head prefix, and a ring buffer of the last `L` values (value #t,
-  * 0-based, lives at ring(t % L), so the value at distance ℓ from the
-  * next write is ring((n−ℓ) % L)). The long-safe contract
-  * (|vc| ≤ 3·10⁶, n ≤ 10⁶) bounds every accumulator under 9·10¹⁸ —
-  * violations raise, never wrap.
-  */
-private[operators] final class AcfFoldState(L: Int) {
-  var n = 0L; var s = 0L; var sq = 0L
-  val cross = new Array[Long](L + 1)
-  val head = new scala.collection.mutable.ArrayBuffer[Long](L)
-  val ring = new Array[Long](L)
-
-  def seed(n0: Long, s0: Long, sq0: Long, cross0: Array[Long],
-      head0: Array[Long], tail0: Array[Long]): Unit = {
-    n = n0; s = s0; sq = sq0
-    var i = 0
-    while (i < L) { cross(i + 1) = cross0(i); i += 1 }
-    head0.foreach(head += _)
-    val len = tail0.length // tail0(j) is value #(n0 − len + j)
-    var j = 0
-    while (j < len) {
-      ring(((n0 - len + j) % L).toInt) = tail0(j)
-      j += 1
-    }
-  }
-
-  def fold(vc: Long, id: Long): Unit = {
-    if (math.abs(vc) > 3000000L) throw new ArithmeticException(
-      s"acfStore: |value| > 3*10^6 cents at event id $id — the " +
-        "long-safe store contract; rescale the values")
-    if (n >= 1000000L) throw new ArithmeticException(
-      s"acfStore: per-key series exceeds 10^6 events at event id $id — " +
-        "bucket upstream (resample) before storing")
-    val lim = math.min(L.toLong, n).toInt
-    var l = 1
-    while (l <= lim) {
-      cross(l) += vc * ring(((n - l) % L).toInt)
-      l += 1
-    }
-    ring((n % L).toInt) = vc
-    n += 1; s += vc; sq += vc * vc
-    if (head.length < L) head += vc
-  }
-
-  def row(k: Long, lastUs: Long, lastId: Long)
-      : (Long, Long, Long, Long, Seq[Long], Seq[Long], Seq[Long], Long, Long) = {
-    val lim = math.min(L.toLong, n).toInt
-    val tail = new Array[Long](lim)
-    var j = 0
-    while (j < lim) {
-      tail(j) = ring(((n - lim + j) % L).toInt)
-      j += 1
-    }
-    (k, n, s, sq, cross.drop(1).toSeq, head.toSeq, tail.toSeq, lastUs, lastId)
   }
 }

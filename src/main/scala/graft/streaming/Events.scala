@@ -1,6 +1,10 @@
 package graft.streaming
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+
+import graft.operators.{CusumFold, EventAnalytics, EwmaFold, HoltFold, HoltWintersFold}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -426,6 +430,53 @@ object Events {
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
     graft.Warehouse(spark, dir).loadTableStream("events")
 
+  // ---- per-key fold streams ------------------------------------------
+
+  /** Integer cents of a value, HALF_UP like the batch forms' SQL
+    * round(value * 100) — math.round rounds half toward +inf, which
+    * diverges on negative values. */
+  private def cents(value: Double): Long =
+    java.math.BigDecimal.valueOf(value * 100)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
+
+  /** The shape every per-key fold stream shares: a key's events of one
+    * trigger, in (ts, event_id) order, go to `fold` with the key's
+    * state (None: a new or evicted key) and the newest event time seen,
+    * which the state carries so a late-but-in-watermark batch of OLDER
+    * events cannot move the TTL deadline backwards; `fold` returns the
+    * new state and the rows to emit. A key idle for `stateTtlMinutes`
+    * of EVENT time evicts via event-time timeout (the
+    * [[sessionizeStream]] machinery; processing-time timeouts would
+    * spin continuous empty micro-batches on an idle stream). Within a
+    * trigger events fold in (ts, event_id) order, so an in-order stream
+    * reproduces the batch operator EXACTLY; out-of-order arrivals within
+    * `allowedLateness` fold against the state as it stood — the honest
+    * real-time semantics; rows later than the watermark are dropped.
+    */
+  private def keyedFoldStream[S <: Product : TypeTag, O <: Product : TypeTag](
+      events: Dataset[Event], allowedLateness: String, stateTtlMinutes: Long)(
+      lastUs: S => Long)(
+      fold: (Long, Option[S], Array[Event], Long) => (S, Array[O])): Dataset[O] = {
+    val ttlUs = stateTtlMinutes * 60L * 1000000L
+    def fn(uid: Long, rows: Iterator[Event], state: GroupState[S]): Iterator[O] = {
+      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
+      val evs = rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id))
+      val newest = (state.getOption.fold(0L)(lastUs) +: evs.map(e => tsMicros(e.ts))).max
+      val (next, out) = fold(uid, state.getOption, evs, newest)
+      state.update(next)
+      // clamped above the current watermark so a deeply-late group
+      // cannot make setTimeoutTimestamp throw (the sessionizeStream rule)
+      state.setTimeoutTimestamp(
+        math.max((newest + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
+      out.iterator
+    }
+    events
+      .withWatermark("ts", allowedLateness)
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(fn)(Encoders.product[S], Encoders.product[O])
+  }
+
   /** Rolling-window state for [[rollingAnomalyStream]]: the key's last
     * ≤ window value_cents (oldest first) and the newest event time seen —
     * persisted so a late-but-in-watermark batch of OLDER events cannot
@@ -442,45 +493,25 @@ object Events {
     * real-time form of [[graft.operators.EventAnalytics.rollingAnomaly]]:
     * each event is tested against its key's last `window` previously seen
     * values with the same cross-multiplied all-long decision
-    * (n·v − s)² > z²·(n·s2 − s²), then joins the window itself. Within a
-    * micro-batch events fold in (ts, event_id) order, so an in-order
-    * stream produces EXACTLY the batch operator's flags
-    * (StreamingSpec pins the parity); out-of-order arrivals within the
-    * `allowedLateness` horizon are scored against what had arrived — the
-    * honest real-time semantics (a fraud check cannot wait for the
-    * watermark); rows later than the watermark are dropped like any
-    * watermarked stateful operator.
+    * (n·v − s)² > z²·(n·s2 − s²), then joins the window itself. The
+    * [[keyedFoldStream]] shape: an in-order stream produces EXACTLY the
+    * batch operator's flags (StreamingSpec pins the parity); a fraud
+    * check cannot wait for the watermark.
     *
     * State per key is `window` longs (a few hundred bytes), O(keys)
-    * total — the sessionization bound. Keys idle for `stateTtlMinutes`
-    * of EVENT time evict via event-time timeout (scoring restarts cold
-    * if they return) — the same eviction machinery as
-    * [[sessionizeStream]]; processing-time timeouts would spin
-    * continuous empty micro-batches on an idle stream.
+    * total — the sessionization bound; a key idle for `stateTtlMinutes`
+    * restarts cold if it returns.
     */
   def rollingAnomalyStream(events: Dataset[Event], window: Int = 20,
       minPrev: Int = 8, z: Int = 3, allowedLateness: String = "0 seconds",
       stateTtlMinutes: Long = 24 * 60): Dataset[AnomalyFlag] = {
     require(window >= 1 && minPrev >= 2 && z >= 1,
       "rollingAnomalyStream: need window >= 1, minPrev >= 2, z >= 1")
-    implicit val stateEnc = Encoders.product[RollingState]
-    implicit val outEnc = Encoders.product[AnomalyFlag]
-    implicit val longEnc = Encoders.scalaLong
-    val ttlUs = stateTtlMinutes * 60L * 1000000L
-
-    def fn(uid: Long, rows: Iterator[Event],
-        state: GroupState[RollingState]): Iterator[AnomalyFlag] = {
-      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val prev = state.getOption.getOrElse(RollingState(Nil, 0L))
-      var vals = prev.vals.toVector
-      // seeded from state: a late batch of older events must not move
-      // the TTL deadline backwards
-      var lastUs = prev.lastUs
-      val out = rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id)).map { e =>
-        // HALF_UP like the batch form's SQL round(value*100) — math.round
-        // rounds half toward +inf, which diverges on negative values
-        val vc = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
+    keyedFoldStream[RollingState, AnomalyFlag](events, allowedLateness,
+        stateTtlMinutes)(_.lastUs) { (uid, prev, evs, newest) =>
+      var vals = prev.fold(Vector.empty[Long])(_.vals.toVector)
+      val out = evs.map { e =>
+        val vc = cents(e.value)
         val n = vals.length.toLong
         // the decision runs in BigInt exactly like the batch form's
         // decimal(38,0) — the all-long form wraps silently once |vc|
@@ -492,23 +523,10 @@ object Events {
         val flag = n >= minPrev &&
           dev * dev > z.toLong * z * (n * s2 - s * s)
         vals = (vals :+ vc).takeRight(window)
-        lastUs = math.max(lastUs, tsMicros(e.ts))
         AnomalyFlag(e.event_id, uid, tsMicros(e.ts), vc, n, flag)
       }
-      state.update(RollingState(vals, lastUs))
-      // evict once the watermark passes last event + TTL (clamped above
-      // the current watermark so a deeply-late group cannot make
-      // setTimeoutTimestamp throw — the sessionizeStream rule)
-      state.setTimeoutTimestamp(
-        math.max((lastUs + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
-      out.iterator
+      (RollingState(vals, newest), out)
     }
-
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(fn)
   }
 
   /** CUSUM state for [[cusumStream]]: the two clamped drift sums plus
@@ -523,60 +541,31 @@ object Events {
 
   /** STREAMING CUSUM level-shift detection — the flag-on-arrival form
     * of [[graft.operators.EventAnalytics.cusum]]: each arriving event
-    * folds into its key's clamped one-sided drift sums and is flagged
-    * the moment the cumulative excess crosses the threshold (the
-    * sustained-drift alarm cannot wait for a batch job). Within a
-    * micro-batch events fold in (ts, event_id) order, so an in-order
-    * stream reproduces the batch operator's sums and flags EXACTLY
-    * (StreamingSpec pins the parity); out-of-order arrivals within
-    * `allowedLateness` fold against the state as it stood — the honest
-    * real-time semantics. State per key is TWO longs + the newest
-    * event time; idle keys evict by event-time TTL (a returning key
-    * restarts its drift sums cold — document the monitoring gap).
+    * folds into its key's clamped one-sided drift sums (the batch
+    * operator's [[graft.operators.CusumFold]]) and is flagged the moment
+    * the cumulative excess crosses the threshold (the sustained-drift
+    * alarm cannot wait for a batch job). The [[keyedFoldStream]] shape:
+    * an in-order stream reproduces the batch operator's sums and flags
+    * EXACTLY (StreamingSpec pins the parity). State per key is TWO
+    * longs + the newest event time; a returning idle key restarts its
+    * drift sums cold — document the monitoring gap.
     */
   def cusumStream(events: Dataset[Event], targetCents: Long,
       slackCents: Long, threshCents: Long,
       allowedLateness: String = "0 seconds",
       stateTtlMinutes: Long = 24 * 60): Dataset[CusumFlag] = {
-    require(slackCents >= 0 && threshCents > 0,
-      s"cusumStream: need slackCents >= 0 and threshCents > 0 " +
-        s"(got $slackCents, $threshCents)")
-    implicit val stateEnc = Encoders.product[CusumState]
-    implicit val outEnc = Encoders.product[CusumFlag]
-    implicit val longEnc = Encoders.scalaLong
-    val up = targetCents + slackCents
-    val dn = targetCents - slackCents
-    val ttlUs = stateTtlMinutes * 60L * 1000000L
-
-    def fn(uid: Long, rows: Iterator[Event],
-        state: GroupState[CusumState]): Iterator[CusumFlag] = {
-      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val prev = state.getOption.getOrElse(CusumState(0L, 0L, 0L))
-      var sp = prev.sp
-      var sn = prev.sn
-      var lastUs = prev.lastUs
-      val out = rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id)).map { e =>
-        val us = tsMicros(e.ts)
-        lastUs = math.max(lastUs, us)
-        // HALF_UP like the batch form's round(value*100)
-        val vc = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-        sp = math.max(0L, sp + (vc - up))
-        sn = math.max(0L, sn + (dn - vc))
-        CusumFlag(e.event_id, uid, us, vc, sp, sn,
-          sp > threshCents, sn > threshCents)
+    val cusum = new CusumFold("cusumStream", targetCents, slackCents, threshCents)
+    keyedFoldStream[CusumState, CusumFlag](events, allowedLateness,
+        stateTtlMinutes)(_.lastUs) { (uid, prev, evs, newest) =>
+      val f = cusum.fresh
+      prev.foreach { p => f.sp = p.sp; f.sn = p.sn }
+      val out = evs.map { e =>
+        val vc = cents(e.value)
+        f.step(vc)
+        CusumFlag(e.event_id, uid, tsMicros(e.ts), vc, f.sp, f.sn, f.up, f.down)
       }
-      state.update(CusumState(sp, sn, lastUs))
-      state.setTimeoutTimestamp(
-        math.max((lastUs + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
-      out.iterator
+      (CusumState(f.sp, f.sn, newest), out)
     }
-
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(fn)
   }
 
   /** EWMA state for [[ewmaStream]]: the ×10⁶ smoothed level, whether it
@@ -591,150 +580,63 @@ object Events {
 
   /** STREAMING EWMA smoothing — the flag-on-arrival form of
     * [[graft.operators.EventAnalytics.ewma]]: each arriving event folds
-    * into its key's ×10⁶ smoothed level via the identical integer
-    * recurrence (s ← α·vc + ((10⁶−α)·s) div 10⁶, seed = first value)
-    * and is flagged the moment it deviates from the level as it stood —
-    * the trend-deviation alarm scored in real time. Within a
-    * micro-batch events fold in (ts, event_id) order, so an in-order
-    * stream reproduces the batch operator's levels and flags EXACTLY
-    * (StreamingSpec pins the parity); out-of-order arrivals within
-    * `allowedLateness` fold against the state as it stood — the honest
-    * real-time semantics. State per key is ONE long + the seed bit +
-    * the newest event time; idle keys evict by event-time TTL (a
-    * returning key re-seeds from its next value — document the
-    * monitoring gap).
+    * into its key's ×10⁶ smoothed level via the batch operator's
+    * [[graft.operators.EwmaFold]] (s ← α·vc + ((10⁶−α)·s) div 10⁶, seed
+    * = first value) and is flagged the moment it deviates from the level
+    * as it stood. The [[keyedFoldStream]] shape: an in-order stream
+    * reproduces the batch operator's levels and flags EXACTLY
+    * (StreamingSpec pins the parity). State per key is ONE long + the
+    * seed bit + the newest event time; a returning idle key re-seeds
+    * from its next value — document the monitoring gap.
     */
   def ewmaStream(events: Dataset[Event], alphaPpm: Long,
       devThreshCents: Long, allowedLateness: String = "0 seconds",
       stateTtlMinutes: Long = 24 * 60): Dataset[EwmaFlag] = {
-    require(alphaPpm > 0 && alphaPpm <= 1000000L,
-      s"ewmaStream: alphaPpm must be in (0, 1000000] (got $alphaPpm)")
-    require(devThreshCents > 0,
-      s"ewmaStream: devThreshCents must be > 0 (got $devThreshCents)")
-    implicit val stateEnc = Encoders.product[EwmaState]
-    implicit val outEnc = Encoders.product[EwmaFlag]
-    implicit val longEnc = Encoders.scalaLong
-    val beta = 1000000L - alphaPpm
-    val devE6 = devThreshCents * 1000000L
-    val ttlUs = stateTtlMinutes * 60L * 1000000L
-
-    def fn(uid: Long, rows: Iterator[Event],
-        state: GroupState[EwmaState]): Iterator[EwmaFlag] = {
-      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val prev = state.getOption.getOrElse(EwmaState(0L, seeded = false, 0L))
-      var s = prev.sE6
-      var seeded = prev.seeded
-      var lastUs = prev.lastUs
-      val out = rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id)).map { e =>
-        val us = tsMicros(e.ts)
-        lastUs = math.max(lastUs, us)
-        // HALF_UP like the batch form's round(value*100)
-        val vc = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-        if (math.abs(vc) > 9000000L)
-          throw new IllegalArgumentException(
-            s"ewmaStream: |value_cents| $vc exceeds the 9,000,000-cent " +
-              "overflow bound (event id " + e.event_id + ")")
-        val dev = seeded && math.abs(vc * 1000000L - s) > devE6
-        s = if (seeded) alphaPpm * vc + beta * s / 1000000L
-            else vc * 1000000L
-        seeded = true
-        EwmaFlag(e.event_id, uid, us, vc, s, dev)
+    val ewma = new EwmaFold("ewmaStream", alphaPpm, devThreshCents)
+    keyedFoldStream[EwmaState, EwmaFlag](events, allowedLateness,
+        stateTtlMinutes)(_.lastUs) { (uid, prev, evs, newest) =>
+      val f = ewma.fresh
+      prev.foreach { p => f.s = p.sE6; f.seeded = p.seeded }
+      val out = evs.map { e =>
+        val vc = cents(e.value)
+        val dev = f.step(e.event_id, vc)
+        EwmaFlag(e.event_id, uid, tsMicros(e.ts), vc, f.s, dev)
       }
-      state.update(EwmaState(s, seeded, lastUs))
-      state.setTimeoutTimestamp(
-        math.max((lastUs + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
-      out.iterator
+      (EwmaState(f.s, f.seeded, newest), out)
     }
-
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(fn)
   }
 
   /** STREAMING seasonal scoring — each arriving event judged against a
     * STATIC trained [[graft.operators.EventAnalytics.seasonalProfile]]
-    * (train nightly, score all day): the slot derives map-side with the
-    * batch operator's exact integer arithmetic and the profile joins as
-    * a stream-static LEFT join — STATELESS (no watermark, no GroupState;
+    * (train nightly, score all day): the batch scorer
+    * [[graft.operators.EventAnalytics.seasonalScore]] run on the stream
+    * — the slot derives map-side and the profile joins as a
+    * stream-static LEFT join, STATELESS (no watermark, no GroupState;
     * Spark broadcasts or re-reads the static side per micro-batch), so
-    * the stream scores row-for-row what
-    * [[graft.operators.EventAnalytics.seasonalScore]] scores in batch —
-    * parity is exact including the cold-slot NULL-baseline pass-through.
-    * Swap the profile by restarting on a new table version (the 33c/33g
-    * versioned-read model).
+    * the stream scores row-for-row what the batch scores, including the
+    * cold-slot NULL-baseline pass-through. Swap the profile by
+    * restarting on a new table version (the 33c/33g versioned-read
+    * model).
     */
   def seasonalScoreStream(events: Dataset[Event], profile: DataFrame,
       slotSeconds: Long = 3600L, slotModulus: Int = 24,
-      minSlotEvents: Long = 2L, devThreshCents: Long = 10000L): DataFrame = {
-    require(slotSeconds >= 1 && slotModulus >= 1,
-      s"seasonalScoreStream: slotSeconds/slotModulus must be >= 1 " +
-        s"(got $slotSeconds, $slotModulus)")
-    require(minSlotEvents >= 1 && devThreshCents > 0,
-      "seasonalScoreStream: minSlotEvents >= 1 and devThreshCents > 0 required")
-    val usPerSlot = slotSeconds * 1000000L
-    events.toDF()
-      .withColumn("us", unix_micros(col("ts")))
-      .select(col("user_id").as("k"), col("event_id").as("id"), col("us"),
-        expr("CAST(round(value * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .withColumn("slot", expr(
-        s"IF(us >= 0, (us div $usPerSlot) % $slotModulus, " +
-          "assert_true(false, 'seasonalScoreStream: pre-1970 timestamp'))")
-        .cast("long"))
-      .join(profile.select("k", "slot", "n_slot", "baseline_cents"),
-        Seq("k", "slot"), "left")
-      .withColumn("deviation",
-        coalesce(col("n_slot") >= minSlotEvents &&
-          abs(col("vc") - col("baseline_cents")) > devThreshCents,
-          lit(false)))
-      .select(col("id").as("event_id"), col("k").as("user_id"), col("us"),
-        col("slot"), col("vc").as("value_cents"), col("baseline_cents"),
-        col("n_slot"), col("deviation"))
-  }
+      minSlotEvents: Long = 2L, devThreshCents: Long = 10000L): DataFrame =
+    EventAnalytics.seasonalScore(events.toDF(), profile, "user_id", "ts",
+      "event_id", "value", slotSeconds, slotModulus, minSlotEvents, devThreshCents)
 
   /** STREAMING robust median/MAD scoring — each arriving event judged
     * against a STATIC trained
     * [[graft.operators.EventAnalytics.robustProfile]] (train nightly,
-    * score all day): values project map-side with the batch operator's
-    * exact integer arithmetic and the profile joins as a stream-static
-    * LEFT join — STATELESS (no watermark, no GroupState), so the stream
-    * scores row-for-row what
-    * [[graft.operators.EventAnalytics.robustScore]] scores in batch,
-    * parity exact including the cold-key NULL pass-through. Swap the
-    * profile by restarting on a new table version (the
-    * [[seasonalScoreStream]] model).
+    * score all day): the batch scorer
+    * [[graft.operators.EventAnalytics.robustScore]] run on the stream as
+    * a stateless stream-static LEFT join, so parity is exact including
+    * the cold-key NULL pass-through. Swap the profile by restarting on
+    * a new table version (the [[seasonalScoreStream]] model).
     */
   def robustScoreStream(events: Dataset[Event], profile: DataFrame,
-      kPermille: Long = 3500L, minEvents: Long = 5L): DataFrame = {
-    require(kPermille > 0 && kPermille <= 1000000L,
-      s"robustScoreStream: kPermille must be in (0, 1000000] (got $kPermille)")
-    require(minEvents >= 1,
-      s"robustScoreStream: minEvents must be >= 1 (got $minEvents)")
-    val maxAbs = 1000000000000L
-    events.toDF()
-      .withColumn("us", unix_micros(col("ts")))
-      .select(col("user_id").as("k"), col("event_id").as("id"), col("us"),
-        expr("CAST(round(value * 100) AS bigint)").as("vc"))
-      .where(col("k").isNotNull && col("us").isNotNull && col("vc").isNotNull)
-      .withColumn("vc", expr(
-        s"IF(abs(vc) <= ${maxAbs}L, vc, " +
-          "assert_true(false, 'robustScoreStream: |value| too large — " +
-          "rescale'))").cast("long"))
-      .join(profile.select("k", "n_key", "median_x2_cents", "mad_x4_cents"),
-        Seq("k"), "left")
-      .withColumn("absdev_x2_cents", abs(col("vc") * 2 - col("median_x2_cents")))
-      .withColumn("deviation",
-        coalesce(col("n_key") >= minEvents &&
-          col("absdev_x2_cents") * 2000L > col("mad_x4_cents") * kPermille,
-          lit(false)))
-      .select(col("id").as("event_id"), col("k").as("user_id"), col("us"),
-        col("vc").as("value_cents"), col("median_x2_cents"),
-        col("absdev_x2_cents"), col("mad_x4_cents"), col("n_key"),
-        col("deviation"))
-  }
+      kPermille: Long = 3500L, minEvents: Long = 5L): DataFrame =
+    EventAnalytics.robustScore(events.toDF(), profile, "user_id", "ts",
+      "event_id", "value", kPermille, minEvents)
 
   /** Holt state for [[holtStream]]: the ×10⁶ level and trend, the seed
     * bit, and the newest event time seen (the [[EwmaState]] shape plus
@@ -749,74 +651,30 @@ object Events {
   /** STREAMING HOLT smoothing — the flag-on-arrival form of
     * [[graft.operators.EventAnalytics.holt]]: each arriving event is
     * judged against its key's one-step forecast (level + trend as they
-    * stood) and then folds in via the identical integer recurrence —
-    * the departs-from-trend alarm scored in real time. Within a
-    * micro-batch events fold in (ts, event_id) order, so an in-order
-    * stream reproduces the batch operator's levels, trends and flags
-    * EXACTLY (StreamingSpec pins the parity). State per key is TWO
-    * longs + the seed bit + the newest event time (the per-step math
-    * runs in BigInt exactly like the batch fold — state that fits the
-    * emitted longs round-trips losslessly); idle keys evict by
-    * event-time TTL (a returning key re-seeds — the [[ewmaStream]]
-    * monitoring-gap caveat).
+    * stood) and then folds in via the batch operator's
+    * [[graft.operators.HoltFold]] — the departs-from-trend alarm scored
+    * in real time. The [[keyedFoldStream]] shape: an in-order stream
+    * reproduces the batch operator's levels, trends and flags EXACTLY
+    * (StreamingSpec pins the parity). State per key is TWO longs + the
+    * seed bit + the newest event time (state that fits the emitted
+    * longs round-trips losslessly); a returning idle key re-seeds — the
+    * [[ewmaStream]] monitoring-gap caveat.
     */
   def holtStream(events: Dataset[Event], alphaPpm: Long, betaPpm: Long,
       devThreshCents: Long, allowedLateness: String = "0 seconds",
       stateTtlMinutes: Long = 24 * 60): Dataset[HoltFlag] = {
-    require(alphaPpm > 0 && alphaPpm <= 1000000L,
-      s"holtStream: alphaPpm must be in (0, 1000000] (got $alphaPpm)")
-    require(betaPpm > 0 && betaPpm <= 1000000L,
-      s"holtStream: betaPpm must be in (0, 1000000] (got $betaPpm)")
-    require(devThreshCents > 0,
-      s"holtStream: devThreshCents must be > 0 (got $devThreshCents)")
-    implicit val stateEnc = Encoders.product[HoltState]
-    implicit val outEnc = Encoders.product[HoltFlag]
-    implicit val longEnc = Encoders.scalaLong
-    val betaA = BigInt(1000000L - alphaPpm)
-    val betaB = BigInt(1000000L - betaPpm)
-    val devE6 = BigInt(devThreshCents) * 1000000L
-    val ttlUs = stateTtlMinutes * 60L * 1000000L
-
-    def fn(uid: Long, rows: Iterator[Event],
-        state: GroupState[HoltState]): Iterator[HoltFlag] = {
-      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val prev = state.getOption.getOrElse(
-        HoltState(0L, 0L, seeded = false, 0L))
-      var l = BigInt(prev.lE6)
-      var b = BigInt(prev.bE6)
-      var seeded = prev.seeded
-      var lastUs = prev.lastUs
-      val out = rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id)).map { e =>
-        val us = tsMicros(e.ts)
-        lastUs = math.max(lastUs, us)
-        // HALF_UP like the batch form's round(value*100)
-        val vc = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-        val f = l + b
-        val dev = seeded && (BigInt(vc) * 1000000L - f).abs > devE6
-        if (seeded) {
-          val lNew = BigInt(alphaPpm) * vc + (betaA * f) / 1000000L
-          b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-            (betaB * b) / 1000000L
-          l = lNew
-        } else { l = BigInt(vc) * 1000000L; b = BigInt(0); seeded = true }
-        if (!l.isValidLong || !b.isValidLong)
-          throw new ArithmeticException(
-            s"holtStream: level/trend exceeds long at event id ${e.event_id}" +
-              " — rescale the input")
-        HoltFlag(e.event_id, uid, us, vc, l.toLong, b.toLong, dev)
+    val holt = new HoltFold("holtStream", alphaPpm, betaPpm, devThreshCents)
+    keyedFoldStream[HoltState, HoltFlag](events, allowedLateness,
+        stateTtlMinutes)(_.lastUs) { (uid, prev, evs, newest) =>
+      val f = holt.fresh
+      prev.foreach { p => f.l = BigInt(p.lE6); f.b = BigInt(p.bE6); f.seeded = p.seeded }
+      val out = evs.map { e =>
+        val vc = cents(e.value)
+        val dev = f.step(e.event_id, vc)
+        HoltFlag(e.event_id, uid, tsMicros(e.ts), vc, f.l.toLong, f.b.toLong, dev)
       }
-      state.update(HoltState(l.toLong, b.toLong, seeded, lastUs))
-      state.setTimeoutTimestamp(
-        math.max((lastUs + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
-      out.iterator
+      (HoltState(f.l.toLong, f.b.toLong, f.seeded, newest), out)
     }
-
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(fn)
   }
 
   /** Holt-Winters state for [[holtWintersStream]]: the ×10⁶ level and
@@ -837,100 +695,39 @@ object Events {
     * [[graft.operators.EventAnalytics.holtWinters]]: each arriving
     * event is judged against its key's one-step seasonal forecast
     * (level + trend + seasonal(slot) as they stood) and then folds in
-    * via the identical integer recurrence — the departs-from-the-cycle
-    * alarm scored in real time. Within a micro-batch events fold in
-    * (ts, event_id) order, so an in-order stream reproduces the batch
+    * via the batch operator's [[graft.operators.HoltWintersFold]] — the
+    * departs-from-the-cycle alarm scored in real time. The
+    * [[keyedFoldStream]] shape: an in-order stream reproduces the batch
     * operator's levels, trends, seasonals and flags EXACTLY
-    * (StreamingSpec pins the parity). State per key is
-    * (2 + slotModulus) longs + a count + the seed bit + the newest
-    * event time (per-step math in BigInt exactly like the batch fold;
-    * state that fits the emitted longs round-trips losslessly); idle
-    * keys evict by event-time TTL (a returning key re-seeds — the
-    * [[ewmaStream]] monitoring-gap caveat; for Holt-Winters that also
-    * means re-learning the cycle, so size the TTL well past one full
-    * season).
+    * (StreamingSpec pins the parity). State per key is (2 + slotModulus)
+    * longs + a count + the seed bit + the newest event time; a restart
+    * whose `slotModulus` differs from the checkpointed state's slot count
+    * is refused (train/score mismatch). A returning idle key re-seeds —
+    * the [[ewmaStream]] monitoring-gap caveat; for Holt-Winters that
+    * also means re-learning the cycle, so size the TTL well past one
+    * full season.
     */
   def holtWintersStream(events: Dataset[Event], alphaPpm: Long,
       betaPpm: Long, gammaPpm: Long, slotSeconds: Long = 3600L,
       slotModulus: Int = 24, warmupEvents: Long = 0L,
       devThreshCents: Long = 10000L, allowedLateness: String = "0 seconds",
       stateTtlMinutes: Long = 7 * 24 * 60): Dataset[HoltWintersFlag] = {
-    require(alphaPpm > 0 && alphaPpm <= 1000000L,
-      s"holtWintersStream: alphaPpm must be in (0, 1000000] (got $alphaPpm)")
-    require(betaPpm > 0 && betaPpm <= 1000000L,
-      s"holtWintersStream: betaPpm must be in (0, 1000000] (got $betaPpm)")
-    require(gammaPpm > 0 && gammaPpm <= 1000000L,
-      s"holtWintersStream: gammaPpm must be in (0, 1000000] (got $gammaPpm)")
-    require(slotSeconds >= 1 && slotModulus >= 1,
-      s"holtWintersStream: slotSeconds/slotModulus must be >= 1 " +
-        s"(got $slotSeconds, $slotModulus)")
-    require(devThreshCents > 0,
-      s"holtWintersStream: devThreshCents must be > 0 (got $devThreshCents)")
-    val warmup = if (warmupEvents > 0) warmupEvents else slotModulus.toLong
-    implicit val stateEnc = Encoders.product[HoltWintersState]
-    implicit val outEnc = Encoders.product[HoltWintersFlag]
-    implicit val longEnc = Encoders.scalaLong
-    val oneMinusA = BigInt(1000000L - alphaPpm)
-    val oneMinusB = BigInt(1000000L - betaPpm)
-    val oneMinusG = BigInt(1000000L - gammaPpm)
-    val devE6 = BigInt(devThreshCents) * 1000000L
-    val usPerSlot = slotSeconds * 1000000L
-    val m = slotModulus
-    val ttlUs = stateTtlMinutes * 60L * 1000000L
-
-    def fn(uid: Long, rows: Iterator[Event],
-        state: GroupState[HoltWintersState]): Iterator[HoltWintersFlag] = {
-      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val prev = state.getOption.getOrElse(
-        HoltWintersState(0L, 0L, Seq.fill(m)(0L), 0L, seeded = false, 0L))
-      var l = BigInt(prev.lE6)
-      var b = BigInt(prev.bE6)
-      val seas = prev.seas.map(BigInt(_)).toArray
-      var rn = prev.rn
-      var seeded = prev.seeded
-      var lastUs = prev.lastUs
-      val out = rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id)).map { e =>
+    val hw = new HoltWintersFold("holtWintersStream", alphaPpm, betaPpm,
+      gammaPpm, slotSeconds, slotModulus, warmupEvents, devThreshCents)
+    keyedFoldStream[HoltWintersState, HoltWintersFlag](events, allowedLateness,
+        stateTtlMinutes)(_.lastUs) { (uid, prev, evs, newest) =>
+      val f = hw.fresh
+      prev.foreach(p => f.resume(p.lE6, p.bE6, p.seas, p.rn))
+      val out = evs.map { e =>
         val us = tsMicros(e.ts)
-        if (us < 0) throw new ArithmeticException(
-          s"holtWintersStream: pre-1970 timestamp at event id ${e.event_id}")
-        lastUs = math.max(lastUs, us)
-        rn += 1
-        // HALF_UP like the batch form's round(value*100)
-        val vc = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-        val slot = ((us / usPerSlot) % m).toInt
-        val x = BigInt(vc) * 1000000L
-        val sc = seas(slot)
-        val f = l + b + sc
-        val dev = seeded && rn > warmup && (x - f).abs > devE6
-        if (seeded) {
-          val lNew = (BigInt(alphaPpm) * (x - sc)) / 1000000L +
-            (oneMinusA * (l + b)) / 1000000L
-          b = (BigInt(betaPpm) * (lNew - l)) / 1000000L +
-            (oneMinusB * b) / 1000000L
-          seas(slot) = (BigInt(gammaPpm) * (x - lNew)) / 1000000L +
-            (oneMinusG * sc) / 1000000L
-          l = lNew
-        } else { l = x; b = BigInt(0); seeded = true }
-        if (!l.isValidLong || !b.isValidLong || !seas(slot).isValidLong)
-          throw new ArithmeticException(
-            s"holtWintersStream: level/trend/seasonal exceeds long at " +
-              s"event id ${e.event_id} — rescale the input")
-        HoltWintersFlag(e.event_id, uid, us, slot.toLong, vc, l.toLong,
-          b.toLong, seas(slot).toLong, dev)
+        val vc = cents(e.value)
+        val dev = f.step(e.event_id, us, vc)
+        HoltWintersFlag(e.event_id, uid, us, f.slot.toLong, vc, f.l.toLong,
+          f.b.toLong, f.seasonal, dev)
       }
-      state.update(HoltWintersState(l.toLong, b.toLong,
-        seas.map(_.toLong).toSeq, rn, seeded, lastUs))
-      state.setTimeoutTimestamp(
-        math.max((lastUs + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
-      out.iterator
+      (HoltWintersState(f.l.toLong, f.b.toLong, f.seas.map(_.toLong).toSeq,
+        f.rn, f.seeded, newest), out)
     }
-
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(fn)
   }
 
   /** One recent touch event retained in [[attributionStream]] state. */
@@ -965,7 +762,7 @@ object Events {
     * State per key is only the touches inside the last `windowSeconds +
     * pruneSlackSeconds` of that key's event time plus the newest event
     * time; idle keys evict by event-time TTL, the
-    * [[rollingAnomalyStream]] machinery. In-order, touches older than
+    * [[keyedFoldStream]] machinery. In-order, touches older than
     * the window can never enter a later conversion's window, so slack 0
     * is exact and minimal; when admitting late rows (`allowedLateness`
     * > 0) set `pruneSlackSeconds` to at least that horizon, or a
@@ -983,22 +780,15 @@ object Events {
       s"pruneSlackSeconds must be >= 0 (got $pruneSlackSeconds)")
     require(touchTypes.nonEmpty && !touchTypes.contains(convType),
       s"touchTypes must be non-empty and exclude convType $convType")
-    implicit val stateEnc = Encoders.product[TouchState]
-    implicit val outEnc = Encoders.product[AttributionRow]
-    implicit val longEnc = Encoders.scalaLong
     val touchSet = touchTypes.toSet
     val windowUs = windowSeconds * 1000000L
     val pruneUs = (windowSeconds + pruneSlackSeconds) * 1000000L
-    val ttlUs = stateTtlMinutes * 60L * 1000000L
-
-    def fn(uid: Long, rows: Iterator[Event],
-        state: GroupState[TouchState]): Iterator[AttributionRow] = {
-      if (rows.isEmpty && state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val prev = state.getOption.getOrElse(TouchState(Nil, 0L))
-      var touches = prev.touches.toVector
-      var lastUs = prev.lastUs
+    keyedFoldStream[TouchState, AttributionRow](events, allowedLateness,
+        stateTtlMinutes)(_.lastUs) { (uid, prev, evs, newest) =>
+      var touches = prev.fold(Vector.empty[Touch])(_.touches.toVector)
+      var lastUs = prev.fold(0L)(_.lastUs)
       val out = scala.collection.mutable.ArrayBuffer.empty[AttributionRow]
-      rows.toArray.sortBy(e => (tsMicros(e.ts), e.event_id)).foreach { e =>
+      evs.foreach { e =>
         val us = tsMicros(e.ts)
         lastUs = math.max(lastUs, us)
         // prune on the NEWEST time seen, not the current event's — a
@@ -1026,16 +816,7 @@ object Events {
           }
         }
       }
-      state.update(TouchState(touches, lastUs))
-      state.setTimeoutTimestamp(
-        math.max((lastUs + ttlUs) / 1000L + 1, state.getCurrentWatermarkMs() + 1))
-      out.iterator
+      (TouchState(touches, newest), out.toArray)
     }
-
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(fn)
   }
 }

@@ -717,6 +717,48 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
       900000000000000L, "the extreme in-bound forecast is exact, no wrap")
   }
 
+  test("Holt-Winters verbs refuse a store of another slot count and name a bad parameter") {
+    import spark.implicits._
+    def root(t: Throwable): String =
+      t.getMessage + Option(t.getCause).map(root).getOrElse("")
+    // a store trained with 2 slots: forecasting it with 3 would index
+    // past its seasonals, with 1 it would silently read the wrong slot
+    val store = Seq((1L, 100L, -7L, Seq(5L, -3L), 4L, 1700000000000000L, 9L))
+      .toDF("k", "l_e6", "b_e6", "seas", "rn", "last_us", "last_id")
+    for (m <- Seq(3, 1)) {
+      val ex = intercept[Exception] {
+        EventAnalytics.holtWintersForecast(store, 60, m, horizon = 4).collect()
+      }
+      assert(root(ex).contains(
+        s"holtWintersForecast: store has 2 slots, operator given $m — train/score mismatch"),
+        root(ex))
+    }
+    // one parameter check behind every entry point: it names the bad
+    // parameter and its value
+    val ev = Seq((1L, 1L, ts(0), 1.0)).toDF("eid", "uid", "ts", "v")
+    val events = Seq.empty[graft.streaming.Events.Event].toDS()
+    val bad: Seq[(String, () => Any)] = Seq(
+      "holtWinters: alphaPpm must be in (0, 1000000] (got 0)" -> (() =>
+        EventAnalytics.holtWinters(ev, "uid", "ts", "eid", "v", 0L, 1L, 1L)),
+      "updateHoltWintersStore: betaPpm must be in (0, 1000000] (got 1000001)" -> (() =>
+        EventAnalytics.holtWintersStore(ev, "uid", "ts", "eid", "v", 1L, 1000001L, 1L)),
+      "updateHoltWintersStore: gammaPpm must be in (0, 1000000] (got -1)" -> (() =>
+        EventAnalytics.updateHoltWintersStore(store, ev, "uid", "ts", "eid", "v",
+          1L, 1L, -1L)),
+      "holtWintersIncremental: slotModulus must be > 0 (got 0)" -> (() =>
+        EventAnalytics.holtWintersIncremental(ev, store, "uid", "ts", "eid", "v",
+          1L, 1L, 1L, slotModulus = 0)),
+      "holtWintersIncremental: devThreshCents must be > 0 (got 0)" -> (() =>
+        EventAnalytics.holtWintersIncremental(ev, store, "uid", "ts", "eid", "v",
+          1L, 1L, 1L, devThreshCents = 0L)),
+      "holtWintersStream: slotSeconds must be > 0 (got 0)" -> (() =>
+        graft.streaming.Events.holtWintersStream(events, 1L, 1L, 1L, slotSeconds = 0L)))
+    bad.foreach { case (msg, call) =>
+      val ex = intercept[IllegalArgumentException](call())
+      assert(ex.getMessage.contains(msg), ex.getMessage)
+    }
+  }
+
   test("robustProfile/robustScore: profile scoring == self-score; cold key passes NULL") {
     val hist = (Seq(1.0, 2.0, 3.0, 4.0, 100.0).zipWithIndex.map { case (v, i) =>
       (i.toLong + 1, 1L, ts(i.toLong), v) }).toDF("eid", "uid", "ts", "v")

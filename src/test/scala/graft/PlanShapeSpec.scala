@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Alias
-import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Graph, Relational, Stats, TextAnalysis}
+import graft.operators.{Dedup, EventAnalytics, Graph, Relational, Stats, TextAnalysis}
 
 /** The physical-plan structure each past optimization depends on,
   * asserted on `executedPlan` at sf0.001 — a reverted restructure fails
@@ -150,6 +150,41 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     phases.foreach { p =>
       val reused = nodes(p).collect { case r: ReusedExchangeExec => r.child }
       assert(reused.exists(_.isInstanceOf[ShuffleExchangeExec]), skeleton(p))
+    }
+  }
+
+  test("sequential folds and stores built from scratch: one key exchange, no join") {
+    // a store built from scratch is the update verb over an empty store,
+    // whose join and pass-through union must plan away
+    val ev = wh.loadTable("events")
+    val folds: Seq[(String, DataFrame)] = Seq(
+      "cusum" -> EventAnalytics.cusum(ev, "user_id", "ts", "event_id", "value",
+        targetCents = 4000, slackCents = 500, threshCents = 20000),
+      "ewma" -> EventAnalytics.ewma(ev, "user_id", "ts", "event_id", "value",
+        alphaPpm = 200000, devThreshCents = 3000),
+      "holt" -> EventAnalytics.holt(ev, "user_id", "ts", "event_id", "value",
+        alphaPpm = 200000, betaPpm = 100000, devThreshCents = 3000),
+      "holtWinters" -> EventAnalytics.holtWinters(ev, "user_id", "ts", "event_id",
+        "value", alphaPpm = 200000, betaPpm = 100000, gammaPpm = 300000),
+      "holtWintersStore" -> EventAnalytics.holtWintersStore(ev, "user_id", "ts",
+        "event_id", "value", alphaPpm = 200000, betaPpm = 100000, gammaPpm = 300000),
+      "acfStore" -> EventAnalytics.acfStore(ev, "user_id", "ts", "event_id", "value",
+        maxLag = 12),
+      "trendStore" -> EventAnalytics.trendStore(ev, "user_id", "ts", "event_id", "value"))
+    folds.foreach { case (name, df) =>
+      val plans = plansRunBy(df.collect()).map(_._2)
+      assert(plans.size === 1, name)
+      val plan = plans.head
+      val byK = nodes(plan).count {
+        case s: ShuffleExchangeExec => s.outputPartitioning match {
+          case HashPartitioning(Seq(a: AttributeReference), _) => a.name == "k"
+          case _ => false
+        }
+        case _ => false
+      }
+      assert(nodes(plan).count(_.isInstanceOf[ShuffleExchangeExec]) === 1 && byK === 1,
+        s"$name: one hashpartitioning(k) exchange${skeleton(plan)}")
+      assert(!nodes(plan).exists(_.isInstanceOf[BaseJoinExec]), s"$name: no join${skeleton(plan)}")
     }
   }
 }

@@ -1036,6 +1036,39 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "second key seeds cold with neutral seasonals")
   }
 
+  test("holtWintersStream refuses a restart whose slotModulus differs from its checkpoint") {
+    implicit val sqlCtx = spark.sqlContext
+    // the checkpointed state holds 2 seasonals; restarting with 3 slots
+    // would index past them, with 1 it would silently read the wrong ones
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-hw-restart").toString
+    val mem = MemoryStream[Event]
+    def start(slotModulus: Int) = Events.holtWintersStream(mem.toDS(),
+        alphaPpm = 250000, betaPpm = 300000, gammaPpm = 500000,
+        slotSeconds = 60, slotModulus = slotModulus, warmupEvents = 1,
+        devThreshCents = 100)
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    val q1 = start(2)
+    try {
+      mem.addData(Event(1, ts(0), 1L, "m", 10.0), Event(2, ts(1), 1L, "m", -9.0))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    def root(t: Throwable): String =
+      t.getMessage + Option(t.getCause).map(root).getOrElse("")
+    for (m <- Seq(3, 1)) {
+      val q = start(m)
+      val ex = intercept[Exception] {
+        try {
+          mem.addData(Event(10L + m, ts(2L + m), 1L, "m", 7.5))
+          q.processAllAvailable()
+        } finally q.stop()
+      }
+      assert(root(ex).contains(
+        s"holtWintersStream: store has 2 slots, operator given $m — train/score mismatch"),
+        root(ex))
+    }
+  }
+
   test("rollingAnomalyStream flags on arrival; in-order stream == batch") {
     implicit val sqlCtx = spark.sqlContext
     // one user, stable history then a spike, split across three triggers
