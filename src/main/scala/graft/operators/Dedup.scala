@@ -100,26 +100,10 @@ object Dedup {
     * Returns (doc_id, n_paras, n_kept, text_clean).
     */
   def paragraphDedup(df: DataFrame, idCol: String, textCol: String,
-      sep: String = "\n"): DataFrame = {
-    val base = df.select(col(idCol).cast("long").as("doc_id"),
-      split(col(textCol), java.util.regex.Pattern.quote(sep)).as("ps"))
-    val paras = base
-      .select(col("doc_id"), posexplode(col("ps")).as(Seq("pos", "p")))
-      .select(col("doc_id"), col("pos"), md5(col("p")).as("h")) // narrow from here
-    val keepPos = paras
-      .groupBy("h")
-      .agg(min(struct(col("doc_id"), col("pos"))).as("k"))
-      .groupBy(col("k.doc_id").as("doc_id"))
-      .agg(sort_array(collect_list(col("k.pos"))).as("keep"))
-    base.join(keepPos, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        size(col("ps")).cast("long").as("n_paras"),
-        coalesce(size(col("keep")), lit(0)).cast("long").as("n_kept"),
-        coalesce(
-          array_join(transform(col("keep"),
-            i => element_at(col("ps"), i + 1)), sep),
-          lit("")).as("text_clean"))
-  }
+      sep: String = "\n"): DataFrame =
+    // the empty-store incremental form (as cdcDedup): the store probe
+    // plans away (PlanShapeSpec)
+    paragraphDedupIncremental(df, idCol, textCol, emptyHashStore(df), sep)
 
   /** Corpus-frequency BOILERPLATE line removal (the RefinedWeb/CCNet
     * complement of [[paragraphDedup]]: keep-first dedups repeats, this
@@ -134,41 +118,81 @@ object Dedup {
     * aggregate + broadcast pattern as every other degenerate-key cap in
     * this file; no window, no full-corpus exchange. A LOW threshold over
     * a huge corpus makes the hot set itself large (every line repeated
-    * `minDocs`+ times) — pass `broadcastHot = false` to let AQE size the
-    * anti-join instead (sort-merge of two narrow hash frames),
-    * result-identical. Either way the anti-join and keep-list election
-    * see only (hash, doc_id, pos); document TEXT crosses the wire
-    * exactly once, in the final doc_id join that splices survivors
-    * map-side from the intact document.
+    * `minDocs`+ times), and the broadcast grows with it. The anti-join
+    * and keep-list election see only (hash, doc_id, pos); document TEXT
+    * crosses the wire exactly once, in the final doc_id join that
+    * splices survivors map-side from the intact document.
     *
     * Returns (doc_id, n_lines, n_kept, text_clean).
     */
   def removeBoilerplate(df: DataFrame, idCol: String, textCol: String,
-      minDocs: Int, sep: String = "\n", broadcastHot: Boolean = true): DataFrame = {
+      minDocs: Int, sep: String = "\n"): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val base = df.select(col(idCol).cast("long").as("doc_id"),
-      split(col(textCol), java.util.regex.Pattern.quote(sep)).as("ps"))
-    val lines = base
-      .select(col("doc_id"), posexplode(col("ps")).as(Seq("pos", "p")))
-      .select(col("doc_id"), col("pos"), md5(col("p")).as("h")) // narrow from here
+    val base = splitDocs(df, idCol, textCol, sep)
+    val lines = segmentHashes(base)
     val hot = lines
       .groupBy("h")
       .agg(countDistinct(col("doc_id")).as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select("h")
     val keepPos = lines
-      .join(if (broadcastHot) broadcast(hot) else hot, Seq("h"), "left_anti")
+      .join(broadcast(hot), Seq("h"), "left_anti")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("pos"))).as("keep"))
+    spliceKept(base, keepPos, sep, "n_lines")
+  }
+
+  /** `(doc_id, ps)`: each document's id and its segments split on `sep`. */
+  private def splitDocs(df: DataFrame, idCol: String, textCol: String,
+      sep: String): DataFrame =
+    df.select(col(idCol).cast("long").as("doc_id"),
+      split(col(textCol), java.util.regex.Pattern.quote(sep)).as("ps"))
+
+  /** `(doc_id, pos, h)`: one row per segment of [[splitDocs]] with its
+    * md5 — everything after this is narrow. */
+  private def segmentHashes(base: DataFrame): DataFrame =
+    base
+      .select(col("doc_id"), posexplode(col("ps")).as(Seq("pos", "p")))
+      .select(col("doc_id"), col("pos"), md5(col("p")).as("h"))
+
+  /** Splice each document's kept segments (`keepPos`: doc_id and its
+    * sorted 0-based `keep` positions) back into `text_clean`, indexing
+    * the split array map-side. Returns (doc_id, `nCol`, n_kept,
+    * text_clean); a document with no kept segment is present and empty. */
+  private def spliceKept(base: DataFrame, keepPos: DataFrame, sep: String,
+      nCol: String): DataFrame =
     base.join(keepPos, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        size(col("ps")).cast("long").as("n_lines"),
+        size(col("ps")).cast("long").as(nCol),
         coalesce(size(col("keep")), lit(0)).cast("long").as("n_kept"),
         coalesce(
           array_join(transform(col("keep"),
             i => element_at(col("ps"), i + 1)), sep),
           lit("")).as("text_clean"))
+
+  /** The segment-hash store probe of [[paragraphDedupIncremental]] and
+    * [[cdcDedupIncremental]]: `segs`' rows whose hash `h` the store does
+    * not hold. The batch's distinct hashes broadcast-semi-join the store
+    * scan, so the store (the big side, one narrow md5 column) is read
+    * once and NEVER shuffled (the distinct __store_h name makes that
+    * assertable in DedupSpec); the hit set, bounded by the batch's own
+    * distinct-hash count, broadcast-anti-joins `segs`. */
+  private def unseenSegments(segs: DataFrame, existingHashes: DataFrame): DataFrame = {
+    val newHashes = broadcast(segs.select("h").distinct())
+    val hits = existingHashes.select(col("h").as("__store_h"))
+      .join(newHashes, col("__store_h") === newHashes("h"), "left_semi")
+      .select(col("__store_h").as("h"))
+    segs.join(broadcast(hits), Seq("h"), "left_anti")
   }
+
+  /** An empty `(h)` hash store: the one-shot segment dedups are their
+    * incremental forms over it. */
+  private def emptyHashStore(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("h",
+          org.apache.spark.sql.types.StringType))))
 
   /** Distinct paragraph-hash store of a corpus — the persisted artifact
     * [[paragraphDedupIncremental]] probes each snapshot (the 39c
@@ -180,11 +204,7 @@ object Dedup {
     */
   def paragraphHashStore(df: DataFrame, idCol: String, textCol: String,
       sep: String = "\n"): DataFrame =
-    df.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
-          .as(Seq("pos", "p")))
-      .select(md5(col("p")).as("h"))
-      .distinct()
+    segmentHashes(splitDocs(df, idCol, textCol, sep)).select("h").distinct()
 
   /** INCREMENTAL paragraph dedup: clean a NEW batch against an EXISTING
     * paragraph-hash store ([[paragraphHashStore]], persisted) and within
@@ -204,12 +224,9 @@ object Dedup {
     * NEVER shuffled; the hit-set comes back bounded by the batch's own
     * distinct-hash count and broadcast-anti-joins the batch's narrow
     * (hash, doc_id, pos) frame. Batch text crosses the wire exactly once
-    * (the final splice join, as in [[paragraphDedup]]). A giant backfill
-    * batch (hit-set too big to broadcast) passes `broadcastProbe =
-    * false` — both joins become AQE-planned shuffles of the two narrow
-    * hash frames, result-identical. Store maintenance between snapshots
-    * is `store.unionByName(paragraphHashStore(batch)).distinct()` —
-    * re-aggregation of narrow hashes, no text.
+    * (the final splice join, as in [[paragraphDedup]]). Store maintenance
+    * between snapshots is `store.unionByName(paragraphHashStore(batch))
+    * .distinct()` — re-aggregation of narrow hashes, no text.
     *
     * Composes with Structured Streaming as `foreachBatch`: apply this
     * per micro-batch and fold each batch's hashes into the store
@@ -218,35 +235,14 @@ object Dedup {
     * Returns (doc_id, n_paras, n_kept, text_clean) for the NEW batch.
     */
   def paragraphDedupIncremental(newDocs: DataFrame, idCol: String, textCol: String,
-      existingHashes: DataFrame, sep: String = "\n",
-      broadcastProbe: Boolean = true): DataFrame = {
-    val base = newDocs.select(col(idCol).cast("long").as("doc_id"),
-      split(col(textCol), java.util.regex.Pattern.quote(sep)).as("ps"))
-    val paras = base
-      .select(col("doc_id"), posexplode(col("ps")).as(Seq("pos", "p")))
-      .select(col("doc_id"), col("pos"), md5(col("p")).as("h")) // narrow from here
-    val newHashes = paras.select("h").distinct()
-    // store scan side: the big frame streams through a broadcast
-    // semi-join and never shuffles (the distinct __store_h name makes
-    // the no-exchange contract assertable in DedupSpec)
-    val probe = if (broadcastProbe) broadcast(newHashes) else newHashes
-    val hits = existingHashes.select(col("h").as("__store_h"))
-      .join(probe, col("__store_h") === probe("h"), "left_semi")
-      .select(col("__store_h").as("h"))
-    val keepPos = paras
-      .join(if (broadcastProbe) broadcast(hits) else hits, Seq("h"), "left_anti")
+      existingHashes: DataFrame, sep: String = "\n"): DataFrame = {
+    val base = splitDocs(newDocs, idCol, textCol, sep)
+    val keepPos = unseenSegments(segmentHashes(base), existingHashes)
       .groupBy("h")
       .agg(min(struct(col("doc_id"), col("pos"))).as("k"))
       .groupBy(col("k.doc_id").as("doc_id"))
       .agg(sort_array(collect_list(col("k.pos"))).as("keep"))
-    base.join(keepPos, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        size(col("ps")).cast("long").as("n_paras"),
-        coalesce(size(col("keep")), lit(0)).cast("long").as("n_kept"),
-        coalesce(
-          array_join(transform(col("keep"),
-            i => element_at(col("ps"), i + 1)), sep),
-          lit("")).as("text_clean"))
+    spliceKept(base, keepPos, sep, "n_paras")
   }
 
   /** Chunk-hash store for [[cdcDedupIncremental]]: one md5 per DISTINCT
@@ -267,29 +263,21 @@ object Dedup {
     * (store-member chunks collapse everywhere), store-unseen chunks
     * elect the batch-wide first (doc_id, chunk_idx), and under
     * append-ordered ids the result equals [[cdcDedup]] over
-    * history ∪ batch restricted to the batch. Same probe shape too: the
+    * history ∪ batch restricted to the batch. Same probe too: the
     * store is the big narrow side, read once and never shuffled — the
     * batch's distinct hashes broadcast-semi-join it, the bounded hit
-    * set broadcast-anti-joins the batch's narrow chunk frame
-    * (`broadcastProbe = false` for giant backfills, result-identical).
+    * set broadcast-anti-joins the batch's narrow chunk frame.
     * Store maintenance: `store.unionByName(cdcHashStore(batch))
     * .distinct()`.
     */
   def cdcDedupIncremental(newDocs: DataFrame, idCol: String, textCol: String,
       existingHashes: DataFrame,
-      maskBits: Int = 6, minLen: Int = 16, maxLen: Int = 256,
-      broadcastProbe: Boolean = true): DataFrame = {
+      maskBits: Int = 6, minLen: Int = 16, maxLen: Int = 256): DataFrame = {
     val chunks = graft.operators.TextAnalysis
       .cdcChunkDocs(newDocs, idCol, textCol, maskBits, minLen, maxLen)
       .select(col(idCol).cast("long").as("doc_id"), col("chunk_idx"),
         col("start"), col("len"), col("chunk_md5").as("h"))
-    val newHashes = chunks.select("h").distinct()
-    val probe = if (broadcastProbe) broadcast(newHashes) else newHashes
-    val hits = existingHashes.select(col("h").as("__store_h"))
-      .join(probe, col("__store_h") === probe("h"), "left_semi")
-      .select(col("__store_h").as("h"))
-    val keep = chunks
-      .join(if (broadcastProbe) broadcast(hits) else hits, Seq("h"), "left_anti")
+    val keep = unseenSegments(chunks, existingHashes)
       .groupBy("h")
       .agg(min(struct(col("doc_id"), col("chunk_idx"),
         col("start"), col("len"))).as("k"))
@@ -527,13 +515,8 @@ object Dedup {
       maskBits: Int = 6, minLen: Int = 16, maxLen: Int = 256): DataFrame =
     // definitionally the empty-store incremental form — ONE election +
     // resplice implementation to maintain (DedupSpec pins the
-    // equivalence; AQE's empty-relation propagation elides the probe)
-    cdcDedupIncremental(df, idCol, textCol,
-      df.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.StringType)))),
+    // equivalence; the store probe plans away, PlanShapeSpec)
+    cdcDedupIncremental(df, idCol, textCol, emptyHashStore(df),
       maskBits, minLen, maxLen)
 
   /** LEAKAGE-SAFE train/eval split: every member of a near-dup cluster
@@ -876,7 +859,7 @@ object Dedup {
     * positional over the same permutations.
     *
     * RE-INGESTION: a store row whose id reappears in the batch is
-    * SUPERSEDED (anti-joined out) — the updated document compares
+    * SUPERSEDED ([[supersede]]) — the updated document compares
     * against the rest of the store under its new text, never against
     * its own stale signature, and no duplicate (id, sig) rows can emit
     * conflicting pair estimates.
@@ -893,39 +876,14 @@ object Dedup {
     val newSigs =
       minhashSignatures(newDocs, idCol, textCol, shingleWidth, numPerms, seed, shingler)
         .persist(StorageLevel.MEMORY_AND_DISK)
-    val oldSigs = existingSigs.select(col("id").cast("long").as("id"), col("sig"))
-      .join(broadcast(newSigs.select("id")), Seq("id"), "left_anti")
-    val allSigs = oldSigs.unionByName(newSigs)
-    // cap hot buckets over the COMBINED population (the degenerate-bucket
-    // rule must see store + batch together, or a boilerplate bucket split
-    // across them dodges the cap). The cap is an aggregate + broadcast
-    // anti-join, NOT a window: a window would shuffle every banded STORE
-    // row each snapshot, while the aggregate partial-combines to
-    // distinct-bucket cardinality and the hot list (buckets over the
-    // cap) is tiny by construction.
-    val taggedAll = bandBuckets(
-      oldSigs.withColumn("__new", lit(false))
-        .unionByName(newSigs.withColumn("__new", lit(true))),
-      numPerms, bands, extraCols = Seq("__new"))
-    // capped feeds the candidate join TWICE (new side + all side) and
-    // the hot aggregate consumed taggedAll once more — persist so the
-    // store scan + banding run once per snapshot, not three times
-    val capped = (
-      if (maxBucketSize > 0) {
-        val hot = taggedAll.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") > maxBucketSize)
-          .select("band", "bucket")
-        taggedAll.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-      } else taggedAll
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = capped.filter(col("__new")).select(col("band"), col("bucket"), col("id").as("__nid"))
-      .join(capped.select(col("band"), col("bucket"), col("id").as("__mid")),
-        Seq("band", "bucket"))
-      .filter(col("__nid") =!= col("__mid"))
-      .select(least(col("__nid"), col("__mid")).as("id_a"),
-        greatest(col("__nid"), col("__mid")).as("id_b"))
-      .distinct()
+    // the banding and both verify joins read the union: the store is
+    // scanned once per snapshot
+    val allSigs = storeUnionBatch(
+      existingSigs.select(col("id").cast("long").as("id"), col("sig")), newSigs,
+      newSigs.select("id"))
+    val cand = incrementalCandidatePairs(
+      bandBuckets(allSigs, numPerms, bands, extraCols = Seq("__new")),
+      Seq("band", "bucket"), maxBucketSize)
     val agree = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), v => v))
     val result = cand
       .join(allSigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
@@ -934,7 +892,7 @@ object Dedup {
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
     // This API is the STEADY-STATE per-snapshot ingestion path: leaving
-    // newSigs/capped cached after returning would accumulate one pair of
+    // newSigs/allSigs cached after returning would accumulate one pair of
     // cache entries per snapshot for the life of the session. The pair
     // list is small by construction (it is the dedup *decision* input),
     // so materialize it eagerly, release the per-snapshot intermediates,
@@ -942,7 +900,7 @@ object Dedup {
     // caller composes pairs without re-triggering the store scan.
     val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
     newSigs.unpersist()
-    capped.unpersist()
+    allSigs.unpersist()
     out
   }
 
@@ -1113,14 +1071,7 @@ object Dedup {
     */
   private def hammingPairsOverSigs(
       sigs: DataFrame, maxHamming: Int, maxBucketSize: Int): DataFrame = {
-    val blocks = pigeonholeBlocks(maxHamming + 1)
-    val blockStructs = blocks.zipWithIndex.map { case ((off, width), i) =>
-      struct(lit(i).as("blk"),
-        expr(s"shiftrightunsigned(sig, $off) & ${blockMask(width)}L").as("bucket"))
-    }
-    val blocked = sigs
-      .select(col("id"), col("sig"), explode(array(blockStructs.toIndexedSeq: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.blk").as("blk"), col("bb.bucket").as("bucket"))
+    val blocked = pigeonholeBuckets(sigs, maxHamming)
     val capped =
       if (maxBucketSize > 0) {
         val w = Window.partitionBy(col("blk"), col("bucket"))
@@ -1138,6 +1089,24 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
       .distinct()
+  }
+
+  /** Pigeonhole blocks of an (id, sig) frame: one (id, sig, extraCols...,
+    * blk, bucket) row per block of [[pigeonholeBlocks]]`(maxHamming + 1)`,
+    * bucket = the block's bits. `extraCols` ride along (the
+    * [[bandBuckets]] shape).
+    */
+  private def pigeonholeBuckets(sigs: DataFrame, maxHamming: Int,
+      extraCols: Seq[String] = Nil): DataFrame = {
+    val blockStructs = pigeonholeBlocks(maxHamming + 1).zipWithIndex.map {
+      case ((off, width), i) =>
+        struct(lit(i).as("blk"),
+          expr(s"shiftrightunsigned(sig, $off) & ${blockMask(width)}L").as("bucket"))
+    }
+    val kept = Seq(col("id"), col("sig")) ++ extraCols.map(col)
+    sigs
+      .select((kept :+ explode(array(blockStructs.toIndexedSeq: _*)).as("bb")): _*)
+      .select((kept ++ Seq(col("bb.blk").as("blk"), col("bb.bucket").as("bucket"))): _*)
   }
 
   /** INCREMENTAL hamming near-dup over 64-bit signatures — the 39c store
@@ -1164,34 +1133,18 @@ object Dedup {
     val newBase = newSigs.filter(col(sigCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val oldBase = existingSigs.filter(col("sig").isNotNull)
-      .select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig"))
-      .join(broadcast(newBase.select("id")), Seq("id"), "left_anti")
-    val allSigs = oldBase.withColumn("__new", lit(false))
-      .unionByName(newBase.withColumn("__new", lit(true)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val blocks = pigeonholeBlocks(maxHamming + 1)
-    val blockStructs = blocks.zipWithIndex.map { case ((off, width), i) =>
-      struct(lit(i).as("blk"),
-        expr(s"shiftrightunsigned(sig, $off) & ${blockMask(width)}L").as("bucket"))
-    }
+    val allSigs = storeUnionBatch(
+      existingSigs.filter(col("sig").isNotNull)
+        .select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig")),
+      newBase, newBase.select("id"))
     // the 8-byte sig rides through the blocking (the hammingPairsOverSigs
     // r12 shape): the bucket join emits both sigs, the exact-hamming
     // verify runs inside the join stage, and only survivors reach the
-    // distinct — no candidate-stream distinct, no sig fetch joins
-    val blocked = allSigs
-      .select(col("id"), col("sig"), col("__new"),
-        explode(array(blockStructs.toIndexedSeq: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("__new"), col("bb.blk").as("blk"),
-        col("bb.bucket").as("bucket"))
-    val capped =
-      if (maxBucketSize > 0) {
-        val hot = blocked.groupBy(col("blk"), col("bucket"))
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") > maxBucketSize)
-          .select(col("blk"), col("bucket"))
-        blocked.join(broadcast(hot), Seq("blk", "bucket"), "left_anti")
-      } else blocked
+    // distinct — no candidate-stream distinct, no sig fetch joins. Only
+    // the hot-bucket cap is shared with incrementalCandidatePairs.
+    val capped = capHotBuckets(
+      pigeonholeBuckets(allSigs, maxHamming, extraCols = Seq("__new")),
+      Seq("blk", "bucket"), maxBucketSize)
     val result = capped.filter(col("__new"))
       .select(col("id").as("__nid"), col("sig").as("__nsig"),
         col("blk"), col("bucket"))
@@ -1298,9 +1251,8 @@ object Dedup {
     * generated: candidates pair a NEW id with any colliding id, so per
     * batch the work is O(batch buckets + collisions), not O(corpus²).
     * Re-delivered ids are idempotent (store rows for arriving ids drop
-    * before the union). The hot-bucket cap sees store + batch TOGETHER
-    * (aggregate + broadcast anti-join — a window would shuffle every
-    * banded store row per snapshot; same rule as the minhash form).
+    * before the union, [[supersede]]). The hot-bucket cap sees store +
+    * batch TOGETHER ([[capHotBuckets]]; same rule as the minhash form).
     */
   def embeddingNearDupIncremental(
       newVecs: DataFrame, idCol: String, vecCol: String,
@@ -1312,12 +1264,10 @@ object Dedup {
     requireIntegralId(existingVecs, "id")
     val newBase = newVecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val oldBase = existingVecs.select(col("id").cast("long").as("id"), col("vec"))
-      .join(broadcast(newBase.select("id")), Seq("id"), "left_anti")
     // one persisted all-vectors frame: bucketing + both verify joins
-    val allBase = oldBase.withColumn("__new", lit(false))
-      .unionByName(newBase.withColumn("__new", lit(true)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val allBase = storeUnionBatch(
+      existingVecs.select(col("id").cast("long").as("id"), col("vec")), newBase,
+      newBase.select("id"))
     val bucketed = allBase
       .withColumn("bks",
         GraftFunctions.hyperplaneLshMulti(col("vec"), numBits, numTables, seed))
@@ -1626,7 +1576,9 @@ object Dedup {
     * the one-shot operator is EXACT, caps included), and history text is
     * fetched only for the bounded candidate ids. Batch-internal
     * duplicates surface too (both sides new). `history` supplies old
-    * texts for extension; ids must be disjoint from the batch's.
+    * texts for extension. A batch id that is also in history supersedes
+    * its store anchors and history text ([[supersede]]): the result is
+    * the one-shot pass over (history minus the batch's ids) ∪ batch.
     *
     * 100 TB shape: per batch the work is one anchor pass over the BATCH,
     * one broadcast hash-probe of the store (no store shuffle — measured
@@ -1647,8 +1599,8 @@ object Dedup {
     GraftFunctions.ensure(newDocs.sparkSession)
     val newBase = newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + two text joins
+    val newIds = newBase.select("id")
     val newAnchors = spanAnchorStore(newBase, "id", "text", minLen, k)
-      .withColumn("__new", lit(true))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // store probe: only hashes the batch actually carries can pair with
     // it. The batch hash set BROADCASTS (a micro-batch's distinct anchor
@@ -1659,8 +1611,8 @@ object Dedup {
     // broadcast probe is additionally bucket-local.
     val probed = store.select(col("id"), col("pos"), col("h"))
       .join(broadcast(newAnchors.select("h").distinct()), Seq("h"), "left_semi")
-      .withColumn("__new", lit(false))
-    val combined = newAnchors.unionByName(probed).persist(StorageLevel.MEMORY_AND_DISK)
+    // a re-delivered id's store anchors are superseded in the union
+    val combined = storeUnionBatch(probed, newAnchors, newIds)
     val capped =
       if (maxHashDocs > 0 || maxHashOccurrences > 0) {
         // identical counts to the one-shot pass: for any hash present in
@@ -1680,8 +1632,8 @@ object Dedup {
       .filter(col("id_a") < col("id_b") && (col("na") || col("nb")))
       .select("id_a", "id_b", "pa", "pb")
       .distinct()
-    val texts = newBase.unionByName(
-      history.select(col(idCol).cast("long").as("id"), col(textCol).as("text")))
+    val texts = newBase.unionByName(supersede(
+      history.select(col(idCol).cast("long").as("id"), col(textCol).as("text")), newIds))
     // text fetch in the O(batch + matches) shape: the bounded candidate
     // id set BROADCASTS into one map-side scan of the text table (same
     // reasoning as the store probe above — post-distinct stats can push
@@ -1869,29 +1821,54 @@ object Dedup {
       .drop("__cut", "__rs_id")
   }
 
-  /** Distinct candidate pairs (id_a < id_b) from a narrow blocked frame
-    * (id + bucket key columns): one shuffle on the bucket key, optional
-    * bucket-size cap (window count reuses the same partitioning) so a
-    * degenerate bucket can't go quadratic.
+  /** The supersede rule of every incremental verb: `store` without the
+    * rows whose `id` is in `batchIds` (one `id` column), dropped by one
+    * broadcast anti-join — a re-delivered document is compared under its
+    * new content only, never against its own stale rows. The store
+    * streams through the join and never shuffles.
     */
-  /** Shared candidate machinery of the INCREMENTAL near-dup forms
-    * ([[hammingNearDupIncremental]], [[embeddingNearDupIncremental]]):
-    * given (id, __new, bucketCols...) rows over store ∪ batch, cap hot
-    * buckets over the COMBINED population (aggregate + broadcast
-    * anti-join — a window would shuffle every store row per snapshot),
-    * then pair every NEW id with its colliding ids — old-vs-old never
-    * generated — deduped id-only.
+  private[operators] def supersede(store: DataFrame, batchIds: DataFrame): DataFrame =
+    store.join(broadcast(batchIds), Seq("id"), "left_anti")
+
+  /** store ∪ batch for the incremental near-dup forms: the [[supersede]]d
+    * store rows tagged `__new = false`, the batch rows `__new = true`,
+    * persisted once — the blocking and the verify read this one frame,
+    * so the store is scanned once per snapshot. The caller unpersists it.
+    */
+  private def storeUnionBatch(store: DataFrame, batch: DataFrame,
+      batchIds: DataFrame): DataFrame =
+    supersede(store, batchIds).withColumn("__new", lit(false))
+      .unionByName(batch.withColumn("__new", lit(true)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The hot-bucket cap of the incremental forms, over the COMBINED
+    * store ∪ batch population (a boilerplate bucket split across them
+    * must not dodge the cap): an aggregate + broadcast anti-join, NOT a
+    * window — a window would shuffle every store row per snapshot, while
+    * the aggregate partial-combines to distinct-bucket cardinality and
+    * the hot list (buckets over the cap) is tiny by construction.
+    */
+  private def capHotBuckets(
+      blocked: DataFrame, bucketCols: Seq[String], maxBucketSize: Int): DataFrame =
+    if (maxBucketSize > 0) {
+      val hot = blocked.groupBy(bucketCols.map(col): _*)
+        .agg(count(lit(1)).as("__bsz"))
+        .filter(col("__bsz") > maxBucketSize)
+        .select(bucketCols.map(col): _*)
+      blocked.join(broadcast(hot), bucketCols, "left_anti")
+    } else blocked
+
+  /** Candidate pairs of the INCREMENTAL near-dup forms
+    * ([[minhashLshIncremental]], [[embeddingNearDupIncremental]]): given
+    * (id, __new, bucketCols...) rows over [[storeUnionBatch]], cap hot
+    * buckets ([[capHotBuckets]]), then pair every NEW id with its
+    * colliding ids — old-vs-old never generated — deduped id-only.
+    * [[hammingNearDupIncremental]] shares the cap but keeps its own pair
+    * join, which carries the signatures and verifies inside it.
     */
   private def incrementalCandidatePairs(
       blocked: DataFrame, bucketCols: Seq[String], maxBucketSize: Int): DataFrame = {
-    val capped =
-      if (maxBucketSize > 0) {
-        val hot = blocked.groupBy(bucketCols.map(col): _*)
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") > maxBucketSize)
-          .select(bucketCols.map(col): _*)
-        blocked.join(broadcast(hot), bucketCols, "left_anti")
-      } else blocked
+    val capped = capHotBuckets(blocked, bucketCols, maxBucketSize)
     capped.filter(col("__new"))
       .select((col("id").as("__nid") +: bucketCols.map(col)): _*)
       .join(capped.select((col("id").as("__mid") +: bucketCols.map(col)): _*),
@@ -1902,6 +1879,11 @@ object Dedup {
       .distinct()
   }
 
+  /** Distinct candidate pairs (id_a < id_b) from a narrow blocked frame
+    * (id + bucket key columns): one shuffle on the bucket key, optional
+    * bucket-size cap (window count reuses the same partitioning) so a
+    * degenerate bucket can't go quadratic.
+    */
   private def candidatePairs(
       blocked: DataFrame, bucketCols: Seq[String], maxBucketSize: Int): DataFrame = {
     val capped =

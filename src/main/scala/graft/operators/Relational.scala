@@ -42,7 +42,7 @@ object Relational {
     * 100 TB a blocking-bounded-but-huge candidate stream still lands in
     * exactly one wave of potentially multi-GB tasks. Replacing the five
     * hand-placed pins with one session-level posture is open (ROADMAP
-    * item 2); a stats-derived size is not the answer — Catalyst size
+    * item 3); a stats-derived size is not the answer — Catalyst size
     * estimates for self-join candidate frames are join-products that
     * overshoot by orders of magnitude.
     */
@@ -288,9 +288,7 @@ object Relational {
     // EXACT shared count from the full gram arrays, so results are
     // identical to the all-shared-grams join — blocking on every shared
     // gram was a quadratic blow-up on hot grams (73.9 s → s at sf0.1 on
-    // the part-name corpus). ⌈t·sz⌉ in exact integer arithmetic
-    // ((num·sz + den − 1) div den) — the rational threshold never
-    // touches a double.
+    // the part-name corpus).
     // persisted: both prefix streams consume it (small — one row per
     // distinct gram)
     val freq = lg.select(col("g")).unionAll(rg.select(col("g")))
@@ -307,31 +305,15 @@ object Relational {
       val capped =
         if (maxGramFreq <= 0) withFreq
         else withFreq.filter(col("__df") <= capDf)
-      val byStr = Window.partitionBy(s"${side}_id").orderBy(col("__df"), col("g"))
       capped
-        .withColumn(s"${side}_rk", row_number().over(byStr))
-        .filter(col(s"${side}_rk") <= col(s"${side}_grams") -
-          expr(s"($thresholdNum * ${side}_grams + $thresholdDen - 1) div $thresholdDen") + 1)
+        .withColumn(s"${side}_rk", gramRank(s"${side}_id", "__df"))
+        .filter(col(s"${side}_rk") <= prefixBound(s"${side}_grams", thresholdNum, thresholdDen))
         .select(col(s"${side}_id"), col("g"), col(s"${side}_rk"),
           col(s"${side}_grams").as(s"${side}_sz"))
     }
-    // PAIRWISE-TIGHT prefix filter at collision time: the per-side prefix
-    // above covers the worst admissible partner (size t·sz, overlap bound
-    // ⌈t·sz⌉), but once BOTH sizes are known the true overlap bound is
-    // α = ⌈t/(1+t)·(sz_l+sz_r)⌉ ≥ ⌈t·sz⌉ — for same-size strings
-    // substantially larger (t=0.8, 58/58: α=52 vs 47, tight prefix 7 vs
-    // 12). A qualifying pair's α-prefixes must intersect, so any pair
-    // whose collisions all sit beyond the tight prefix on either side
-    // cannot reach the threshold and drops BEFORE the expensive
-    // verification join — on template-heavy corpora (hot grams, low
-    // prefix selectivity) this prunes most of the candidate explosion
-    // at the cost of one integer comparison per collision.
-    val alpha = expr(
-      s"($thresholdNum * (l_sz + r_sz) + $thresholdNum + $thresholdDen - 1) " +
-        s"div ($thresholdNum + $thresholdDen)")
+    // pairwise-tight α prefix filter at collision time
     val cand0 = prefix(lg, "l").join(prefix(rg, "r"), Seq("g"))
-      .filter(col("l_rk") <= col("l_sz") - alpha + 1 &&
-        col("r_rk") <= col("r_sz") - alpha + 1)
+      .filter(withinPairPrefixes("l", "r", thresholdNum, thresholdDen))
     // self mode: mirrored candidates and self-pairs drop HERE, before
     // the exact-intersect verification — each undirected pair once
     val cand = (if (rightOpt.isEmpty) cand0.filter(col("l_id") < col("r_id"))
@@ -340,18 +322,60 @@ object Relational {
       // CPU-dense exact-intersect verify below: pin one wave of tasks
       // (AQE would coalesce the ~16 B/pair stream to 1-2 tasks)
       .repartition(verifyFanout(left))
-    val shared = size(array_intersect(col("l_gs"), col("r_gs"))).cast("long")
-    val union = col("l_grams") + col("r_grams") - col("shared_grams")
-    val pairs = cand
-      .join(lArr, Seq("l_id"))
-      .join(rArr, Seq("r_id"))
-      .withColumn("shared_grams", shared)
+    val pairs = jaccardVerify(cand.join(lArr, Seq("l_id")).join(rArr, Seq("r_id")),
+        "l", "r", thresholdNum, thresholdDen)
+      .select("l_id", "r_id", "shared_grams", "l_grams", "r_grams", "jaccard_e6")
+    (pairs, Seq(lArr, freq) ++ rCached)
+  }
+
+  /** Each gram's rank within its string under the global (df, g) order —
+    * the order every PPJoin prefix is cut from. */
+  private def gramRank(idCol: String, dfCol: String): Column =
+    row_number().over(Window.partitionBy(idCol).orderBy(col(dfCol), col("g")))
+
+  /** PPJoin's per-string prefix length sz − ⌈t·sz⌉ + 1, with ⌈t·sz⌉ in
+    * exact integer arithmetic ((num·sz + den − 1) div den) — the
+    * rational threshold never touches a double. */
+  private def prefixBound(szCol: String, thresholdNum: Long, thresholdDen: Long): Column =
+    expr(s"$szCol - (($thresholdNum * $szCol + $thresholdDen - 1) " +
+      s"div $thresholdDen) + 1")
+
+  /** PAIRWISE-TIGHT prefix filter at collision time, over the `a`/`b`
+    * sides' `_rk` and `_sz` columns: the per-side prefix covers the
+    * worst admissible partner (size t·sz, overlap bound ⌈t·sz⌉), but
+    * once BOTH sizes are known the true overlap bound is
+    * α = ⌈t/(1+t)·(sz_a+sz_b)⌉ ≥ ⌈t·sz⌉ — for same-size strings
+    * substantially larger (t=0.8, 58/58: α=52 vs 47, tight prefix 7 vs
+    * 12). A qualifying pair's α-prefixes must intersect, so a pair whose
+    * collisions all sit beyond the tight prefix on either side cannot
+    * reach the threshold and drops BEFORE the expensive verification —
+    * on template-heavy corpora (hot grams, low prefix selectivity) this
+    * prunes most of the candidate explosion at the cost of one integer
+    * comparison per collision. */
+  private def withinPairPrefixes(a: String, b: String,
+      thresholdNum: Long, thresholdDen: Long): Column = {
+    val alpha = expr(
+      s"($thresholdNum * (${a}_sz + ${b}_sz) + $thresholdNum + $thresholdDen - 1) " +
+        s"div ($thresholdNum + $thresholdDen)")
+    col(s"${a}_rk") <= col(s"${a}_sz") - alpha + 1 &&
+      col(s"${b}_rk") <= col(s"${b}_sz") - alpha + 1
+  }
+
+  /** The PPJoin verify over pairs carrying both sides' gram arrays
+    * (`a_gs`, `a_grams`, `b_gs`, `b_grams`): the EXACT shared count from
+    * the full arrays, the jaccard decision as integer
+    * cross-multiplication (shared·den ≥ num·union) and `jaccard_e6` =
+    * floor(10⁶·shared/union). */
+  private def jaccardVerify(pairs: DataFrame, a: String, b: String,
+      thresholdNum: Long, thresholdDen: Long): DataFrame = {
+    val union = col(s"${a}_grams") + col(s"${b}_grams") - col("shared_grams")
+    pairs
+      .withColumn("shared_grams",
+        size(array_intersect(col(s"${a}_gs"), col(s"${b}_gs"))).cast("long"))
       .filter(col("shared_grams") * thresholdDen >= lit(thresholdNum) * union)
       .withColumn("jaccard_e6", expr(
         "CAST((CAST(shared_grams AS decimal(38,0)) * 1000000) div " +
-          "(l_grams + r_grams - shared_grams) AS long)"))
-      .select("l_id", "r_id", "shared_grams", "l_grams", "r_grams", "jaccard_e6")
-    (pairs, Seq(lArr, freq) ++ rCached)
+          s"(${a}_grams + ${b}_grams - shared_grams) AS long)"))
   }
 
   /** GRAM-INDEX STORE for [[fuzzyJoinIncremental]]: the PPJoin index
@@ -378,13 +402,12 @@ object Relational {
         explode(col("h_gs")).as("g"))
     val freq = ex.groupBy("g").agg(count(lit(1)).as("df"))
     val joined = ex.join(freq, Seq("g"))
-    val byStr = Window.partitionBy("id").orderBy(col("df"), col("g"))
     val ranked =
       if (maxGramFreq <= 0L)
-        joined.withColumn("rk", row_number().over(byStr).cast("long"))
+        joined.withColumn("rk", gramRank("id", "df").cast("long"))
       else
         joined.filter(col("df") <= maxGramFreq)
-          .withColumn("rk", row_number().over(byStr).cast("long"))
+          .withColumn("rk", gramRank("id", "df").cast("long"))
           .unionByName(joined.filter(col("df") > maxGramFreq)
             .withColumn("rk", lit(null).cast("long")))
     ranked.select("id", "g", "df", "rk", "sz")
@@ -394,10 +417,12 @@ object Relational {
     * `history ∪ newDf` in which at least one side is a batch row —
     * history is never re-grammed (its persisted [[fuzzyGramStore]] is
     * probed instead) and old-vs-old pairs are never generated (the
-    * minhashLshIncremental contract). Batch ids must be disjoint from
-    * history's. With `maxGramFreq = 0` the output equals
-    * `fuzzySelfPairs(history ∪ newDf, ...)` restricted to
-    * batch-involving pairs EXACTLY: verification recomputes the exact
+    * minhashLshIncremental contract). A batch id that is also in the
+    * store supersedes its store rows ([[Dedup.supersede]]): it pairs
+    * under its new string only, never with itself. With
+    * `maxGramFreq = 0` the output equals `fuzzySelfPairs((history minus
+    * the batch's ids) ∪ newDf, ...)` restricted to batch-involving pairs
+    * EXACTLY: verification recomputes the exact
     * shared count from full gram arrays, and blocking recall is total
     * on both paths — the store's frozen (df, g) order is a fixed total
     * order shared by both sides of every old↔new candidate, which is
@@ -428,11 +453,6 @@ object Relational {
       thresholdNum: Long, thresholdDen: Long,
       n: Int = 3, maxGramFreq: Long = 0L): DataFrame = {
     require(thresholdDen > 0 && thresholdNum >= 0, "threshold must be >= 0")
-    // sz − ⌈t·sz⌉ + 1 in exact integer arithmetic (the fuzzyJoinImpl
-    // prefix bound), parameterized by the size column's name
-    def prefixBound(szName: String): Column =
-      expr(s"$szName - (($thresholdNum * $szName + $thresholdDen - 1) " +
-        s"div $thresholdDen) + 1")
     val bArr = hashedGramArrays(newDf, idCol, strCol, "b", n)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bg = bArr.select(col("b_id"), col("b_grams"),
@@ -449,28 +469,26 @@ object Relational {
       .na.fill(0L, Seq("df"))
     val bFreq = if (maxGramFreq <= 0L) bFreq0
       else bFreq0.filter(col("df") <= maxGramFreq)
-    val byStr = Window.partitionBy("b_id").orderBy(col("df"), col("g"))
     val bPrefix = bFreq
-      .withColumn("b_rk", row_number().over(byStr).cast("long"))
-      .filter(col("b_rk") <= prefixBound("b_grams"))
+      .withColumn("b_rk", gramRank("b_id", "df").cast("long"))
+      .filter(col("b_rk") <= prefixBound("b_grams", thresholdNum, thresholdDen))
       .select(col("b_id"), col("g"), col("b_rk"),
         col("b_grams").as("b_sz"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // store prefix: rk filter is map-side; only grams in the BATCH
     // prefix can collide, so their broadcast set prunes the store scan
-    // (and the store's buckets, when bucketed by g) pre-join
-    val hPrefix = store
-      .filter(col("rk").isNotNull && col("rk") <= prefixBound("sz"))
+    // (and the store's buckets, when bucketed by g) pre-join. The rows
+    // of a re-delivered batch id are superseded first, so its stale
+    // grams pair with nothing (and never with itself)
+    val hPrefix = Dedup.supersede(store, newDf.select(lcol(idCol).cast("long").as("id")))
+      .filter(col("rk").isNotNull &&
+        col("rk") <= prefixBound("sz", thresholdNum, thresholdDen))
       .join(broadcast(bPrefix.select("g").distinct()), Seq("g"), "left_semi")
       .select(col("id").as("id_o"), col("g"), col("rk").as("o_rk"),
         col("sz").as("o_sz"))
     // pairwise-tight α at collision time — the fuzzyJoinImpl filter
-    val alpha = expr(
-      s"($thresholdNum * (o_sz + b_sz) + $thresholdNum + $thresholdDen - 1) " +
-        s"div ($thresholdNum + $thresholdDen)")
     val cand = hPrefix.join(bPrefix, Seq("g"))
-      .filter(col("o_rk") <= col("o_sz") - alpha + 1 &&
-        col("b_rk") <= col("b_sz") - alpha + 1)
+      .filter(withinPairPrefixes("o", "b", thresholdNum, thresholdDen))
       .select("id_o", "b_id").distinct()
     // text fetch in the O(batch + matches) shape: bounded old candidate
     // ids broadcast into one map-side history scan, re-grammed ONCE
@@ -480,23 +498,16 @@ object Relational {
       .join(broadcast(cand.select(col("id_o").as("id")).distinct()), Seq("id"))
     val oArr = hashedGramArrays(fetched, "id", "str", "o", n)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val shared = size(array_intersect(col("o_gs"), col("b_gs"))).cast("long")
     // the verify join is NOT hinted: the fetched-old array frame is
     // bounded by the CANDIDATE set, which on dense corpora can approach
     // the history (a forced broadcast OOM'd the 500k probe — gram
     // arrays are wide); AQE broadcasts it when it is actually small
-    val mixedPairs = cand
-      // CPU-dense exact-intersect verify: pin one wave of tasks (the
-      // fuzzyJoinImpl rule — AQE coalesces the pair stream by bytes)
-      .repartition(verifyFanout(newDf))
-      .join(oArr, col("id_o") === col("o_id"))
-      .join(bArr, Seq("b_id"))
-      .withColumn("shared_grams", shared)
-      .filter(col("shared_grams") * thresholdDen >=
-        lit(thresholdNum) * (col("o_grams") + col("b_grams") - col("shared_grams")))
-      .withColumn("jaccard_e6", expr(
-        "CAST((CAST(shared_grams AS decimal(38,0)) * 1000000) div " +
-          "(o_grams + b_grams - shared_grams) AS long)"))
+    val mixedPairs = jaccardVerify(cand
+        // CPU-dense exact-intersect verify: pin one wave of tasks (the
+        // fuzzyJoinImpl rule — AQE coalesces the pair stream by bytes)
+        .repartition(verifyFanout(newDf))
+        .join(oArr, col("id_o") === col("o_id"))
+        .join(bArr, Seq("b_id")), "o", "b", thresholdNum, thresholdDen)
       .select(least(col("o_id"), col("b_id")).as("l_id"),
         greatest(col("o_id"), col("b_id")).as("r_id"),
         col("shared_grams"),
@@ -1558,29 +1569,6 @@ object Relational {
     bigFiltered.join(small, on, how)
   }
 
-  /** EDIT-DISTANCE SELF-JOIN (PassJoin, Li et al. VLDB 2011): every
-    * unordered pair of rows whose strings are within `maxDist`
-    * Levenshtein edits — the typo/OCR-variant record-linkage metric
-    * [[fuzzyJoin]]'s gram-jaccard deliberately is not (jaccard is
-    * order-insensitive and length-normalized; edit distance counts the
-    * actual keystrokes).
-    *
-    * Blocking is the PassJoin pigeonhole: split every string into
-    * `maxDist + 1` segments (balanced convention: with q = k+1, base =
-    * len div q, rem = len mod q, the FIRST q−rem segments take `base`
-    * chars and the last rem take base+1 — both engines and both sides
-    * derive the same layout from the length alone). If ed(s, t) ≤ k, at
-    * least one segment of s is untouched by any edit, so it occurs in t
-    * VERBATIM at a position shifted by at most k. Candidates are
-    * therefore an equi-join of index-side segments against probe-side
-    * substrings enumerated per (source length ±k, segment, ±k
-    * position) — O((2k+1)²·(k+1)) probes per row, all map-side — then
-    * one exact `levenshtein` verification per deduped candidate pair.
-    * No all-pairs anywhere; strings shorter than k+1 chars (no
-    * non-empty segments) fall back to a bounded short×short block.
-    *
-    * Returns `(id_a, id_b, dist)`, id_a < id_b, each pair once.
-    */
   /** SORTED-NEIGHBORHOOD Jaro-Winkler self-join (Hernández & Stolfo,
     * SIGMOD 1995): all record pairs within `window` positions of each
     * other in the (string, id) sort order whose Jaro-Winkler similarity
@@ -1691,76 +1679,127 @@ object Relational {
       .select("id_a", "id_b", "sx", "jw_e6")
   }
 
+  /** EDIT-DISTANCE SELF-JOIN (PassJoin, Li et al. VLDB 2011): every
+    * unordered pair of rows whose strings are within `maxDist`
+    * Levenshtein edits — the typo/OCR-variant record-linkage metric
+    * [[fuzzyJoin]]'s gram-jaccard deliberately is not (jaccard is
+    * order-insensitive and length-normalized; edit distance counts the
+    * actual keystrokes).
+    *
+    * Blocking is the PassJoin pigeonhole: split every string into
+    * `maxDist + 1` segments (balanced convention: with q = k+1, base =
+    * len div q, rem = len mod q, the FIRST q−rem segments take `base`
+    * chars and the last rem take base+1 — both engines and both sides
+    * derive the same layout from the length alone). If ed(s, t) ≤ k, at
+    * least one segment of s is untouched by any edit, so it occurs in t
+    * VERBATIM at a position shifted by at most k. Candidates are
+    * therefore an equi-join of index-side segments against probe-side
+    * substrings enumerated per (source length ±k, segment, ±k
+    * position) — O((2k+1)²·(k+1)) probes per row, all map-side — then
+    * one exact `levenshtein` verification per deduped candidate pair.
+    * No all-pairs anywhere; strings shorter than k+1 chars (no
+    * non-empty segments) fall back to a bounded short×short block.
+    *
+    * Returns `(id_a, id_b, dist)`, id_a < id_b, each pair once.
+    */
   def editDistanceJoin(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int): DataFrame = {
-    require(maxDist >= 1 && maxDist <= 8,
-      s"maxDist must be in [1, 8] (got $maxDist)")
+    requireMaxDist(maxDist)
     val k = maxDist
-    val q = k + 1
-    val s = df.select(col(idCol).cast("long").as("id"),
-        col(strCol).cast("string").as("str"))
-      .where(col("id").isNotNull && col("str").isNotNull)
-      .withColumn("len", length(col("str")))
-    val long = s.filter(col("len") >= q)
-    val short = s.filter(col("len") < q)
-    // index side: the k+1 segments of each string (its own layout)
-    val segStart = (l: String, i: String) =>
-      s"1 + $i * ($l div $q) + greatest($i - ($q - $l % $q), 0)"
-    val segLen = (l: String, i: String) =>
-      s"($l div $q) + IF($i >= $q - $l % $q, 1, 0)"
-    val index = long.select(col("id").as("id_a"), col("len").as("src_len"),
-      explode(expr(
-        s"""transform(sequence(0, $k), i -> struct(
-           |  i AS seg_idx,
-           |  substring(str, ${segStart("len", "i")}, ${segLen("len", "i")}) AS seg))"""
-          .stripMargin)).as("p"))
-      .select(col("id_a"), col("src_len"), col("p.seg_idx"), col("p.seg"))
-    // probe side: substrings of t at every (source length, segment,
-    // shifted position) a within-k partner could have indexed
-    val probes = long.select(col("id").as("id_b"), col("str"), col("len"),
-      explode(expr(
-        s"""flatten(transform(
-           |  IF(len + $k >= $q, sequence(greatest(len - $k, $q), len + $k), array()),
-           |  L -> flatten(transform(sequence(0, $k), i ->
-           |    transform(
-           |      IF(least(${segStart("L", "i")} + $k,
-           |               len - ${segLen("L", "i")} + 1) >=
-           |         greatest(${segStart("L", "i")} - $k, 1),
-           |        sequence(greatest(${segStart("L", "i")} - $k, 1),
-           |                 least(${segStart("L", "i")} + $k,
-           |                       len - ${segLen("L", "i")} + 1)),
-           |        array()),
-           |      p -> struct(L AS src_len, i AS seg_idx,
-           |        substring(str, p, ${segLen("L", "i")}) AS seg))))))"""
-          .stripMargin)).as("pr"))
-      .select(col("id_b"), col("pr.src_len"), col("pr.seg_idx"), col("pr.seg"))
-    val candLong = index.join(probes, Seq("src_len", "seg_idx", "seg"))
+    val s = editBase(df, idCol, strCol)
+    val candLong = segmentIndex(s, k, "id_a")
+      .join(segmentProbes(s, k, "id_b"), Seq("src_len", "seg_idx", "seg"))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
     // short strings (< k+1 chars): any within-k partner has len <= 2k —
     // a bounded block, not a corpus cross join; emitted as (min, max) so
     // the pair is covered whichever side holds the smaller id
-    val candShort = short.select(col("id").as("__x"))
+    val candShort = s.filter(col("len") < k + 1).select(col("id").as("__x"))
       .crossJoin(s.filter(col("len") <= 2L * k).select(col("id").as("__y")))
       .where(col("__x") =!= col("__y"))
       .select(least(col("__x"), col("__y")).as("id_a"),
         greatest(col("__x"), col("__y")).as("id_b"))
-    val texts = s.select(col("id"), col("str"))
-    candLong.unionByName(candShort).distinct()
-      // CPU-dense exact-levenshtein verify: pin one wave of tasks (the
-      // fuzzyJoinImpl rule — AQE coalesces the pair stream by bytes)
-      .repartition(verifyFanout(df))
-      .join(texts.select(col("id").as("id_a"), col("str").as("__sa")), "id_a")
-      .join(texts.select(col("id").as("id_b"), col("str").as("__sb")), "id_b")
-      // bounded 3-arg levenshtein (r13): banded O(k*n) DP with early
-      // exit instead of the full O(n^2) table; returns -1 above the
-      // threshold, the exact distance otherwise — surviving rows and
-      // their dist values are identical to the unbounded form
-      .withColumn("dist",
-        levenshtein(col("__sa"), col("__sb"), k).cast("long"))
-      .where(col("dist") >= 0 && col("dist") <= k)
+    editVerify(candLong.unionByName(candShort).distinct(), "id_a", s, "id_b", s, k)
       .select("id_a", "id_b", "dist")
   }
+
+  private def requireMaxDist(maxDist: Int): Unit =
+    require(maxDist >= 1 && maxDist <= 8,
+      s"maxDist must be in [1, 8] (got $maxDist)")
+
+  /** The PassJoin input shape: `(id, str, len)` of every row whose id
+    * and string are both non-null. */
+  private def editBase(df: DataFrame, idCol: String, strCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+        col(strCol).cast("string").as("str"))
+      .where(col("id").isNotNull && col("str").isNotNull)
+      .withColumn("len", length(col("str")))
+
+  /** PassJoin's segment layout, as SQL over a length `l` and a segment
+    * number `i` for q = k+1 segments: segment i's 1-based start and its
+    * length. Index and probe derive the same layout from the length
+    * alone. */
+  private def segStart(q: Int, l: String, i: String): String =
+    s"1 + $i * ($l div $q) + greatest($i - ($q - $l % $q), 0)"
+
+  private def segLen(q: Int, l: String, i: String): String =
+    s"($l div $q) + IF($i >= $q - $l % $q, 1, 0)"
+
+  /** The PassJoin index: `(idName, src_len, seg_idx, seg)`, the k+1
+    * segments of every string of at least k+1 chars. */
+  private def segmentIndex(base: DataFrame, k: Int, idName: String): DataFrame = {
+    val q = k + 1
+    base.filter(col("len") >= q)
+      .select(col("id").as(idName), col("len").as("src_len"),
+        explode(expr(
+          s"""transform(sequence(0, $k), i -> struct(
+             |  i AS seg_idx,
+             |  substring(str, ${segStart(q, "len", "i")}, ${segLen(q, "len", "i")}) AS seg))"""
+            .stripMargin)).as("p"))
+      .select(col(idName), col("src_len"), col("p.seg_idx"), col("p.seg"))
+  }
+
+  /** The PassJoin probes: `(idName, src_len, seg_idx, seg)`, the
+    * substrings of every string of at least k+1 chars at every (source
+    * length, segment, shifted position) a within-k partner could have
+    * indexed. All map-side. */
+  private def segmentProbes(base: DataFrame, k: Int, idName: String): DataFrame = {
+    val q = k + 1
+    base.filter(col("len") >= q)
+      .select(col("id").as(idName), col("str"), col("len"),
+        explode(expr(
+          s"""flatten(transform(
+             |  IF(len + $k >= $q, sequence(greatest(len - $k, $q), len + $k), array()),
+             |  L -> flatten(transform(sequence(0, $k), i ->
+             |    transform(
+             |      IF(least(${segStart(q, "L", "i")} + $k,
+             |               len - ${segLen(q, "L", "i")} + 1) >=
+             |         greatest(${segStart(q, "L", "i")} - $k, 1),
+             |        sequence(greatest(${segStart(q, "L", "i")} - $k, 1),
+             |                 least(${segStart(q, "L", "i")} + $k,
+             |                       len - ${segLen(q, "L", "i")} + 1)),
+             |        array()),
+             |      p -> struct(L AS src_len, i AS seg_idx,
+             |        substring(str, p, ${segLen(q, "L", "i")}) AS seg))))))"""
+            .stripMargin)).as("pr"))
+      .select(col(idName), col("pr.src_len"), col("pr.seg_idx"), col("pr.seg"))
+  }
+
+  /** The PassJoin verify: the candidate pairs (`a`, `b`) pinned to one
+    * wave of tasks (the fuzzyJoinImpl rule — AQE coalesces the pair
+    * stream by bytes), each side's string joined on from its `(id, str)`
+    * frame as `__sa` / `__sb`, and the pairs within `k` edits kept with
+    * their `dist`. The 3-argument levenshtein is the banded O(k·n) DP
+    * with early exit: it returns -1 above `k` and the exact distance
+    * otherwise, so surviving rows and their dist values are those of
+    * the unbounded form. */
+  private def editVerify(cand: DataFrame, a: String, aText: DataFrame,
+      b: String, bText: DataFrame, k: Int): DataFrame =
+    cand.repartition(verifyFanout(cand))
+      .join(aText.select(col("id").as(a), col("str").as("__sa")), a)
+      .join(bText.select(col("id").as(b), col("str").as("__sb")), b)
+      .withColumn("dist", levenshtein(col("__sa"), col("__sb"), k).cast("long"))
+      .where(col("dist") >= 0 && col("dist") <= k)
 
   /** PassJoin SEGMENT STORE for [[editDistanceJoinIncremental]]: the
     * index side of [[editDistanceJoin]] materialized as a narrow frame —
@@ -1774,34 +1813,19 @@ object Relational {
     */
   def editSegmentStore(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int): DataFrame = {
-    require(maxDist >= 1 && maxDist <= 8,
-      s"maxDist must be in [1, 8] (got $maxDist)")
-    val k = maxDist
-    val q = k + 1
-    val segStart = (l: String, i: String) =>
-      s"1 + $i * ($l div $q) + greatest($i - ($q - $l % $q), 0)"
-    val segLen = (l: String, i: String) =>
-      s"($l div $q) + IF($i >= $q - $l % $q, 1, 0)"
-    df.select(col(idCol).cast("long").as("id"),
-        col(strCol).cast("string").as("str"))
-      .where(col("id").isNotNull && col("str").isNotNull)
-      .withColumn("len", length(col("str")))
-      .filter(col("len") >= q)
-      .select(col("id"), col("len").as("src_len"),
-        explode(expr(
-          s"""transform(sequence(0, $k), i -> struct(
-             |  i AS seg_idx,
-             |  substring(str, ${segStart("len", "i")}, ${segLen("len", "i")}) AS seg))"""
-            .stripMargin)).as("p"))
-      .select(col("id"), col("src_len"), col("p.seg_idx"), col("p.seg"))
+    requireMaxDist(maxDist)
+    segmentIndex(editBase(df, idCol, strCol), maxDist, "id")
   }
 
   /** INCREMENTAL edit-distance join: all within-`maxDist` Levenshtein
     * pairs of `history ∪ newDf` in which at least one side is a batch
     * row — history is never re-segmented (its persisted
     * [[editSegmentStore]] is probed instead) and old-vs-old pairs are
-    * never generated (the minhashLshIncremental contract). Batch ids
-    * must be disjoint from history's.
+    * never generated (the minhashLshIncremental contract). A batch id
+    * that is also in history supersedes it: its history and store rows
+    * drop ([[Dedup.supersede]]), so the result equals [[editDistanceJoin]]
+    * over (history minus the batch's ids) ∪ batch, restricted to pairs
+    * with a batch side.
     *
     * new×new pairs come from the plain [[editDistanceJoin]] over the
     * batch alone. new×old pairs apply the PassJoin pigeonhole with
@@ -1824,50 +1848,22 @@ object Relational {
   def editDistanceJoinIncremental(
       newDf: DataFrame, idCol: String, strCol: String,
       store: DataFrame, history: DataFrame, maxDist: Int): DataFrame = {
-    require(maxDist >= 1 && maxDist <= 8,
-      s"maxDist must be in [1, 8] (got $maxDist)")
+    requireMaxDist(maxDist)
     val k = maxDist
     val q = k + 1
-    val newBase = newDf.select(col(idCol).cast("long").as("id"),
-        col(strCol).cast("string").as("str"))
-      .where(col("id").isNotNull && col("str").isNotNull)
-      .withColumn("len", length(col("str")))
+    val newBase = editBase(newDf, idCol, strCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val oldBase = history.select(col(idCol).cast("long").as("id"),
-        col(strCol).cast("string").as("str"))
-      .where(col("id").isNotNull && col("str").isNotNull)
-      .withColumn("len", length(col("str")))
-    // probe side: the batch's substrings at every (source length,
-    // segment, shifted position) a within-k HISTORY partner could have
-    // indexed — the editDistanceJoin probe enumeration verbatim
-    val segStart = (l: String, i: String) =>
-      s"1 + $i * ($l div $q) + greatest($i - ($q - $l % $q), 0)"
-    val segLen = (l: String, i: String) =>
-      s"($l div $q) + IF($i >= $q - $l % $q, 1, 0)"
-    val probes = newBase.filter(col("len") >= q)
-      .select(col("id").as("id_n"), col("str"), col("len"),
-        explode(expr(
-          s"""flatten(transform(
-             |  IF(len + $k >= $q, sequence(greatest(len - $k, $q), len + $k), array()),
-             |  L -> flatten(transform(sequence(0, $k), i ->
-             |    transform(
-             |      IF(least(${segStart("L", "i")} + $k,
-             |               len - ${segLen("L", "i")} + 1) >=
-             |         greatest(${segStart("L", "i")} - $k, 1),
-             |        sequence(greatest(${segStart("L", "i")} - $k, 1),
-             |                 least(${segStart("L", "i")} + $k,
-             |                       len - ${segLen("L", "i")} + 1)),
-             |        array()),
-             |      p -> struct(L AS src_len, i AS seg_idx,
-             |        substring(str, p, ${segLen("L", "i")}) AS seg))))))"""
-            .stripMargin)).as("pr"))
-      .select(col("id_n"), col("pr.src_len"), col("pr.seg_idx"), col("pr.seg"))
+    // every batch id supersedes, null or short strings included
+    val newIds = newDf.select(col(idCol).cast("long").as("id"))
+    val oldBase = Dedup.supersede(editBase(history, idCol, strCol), newIds)
+    val probes = segmentProbes(newBase, k, "id_n")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // store probe: only keys the batch actually enumerates can pair with
     // it; the distinct key set broadcasts so the store NEVER shuffles
     // (post-distinct stats can push the planner to sort-merge otherwise —
     // the sharedSpansIncremental lesson, measured 2× there)
-    val pruned = store.select(col("id"), col("src_len"), col("seg_idx"), col("seg"))
+    val pruned = Dedup.supersede(
+        store.select(col("id"), col("src_len"), col("seg_idx"), col("seg")), newIds)
       .join(broadcast(probes.select("src_len", "seg_idx", "seg").distinct()),
         Seq("src_len", "seg_idx", "seg"), "left_semi")
     val candCross = pruned
@@ -1893,17 +1889,7 @@ object Relational {
     // set can approach full history on dense corpora (driver OOM risk —
     // fuzzyJoinIncremental removed the same hint after a measured OOM at
     // the 500k probe); AQE still broadcasts when it is actually small
-    val mixedPairs = mixed
-      // CPU-dense exact-levenshtein verify: pin one wave of tasks (the
-      // fuzzyJoinImpl rule — AQE coalesces the pair stream by bytes)
-      .repartition(verifyFanout(newDf))
-      .join(fetchedOld.select(col("id").as("id_o"), col("str").as("__so")),
-        "id_o")
-      .join(newBase.select(col("id").as("id_n"), col("str").as("__sn")), "id_n")
-      // bounded 3-arg levenshtein (r13) — the editDistanceJoin rule
-      .withColumn("dist",
-        levenshtein(col("__so"), col("__sn"), k).cast("long"))
-      .where(col("dist") >= 0 && col("dist") <= k)
+    val mixedPairs = editVerify(mixed, "id_o", fetchedOld, "id_n", newBase, k)
       .select(least(col("id_o"), col("id_n")).as("id_a"),
         greatest(col("id_o"), col("id_n")).as("id_b"), col("dist"))
     val newNew = editDistanceJoin(newBase, "id", "str", k)

@@ -504,12 +504,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .filter(col("doc_id") >= 250)
       .collect().map(_.toSeq).toSet
     assert(inc === full)
-    // the AQE shuffle fallback is result-identical
-    val incShuffle = Dedup.paragraphDedupIncremental(b, "doc_id", "text",
-      Dedup.paragraphHashStore(h, "doc_id", "text", sep = " "), sep = " ",
-      broadcastProbe = false)
-      .collect().map(_.toSeq).toSet
-    assert(incShuffle === full)
   }
 
   test("paragraphDedupIncremental probes the store without shuffling it") {
@@ -925,6 +919,36 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(got === full)
     // the incremental contract: no old-vs-old pair is ever generated
     assert(!got.exists(p => p._1 < 1000L && p._2 < 1000L))
+  }
+
+  test("sharedSpansIncremental: a re-delivered history id supersedes its anchors and text") {
+    import spark.implicits._
+    val history = docs.select("doc_id", "text").filter(col("doc_id") < 60)
+    val clones = history.filter(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 1000L).as("doc_id"),
+        concat(lit("BATCH CLONE PREFIX >> "), col("text")).as("text"))
+    val hist = history.collect().map(r => r.getLong(0) -> r.getString(1))
+      .filter(_._2 != null).sortBy(_._1)
+    // x has a clone in the batch; its changed text is another doc's
+    val (x, xText) = hist.find(_._1 % 7 == 0).get
+    val other = hist.find(p => p._1 % 7 != 0).get._2
+    def spanSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toSet
+    val store = Dedup.spanAnchorStore(history, "doc_id", "text", minLen = 40, k = 20)
+    Seq(xText, "CHANGED >> " + other).foreach { text =>
+      val batch = clones.unionByName(Seq((x, text)).toDF("doc_id", "text"))
+      val got = spanSet(Dedup.sharedSpansIncremental(batch, "doc_id", "text",
+        store, history, minLen = 40, k = 20, maxHashDocs = 0, maxHashOccurrences = 0))
+      val expect = spanSet(Dedup.sharedSpans(
+          history.filter(col("doc_id") =!= x).unionByName(batch), "doc_id", "text",
+          minLen = 40, k = 20, maxHashDocs = 0, maxHashOccurrences = 0)
+        .filter(col("id_a") >= 1000L || col("id_b") >= 1000L ||
+          col("id_a") === x || col("id_b") === x))
+      assert(got === expect,
+        s"missing: ${(expect diff got).take(3)}; extra: ${(got diff expect).take(3)}")
+      assert(got.exists(p => p._1 == x || p._2 == x), "the re-delivered id has spans")
+    }
   }
 
   test("sharedSpansIncremental cap parity: per-hash counts match the one-shot pass") {

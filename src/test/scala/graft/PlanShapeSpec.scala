@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, SparkPlan,
+  TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
@@ -150,6 +152,28 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     phases.foreach { p =>
       val reused = nodes(p).collect { case r: ReusedExchangeExec => r.child }
       assert(reused.exists(_.isInstanceOf[ShuffleExchangeExec]), skeleton(p))
+    }
+  }
+
+  test("one-shot segment dedup plans no store probe") {
+    // paragraphDedup and cdcDedup are their incremental forms over an
+    // empty hash store, whose semi- and anti-join must plan away
+    val docs = wh.loadTable("documents")
+    val oneShots: Seq[(String, DataFrame)] = Seq(
+      "paragraphDedup" -> Dedup.paragraphDedup(docs, "doc_id", "text", sep = " "),
+      "cdcDedup" -> Dedup.cdcDedup(docs, "doc_id", "text"))
+    oneShots.foreach { case (name, df) =>
+      val plans = plansRunBy(df.collect()).map(_._2)
+      assert(plans.size === 1, name)
+      val plan = plans.head
+      val probes = nodes(plan).collect {
+        case j: BaseJoinExec if j.joinType == LeftSemi || j.joinType == LeftAnti => j
+      }
+      assert(probes.isEmpty, s"$name: no store probe${skeleton(plan)}")
+      assert(!nodes(plan).exists(_.isInstanceOf[LocalTableScanExec]),
+        s"$name: no empty-store scan${skeleton(plan)}")
+      assert(!nodes(plan).exists(_.output.exists(_.name == "__store_h")),
+        s"$name: no __store_h column${skeleton(plan)}")
     }
   }
 

@@ -1046,6 +1046,60 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
       "one-shot has old-old pairs the incremental must not emit")
   }
 
+  test("editDistanceJoinIncremental: a re-delivered history id supersedes its old row") {
+    // batch id 1 is also in history (and its segment store): once with
+    // its stored text, once with a changed one. Its old row must neither
+    // pair with its new row nor with other batch rows.
+    val k = 3
+    val rows = IncrementalFixtures.editRows
+    val isNew = IncrementalFixtures.editIsNew _
+    val hist = rows.filterNot(r => isNew(r._1))
+    val store = Relational.editSegmentStore(hist.toDF("id", "s"), "id", "s", maxDist = k)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    Seq(hist.find(_._1 == 1L).get._2, rows.find(_._1 == 31L).get._2 + "h").foreach { text =>
+      val batch = rows.filter(r => isNew(r._1)) :+ (1L -> text)
+      val ids = batch.map(_._1).toSet
+      val got = pairs(Relational.editDistanceJoinIncremental(
+        batch.toDF("id", "s"), "id", "s", store, hist.toDF("id", "s"), maxDist = k))
+      assert(!got.keySet.exists(p => p._1 == p._2), s"self-pair for $text")
+      val expect = pairs(Relational.editDistanceJoin(
+          (hist.filterNot(r => ids(r._1)) ++ batch).toDF("id", "s"), "id", "s", maxDist = k))
+        .filter { case ((a, b), _) => ids(a) || ids(b) }
+      assert(got === expect, s"$text — missing: ${(expect.keySet diff got.keySet).take(5)}; " +
+        s"extra: ${(got.keySet diff expect.keySet).take(5)}")
+      assert(expect.keySet.exists(p => p._1 == 1L || p._2 == 1L), "the re-delivered id pairs")
+    }
+  }
+
+  test("fuzzyJoinIncremental: a re-delivered store id supersedes its old grams") {
+    // batch id 1 is also in history (and its gram store): once with its
+    // stored string, once with another cluster's. Its old grams must
+    // neither pair with its new row nor with other batch rows.
+    val rows = IncrementalFixtures.fuzzyRows
+    val isNew = IncrementalFixtures.fuzzyIsNew _
+    val hist = rows.filterNot(r => isNew(r._1))
+    val store = Relational.fuzzyGramStore(hist.toDF("id", "s"), "id", "s", n = 3)
+    def row(r: Row) = (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5))
+    Seq(hist.find(_._1 == 1L).get._2, rows.find(_._1 == 15L).get._2).foreach { text =>
+      val batch = rows.filter(r => isNew(r._1)) :+ (1L -> text)
+      val ids = batch.map(_._1).toSet
+      val got = Relational.fuzzyJoinIncremental(batch.toDF("id", "s"), "id", "s",
+          store, hist.toDF("id", "s"), thresholdNum = 4, thresholdDen = 5, n = 3)
+        .collect().map(row).toSet
+      assert(!got.exists(p => p._1 == p._2), s"self-pair for $text")
+      val expect = Relational.fuzzySelfPairs(
+          (hist.filterNot(r => ids(r._1)) ++ batch).toDF("id", "s"), "id", "s",
+          thresholdNum = 4, thresholdDen = 5, n = 3, maxGramFreq = 0)
+        .collect().map(row).toSet
+        .filter(p => ids(p._1) || ids(p._2))
+      assert(got === expect,
+        s"$text — missing: ${(expect diff got).take(3)}; extra: ${(got diff expect).take(3)}")
+      assert(expect.exists(p => p._1 == 1L || p._2 == 1L), "the re-delivered id pairs")
+    }
+  }
+
   test("groupingSets: exact sets only, one Expand pass (no per-set scan)") {
     val df = Seq(("a", "x", "P", 1L), ("a", "y", "P", 2L), ("b", "x", "Q", 4L))
       .toDF("f", "s", "m", "v")
