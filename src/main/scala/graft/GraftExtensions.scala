@@ -6,15 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.GraftFunctions
 
-/** Cluster-deployment function injection: set
+/** SQL names for graft's functions in every session of a deployment: set
   * `spark.sql.extensions=graft.GraftExtensions` on spark-submit and every
-  * graft function (graft_minhash, graft_cosine, graft_topk, …) is available
-  * in pure SQL in every session — no application-side `ensure` call.
+  * model-free graft function (graft_minhash, graft_cosine, graft_topk, …)
+  * is available in pure SQL — for SQL-only clients such as JDBC/Thrift or
+  * notebooks pointed at a shared cluster.
   *
-  * Delegates to the exact builder list `GraftFunctions.ensure` uses, so the
-  * two registration surfaces cannot diverge. (Interactive sessions created
-  * through GraftSession use `ensure`; this route covers SQL-only clients —
-  * JDBC/Thrift, notebooks pointed at a shared cluster.)
+  * Injects the same builder list `GraftFunctions.ensure` registers in one
+  * session, so the two SQL surfaces cannot diverge. Scala code needs
+  * neither: the Column API in [[graft.functions.GraftFunctions]] builds the
+  * expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit =

@@ -744,7 +744,6 @@ object SparkEntry {
     * separates cleanly. Seeded → deterministic; rows-only check + spec.
     */
   private def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     Dedup.minhashLsh(wh(s, dir).loadTable("documents"), "doc_id", "text",
         shingleWidth = 3, numPerms = 128, bands = 32, threshold = 0.5)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("est_jaccard"))
@@ -756,7 +755,6 @@ object SparkEntry {
     * 10× slower at 50k docs and degrade to silent recall loss at scale.
     */
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     Dedup.simhash(wh(s, dir).loadTable("documents"), "doc_id", "text",
         shingleWidth = 3, maxHamming = 3)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
@@ -767,7 +765,6 @@ object SparkEntry {
     * FNV hashing), grounded by the weighted spec in DedupSpec.
     */
   private def qDedupSimhashWeighted(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     Dedup.simhash(wh(s, dir).loadTable("documents"), "doc_id", "text",
         shingleWidth = 3, maxHamming = 3, weighted = true)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
@@ -790,7 +787,6 @@ object SparkEntry {
     * blocks) only at test scale, where it is cheap.
     */
   private def qSimhashRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val exact = exactPairsGroundTruth(s, dir, "word")
     val found = Dedup.simhash(docs, "doc_id", "text",
@@ -812,7 +808,6 @@ object SparkEntry {
     * goes red after a data refresh, suspect a band miss before a bug.
     */
   private def qMinhashRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val exact = exactPairsGroundTruth(s, dir, "word")
     val found = Dedup.minhashLsh(docs, "doc_id", "text",
@@ -833,7 +828,6 @@ object SparkEntry {
     * [[qMinhashRecall]]).
     */
   private def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents").select("doc_id", "text")
     val batch = docs.filter(col("doc_id") % 25 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -872,7 +866,6 @@ object SparkEntry {
     * cluster on both engines, bit-exact.
     */
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val pairs = Dedup.ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.7)
     Dedup.dedupByClusters(docs.select(col("doc_id")), "doc_id", pairs)
@@ -889,7 +882,6 @@ object SparkEntry {
     * ([[operators.Dedup.splitByCluster]]).
     */
   private def qSplitByCluster(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val pairs = Dedup.ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.7)
     Dedup.splitByCluster(docs.select(col("doc_id")), "doc_id", pairs,
@@ -906,7 +898,6 @@ object SparkEntry {
     * a (score desc, id) window ([[operators.Dedup.dedupByClustersKeepBest]]).
     */
   private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val pairs = Dedup.ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.7)
     Dedup.dedupByClustersKeepBest(
@@ -934,7 +925,6 @@ object SparkEntry {
     * (margin ≈ 5 standard errors of 128 perms; band-miss prob ≈ 1.4e-4).
     */
   private def qWminhashRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val exact = exactPairsGroundTruth(s, dir, "word_tf")
     val found = Dedup.icwsLsh(docs, "doc_id", "text",
@@ -962,7 +952,6 @@ object SparkEntry {
     * scale, where bucket flooding is cheap.
     */
   private def qSimhashWeightedRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val exact = exactPairsGroundTruth(s, dir, "word_tf")
     val found = Dedup.simhash(docs, "doc_id", "text",
@@ -982,7 +971,6 @@ object SparkEntry {
     * agree exactly.
     */
   private def qDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     Dedup.decontaminate(
         docs.filter(col("doc_id") % 20 =!= 0),
@@ -1017,7 +1005,6 @@ object SparkEntry {
     * must flag exactly the docs the relational semi-join flags.
     */
   private def qDecontaminateMap(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val model = Dedup.trainDecontaminationSet(
       docs.filter(col("doc_id") % 20 === 0), "text", n = 3)
@@ -1037,7 +1024,6 @@ object SparkEntry {
     * deterministic order, so the composed contract stays bit-exact.
     */
   private def qPipelineE2e(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     // NULL texts excluded EXPLICITLY on both sides: the oracle's
     // unnest(string_split(NULL)) would silently drop such a doc from its
     // inner metric join while Spark's count would keep it — pin the
@@ -1081,7 +1067,6 @@ object SparkEntry {
     * composed contract stays bit-exact.
     */
   private def qStreamPipeline(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents").filter(col("text").isNotNull)
     val model = Dedup.trainDecontaminationSet(
       TextAnalysis.normalize(docs.filter(col("doc_id") % 20 === 0), "text"),
@@ -1164,7 +1149,6 @@ object SparkEntry {
     * fluency doubles must all match bit-for-bit.
     */
   private def qLmFluency(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val model = TextAnalysis.trainLmModel(docs, "text",
       maxVocab = 4096, maxBigrams = 65536)
@@ -1188,7 +1172,6 @@ object SparkEntry {
     * must match bit-for-bit at every SF.
     */
   private def qQualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val sample = TextAnalysis.gopherFilter(docs.filter(col("text").isNotNull), "text")
       .filter(col("doc_id") % 2 === 0)
@@ -1272,7 +1255,6 @@ object SparkEntry {
       .orderBy("vec_a", "vec_b")
 
   private def qDedupEmbedding(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     // τ=0.4 matches this corpus's actual similarity profile (it has no
     // planted ≥0.9 near-dups). At such a low τ hyperplane-LSH needs short
     // codes × many tables for recall (6×32 ⇒ ~0.87 at cos 0.4); a real
@@ -1384,7 +1366,6 @@ object SparkEntry {
     * contract output.
     */
   private def qImageNeardup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val ids = wh(s, dir).loadTable("documents")
       .select("doc_id").filter(col("doc_id") < 64)
     val aug = ids.unionByName(ids.select((col("doc_id") + 76800L).as("doc_id")))
@@ -1408,7 +1389,6 @@ object SparkEntry {
     * pure id arithmetic; no audio decoding in the oracle.
     */
   private def qAudioNeardup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val ids = wh(s, dir).loadTable("documents")
       .select("doc_id").filter(col("doc_id") < 64)
     val aug = ids.unionByName(ids.select((col("doc_id") + 65536L).as("doc_id")))
@@ -1431,7 +1411,6 @@ object SparkEntry {
     * no decoding in the oracle.
     */
   private def qVideoNeardup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val ids = wh(s, dir).loadTable("documents")
       .select("doc_id").filter(col("doc_id") < 64)
     val aug = ids.unionByName(ids.select((col("doc_id") + 76800L).as("doc_id")))
@@ -1477,7 +1456,6 @@ object SparkEntry {
     * chunk substring ([[operators.TextAnalysis.cdcChunkDocs]]).
     */
   private def qCdcChunks(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     TextAnalysis.cdcChunkDocs(wh(s, dir).loadTable("documents"),
         "doc_id", "text", maskBits = 6, minLen = 1, maxLen = 1000000)
       .orderBy("doc_id", "chunk_idx")
@@ -1490,7 +1468,6 @@ object SparkEntry {
     * zero-separator reconstruction ([[operators.Dedup.cdcDedup]]).
     */
   private def qCdcDedup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     Dedup.cdcDedup(wh(s, dir).loadTable("documents"), "doc_id", "text",
         maskBits = 6, minLen = 1, maxLen = 1000000)
       .orderBy("doc_id")
@@ -1503,7 +1480,6 @@ object SparkEntry {
     * the oracle replays ([[operators.Dedup.cdcDedupIncremental]]).
     */
   private def qCdcIncremental(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val store = Dedup.cdcHashStore(docs.filter(col("doc_id") < 250),
       "doc_id", "text", maskBits = 6, minLen = 1, maxLen = 1000000)
@@ -1576,7 +1552,6 @@ object SparkEntry {
     * (query, pred_label, votes) row must hash-match.
     */
   private def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val emb = wh(s, dir).loadTable("embeddings")
     Similarity.knnClassify(emb, "vec_id", "embedding", "label",
         emb.filter(col("vec_id") < 32), "vec_id", "embedding", k = 7)
@@ -1730,7 +1705,6 @@ object SparkEntry {
     * all three SFs, margin per pair ≈ 3e-4 as in [[qLshTopkRecall]]).
     */
   private def qEmbeddingRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val emb = wh(s, dir).loadTable("embeddings")
     val clones = emb.filter(col("vec_id") < 16)
       .select((lit(2000000L) + col("vec_id")).as("vec_id"),
@@ -1765,7 +1739,6 @@ object SparkEntry {
     * all three SFs). Deterministic: seeded k-means + literal assignment.
     */
   private def qSemanticRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val emb = wh(s, dir).loadTable("embeddings")
     val clones = emb.filter(col("vec_id") < 16)
       .select((lit(2000000L) + col("vec_id")).as("vec_id"),
@@ -1961,7 +1934,6 @@ object SparkEntry {
     * bit-for-bit (caps off: exactness is the contract under test).
     */
   private def qSubstringIncremental(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents").select("doc_id", "text")
     val batch = docs.filter(col("doc_id") % 25 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -2634,7 +2606,6 @@ object SparkEntry {
     * spec-gated (deterministic bits, fixture-measured).
     */
   private def qDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents")
     val eval = docs.filter(col("doc_id") % 20 === 0)
     val rest = docs.filter(col("doc_id") % 20 =!= 0)
@@ -2724,7 +2695,6 @@ object SparkEntry {
     * ([[operators.Retrieval.retrievalMetrics]]).
     */
   private def qRetrievalMetrics(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents").select("doc_id", "lang")
     val queries = docs.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("qid"), col("lang").as("qlang"))
@@ -3078,7 +3048,6 @@ object SparkEntry {
     * [[qEmbeddingRecall]] margin).
     */
   private def qEmbeddingIncremental(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val emb = wh(s, dir).loadTable("embeddings")
     val clones = emb.filter(col("vec_id") < 16)
       .select((lit(2000000L) + col("vec_id")).as("vec_id"),
@@ -3112,7 +3081,6 @@ object SparkEntry {
     * any radius.
     */
   private def qSimhashIncremental(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.ensure(s)
     val docs = wh(s, dir).loadTable("documents").select("doc_id", "text", "n_chars")
     val store = Dedup.simhashSignatures(docs, "doc_id", "text")
     val batch = docs.filter(col("doc_id") % 25 === 0 && col("n_chars") >= 100)
@@ -3906,7 +3874,6 @@ object SparkEntry {
     * ([[functions.Kernels.soundex]]).
     */
   private def qSoundex(s: SparkSession, dir: String): DataFrame = {
-    functions.GraftFunctions.ensure(s)
     wh(s, dir).loadTable("documents")
       .where(col("text").isNotNull)
       .select(col("doc_id"), expr("split_part(text, ' ', 1)").as("w"))
@@ -3922,7 +3889,6 @@ object SparkEntry {
     * jaro_winkler_similarity ([[operators.Relational.soundexJoin]]).
     */
   private def qSoundexJoin(s: SparkSession, dir: String): DataFrame = {
-    functions.GraftFunctions.ensure(s)
     val words = wh(s, dir).loadTable("documents")
       .where(col("text").isNotNull)
       .select(expr("split_part(text, ' ', 1)").as("w")).distinct()
@@ -3946,7 +3912,6 @@ object SparkEntry {
     * ([[functions.Kernels.jaroWinkler]]).
     */
   private def qJaroWinkler(s: SparkSession, dir: String): DataFrame = {
-    functions.GraftFunctions.ensure(s)
     val d = wh(s, dir).loadTable("documents")
       .select(col("doc_id"), expr("substring(text, 1, 30)").as("p"))
     val l = d.select(col("doc_id").as("id_a"), col("p").as("pa"))
@@ -3954,8 +3919,8 @@ object SparkEntry {
       col("doc_id").as("id_b"), col("p").as("pb"))
     l.join(r, "id_a")
       .select(col("id_a"), col("id_b"),
-        expr("CAST(round(graft_jaro_winkler(pa, pb) * 1000000) AS bigint)")
-          .as("jw_e6"))
+        round(GraftFunctions.jaroWinkler(col("pa"), col("pb")) * 1000000)
+          .cast("bigint").as("jw_e6"))
       .orderBy("id_a")
   }
 

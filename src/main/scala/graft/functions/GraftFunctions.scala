@@ -2,21 +2,25 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{lit, nullif}
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 
-/** Registers graft's native expressions in a session's function registry
-  * and exposes a typed Column API on top of `call_function` (the stable
-  * public route from registered functions to Columns in Spark 4).
-  *
-  * Registration is idempotent and cheap; operators call `ensure(spark)`
-  * before building plans.
+/** graft's native expressions, reachable two ways:
+  *  - the Column API below builds each expression case class directly, so
+  *    a column needs nothing registered in its session, and a trained model
+  *    or sketch it carries lives exactly as long as the plans that hold it;
+  *  - SQL text names them through the function registry: `ensure(spark)`
+  *    registers [[builders]] in one session, [[graft.GraftExtensions]] in
+  *    every session of a deployment. A model or sketch is not a SQL value,
+  *    so the functions that take one have no SQL name.
   */
 object GraftFunctions {
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _)  => v
-    case Literal(v: Long, _) => v.toInt
+    case Literal(v: Long, _) if v.isValidInt => v.toInt
+    case Literal(v: Long, _) =>
+      throw new IllegalArgumentException(s"$what must fit in an int, got $v")
     case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
   }
 
@@ -90,6 +94,7 @@ object GraftFunctions {
         MisraGriesAgg(args.head, intLit(args(1), "k")).toAggregateExpression())
   )
 
+  /** Registers [[builders]] in `spark`'s function registry, for SQL text. */
   def ensure(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
@@ -99,374 +104,172 @@ object GraftFunctions {
 
   // Column API ------------------------------------------------------------
 
-  import org.apache.spark.sql.functions.lit
-
   def wordNgrams(text: Column, n: Int): Column =
-    call_function("graft_word_ngrams", text, lit(n))
+    column(WordNgramHashes(expression(text), n))
 
   def charNgrams(text: Column, n: Int): Column =
-    call_function("graft_char_ngrams", text, lit(n))
+    column(CharNgramHashes(expression(text), n))
 
   def minhash(tokens: Column, numPerms: Int, seed: Long): Column =
-    call_function("graft_minhash", tokens, lit(numPerms), lit(seed))
+    column(MinHashSig(expression(tokens), numPerms, seed))
 
   /** Occurrence-indexed gram hashes: set ops on these = TF-weighted ops. */
   def wordNgramsTf(text: Column, n: Int): Column =
-    call_function("graft_word_ngrams_tf", text, lit(n))
+    column(WordNgramHashesTf(expression(text), n))
 
   /** ICWS weighted-MinHash signature of raw text (Ioffe, ICDM 2010). */
   def icwsMinhash(text: Column, n: Int, numPerms: Int, seed: Long): Column =
-    call_function("graft_icws_minhash", text, lit(n), lit(numPerms), lit(seed))
+    column(IcwsMinHashSig(expression(text), n, numPerms, seed))
 
   def simhash64(tokens: Column): Column =
-    call_function("graft_simhash64", tokens)
+    column(SimHash64(expression(tokens)))
 
   /** TF-weighted simhash of raw text (word n-grams, occurrences vote). */
   def simhashTf(text: Column, n: Int): Column =
-    call_function("graft_simhash_tf", text, lit(n))
+    column(SimHashTf(expression(text), n))
 
   def cosineSim(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
+    column(CosineSim(expression(a), expression(b)))
 
   /** Jaro-Winkler similarity, byte-exact with DuckDB's builtin. */
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("graft_jaro_winkler", a, b)
+    column(JaroWinkler(expression(a), expression(b)))
 
   /** RAKE top-k keyword phrases (en stopwords), sorted. */
   def rakeTopK(text: Column, k: Int): Column =
-    call_function("graft_rake_topk", text, lit(k))
+    column(RakeKeywords(expression(text), k, LangIdHits.defaultStopwords("en")))
 
   def hyperplaneLshMulti(vec: Column, numBits: Int, numTables: Int, seed: Long): Column =
-    call_function("graft_hyperplane_lsh_multi", vec, lit(numBits), lit(numTables), lit(seed))
+    column(HyperplaneLshMulti(expression(vec), numBits, numTables, seed))
 
   /** [h_en, h_de, h_fr, h_es, h_zh] stopword/CJK hit counts, one scan. */
   def langIdHits(text: Column): Column =
-    call_function("graft_langid_hits", text)
+    column(LangIdHits(expression(text), LangIdHits.defaultLangs))
 
   /** [n_chars, n_tokens, stop_hits, punct_hits], one scan. */
   def qualityCounts(text: Column): Column =
-    call_function("graft_quality_counts", text)
+    column(QualityCounts(expression(text), LangIdHits.defaultStopwords("en")))
 
   /** NFC + lowercase + whitespace-collapse canonical text, one scan. */
   def normalizeText(text: Column): Column =
-    call_function("graft_normalize", text)
+    column(NormalizeText(expression(text)))
 
   /** American Soundex phonetic code; NULL when no ASCII letters. */
   def soundex(text: Column): Column =
-    org.apache.spark.sql.functions.nullif(
-      call_function("graft_soundex", text), lit(""))
+    nullif(column(SoundexCode(expression(text))), lit(""))
 
   /** struct(n_words, n_distinct_words, n_grams, n_distinct_grams,
     * top_word, top_word_cnt, top_ngram, top_ngram_cnt), one scan.
     */
   def repetitionStats(text: Column, n: Int): Column =
-    call_function("graft_repetition_stats", text, lit(n))
+    column(RepetitionStats(expression(text), n))
 
   def winnow(text: Column, k: Int, w: Int): Column =
-    call_function("graft_winnow", text, lit(k), lit(w))
+    column(WinnowFingerprint(expression(text), k, w))
 
   /** selected winnowing minima with 1-based positions:
     * array<struct<pos:int, h:bigint>>.
     */
   def winnowPos(text: Column, k: Int, w: Int): Column =
-    call_function("graft_winnow_pos", text, lit(k), lit(w))
+    column(WinnowPositions(expression(text), k, w))
 
   /** maximal exact shared span around a candidate anchor:
     * struct(start_a, start_b, len), null if the anchor k-grams differ.
     */
   def extendMatch(ta: Column, tb: Column, pa: Column, pb: Column, k: Int): Column =
-    call_function("graft_extend_match", ta, tb, pa, pb, lit(k))
+    column(ExtendMatch(expression(ta), expression(tb), expression(pa), expression(pb), k))
 
   /** top-k (id, score) pairs per group, best first. */
   def topK(id: Column, score: Column, k: Int): Column =
-    call_function("graft_topk", id, score, lit(k))
+    column(TopKAgg(expression(id), expression(score), k).toAggregateExpression())
 
   def heavyHitters(item: Column, k: Int): Column =
-    call_function("graft_heavy_hitters", item, lit(k))
+    column(MisraGriesAgg(expression(item), k).toAggregateExpression())
 
-  /** BPE token count under a trained model. The model is a parameter
-    * object (not SQL-expressible), so each model registers its own
-    * function name. Names come from an identity map + counter —
-    * guaranteed unique per live model (identityHashCode alone can
-    * collide, which would silently rebind an earlier model's column) and
-    * idempotent per model instance. Note the registry entry's builder
-    * closure strongly references the model for the session's lifetime:
-    * a session training unboundedly many models accumulates one registry
-    * entry each — train once and reuse the model, as q_token_bpe does.
+  // Model- and sketch-parameterized functions. The model rides in the
+  // expression (a codegen reference object), so these have no SQL name.
+
+  /** BPE token count under a trained [[BpeModel]]. */
+  def bpeCount(text: Column, model: BpeModel): Column =
+    column(BpeCount(expression(text), model))
+
+  /** TF-IDF top-k terms under a trained [[DfModel]]. */
+  def tfidfTopK(text: Column, model: DfModel, k: Int): Column =
+    column(TfidfTopK(expression(text), model, k))
+
+  /** Gram-set membership under a trained [[GramSetModel]]; the shingling
+    * parameters live in the model.
     */
-  def bpeCount(spark: SparkSession, text: Column, model: BpeModel): Column = {
-    val name = bpeNames.synchronized {
-      bpeNames.computeIfAbsent(model, _ => s"graft_bpe_count_${bpeCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => BpeCount(args.head, model), "scala_udf")
-    call_function(name, text)
-  }
+  def gramSetContains(text: Column, model: GramSetModel): Column =
+    column(GramSetContains(expression(text), model))
 
-  private val bpeNames = new java.util.IdentityHashMap[BpeModel, String]()
-  private val bpeCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** TF-IDF top-k terms under a trained [[DfModel]] — model-parameterized
-    * function, registered per model instance exactly like [[bpeCount]]
-    * (same uniqueness and lifetime caveats).
+  /** Semantic (embedding-cosine) hit count under a trained [[VecSetModel]]
+    * at threshold `tE3`/1000.
     */
-  def tfidfTopK(spark: SparkSession, text: Column, model: DfModel, k: Int): Column = {
-    // k is part of the NAME (not just the builder closure): re-using one
-    // model with another k must not silently rebind a previously built
-    // column's registration (call_function resolves at analysis time).
-    val name = dfNames.synchronized {
-      dfNames.computeIfAbsent(model, _ => s"graft_tfidf_topk_${dfCounter.incrementAndGet()}")
-    } + s"_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => TfidfTopK(args.head, model, k), "scala_udf")
-    call_function(name, text)
-  }
-
-  private val dfNames = new java.util.IdentityHashMap[DfModel, String]()
-  private val dfCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Gram-set membership under a trained [[GramSetModel]] —
-    * model-parameterized registration exactly like [[bpeCount]] (same
-    * uniqueness and lifetime caveats). The shingling parameters live IN
-    * the model, so one registered name per model suffices.
-    */
-  def gramSetContains(spark: SparkSession, text: Column,
-      model: GramSetModel): Column = {
-    val name = gramSetNames.synchronized {
-      gramSetNames.computeIfAbsent(model,
-        _ => s"graft_gram_set_contains_${gramSetCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => GramSetContains(args.head, model),
-      "scala_udf")
-    call_function(name, text)
-  }
-
-  private val gramSetNames = new java.util.IdentityHashMap[GramSetModel, String]()
-  private val gramSetCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Semantic (embedding-cosine) hit count under a trained
-    * [[VecSetModel]] — model-parameterized registration exactly like
-    * [[gramSetContains]]; the threshold is part of the registered name
-    * so differently-thresholded probes of one model cannot collide.
-    */
-  def semanticHits(spark: SparkSession, vec: Column,
-      model: VecSetModel, tE3: Int): Column = {
-    val base = vecSetNames.synchronized {
-      vecSetNames.computeIfAbsent(model,
-        _ => s"graft_semantic_hits_${vecSetCounter.incrementAndGet()}")
-    }
-    val name = s"${base}_t$tE3"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => SemanticHitCount(args.head, model, tE3),
-      "scala_udf")
-    call_function(name, vec)
-  }
-
-  private val vecSetNames = new java.util.IdentityHashMap[VecSetModel, String]()
-  private val vecSetCounter = new java.util.concurrent.atomic.AtomicLong()
+  def semanticHits(vec: Column, model: VecSetModel, tE3: Int): Column =
+    column(SemanticHitCount(expression(vec), model, tE3))
 
   /** Blocklist statistics `[total_hits, distinct, first_pos, first_pat]`
-    * under a trained Aho-Corasick [[AcModel]] — model-parameterized
-    * registration exactly like [[gramSetContains]].
+    * under a trained Aho-Corasick [[AcModel]].
     */
-  def blocklistStats(spark: SparkSession, text: Column,
-      model: AcModel): Column = {
-    val name = acNames.synchronized {
-      acNames.computeIfAbsent(model,
-        _ => s"graft_blocklist_stats_${acCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => BlocklistStats(args.head, model),
-      "scala_udf")
-    call_function(name, text)
-  }
+  def blocklistStats(text: Column, model: AcModel): Column =
+    column(BlocklistStats(expression(text), model))
 
-  private val acNames = new java.util.IdentityHashMap[AcModel, String]()
-  private val acCounter = new java.util.concurrent.atomic.AtomicLong()
+  /** Bloom gram membership under a trained [[GramBloomModel]]. */
+  def gramBloomContains(text: Column, model: GramBloomModel): Column =
+    column(GramBloomContains(expression(text), model))
 
-  /** Bloom gram membership under a trained [[GramBloomModel]] —
-    * model-parameterized registration exactly like [[gramSetContains]].
+  /** Long-key Bloom membership probe. The filter is usually a per-call
+    * sketch (one per [[graft.operators.Relational.bloomPrefilteredJoin]]);
+    * it is freed with the last plan that holds it.
     */
-  def gramBloomContains(spark: SparkSession, text: Column,
-      model: GramBloomModel): Column = {
-    val name = gramBloomNames.synchronized {
-      gramBloomNames.computeIfAbsent(model,
-        _ => s"graft_gram_bloom_contains_${gramBloomCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => GramBloomContains(args.head, model),
-      "scala_udf")
-    call_function(name, text)
-  }
+  def bloomContainsLong(keyHash: Column,
+      bloom: org.apache.spark.util.sketch.BloomFilter): Column =
+    column(BloomContainsLong(expression(keyHash), bloom))
 
-  private val gramBloomNames = new java.util.IdentityHashMap[GramBloomModel, String]()
-  private val gramBloomCounter = new java.util.concurrent.atomic.AtomicLong()
+  /** Bigram-LM fluency under a trained [[LmModel]]. */
+  def lmFluency(text: Column, model: LmModel): Column =
+    column(LmFluencyScore(expression(text), model))
 
-  /** Long-key Bloom membership probe — sketch-parameterized registration
-    * like [[gramBloomContains]], but with BOUNDED retention: unlike the
-    * few long-lived trained gram models, these filters are PER-CALL
-    * throwaways (one fresh ~MB sketch per [[graft.operators.Relational.bloomPrefilteredJoin]]),
-    * so pinning each forever in the function registry would leak the
-    * driver dry on a long-lived session. Names are unique per call and
-    * the oldest registrations beyond the last 64 are DROPPED — safe
-    * because classic DataFrames analyze EAGERLY at construction (the
-    * resolved plan embeds the expression + filter; the registry entry is
-    * only needed until then), and a plan somehow left unanalyzed past 64
-    * later bloom joins fails RESOLUTION loudly instead of running with
-    * the wrong filter.
+  /** Quality-classifier margin under a trained [[QualityLrModel]]. */
+  def qualityLrScore(text: Column, model: QualityLrModel): Column =
+    column(QualityLrScoreExpr(expression(text), model))
+
+  /** All hashed DSIR gram buckets (multiset) of a text column, over a
+    * bucket space of size `d`.
     */
-  def bloomContainsLong(spark: SparkSession, keyHash: Column,
-      bloom: org.apache.spark.util.sketch.BloomFilter): Column = {
-    val name = s"graft_bloom_contains_long_${bloomLongCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => BloomContainsLong(args.head, bloom),
-      "scala_udf")
-    bloomLongQueue.synchronized {
-      bloomLongQueue.addLast(name)
-      while (bloomLongQueue.size > 64) {
-        val old = bloomLongQueue.removeFirst()
-        spark.sessionState.functionRegistry.dropFunction(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(old))
-      }
-    }
-    call_function(name, keyHash)
-  }
+  def dsirBuckets(text: Column, d: Int): Column =
+    column(DsirBucketsExpr(expression(text), d))
 
-  private val bloomLongQueue = new java.util.ArrayDeque[String]()
-  private val bloomLongCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Bigram-LM fluency under a trained [[LmModel]] — model-parameterized
-    * registration exactly like [[bpeCount]] (same uniqueness and lifetime
-    * caveats).
-    */
-  def lmFluency(spark: SparkSession, text: Column, model: LmModel): Column = {
-    val name = lmNames.synchronized {
-      lmNames.computeIfAbsent(model,
-        _ => s"graft_lm_fluency_${lmCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => LmFluencyScore(args.head, model),
-      "scala_udf")
-    call_function(name, text)
-  }
-
-  private val lmNames = new java.util.IdentityHashMap[LmModel, String]()
-  private val lmCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Quality-classifier margin under a trained [[QualityLrModel]] —
-    * model-parameterized registration exactly like [[lmFluency]].
-    */
-  def qualityLrScore(spark: SparkSession, text: Column, model: QualityLrModel): Column = {
-    val name = qualityLrNames.synchronized {
-      qualityLrNames.computeIfAbsent(model,
-        _ => s"graft_quality_lr_${qualityLrCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => QualityLrScoreExpr(args.head, model),
-      "scala_udf")
-    call_function(name, text)
-  }
-
-  private val qualityLrNames = new java.util.IdentityHashMap[QualityLrModel, String]()
-  private val qualityLrCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** All hashed DSIR gram buckets (multiset) of a text column —
-    * registration keyed by the bucket-space size.
-    */
-  def dsirBuckets(spark: SparkSession, text: Column, d: Int): Column = {
-    val name = s"graft_dsir_buckets_$d"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => DsirBucketsExpr(args.head, d),
-      "scala_udf")
-    call_function(name, text)
-  }
-
-  /** DSIR importance sum under a trained [[DsirModel]] —
-    * model-parameterized registration exactly like [[qualityLrScore]].
-    */
-  def dsirScore(spark: SparkSession, text: Column, model: DsirModel): Column = {
-    val name = dsirNames.synchronized {
-      dsirNames.computeIfAbsent(model,
-        _ => s"graft_dsir_${dsirCounter.incrementAndGet()}")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => DsirScoreExpr(args.head, model),
-      "scala_udf")
-    call_function(name, text)
-  }
-
-  private val dsirNames = new java.util.IdentityHashMap[DsirModel, String]()
-  private val dsirCounter = new java.util.concurrent.atomic.AtomicLong()
+  /** DSIR importance sum under a trained [[DsirModel]]. */
+  def dsirScore(text: Column, model: DsirModel): Column =
+    column(DsirScoreExpr(expression(text), model))
 
   /** Character-distribution entropy of a string column
-    * ([[Kernels.charEntropy]]) — fixed-name registration like
-    * [[ilog2FpCol]].
+    * ([[Kernels.charEntropy]]).
     */
-  def charEntropy(spark: SparkSession, text: Column): Column = {
-    val name = "graft_char_entropy"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => CharEntropyExpr(args.head), "scala_udf")
-    call_function(name, text)
-  }
+  def charEntropy(text: Column): Column =
+    column(CharEntropyExpr(expression(text)))
 
-  /** Content-defined chunks of a string column ([[Kernels.cdcChunks]]) —
-    * parameter-suffixed registration so distinct configurations coexist
-    * in one session.
-    */
-  def cdcChunks(spark: SparkSession, text: Column, maskBits: Int,
-      minLen: Int, maxLen: Int): Column = {
-    val name = s"graft_cdc_chunks_${maskBits}_${minLen}_$maxLen"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) =>
-        CdcChunksExpr(args.head, maskBits, minLen, maxLen), "scala_udf")
-    call_function(name, text)
-  }
+  /** Content-defined chunks of a string column ([[Kernels.cdcChunks]]). */
+  def cdcChunks(text: Column, maskBits: Int, minLen: Int, maxLen: Int): Column =
+    column(CdcChunksExpr(expression(text), maskBits, minLen, maxLen))
 
   /** Fixed-point log2 of a positive bigint column ([[Kernels.ilog2Fp]]
-    * as a codegen scalar) — registered once per session under a fixed
-    * name like the other kernel functions.
+    * as a codegen scalar).
     */
-  def ilog2FpCol(spark: SparkSession, n: Column): Column = {
-    val name = "graft_ilog2_fp"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => Ilog2Fp(args.head), "scala_udf")
-    call_function(name, n)
-  }
+  def ilog2FpCol(n: Column): Column =
+    column(Ilog2Fp(expression(n)))
 
-  /** PQ byte codes of a float-vector column under a trained [[PqModel]] —
-    * model-parameterized registration exactly like [[bpeCount]] (same
-    * uniqueness and lifetime caveats).
-    */
-  def pqEncode(spark: SparkSession, vec: Column, model: PqModel): Column = {
-    val name = pqNames.synchronized {
-      pqNames.computeIfAbsent(model,
-        _ => s"graft_pq_${pqCounter.incrementAndGet()}")
-    } + "_encode"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => PqEncode(args.head, model), "scala_udf")
-    call_function(name, vec)
-  }
+  /** PQ byte codes of a float-vector column under a trained [[PqModel]]. */
+  def pqEncode(vec: Column, model: PqModel): Column =
+    column(PqEncode(expression(vec), model))
 
-  /** Per-query ADC lookup table under a trained [[PqModel]] —
-    * model-parameterized registration exactly like [[bpeCount]].
-    */
-  def pqQueryTable(spark: SparkSession, vec: Column, model: PqModel): Column = {
-    val name = pqNames.synchronized {
-      pqNames.computeIfAbsent(model,
-        _ => s"graft_pq_${pqCounter.incrementAndGet()}")
-    } + "_table"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => PqQueryTable(args.head, model), "scala_udf")
-    call_function(name, vec)
-  }
+  /** Per-query ADC lookup table under a trained [[PqModel]]. */
+  def pqQueryTable(vec: Column, model: PqModel): Column =
+    column(PqQueryTable(expression(vec), model))
 
-  /** ADC score of (codes, query table) — model-free, statically
-    * registered.
-    */
+  /** ADC score of (codes, query table). */
   def pqAdcScore(codes: Column, table: Column): Column =
-    call_function("graft_pq_adc_score", codes, table)
-
-  private val pqNames = new java.util.IdentityHashMap[PqModel, String]()
-  private val pqCounter = new java.util.concurrent.atomic.AtomicLong()
+    column(PqAdcScore(expression(codes), expression(table)))
 }

@@ -233,7 +233,6 @@ final class AcModel(
     val outLink: Array[Int], val hitCum: Array[Long],
     val patByteLen: Array[Int]) extends Serializable {
   def numPatterns: Int = patByteLen.length
-  def numNodes: Int = fail.length
 }
 
 object AcModel {

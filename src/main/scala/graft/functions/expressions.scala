@@ -292,8 +292,7 @@ object RepetitionStats {
 /** TF-IDF top-k terms of a string column under a trained document-
   * frequency model → array<struct<term, tf, df, score>>, best first, one
   * kernel pass. See [[Kernels.tfidfTopK]]; model-parameterized like
-  * [[BpeCount]] (registered per model via
-  * [[GraftFunctions.tfidfTopK]]).
+  * [[BpeCount]].
   */
 case class TfidfTopK(child: Expression, model: DfModel, k: Int)
     extends UnaryExpression {

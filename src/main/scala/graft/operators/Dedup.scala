@@ -583,7 +583,6 @@ object Dedup {
   def decontaminate(
       corpus: DataFrame, bench: DataFrame, idCol: String, textCol: String,
       n: Int = 3, shingler: String = "word"): DataFrame = {
-    GraftFunctions.ensure(corpus.sparkSession)
     val benchGrams = bench
       .select(explode(shingleHashes(col(textCol), n, shingler)).as("__g"))
       .distinct()
@@ -614,7 +613,6 @@ object Dedup {
     // (occurrence-indexed hashes), so only the set shinglers are trainable
     require(shingler == "word" || shingler == "char",
       s"decontamination models support word/char shinglers, got $shingler")
-    GraftFunctions.ensure(bench.sparkSession)
     val grams = bench
       .select(explode(shingleHashes(col(textCol), n, shingler)).as("__g"))
       .distinct()
@@ -646,7 +644,6 @@ object Dedup {
     require(shingler == "word" || shingler == "char",
       s"decontamination models support word/char shinglers, got $shingler")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    GraftFunctions.ensure(bench.sparkSession)
     val grams = bench
       .select(explode(shingleHashes(col(textCol), n, shingler)).as("__g"))
     // two actions read the grams (HLL sizing + filter build) — persist so
@@ -675,7 +672,7 @@ object Dedup {
       model: graft.functions.GramBloomModel): DataFrame =
     corpus.withColumn("contaminated",
       coalesce(
-        GraftFunctions.gramBloomContains(corpus.sparkSession, col(textCol), model),
+        GraftFunctions.gramBloomContains(col(textCol), model),
         lit(false)))
 
   /** MAP-SIDE benchmark decontamination: flag every document sharing an
@@ -702,7 +699,7 @@ object Dedup {
     // the two forms stay row-for-row identical on dirty corpora too
     corpus.withColumn("contaminated",
       coalesce(
-        GraftFunctions.gramSetContains(corpus.sparkSession, col(textCol), model),
+        GraftFunctions.gramSetContains(col(textCol), model),
         lit(false)))
 
   /** Train the eval-set EMBEDDING model for [[decontaminateSemantic]]:
@@ -772,8 +769,7 @@ object Dedup {
     corpus
       .withColumn("n_bench_hits",
         coalesce(
-          GraftFunctions.semanticHits(corpus.sparkSession, col(vecCol),
-            model, thresholdPermille),
+          GraftFunctions.semanticHits(col(vecCol), model, thresholdPermille),
           lit(0)))
       .withColumn("contaminated", col("n_bench_hits") > 0)
   }
@@ -789,7 +785,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int, numPerms: Int, seed: Long,
       shingler: String = "word"): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     df.select(
       col(idCol).cast("long").as("id"),
       shingleHashes(col(textCol), shingleWidth, shingler).as("g"))
@@ -837,7 +832,6 @@ object Dedup {
       threshold: Double = 0.5, seed: Long = 42L,
       maxBucketSize: Int = 100000): DataFrame = {
     require(numPerms % bands == 0, s"bands ($bands) must divide numPerms ($numPerms)")
-    GraftFunctions.ensure(df.sparkSession)
     val sigs = new RoundCheckpoints(df.sparkSession, None).materializeNow(
       df.select(col(idCol).cast("long").as("id"),
           GraftFunctions.icwsMinhash(col(textCol), shingleWidth, numPerms, seed).as("sig"))
@@ -990,7 +984,6 @@ object Dedup {
       shingleWidth: Int = 3, maxHamming: Int = 3,
       maxBucketSize: Int = 100000, shingler: String = "word",
       weighted: Boolean = false): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     require(!weighted || shingler == "word",
       "weighted simhash requires the word shingler")
     require(maxHamming >= 0 && maxHamming <= 63,
@@ -1015,7 +1008,6 @@ object Dedup {
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, shingler: String = "word",
       weighted: Boolean = false): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     require(!weighted || shingler == "word",
       "weighted simhash requires the word shingler")
     if (weighted) {
@@ -1180,7 +1172,6 @@ object Dedup {
     // intersect runs on long arrays, and no gram string is ever built.
     // Distinct counts are preserved modulo 64-bit collisions
     // (~|grams|²/2⁶⁴ ≈ 0 — far below any oracle's noise floor).
-    GraftFunctions.ensure(df.sparkSession)
     // read by the candidate branch and both verify joins: built once, now
     val grams = new RoundCheckpoints(df.sparkSession, None).materializeNow(df
       .select(col(idCol).cast("long").as("id"),
@@ -1226,7 +1217,6 @@ object Dedup {
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.4, numBits: Int = 8, numTables: Int = 16,
       seed: Long = 42L, maxBucketSize: Int = 100000): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .persist(StorageLevel.MEMORY_AND_DISK) // bucketing + both verify joins
     val bucketed = base
@@ -1259,7 +1249,6 @@ object Dedup {
       existingVecs: DataFrame,
       threshold: Double = 0.4, numBits: Int = 8, numTables: Int = 16,
       seed: Long = 42L, maxBucketSize: Int = 100000): DataFrame = {
-    GraftFunctions.ensure(newVecs.sparkSession)
     requireIntegralId(newVecs, idCol)
     requireIntegralId(existingVecs, "id")
     val newBase = newVecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
@@ -1322,7 +1311,6 @@ object Dedup {
       iters: Int = 10, sampleSize: Int = 10000, maxCellSize: Int = 100000,
       seed: Long = 42L,
       trainedCentroids: Option[Array[Seq[Float]]] = None): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     require(numProbe >= 1, s"numProbe must be >= 1, got $numProbe")
     // trainedCentroids: a persisted cell model ([[ModelStore]]) — train
     // once, dedup arriving corpora for months against the same cells
@@ -1394,7 +1382,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4, threshold: Double = 0.5,
       maxHashDocs: Int = 100, minSurvivingFp: Int = 10): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     val exploded = df.select(col(idCol).cast("long").as("id"),
         GraftFunctions.winnow(col(textCol), k, w).as("fp"))
       .filter(size(col("fp")) > 0)
@@ -1492,7 +1479,6 @@ object Dedup {
       maxHashOccurrences: Int = 1000): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
-    GraftFunctions.ensure(df.sparkSession)
     val w = minLen - k + 1 // guarantee: every shared span >= minLen anchors
     val base = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + two text joins
@@ -1556,7 +1542,6 @@ object Dedup {
       minLen: Int = 40, k: Int = 20): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
-    GraftFunctions.ensure(df.sparkSession)
     val w = minLen - k + 1
     df.select(col(idCol).cast("long").as("id"),
         explode(GraftFunctions.winnowPos(col(textCol), k, w)).as("a"))
@@ -1596,7 +1581,6 @@ object Dedup {
       maxHashOccurrences: Int = 1000): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
-    GraftFunctions.ensure(newDocs.sparkSession)
     val newBase = newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + two text joins
     val newIds = newBase.select("id")
@@ -1690,7 +1674,6 @@ object Dedup {
       minLen: Int = 20, k: Int = 10, maxHashOccurrences: Int = 1000): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
-    GraftFunctions.ensure(df.sparkSession)
     val w = minLen - k + 1
     val base = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .persist(StorageLevel.MEMORY_AND_DISK) // anchor pass + text join

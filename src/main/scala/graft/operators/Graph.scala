@@ -622,7 +622,6 @@ object Graph {
       maxDegree: Long = 1000L, minCommon: Long = 1L): DataFrame = {
     require(maxDegree >= 2, s"linkPrediction: maxDegree must be >= 2 (got $maxDegree)")
     require(minCommon >= 1, s"linkPrediction: minCommon must be >= 1 (got $minCommon)")
-    val spark = edges.sparkSession
     // persisted before the symmetrizing union: the two arms would re-run
     // the caller plan's post-exchange compute twice
     val und = edges
@@ -650,7 +649,7 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val scored = kept
       .select(col("a").as("w"), col("b").as("u"),
-        graft.functions.GraftFunctions.ilog2FpCol(spark, col("deg")).as("__l"))
+        graft.functions.GraftFunctions.ilog2FpCol(col("deg")).as("__l"))
       .join(kept.select(col("a").as("w"), col("b").as("v")), "w")
       .where(col("u") < col("v"))
       .withColumn("__aa", expr("1048576000000 div __l"))

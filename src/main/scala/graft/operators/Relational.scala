@@ -685,7 +685,6 @@ object Relational {
   def negativeSample(positives: DataFrame, corpus: DataFrame,
       qIdCol: String, posIdCol: String, corpusIdCol: String,
       k: Int = 5, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensure(corpus.sparkSession)
     val queries = positives.select(col(qIdCol).cast("long").as("query_id")).distinct()
     val pos = positives.select(col(qIdCol).cast("long").as("query_id"),
       col(posIdCol).cast("long").as("cand_id"))
@@ -1426,7 +1425,6 @@ object Relational {
   def capPerKey(df: DataFrame, keyCol: String, idCol: String, n: Int,
       scoreCol: Option[String] = None): DataFrame = {
     require(n > 0, s"capPerKey: n must be > 0, got $n")
-    graft.functions.GraftFunctions.ensure(df.sparkSession)
     val score = scoreCol match {
       // NULL scores rank LAST but still occupy under-quota slots (the
       // row_number NULLS-LAST contract): TopKAgg.update skips null-score
@@ -1524,7 +1522,6 @@ object Relational {
     require(on.nonEmpty, "bloomPrefilteredJoin: need join columns")
     require(how == "inner" || how == "left_semi",
       s"bloomPrefilteredJoin: only inner/left_semi are filter-safe, got $how")
-    graft.functions.GraftFunctions.ensure(big.sparkSession)
     // The probe hash must agree WHENEVER THE JOIN WOULD MATCH, or the
     // no-false-negative contract is voided one layer up: xxhash64 hashes
     // an int and a long holding the same value DIFFERENTLY (4- vs 8-byte
@@ -1564,8 +1561,7 @@ object Relational {
         keys.stat.bloomFilter("__h", expected, fpp)
       } finally keys.unpersist(blocking = false)
     val bigFiltered = big.filter(
-      graft.functions.GraftFunctions.bloomContainsLong(
-        big.sparkSession, keyHash(big, small), bloom))
+      graft.functions.GraftFunctions.bloomContainsLong(keyHash(big, small), bloom))
     bigFiltered.join(small, on, how)
   }
 
@@ -1607,7 +1603,6 @@ object Relational {
     require(window >= 2 && window <= 1000,
       s"jaroWinklerJoin: window must be in [2, 1000] (got $window)")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.ensure(spark)
     val base = df.select(col(idCol).cast("long").as("id"),
         col(strCol).cast("string").as("str"))
       .where(col("id").isNotNull && col("str").isNotNull)
@@ -1626,8 +1621,8 @@ object Relational {
         (col("rk") + col("off")).as("rk"))
     probes.join(rdf.select(col("id").as("id_b"), col("str").as("sb"),
         col("rk")), "rk")
-      .withColumn("jw_e6", expr(
-        "CAST(round(graft_jaro_winkler(sa, sb) * 1000000) AS bigint)"))
+      .withColumn("jw_e6", round(graft.functions.GraftFunctions.jaroWinkler(
+        col("sa"), col("sb")) * 1000000).cast("bigint"))
       .where(col("jw_e6") >= minSimE6)
       .select("id_a", "id_b", "jw_e6")
   }
@@ -1659,8 +1654,6 @@ object Relational {
       s"soundexJoin: minSimE6 must be in (0, 1000000] (got $minSimE6)")
     require(maxBlock >= 2,
       s"soundexJoin: maxBlock must be >= 2 (got $maxBlock)")
-    val spark = df.sparkSession
-    graft.functions.GraftFunctions.ensure(spark)
     val base = df.select(col(idCol).cast("long").as("id"),
         col(strCol).cast("string").as("str"))
       .where(col("id").isNotNull && col("str").isNotNull)
@@ -1673,8 +1666,8 @@ object Relational {
       .join(kept.select(col("sx"), col("id").as("id_b"), col("str").as("__sb")),
         "sx")
       .where(col("id_a") < col("id_b"))
-      .withColumn("jw_e6", expr(
-        "CAST(round(graft_jaro_winkler(__sa, __sb) * 1000000) AS bigint)"))
+      .withColumn("jw_e6", round(graft.functions.GraftFunctions.jaroWinkler(
+        col("__sa"), col("__sb")) * 1000000).cast("bigint"))
       .where(col("jw_e6") >= minSimE6)
       .select("id_a", "id_b", "sx", "jw_e6")
   }

@@ -136,7 +136,6 @@ object Retrieval {
     */
   def mmrRerank(candidates: DataFrame, qIdCol: String, cIdCol: String,
       vecCol: String, scoreCol: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.ensure(candidates.sparkSession)
     val cands = candidates.select(
       col(qIdCol).cast("long").as("query_id"),
       col(cIdCol).cast("long").as("cand_id"),
@@ -247,8 +246,7 @@ object Retrieval {
     val rel = qrels.select(col(qCol).as("__q"), col(dCol).as("__d")).distinct()
     val nrel = rel.groupBy("__q").agg(count(lit(1)).as("n_rel"))
     val hits = r.join(rel, Seq("__q", "__d"))
-      .withColumn("__l", graft.functions.GraftFunctions.ilog2FpCol(
-        spark, col("__rk") + lit(1L)))
+      .withColumn("__l", graft.functions.GraftFunctions.ilog2FpCol(col("__rk") + lit(1L)))
       .withColumn("__term", expr("1048576000000 div __l"))
       .groupBy("__q")
       .agg(count(lit(1)).as("hits_k"), min("__rk").as("__best"),

@@ -29,8 +29,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val spark = corpus.sparkSession
-    GraftFunctions.ensure(spark)
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
     val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
     val crossed = c.crossJoin(broadcast(q))
@@ -72,8 +70,6 @@ object Similarity {
       k: Int, numBits: Int = 8, numTables: Int = 16, seed: Long = 42L,
       excludeSelf: Boolean = true, maxBucketSize: Int = 100000,
       broadcastCandidates: Boolean = true): DataFrame = {
-    val spark = corpus.sparkSession
-    GraftFunctions.ensure(spark)
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
     val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
     def bucketize(df: DataFrame, id: String, vec: String) =
@@ -281,7 +277,6 @@ object Similarity {
       trainedCentroids: Option[Array[Seq[Float]]] = None,
       probeMargin: Double = Double.NaN): DataFrame = {
     val spark = corpus.sparkSession
-    GraftFunctions.ensure(spark)
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
     val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
     val centroids = selectCentroids(c, numCells, seed, trainedCentroids)
@@ -341,7 +336,6 @@ object Similarity {
     require(rerankShortlistK == 0 || rerankShortlistK >= k,
       s"rerankShortlistK ($rerankShortlistK) must be 0 (off) or >= k ($k)")
     val spark = corpus.sparkSession
-    GraftFunctions.ensure(spark)
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
     val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
     val centroids = selectCentroids(c, numCells, seed, trainedCentroids)
@@ -354,11 +348,11 @@ object Similarity {
       assignCells(c, q, centroids, numProbe, literalModelLimit, probeMargin)
     // one pass over corpus vectors: cell id + m-byte code, vector dropped
     val codes = assigned.select(col("cell"), col("neighbor_id"),
-      GraftFunctions.pqEncode(spark, col("nbr_vec"), model).as("codes"))
+      GraftFunctions.pqEncode(col("nbr_vec"), model).as("codes"))
     // ADC table per probed (query, cell) row — numProbe copies of an
     // m × ksub double table per query, still broadcast-trivial
     val qtabs = probed.select(col("cell"), col("query_id"),
-      GraftFunctions.pqQueryTable(spark, col("query_vec"), model).as("qtab"))
+      GraftFunctions.pqQueryTable(col("query_vec"), model).as("qtab"))
     val scored = codes
       .join(broadcast(qtabs), "cell")
       .withColumn("score", GraftFunctions.pqAdcScore(col("codes"), col("qtab")))
@@ -482,12 +476,10 @@ object Similarity {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, model: graft.functions.PqModel,
       excludeSelf: Boolean = true): DataFrame = {
-    val spark = corpus.sparkSession
-    GraftFunctions.ensure(spark)
     val codes = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      GraftFunctions.pqEncode(spark, col(vecCol), model).as("codes"))
+      GraftFunctions.pqEncode(col(vecCol), model).as("codes"))
     val qt = queries.select(col(qIdCol).cast("long").as("query_id"),
-      GraftFunctions.pqQueryTable(spark, col(qVecCol), model).as("qtab"))
+      GraftFunctions.pqQueryTable(col(qVecCol), model).as("qtab"))
     val scored = codes.crossJoin(broadcast(qt))
       .withColumn("score", GraftFunctions.pqAdcScore(col("codes"), col("qtab")))
     val filtered =
@@ -513,8 +505,6 @@ object Similarity {
       excludeSelf: Boolean = true,
       shortlistMargin: Double = Double.NaN): DataFrame = {
     require(shortlistK >= k, s"shortlistK ($shortlistK) must be >= k ($k)")
-    val spark = corpus.sparkSession
-    GraftFunctions.ensure(spark)
     val shortlist = pruneShortlist(
         pqTopK(corpus, idCol, vecCol, queries, qIdCol, qVecCol,
           shortlistK, model, excludeSelf), k, shortlistMargin)

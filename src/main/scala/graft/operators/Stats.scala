@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate aggregates — the 100 TB answer to "how many distinct users"
@@ -53,7 +53,6 @@ object Stats {
     * just how many. While distinct items ≤ k the counters are exact.
     */
   def heavyHitters(df: DataFrame, valueCol: String, k: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.ensure(df.sparkSession)
     df.agg(graft.functions.GraftFunctions.heavyHitters(col(valueCol), k).as("hh"))
       .select(explode(col("hh")).as("h"))
       .select(col("h.item").as("item"), col("h.est_count").as("est_count"))
@@ -68,7 +67,6 @@ object Stats {
   def heavyHittersByGroup(df: DataFrame, groupCols: Seq[String],
       valueCol: String, k: Int = 64): DataFrame = {
     require(groupCols.nonEmpty, "heavyHittersByGroup: need group columns")
-    graft.functions.GraftFunctions.ensure(df.sparkSession)
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.GraftFunctions.heavyHitters(col(valueCol), k).as("hh"))
       .select(groupCols.map(col) :+ explode(col("hh")).as("h"): _*)
@@ -89,7 +87,6 @@ object Stats {
     */
   def skewProfile(df: DataFrame, keyCols: Seq[String], k: Int = 64): DataFrame = {
     require(keyCols.nonEmpty, "skewProfile: at least one key column")
-    graft.functions.GraftFunctions.ensure(df.sparkSession)
     // \u0001 separator: multi-column keys must not alias across the boundary
     val keyed = df.select(concat_ws("\u0001",
       keyCols.map(c =>
@@ -194,14 +191,13 @@ object Stats {
     * century-scale tables).
     */
   private def withPsi2E9(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
     val x = col("n_a") * col("__nb")
     val y = col("n_b") * col("__na")
     df
       .withColumn("__x", x)
       .withColumn("__y", y)
-      .withColumn("__dl", graft.functions.GraftFunctions.ilog2FpCol(spark, col("__x")) -
-        graft.functions.GraftFunctions.ilog2FpCol(spark, col("__y")))
+      .withColumn("__dl", graft.functions.GraftFunctions.ilog2FpCol(col("__x")) -
+        graft.functions.GraftFunctions.ilog2FpCol(col("__y")))
       .withColumn("psi2_e9", expr(
         "CAST((CAST(__x - __y AS decimal(38,0)) * __dl * 1000000000) div " +
           "(CAST(__na AS decimal(38,0)) * __nb * 1048576) AS long)"))
@@ -867,8 +863,7 @@ object Stats {
       // nullAboveN: a store past 10^9 baskets must keep answering its
       // pre-LLR columns — llr_u20 reads NULL there (documented), the
       // exact lift/confidence columns stay
-      .withColumn("llr_u20", llrU20(store.sparkSession,
-        col("pair_count"), col("count_a"), col("count_b"),
+      .withColumn("llr_u20", llrU20(col("pair_count"), col("count_a"), col("count_b"),
         col("n_baskets"), nullAboveN = true))
       // the crossJoin/projections above sit past the TakeOrdered — restore
       // the contract order on the <= topK survivors (cheap by construction)
@@ -901,8 +896,8 @@ object Stats {
     * pre-LLR columns — killing the whole read would be a behavior
     * regression, and NULL-with-documented-meaning beats both).
     */
-  def llrU20(spark: SparkSession, k11: Column, r1: Column, c1: Column,
-      n0: Column, nullAboveN: Boolean = false): Column = {
+  def llrU20(k11: Column, r1: Column, c1: Column, n0: Column,
+      nullAboveN: Boolean = false): Column = {
     val n = when(n0 <= lit(1000000000L), n0)
       .otherwise(assert_true(lit(false), lit(
         "llrU20: N exceeds 10^9 — k*N would wrap; sample first"))
@@ -922,8 +917,8 @@ object Stats {
         .cast("long"))
     def term(kc: Column, r: Column, c: Column): Column =
       when(kc === lit(0L), lit(0L)).otherwise(
-        kc * (graft.functions.GraftFunctions.ilog2FpCol(spark, kc * n) -
-          graft.functions.GraftFunctions.ilog2FpCol(spark, r * c)))
+        kc * (graft.functions.GraftFunctions.ilog2FpCol(kc * n) -
+          graft.functions.GraftFunctions.ilog2FpCol(r * c)))
     val core = lit(2L) * (term(k, r1, c1) + term(r1 - k, r1, n - c1) +
       term(c1 - k, n - r1, c1) + term(n - r1 - c1 + k, n - r1, n - c1))
     if (nullAboveN)
@@ -992,7 +987,6 @@ object Stats {
   private[graft] def pmiScoredWithCells(df: DataFrame, colA: String,
       colB: String, maxCells: Long): (DataFrame, DataFrame) = {
     require(maxCells >= 1, s"pmiProfile: maxCells must be >= 1 (got $maxCells)")
-    val spark = df.sparkSession
     val cells0 = df.select(col(colA).cast("string").as("a"),
         col(colB).cast("string").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
@@ -1022,10 +1016,8 @@ object Stats {
     val scored = cells
       .join(broadcast(ma), "a").join(broadcast(mb), "b")
       .withColumn("n", lit(n))
-      .withColumn("__l1", graft.functions.GraftFunctions.ilog2FpCol(
-        spark, col("cnt") * col("n")))
-      .withColumn("__l2", graft.functions.GraftFunctions.ilog2FpCol(
-        spark, col("n_a") * col("n_b")))
+      .withColumn("__l1", graft.functions.GraftFunctions.ilog2FpCol(col("cnt") * col("n")))
+      .withColumn("__l2", graft.functions.GraftFunctions.ilog2FpCol(col("n_a") * col("n_b")))
       .withColumn("pmi_u20", col("__l1") - col("__l2"))
     (cells, scored)
   }

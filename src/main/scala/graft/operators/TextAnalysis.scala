@@ -49,7 +49,6 @@ object TextAnalysis {
     * from the oracle the old regexp path silently carried.)
     */
   def langId(df: DataFrame, textCol: String): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     val hits = GraftFunctions.langIdHits(col(textCol))
     val withHits = df
       .withColumn("h_en", hits.getItem(0))
@@ -81,7 +80,6 @@ object TextAnalysis {
     * lower) are pinned to the regex forms in TextAnalysisSpec.
     */
   def quality(df: DataFrame, textCol: String): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     val counts = GraftFunctions.qualityCounts(col(textCol))
     df.withColumn("n_chars", counts.getItem(0))
       .withColumn("n_tokens", counts.getItem(1))
@@ -224,8 +222,8 @@ object TextAnalysis {
     require(minLen >= 1 && maxLen >= minLen,
       s"need 1 <= minLen <= maxLen, got ($minLen, $maxLen)")
     df.select(col(idCol),
-        posexplode(GraftFunctions.cdcChunks(df.sparkSession,
-          coalesce(col(textCol), lit("")), maskBits, minLen, maxLen)))
+        posexplode(GraftFunctions.cdcChunks(coalesce(col(textCol), lit("")),
+          maskBits, minLen, maxLen)))
       .select(col(idCol), col("pos").cast("long").as("chunk_idx"),
         col("col.start").as("start"), col("col.len").as("len"),
         col("col.chunk_md5").as("chunk_md5"))
@@ -360,7 +358,7 @@ object TextAnalysis {
   def tokenCountBpe(df: DataFrame, textCol: String,
       model: graft.functions.BpeModel): DataFrame =
     df.withColumn("n_bpe_tokens",
-      GraftFunctions.bpeCount(df.sparkSession, col(textCol), model))
+      GraftFunctions.bpeCount(col(textCol), model))
 
   /** Character-distribution entropy per document — the gibberish /
     * encoded-blob detector (low entropy = repeated chars or a tiny
@@ -377,7 +375,7 @@ object TextAnalysis {
       minEntropyFp: Long = 2097152L /* 2.0 bits */,
       minChars: Long = 64L): DataFrame =
     df.withColumn("__e",
-        GraftFunctions.charEntropy(df.sparkSession, col(textCol)))
+        GraftFunctions.charEntropy(col(textCol)))
       .withColumn("n_chars_ent", coalesce(col("__e.n_chars"), lit(0L)))
       .withColumn("entropy_fp",
         when(col("n_chars_ent") > 0,
@@ -391,7 +389,6 @@ object TextAnalysis {
     * distinct documents. One codegen'd kernel pass.
     */
   def normalize(df: DataFrame, textCol: String, outCol: String = "norm"): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     df.withColumn(outCol, GraftFunctions.normalizeText(col(textCol)))
   }
 
@@ -472,7 +469,6 @@ object TextAnalysis {
     */
   def repetition(df: DataFrame, textCol: String, n: Int = 2): DataFrame = {
     require(n >= 2, s"n-gram width must be >= 2, got $n")
-    GraftFunctions.ensure(df.sparkSession)
     val st = GraftFunctions.repetitionStats(col(textCol), n)
     df.withColumn("__rep", st)
       .withColumn("n_words", col("__rep").getField("n_words"))
@@ -515,7 +511,6 @@ object TextAnalysis {
   def keywords(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3): DataFrame = {
     require(k >= 1, s"keywords: k must be >= 1 (got $k)")
-    GraftFunctions.ensure(df.sparkSession)
     df.where(col(textCol).isNotNull)
       .select(col(idCol),
         posexplode(GraftFunctions.rakeTopK(col(textCol), k))
@@ -701,7 +696,7 @@ object TextAnalysis {
   def qualityClassify(df: DataFrame, textCol: String,
       model: graft.functions.QualityLrModel): DataFrame =
     df.withColumn("__q",
-        GraftFunctions.qualityLrScore(df.sparkSession, col(textCol), model))
+        GraftFunctions.qualityLrScore(col(textCol), model))
       .withColumn("n_feat", coalesce(col("__q.n_feat"), lit(0L)))
       .withColumn("margin", coalesce(col("__q.margin"), lit(0L)))
       .withColumn("q_score",
@@ -730,8 +725,7 @@ object TextAnalysis {
     def bucketCounts(df: DataFrame): (Array[Long], Long) = {
       val rows = df
         .filter(col(textCol).isNotNull)
-        .select(explode(GraftFunctions.dsirBuckets(
-          df.sparkSession, col(textCol), numBuckets)).as("b"))
+        .select(explode(GraftFunctions.dsirBuckets(col(textCol), numBuckets)).as("b"))
         .groupBy("b").agg(count(lit(1)).as("c"))
         .collect()
       val counts = new Array[Long](numBuckets)
@@ -761,7 +755,7 @@ object TextAnalysis {
   def dsirScore(df: DataFrame, textCol: String,
       model: graft.functions.DsirModel): DataFrame =
     df.withColumn("__d",
-        GraftFunctions.dsirScore(df.sparkSession, col(textCol), model))
+        GraftFunctions.dsirScore(col(textCol), model))
       .withColumn("n_grams", coalesce(col("__d.n_grams"), lit(0L)))
       .withColumn("dsir_score",
         coalesce(col("__d.w_sum"), lit(0L)) +
@@ -796,7 +790,7 @@ object TextAnalysis {
   def lmFluency(df: DataFrame, textCol: String,
       model: graft.functions.LmModel): DataFrame =
     df.withColumn("__lm",
-        GraftFunctions.lmFluency(df.sparkSession, col(textCol), model))
+        GraftFunctions.lmFluency(col(textCol), model))
       .withColumn("n_pairs", coalesce(col("__lm.n_pairs"), lit(0L)))
       .withColumn("known_pairs", coalesce(col("__lm.known_pairs"), lit(0L)))
       .withColumn("lm_fluency", coalesce(col("__lm.fluency"), lit(0.0)))
@@ -815,7 +809,7 @@ object TextAnalysis {
   def tfidfTopK(df: DataFrame, textCol: String,
       model: graft.functions.DfModel, k: Int = 5): DataFrame =
     df.withColumn("tfidf",
-      GraftFunctions.tfidfTopK(df.sparkSession, col(textCol), model, k))
+      GraftFunctions.tfidfTopK(col(textCol), model, k))
 
   /** PMI collocation mining (Church & Hanks, CL 1990): the corpus's most
     * associated adjacent word pairs — phrase candidates for tokenizer
@@ -898,9 +892,8 @@ object TextAnalysis {
       .crossJoin(broadcast(totp))
       // nullAboveN: past 10^9 bigram events llr_u20 reads NULL rather
       // than killing the lift read that worked before the score existed
-      .withColumn("llr_u20", Stats.llrU20(df.sparkSession,
-        col("pair_cnt"), col("__row_cnt"), col("__col_cnt"),
-        col("__n_pairs"), nullAboveN = true))
+      .withColumn("llr_u20", Stats.llrU20(col("pair_cnt"), col("__row_cnt"),
+        col("__col_cnt"), col("__n_pairs"), nullAboveN = true))
       .select("w1", "w2", "pair_cnt", "left_cnt", "right_cnt", "n_tokens",
         "lift_e6", "llr_u20")
       // the margin joins sit past the TakeOrdered — restore the contract
@@ -917,7 +910,6 @@ object TextAnalysis {
     * a cheap fixed-width sketch.
     */
   def fingerprint(df: DataFrame, textCol: String, k: Int = 8, w: Int = 4): DataFrame = {
-    GraftFunctions.ensure(df.sparkSession)
     df.withColumn("fp", GraftFunctions.winnow(col(textCol), k, w))
       .withColumn("n_fp", size(col("fp")))
       .withColumn("fp_min", array_min(col("fp")))
@@ -1069,8 +1061,7 @@ object TextAnalysis {
     */
   def blocklistTag(df: DataFrame, textCol: String,
       model: graft.functions.AcModel): DataFrame = {
-    val stats = graft.functions.GraftFunctions.blocklistStats(
-      df.sparkSession, col(textCol), model)
+    val stats = graft.functions.GraftFunctions.blocklistStats(col(textCol), model)
     df.withColumn("__bl", stats)
       .withColumn("block_hits", coalesce(col("__bl").getItem(0), lit(0L)))
       .withColumn("block_distinct", coalesce(col("__bl").getItem(1), lit(0L)))

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graft.SparkInternals
+
 import graft.{GraftSession, SparkEntry}
 
 /** Optimization-round probe: time named SparkEntry queries with the
@@ -69,8 +71,8 @@ object ProbeOpt {
       SparkEntry.queries(n)(s, dir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      // listener events are async — give the bus a moment before snapping
-      Thread.sleep(200)
+      // listener events are async: deliver this query's before snapping
+      SparkInternals.drainListenerBus(s.sparkContext)
       val after = snap()
       println(f"  [$n%s] jobs=${after._1 - before._1}%d stages=${after._2 - before._2}%d " +
         f"tasks=${after._3 - before._3}%d shufRead=${(after._4 - before._4) / 1048576.0}%.1fMiB " +

@@ -13,7 +13,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   // probabilistic variants (ngramJaccard itself is oracle-checked by the
   // driver's DuckDB gate).
   private lazy val truth: Set[(Long, Long)] = {
-    GraftFunctions.ensure(spark)
     Dedup.ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
@@ -23,7 +22,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("minhashLsh finds every planted pair and estimates jaccard closely") {
-    GraftFunctions.ensure(spark)
     val got = Dedup.minhashLsh(docs, "doc_id", "text",
       shingleWidth = 3, numPerms = 128, bands = 32, threshold = 0.5)
     val pairs = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -38,7 +36,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("simhash finds most planted pairs within the hamming radius") {
-    GraftFunctions.ensure(spark)
     val pairs = Dedup.simhash(docs, "doc_id", "text", shingleWidth = 3, maxHamming = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val found = truth.intersect(pairs).size
@@ -83,7 +80,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("simhash default (maxHamming=3) is exact for its radius") {
-    GraftFunctions.ensure(spark)
     // The scale-safe default: 16-bit blocks whose bucket space doesn't
     // saturate at real corpus sizes (sizing law in Dedup.simhash). The
     // pigeonhole blocking is EXACT for the radius — verify against an
@@ -107,7 +103,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("weighted simhash: equals unweighted on distinct grams, diverges on repetition, finds near-dups") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     // On text whose trigrams are all distinct, the tf multiset equals the
     // distinct set — the weighted and unweighted signatures must be
     // IDENTICAL (an exact equivalence, not a statistical one).
@@ -134,7 +129,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("weighted simhash drops short docs with non-space whitespace (trim parity)") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     // Java String.trim (the kernel) strips \n; a spaces-only filter would
     // over-count tokens, pass these docs, and flood blocking with sig=0
     // false hamming-0 dups — both shorts must be excluded entirely.
@@ -149,7 +143,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("embeddingNearDup recall vs brute force") {
-    GraftFunctions.ensure(spark)
     val emb = wh.loadTable("embeddings")
     val e = emb.select(col("vec_id").cast("long").as("id"), col("embedding").as("v"))
     val brute = e.as("a").crossJoin(e.as("b"))
@@ -168,7 +161,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("decontaminateSemantic: hand-exact flags — scale invariance, boundary, NULLs") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     val bench = Seq((100L, Seq(1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     val model = Dedup.trainSemanticContaminationSet(bench, "embedding")
@@ -198,7 +190,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("decontaminateSemantic: multi-hit counts, quantization tie convention") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     // two bench vectors both within τ of the probe → n_bench_hits = 2
     val bench = Seq(
       (100L, Seq(1.0f, 0.0f)), (101L, Seq(0.9f, 0.1f)))
@@ -229,7 +220,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("semanticHits: component bound scales with dimension — no silent wrap") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     import graft.functions.Kernels.maxSemanticCompE4
     // the bound is the largest m with d·m² ≤ 2⁶³−1, capped at 10⁸
     assert(maxSemanticCompE4(1) === 100000000L)
@@ -268,7 +258,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental embedding near-dup probes the vector store, no old-old") {
-    GraftFunctions.ensure(spark)
     import spark.implicits._
     val emb = wh.loadTable("embeddings")
     val store = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -301,7 +290,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental simhash probes the signature store, no old-old pairs") {
-    GraftFunctions.ensure(spark)
     import spark.implicits._
     val docs = wh.loadTable("documents").select("doc_id", "text")
     val store = Dedup.simhashSignatures(docs, "doc_id", "text")
@@ -333,7 +321,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("fingerprintOverlap finds containment that symmetric jaccard misses") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     val core = (1 to 40).map(i => s"w$i").mkString(" ")
     val extra = (1 to 160).map(i => s"z$i").mkString(" ")
     val df = Seq(
@@ -353,7 +340,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("fingerprintOverlap cap drops boilerplate but keeps real containment") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     // every doc shares one boilerplate sentence (its fingerprints exceed
     // the cap and must be dropped); the planted containment pair shares
     // unique content and must survive on the informative subspace
@@ -372,7 +358,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("containment floor excludes docs that are ~all boilerplate") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     // 150 docs share the boilerplate (capped away); docs 1 and 2 are pure
     // boilerplate plus ONE shared sub-cap phrase — with almost no
     // surviving fingerprints they must not report containment=1.0
@@ -411,7 +396,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("word_tf shingles make ngramJaccard exactly TF-weighted") {
-    GraftFunctions.ensure(spark)
     // occurrence expansion: set jaccard over (gram, occurrence) elements
     // == Σmin/Σmax weighted jaccard, bit-for-bit (int/int division)
     val got = Dedup.ngramJaccard(docs, "doc_id", "text",
@@ -438,7 +422,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("icwsLsh estimates weighted jaccard and finds every high-Jw pair") {
-    GraftFunctions.ensure(spark)
     val got = Dedup.icwsLsh(docs, "doc_id", "text",
       shingleWidth = 3, numPerms = 128, bands = 32, threshold = 0.5)
     val pairs = got.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -559,7 +542,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(keepers === Set(1L, 10L, 20L, 50L))
     assert(decided.find(_._1 == 50L).get._2 === 50L) // singleton: own cluster
     // corpus-level: components over the jaccard pairs equal a union-find
-    GraftFunctions.ensure(spark)
     val jp = Dedup.ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.7)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.Map[Long, Long]()
@@ -599,7 +581,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("cdcDedup: keep-first over CDC chunks, splice parity with a local election") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     val base = wh.loadTable("documents").select("doc_id", "text")
       .filter(col("text").isNotNull).orderBy("doc_id").limit(2)
       .collect().map(_.getString(1))
@@ -637,7 +618,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("cdcDedupIncremental: store probe == one-shot restricted to the batch") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     val docs = wh.loadTable("documents").select("doc_id", "text")
     val hist = docs.filter(col("doc_id") < 300)
     val batch = docs.filter(col("doc_id") >= 300)
@@ -1172,7 +1152,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("char shingler finds near-dups in unspaced (zh) text") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
     val zh = Seq(
       (1L, "机器学习模型需要大量高质量的训练数据才能表现良好"),
       (2L, "机器学习模型需要大量高质量的训练数据集才能表现良好"), // near-dup of 1

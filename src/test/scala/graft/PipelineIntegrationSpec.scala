@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
 import graft.operators.{Dedup, TextAnalysis}
 
 /** The workflow-level analogue of the reference's test_workflow.py: a
@@ -17,7 +16,6 @@ import graft.operators.{Dedup, TextAnalysis}
 class PipelineIntegrationSpec extends AnyFunSuite with SparkTestBase {
 
   test("docs corpus flows dedup -> near-dup prune -> quality gate -> stats -> storage") {
-    GraftFunctions.ensure(spark)
     val docs = wh.loadTable("documents")
     val total = docs.count()
 

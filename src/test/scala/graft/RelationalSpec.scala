@@ -892,7 +892,7 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     // the fpp-rate false positives survive (deterministic for fixed data)
     val total = big.count()
     val kept = big.filter(graft.functions.GraftFunctions.bloomContainsLong(
-      spark, xxhash64(big("k")),
+      xxhash64(big("k")),
       small.select(xxhash64(small("k")).as("h"))
         .stat.bloomFilter("h", 1000L, 0.01))).count()
     assert(kept < total / 10, s"bloom kept $kept of $total")

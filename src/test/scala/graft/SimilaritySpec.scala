@@ -16,7 +16,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     * unscalable formulation the TopKAgg path must agree with exactly.
     */
   private lazy val reference: Set[(Long, Long, Long)] = {
-    GraftFunctions.ensure(spark)
     val c = emb.select(col("vec_id").cast("long").as("nid"), col("embedding").as("cv"))
     val q = queries.select(col("vec_id").cast("long").as("qid"), col("embedding").as("qv"))
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid"))
@@ -114,7 +113,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("shortlistMargin: unprunable margin is result-identical; tight margin only prunes") {
-    GraftFunctions.ensure(spark)
     val model = Similarity.trainPq(emb, "vec_id", "embedding", m = 16, ksub = 32)
     def rerank(margin: Double) = Similarity.pqTopKExactRerank(
         emb, "vec_id", "embedding", queries, "vec_id", "embedding",
@@ -226,11 +224,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pq codes are m bytes and ADC scores approximate cosine") {
-    GraftFunctions.ensure(spark)
     val model = Similarity.trainPq(emb, "vec_id", "embedding", m = 16, ksub = 32)
     assert(model.m === 16 && model.dsub === 4 && model.ksub === 32)
     val codes = emb.select(
-      GraftFunctions.pqEncode(spark, col("embedding"), model).as("c")).collect()
+      GraftFunctions.pqEncode(col("embedding"), model).as("c")).collect()
     assert(codes.forall(_.getAs[Array[Byte]](0).length === 16))
     // ADC score vs exact cosine: mean absolute error small on unit data
     val pairs = Similarity.pqTopK(emb, "vec_id", "embedding",

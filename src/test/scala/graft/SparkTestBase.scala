@@ -5,11 +5,11 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for every suite (Test/fork runs them in a
@@ -63,7 +63,7 @@ trait SparkTestBase {
     spark.listenerManager.register(listener)
     try {
       body
-      ListenerBus.drain(spark.sparkContext)
+      SparkInternals.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq
   }
@@ -75,11 +75,11 @@ trait SparkTestBase {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
-    ListenerBus.drain(spark.sparkContext)
+    SparkInternals.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      ListenerBus.drain(spark.sparkContext)
+      SparkInternals.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     jobs.get
   }

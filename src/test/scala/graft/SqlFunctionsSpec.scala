@@ -105,9 +105,29 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(n > 0)
   }
 
+  test("SQL builders refuse integer arguments outside the int range") {
+    GraftFunctions.ensure(spark)
+    // 4294967424 = 2^32 + 128: a wrapping conversion would run 128 perms
+    def refusal(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val perms = refusal(
+      "SELECT graft_minhash(graft_word_ngrams('a b c d', 2), 4294967424, 7)")
+    assert(perms.contains("numPerms") && perms.contains("4294967424"), perms)
+    val n = refusal("SELECT graft_word_ngrams('a b c d', 4294967298)")
+    assert(n.contains("n must fit in an int"), n)
+    // in-range BIGINT literals still convert
+    val row = spark.sql(
+      "SELECT size(graft_minhash(graft_word_ngrams('a b c d', 2L), 16L, 7)) AS s")
+      .collect()(0)
+    assert(row.getInt(0) === 16)
+  }
+
   test("GraftExtensions shares the ensure builder list (no drift possible)") {
     // the deployment route injects GraftFunctions.builders verbatim — assert
-    // the list covers every function name the Column API calls
+    // the list names every model-free function of the Column API
     val names = GraftFunctions.builders.map(_._1).toSet
     assert(names === Set(
       "graft_word_ngrams", "graft_char_ngrams", "graft_word_ngrams_tf",

@@ -145,8 +145,8 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val df = Seq((1L, 2L, 2L, 4L), (1L, 2L, 2L, 2000000000L))
       .toDF("k", "r", "c", "n")
-    val got = df.select(col("n"), Stats.llrU20(spark,
-        col("k"), col("r"), col("c"), col("n"), nullAboveN = true)
+    val got = df.select(col("n"), Stats.llrU20(col("k"), col("r"), col("c"), col("n"),
+        nullAboveN = true)
         .as("llr"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
@@ -157,7 +157,7 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     def root(t: Throwable): String =
       t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
-      df.select(Stats.llrU20(spark, col("k"), col("r"), col("c"),
+      df.select(Stats.llrU20(col("k"), col("r"), col("c"),
         col("n")).as("llr")).collect()
     }
     assert(root(ex).contains("N exceeds 10^9"))
@@ -165,7 +165,7 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     val ex2 = intercept[Exception] {
       Seq((0L, 5000000000000000000L, 5000000000000000000L, 100L))
         .toDF("k", "r", "c", "n")
-        .select(Stats.llrU20(spark, col("k"), col("r"), col("c"),
+        .select(Stats.llrU20(col("k"), col("r"), col("c"),
           col("n")).as("llr")).collect()
     }
     assert(root(ex2).contains("improper 2x2 table"))
@@ -245,8 +245,8 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     // perfectly independent 2x2 (all margins half of N=8): LLR = 0 in
     // exact fixed point (powers of two are exact in ilog2Fp)
     val df = Seq((2L, 4L, 4L, 8L), (3L, 3L, 3L, 9L)).toDF("k", "r", "c", "n")
-    val got = df.select(col("k"), Stats.llrU20(spark,
-      col("k"), col("r"), col("c"), col("n")).as("llr")).collect()
+    val got = df.select(col("k"),
+      Stats.llrU20(col("k"), col("r"), col("c"), col("n")).as("llr")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(2L) === 0L, "independence: LLR exactly zero")
     // diagonal table k11=3, margins 3/3, N=9: k22=6, k12=k21=0 —
@@ -340,8 +340,8 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     }
     val got = rows.toDF("i", "k", "r", "c", "n")
       .select(col("i"),
-        Stats.llrU20(spark, col("k"), col("r"), col("c"), col("n")).as("llr"),
-        Stats.llrU20(spark, col("k"), col("c"), col("r"), col("n")).as("llrT"))
+        Stats.llrU20(col("k"), col("r"), col("c"), col("n")).as("llr"),
+        Stats.llrU20(col("k"), col("c"), col("r"), col("n")).as("llrT"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     def term(k: Long, r: Long, c: Long, n: Long): Long =

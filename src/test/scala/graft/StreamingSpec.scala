@@ -684,7 +684,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("incremental CDC dedup over foreachBatch: growing store == one-shot") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.ensure(spark)
     val rows = wh.loadTable("documents").select("doc_id", "text")
       .filter($"doc_id" < 90)
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)

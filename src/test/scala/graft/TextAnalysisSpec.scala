@@ -72,7 +72,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("r_stop", size(regexp_extract_all(lower(t),
         lit("(?<![a-z0-9_])(" + stopwords("en").mkString("|") + ")(?![a-z0-9_])"), lit(0))))
       .withColumn("r_punct", size(regexp_extract_all(lower(t), lit("[^a-z0-9 ]"), lit(0))))
-    graft.functions.GraftFunctions.ensure(spark)
     val bad = cmp.filter(
       col("k_chars") =!= col("r_chars") || col("k_tokens") =!= col("r_tokens") ||
       col("k_stop") =!= col("r_stop") || col("k_punct") =!= col("r_punct"))
@@ -651,8 +650,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("cdcChunks: boundaries shift WITH content; min/max gate cuts; empty text") {
-    import graft.functions.GraftFunctions
-    GraftFunctions.ensure(spark)
     val base = wh.loadTable("documents").select("doc_id", "text")
       .filter(col("text").isNotNull).limit(1)
       .collect().head.getString(1)

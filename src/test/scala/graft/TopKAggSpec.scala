@@ -9,7 +9,6 @@ import graft.functions.GraftFunctions
 class TopKAggSpec extends AnyFunSuite with SparkTestBase {
 
   test("topK equals sort-based reference across groups, including merges") {
-    GraftFunctions.ensure(spark)
     // 10k rows, 7 groups, deterministic pseudo-random scores, forced into
     // many partitions so partial-aggregate merge paths are exercised
     val df = spark.range(10000).repartition(16)
@@ -28,7 +27,6 @@ class TopKAggSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ties break toward the smaller id") {
-    GraftFunctions.ensure(spark)
     val df = spark.range(100).withColumn("score", lit(1.0))
     val ids = df.agg(GraftFunctions.topK(col("id"), col("score"), 5).as("tk"))
       .select(explode(col("tk.id"))).collect().map(_.getLong(0)).toSeq
