@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: executes every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, writes the full per-query medians+spreads JSON to
   * SPARK_GRAFT_BENCH_OUT (default BENCH_DETAIL.json), and prints the full

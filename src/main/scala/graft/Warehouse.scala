@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
 

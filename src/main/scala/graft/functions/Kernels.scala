@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-row compute kernels, written as static methods so the thin
-  * Catalyst Expression wrappers can emit a single static call from
-  * `doGenCode` and stay inside whole-stage codegen.
+/** Per-row compute kernels, written as static methods: a
+  * [[KernelCall]] column calls one of them by name, the same call
+  * interpreted and in generated code, and stays inside whole-stage codegen.
   *
   * All hashing is self-contained (FNV-1a base hash + splitmix64
   * finalizer + affine 64-bit permutations) so results are deterministic
@@ -187,11 +187,15 @@ final class DsirModel(val weights: Array[Long], val numBuckets: Int,
   * (≤ 8 ASCII word chars) packs into one long (8 bits/char); `packed` is
   * sorted for binary search and `langIdx(i)` is the language index of
   * `packed(i)` (duplicates allowed — a word shared by two languages counts
-  * for both, like the per-language regexes would).
+  * for both, like the per-language regexes would). It prints as its
+  * words, so a plan that carries it shows which stopwords it counts.
   */
 final class LangLookup private (
-    val packed: Array[Long], val langIdx: Array[Int], val numLangs: Int)
-    extends Serializable
+    val packed: Array[Long], val langIdx: Array[Int], val numLangs: Int,
+    words: Seq[String])
+    extends Serializable {
+  override def toString: String = words.mkString(", ")
+}
 
 object LangLookup {
   def pack(w: String): Long = {
@@ -206,8 +210,23 @@ object LangLookup {
   def build(langs: Seq[Seq[String]]): LangLookup = {
     val entries = (for ((ws, li) <- langs.zipWithIndex; w <- ws) yield (pack(w), li))
       .sortBy(_._1)
-    new LangLookup(entries.map(_._1).toArray, entries.map(_._2).toArray, langs.length)
+    new LangLookup(entries.map(_._1).toArray, entries.map(_._2).toArray, langs.length,
+      langs.flatten)
   }
+}
+
+object LangIdHits {
+  /** Canonical marker-stopword lists (public knowledge, ten high-frequency
+    * function words per language), in the fixed output order en/de/fr/es;
+    * the [[Kernels.langIdHits]] trailing slot is the CJK (zh) count.
+    */
+  val defaultOrder: Seq[String] = Seq("en", "de", "fr", "es")
+  val defaultStopwords: Map[String, Seq[String]] = Map(
+    "en" -> Seq("the", "and", "of", "to", "in", "is", "you", "that", "it", "for"),
+    "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "ich", "ein", "sie", "mit"),
+    "fr" -> Seq("le", "la", "et", "les", "des", "est", "une", "dans", "que", "pour"),
+    "es" -> Seq("el", "los", "las", "es", "una", "como", "por", "para", "con", "se"))
+  def defaultLangs: Seq[Seq[String]] = defaultOrder.map(defaultStopwords)
 }
 
 /** Trained Aho-Corasick automaton over UTF-8 BYTES for multi-pattern
@@ -1229,7 +1248,7 @@ object Kernels {
     var j = from
     while (j < until) { len += 1; j += Character.charCount(s.codePointAt(j)) }
     if (len <= 1) return len
-    var syms = new Array[Int](len)
+    val syms = new Array[Int](len)
     var i = 0
     j = from
     while (j < until) {
@@ -1608,7 +1627,7 @@ object Kernels {
     * diverge on supplementary planes). Returns a struct row (n_words,
     * n_distinct_words, n_grams, n_distinct_grams, top_word,
     * top_word_cnt, top_ngram, top_ngram_cnt) — field order is the
-    * [[RepetitionStats.schema]] contract its consumers index by.
+    * `GraftFunctions.repetitionStats` contract its consumers index by.
     */
   def repetitionStats(text: UTF8String, n: Int): org.apache.spark.sql.catalyst.InternalRow = {
     val toks = spaceTokens(text)
@@ -1695,6 +1714,12 @@ object Kernels {
     acc
   }
 
+  /** Long-key membership probe of a Bloom sketch: no false negatives, so
+    * a join side filtered by it never loses a matching row.
+    */
+  def bloomContainsLong(key: Long, bloom: org.apache.spark.util.sketch.BloomFilter): Boolean =
+    bloom.mightContainLong(key)
+
   /** All hashed gram buckets of one document WITH multiplicity, in doc
     * order — the DSIR feature contract: word unigrams and adjacent-pair
     * bigrams (w1 + ' ' + w2) over [[spaceTokens]], each through
@@ -1715,6 +1740,10 @@ object Kernels {
     }
     out
   }
+
+  /** [[dsirBuckets]] as a Catalyst array<int>. */
+  def dsirBucketArray(text: UTF8String, d: Int): ArrayData =
+    new GenericArrayData(dsirBuckets(text, d))
 
   /** DSIR importance of one document under a trained [[DsirModel]] in
     * ONE scan: struct(n_grams, w_sum) where w_sum = Σ over gram

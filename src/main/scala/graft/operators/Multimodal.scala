@@ -348,32 +348,42 @@ object Multimodal {
       batch.map { case (id, bytes) =>
         val sizeOnly = Row(id, null, null, null, bytes.length.toLong, null, null, null)
         try {
-          // reader.dispose() does not close its input stream — close iis
-          // explicitly (memory-backed with setUseCache(false), but still a
-          // per-row resource)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) sizeOnly
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val fmt = reader.getFormatName.toLowerCase(java.util.Locale.ROOT)
-                val img = reader.read(0)
-                val w = img.getWidth
-                val h = img.getHeight
-                val (sr, sg, sb) = channelSums(img)
-                val n = w.toLong * h
-                Row(id, w.toLong, h.toLong, fmt, bytes.length.toLong,
-                  sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-              } finally reader.dispose()
-            }
-          } finally iis.close()
+          withImageReader(bytes) { reader =>
+            val fmt = reader.getFormatName.toLowerCase(java.util.Locale.ROOT)
+            val img = reader.read(0)
+            val w = img.getWidth
+            val h = img.getHeight
+            val (sr, sg, sb) = channelSums(img)
+            val n = w.toLong * h
+            Row(id, w.toLong, h.toLong, fmt, bytes.length.toLong,
+              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+          }.getOrElse(sizeOnly)
         } catch { case _: Exception => sizeOnly }
       }
     }
+
+  /** `f` over an ImageIO reader of `bytes`; None when no reader recognizes
+    * them. The reader is disposed and its input stream closed before this
+    * returns (dispose() does not close the stream; memory-backed under
+    * setUseCache(false), but still a per-row resource), so `f` must build
+    * its whole result strictly.
+    */
+  private def withImageReader[A](bytes: Array[Byte])(
+      f: javax.imageio.ImageReader => A): Option[A] = {
+    val iis = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    try {
+      val readers = javax.imageio.ImageIO.getImageReaders(iis)
+      if (!readers.hasNext) None
+      else {
+        val reader = readers.next()
+        try {
+          reader.setInput(iis)
+          Some(f(reader))
+        } finally reader.dispose()
+      }
+    } finally iis.close()
+  }
 
   // ---- real multi-frame decode (multi-page TIFF, JDK-builtin) -----------
 
@@ -455,6 +465,22 @@ object Multimodal {
       it => it.map(r => Row(r.getLong(0), encodeTiffClip(r.getLong(0))))
     }
 
+  /** `f(n, i, frame)` of each of the `k` evenly-spaced sampled frames of a
+    * multi-frame container of `n` frames (the [[sampleFramesMeta]] rule:
+    * all frames when n ≤ k, else floor(i·n/k)), in frame order. Only the
+    * sampled frames are decoded. None when no reader recognizes the bytes.
+    */
+  private def sampledFrames[A](bytes: Array[Byte], k: Int)(
+      f: (Int, Int, java.awt.image.BufferedImage) => A): Option[Seq[A]] =
+    withImageReader(bytes) { reader =>
+      val n = reader.getNumImages(true)
+      val idxs: Seq[Int] =
+        if (n <= 0) Seq.empty
+        else if (n <= k) 0 until n
+        else (0 until k).map(i => (i.toLong * n / k).toInt)
+      idxs.map(fi => f(n, fi, reader.read(fi)))
+    }
+
   /** REAL frame sampling + decode over a multi-frame container: count the
     * frames (`getNumImages`), pick `k` evenly-spaced indices (the
     * [[sampleFramesMeta]] rule — all frames when n ≤ k, else
@@ -469,33 +495,13 @@ object Multimodal {
       javax.imageio.ImageIO.setUseCache(false)
       batch.flatMap { case (id, bytes) =>
         try {
-          // close iis explicitly (dispose() leaves it open) — the frame
-          // rows are built strictly before the finally runs
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) Iterator.empty
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val n = reader.getNumImages(true)
-                val idxs: Seq[Int] =
-                  if (n <= 0) Seq.empty
-                  else if (n <= k) 0 until n
-                  else (0 until k).map(i => (i.toLong * n / k).toInt)
-                idxs.map { fi =>
-                  val img = reader.read(fi)
-                  val (w, h) = (img.getWidth, img.getHeight)
-                  val (sr, sg, sb) = channelSums(img)
-                  val np = w.toLong * h
-                  Row(id, n.toLong, fi.toLong, w.toLong, h.toLong,
-                    sr.toDouble / np, sg.toDouble / np, sb.toDouble / np)
-                }.iterator
-              } finally reader.dispose()
-            }
-          } finally iis.close()
+          sampledFrames(bytes, k) { (n, fi, img) =>
+            val (w, h) = (img.getWidth, img.getHeight)
+            val (sr, sg, sb) = channelSums(img)
+            val np = w.toLong * h
+            Row(id, n.toLong, fi.toLong, w.toLong, h.toLong,
+              sr.toDouble / np, sg.toDouble / np, sb.toDouble / np)
+          }.getOrElse(Seq.empty).iterator
         } catch { case _: Exception => Iterator.empty }
       }
     }
@@ -524,36 +530,19 @@ object Multimodal {
       javax.imageio.ImageIO.setUseCache(false)
       batch.map { case (id, bytes) =>
         try {
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) Row(id, null)
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val n = reader.getNumImages(true)
-                val idxs: Seq[Int] =
-                  if (n <= 0) Seq.empty
-                  else if (n <= k) 0 until n
-                  else (0 until k).map(i => (i.toLong * n / k).toInt)
-                if (idxs.isEmpty) Row(id, null)
-                else {
-                  val hashes = idxs.map(fi => dhashOf(reader.read(fi)))
-                  var sig = 0L
-                  var b = 0
-                  while (b < 64) {
-                    var ones = 0
-                    hashes.foreach(h => if (((h >>> b) & 1L) == 1L) ones += 1)
-                    if (2 * ones > hashes.length) sig |= 1L << b
-                    b += 1
-                  }
-                  Row(id, sig)
-                }
-              } finally reader.dispose()
-            }
-          } finally iis.close()
+          sampledFrames(bytes, k)((_, _, img) => dhashOf(img)) match {
+            case Some(hashes) if hashes.nonEmpty =>
+              var sig = 0L
+              var b = 0
+              while (b < 64) {
+                var ones = 0
+                hashes.foreach(h => if (((h >>> b) & 1L) == 1L) ones += 1)
+                if (2 * ones > hashes.length) sig |= 1L << b
+                b += 1
+              }
+              Row(id, sig)
+            case _ => Row(id, null)
+          }
         } catch { case _: Exception => Row(id, null) }
       }
     }

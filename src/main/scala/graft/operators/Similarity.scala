@@ -29,12 +29,9 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
-    val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
-    val crossed = c.crossJoin(broadcast(q))
-    val filtered = if (excludeSelf) crossed.filter(col("neighbor_id") =!= col("query_id")) else crossed
+    val (c, q) = (corpusVecs(corpus, idCol, vecCol), queryVecs(queries, qIdCol, qVecCol))
     topKPerQuery(
-      filtered.withColumn("score", GraftFunctions.cosineSim(col("nbr_vec"), col("query_vec"))),
+      dropSelf(c.crossJoin(broadcast(q)), excludeSelf).withColumn("score", cosine),
       k)
   }
 
@@ -70,8 +67,7 @@ object Similarity {
       k: Int, numBits: Int = 8, numTables: Int = 16, seed: Long = 42L,
       excludeSelf: Boolean = true, maxBucketSize: Int = 100000,
       broadcastCandidates: Boolean = true): DataFrame = {
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
-    val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
+    val (c, q) = (corpusVecs(corpus, idCol, vecCol), queryVecs(queries, qIdCol, qVecCol))
     def bucketize(df: DataFrame, id: String, vec: String) =
       df.withColumn("bks", GraftFunctions.hyperplaneLshMulti(col(vec), numBits, numTables, seed))
         .select(col(id), posexplode(col("bks")).as(Seq("tbl", "bucket")))
@@ -114,9 +110,8 @@ object Similarity {
     val scored = c
       .join(maybeBcast(cand), "neighbor_id")
       .join(maybeBcast(q), "query_id")
-      .withColumn("score", GraftFunctions.cosineSim(col("nbr_vec"), col("query_vec")))
-    val filtered = if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id")) else scored
-    topKPerQuery(filtered, k)
+      .withColumn("score", cosine)
+    topKPerQuery(dropSelf(scored, excludeSelf), k)
   }
 
   /** IVF-flat approximate top-k: `numCells` corpus vectors (seeded hash
@@ -276,27 +271,18 @@ object Similarity {
       excludeSelf: Boolean = true, literalModelLimit: Int = 64 * 1024,
       trainedCentroids: Option[Array[Seq[Float]]] = None,
       probeMargin: Double = Double.NaN): DataFrame = {
-    val spark = corpus.sparkSession
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
-    val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
+    val (c, q) = (corpusVecs(corpus, idCol, vecCol), queryVecs(queries, qIdCol, qVecCol))
     val centroids = selectCentroids(c, numCells, seed, trainedCentroids)
-    if (centroids.isEmpty) {
-      // empty corpus → empty result, with the contract schema
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "score")
-    }
+    if (centroids.isEmpty) return emptyResult(corpus.sparkSession)
     val (assigned, probed) =
       assignCells(c, q, centroids, numProbe, literalModelLimit, probeMargin)
     // each corpus row lives in exactly one cell and probed cells are
     // distinct, so (query, neighbor) pairs are already unique: no dedup
     val scored = assigned
       .join(broadcast(probed), "cell")
-      .withColumn("score", GraftFunctions.cosineSim(col("nbr_vec"), col("query_vec")))
+      .withColumn("score", cosine)
       .select("query_id", "neighbor_id", "score")
-    val filtered =
-      if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id")) else scored
-    topKPerQuery(filtered, k)
+    topKPerQuery(dropSelf(scored, excludeSelf), k)
   }
 
   /** IVF-PQ composed top-k — the standard billion-vector production
@@ -335,15 +321,9 @@ object Similarity {
       shortlistMargin: Double = Double.NaN): DataFrame = {
     require(rerankShortlistK == 0 || rerankShortlistK >= k,
       s"rerankShortlistK ($rerankShortlistK) must be 0 (off) or >= k ($k)")
-    val spark = corpus.sparkSession
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
-    val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
+    val (c, q) = (corpusVecs(corpus, idCol, vecCol), queryVecs(queries, qIdCol, qVecCol))
     val centroids = selectCentroids(c, numCells, seed, trainedCentroids)
-    if (centroids.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "score")
-    }
+    if (centroids.isEmpty) return emptyResult(corpus.sparkSession)
     val (assigned, probed) =
       assignCells(c, q, centroids, numProbe, literalModelLimit, probeMargin)
     // one pass over corpus vectors: cell id + m-byte code, vector dropped
@@ -357,19 +337,10 @@ object Similarity {
       .join(broadcast(qtabs), "cell")
       .withColumn("score", GraftFunctions.pqAdcScore(col("codes"), col("qtab")))
       .select("query_id", "neighbor_id", "score")
-    val filtered =
-      if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id")) else scored
+    val filtered = dropSelf(scored, excludeSelf)
     if (rerankShortlistK == 0) topKPerQuery(filtered, k)
-    else {
-      val shortlist = pruneShortlist(
-        topKPerQuery(filtered, rerankShortlistK), k, shortlistMargin)
-        .select("query_id", "neighbor_id")
-      val rescored = c
-        .join(broadcast(shortlist), "neighbor_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("score", GraftFunctions.cosineSim(col("nbr_vec"), col("query_vec")))
-      topKPerQuery(rescored, k)
-    }
+    else exactRerank(c, q,
+      pruneShortlist(topKPerQuery(filtered, rerankShortlistK), k, shortlistMargin), k)
   }
 
   /** Margin-adaptive shortlist cut for exact-rerank paths: keep
@@ -482,9 +453,7 @@ object Similarity {
       GraftFunctions.pqQueryTable(col(qVecCol), model).as("qtab"))
     val scored = codes.crossJoin(broadcast(qt))
       .withColumn("score", GraftFunctions.pqAdcScore(col("codes"), col("qtab")))
-    val filtered =
-      if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id")) else scored
-    topKPerQuery(filtered, k)
+    topKPerQuery(dropSelf(scored, excludeSelf), k)
   }
 
   /** PQ shortlist + EXACT rerank — the standard production recipe: the
@@ -506,16 +475,10 @@ object Similarity {
       shortlistMargin: Double = Double.NaN): DataFrame = {
     require(shortlistK >= k, s"shortlistK ($shortlistK) must be >= k ($k)")
     val shortlist = pruneShortlist(
-        pqTopK(corpus, idCol, vecCol, queries, qIdCol, qVecCol,
-          shortlistK, model, excludeSelf), k, shortlistMargin)
-      .select("query_id", "neighbor_id")
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
-    val q = queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
-    val rescored = c
-      .join(broadcast(shortlist), "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("score", GraftFunctions.cosineSim(col("nbr_vec"), col("query_vec")))
-    topKPerQuery(rescored, k)
+      pqTopK(corpus, idCol, vecCol, queries, qIdCol, qVecCol, shortlistK, model, excludeSelf),
+      k, shortlistMargin)
+    exactRerank(corpusVecs(corpus, idCol, vecCol), queryVecs(queries, qIdCol, qVecCol),
+      shortlist, k)
   }
 
   /** kNN LABEL CLASSIFICATION — the ANN consumer every training-data
@@ -566,6 +529,39 @@ object Similarity {
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .select(col("query_id"), col("__label").as("pred_label"), col("votes"))
+  }
+
+  /** The corpus as (neighbor_id, nbr_vec) rows. */
+  private def corpusVecs(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nbr_vec"))
+
+  /** The queries as (query_id, query_vec) rows. */
+  private def queryVecs(queries: DataFrame, qIdCol: String, qVecCol: String): DataFrame =
+    queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("query_vec"))
+
+  /** Exact cosine of a (neighbor, query) row. */
+  private def cosine: Column = GraftFunctions.cosineSim(col("nbr_vec"), col("query_vec"))
+
+  /** `excludeSelf`: drop neighbor_id == query_id matches. */
+  private def dropSelf(scored: DataFrame, excludeSelf: Boolean): DataFrame =
+    if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id")) else scored
+
+  /** Exact tail of the shortlisting searches: fetch only the shortlisted
+    * candidates' true vectors — a broadcast probe of the corpus by the
+    * narrow (query_id, neighbor_id) shortlist, so corpus vectors never
+    * shuffle — and rescore them with exact cosine.
+    */
+  private def exactRerank(c: DataFrame, q: DataFrame, shortlist: DataFrame,
+      k: Int): DataFrame =
+    topKPerQuery(c
+      .join(broadcast(shortlist.select("query_id", "neighbor_id")), "neighbor_id")
+      .join(broadcast(q), "query_id")
+      .withColumn("score", cosine), k)
+
+  /** The result of a search over an empty corpus, with the contract schema. */
+  private def emptyResult(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long, Long, Double)].toDF("query_id", "rank", "neighbor_id", "score")
   }
 
   /** Shared tail: bounded top-k per query (TopKAgg partial-aggregates
