@@ -2665,12 +2665,12 @@ object SparkEntry {
   /** Per-group heavy hitters (SURVEY row 56c, grouped form): top words
     * per document language — exact regime (31-word vocab ≤ k), so DuckDB
     * replays grouped counts outright
-    * ([[operators.Stats.heavyHittersByGroup]]).
+    * ([[operators.Stats.heavyHitters]] with `groupCols`).
     */
   private def qHeavyHittersGrouped(s: SparkSession, dir: String): DataFrame = {
     val words = wh(s, dir).loadTable("documents")
       .select(col("lang"), explode(split(trim(col("text")), " ", -1)).as("w"))
-    operators.Stats.heavyHittersByGroup(words, Seq("lang"), "w", k = 64)
+    operators.Stats.heavyHitters(words, "w", k = 64, groupCols = Seq("lang"))
       .orderBy(col("lang"), col("est_count").desc, col("item"))
   }
 
@@ -4313,14 +4313,15 @@ object SparkEntry {
   /** Grouped winsorize (SURVEY row 22c-q''''): each language's document
     * lengths clipped to its OWN [p10 lower-edge, p90 upper-edge] band
     * off the grouped rollup — the per-key composed consumer
-    * ([[operators.Stats.winsorizeByGroupedStore]]).
+    * ([[operators.Stats.winsorizeByHistogramStore]] over a keyed store).
     */
   private def qGroupedWinsorize(s: SparkSession, dir: String): DataFrame = {
     val d = wh(s, dir).loadTable("documents")
-    val store = operators.Stats.groupedHistogramStore(
-      d, "lang", "n_chars", 0.0, 4000.0, 100)
-    operators.Stats.winsorizeByGroupedStore(d, "lang", "n_chars", store,
-        0.0, 4000.0, 100, pLowE6 = 100000L, pHighE6 = 900000L)
+    val store = operators.Stats.histogramStore(
+      d, "n_chars", 0.0, 4000.0, 100, keyCol = Some("lang"))
+    operators.Stats.winsorizeByHistogramStore(d, "n_chars", store,
+        0.0, 4000.0, 100, pLowE6 = 100000L, pHighE6 = 900000L,
+        keyCol = Some("lang"))
       .select(col("doc_id"), col("lang"), col("n_chars_e6"),
         col("n_chars_winsor_e6"), col("n_chars_clipped"), col("calibrated"))
       .orderBy("doc_id")
@@ -4366,15 +4367,15 @@ object SparkEntry {
     * length percentiles off the per-key histogram rollup — the grouped
     * form of q_quantile_store ("track p95 length per language per
     * day"). Two parity-split slices merge through
-    * [[operators.Stats.updateGroupedHistogramStore]]; the require pins
+    * [[operators.Stats.updateHistogramStore]]; the require pins
     * merged == one-shot per (k, bin); the oracle replays the per-group
     * histogram + rank scan.
     */
   private def qGroupedQuantileStore(s: SparkSession, dir: String): DataFrame = {
     val d = wh(s, dir).loadTable("documents")
-    def hist(df: DataFrame) = operators.Stats.groupedHistogramStore(
-      df, "lang", "n_chars", 0.0, 4000.0, 100)
-    val merged = operators.Stats.updateGroupedHistogramStore(
+    def hist(df: DataFrame) = operators.Stats.histogramStore(
+      df, "n_chars", 0.0, 4000.0, 100, keyCol = Some("lang"))
+    val merged = operators.Stats.updateHistogramStore(
       hist(d.filter(pmod(col("doc_id"), lit(2)) === 0)),
       hist(d.filter(pmod(col("doc_id"), lit(2)) === 1)))
     val oneShot = hist(d)
@@ -4383,7 +4384,7 @@ object SparkEntry {
       .sameElements(oneShot.collect().map(r =>
         (r.getString(0), r.getInt(1), r.getLong(2))).sorted),
       "merged grouped store must equal the one-shot histogram per (k, bin)")
-    operators.Stats.groupedQuantilesFromStore(merged, 0.0, 4000.0, 100,
+    operators.Stats.quantilesFromHistogramStore(merged, 0.0, 4000.0, 100,
         Seq(500000L, 900000L, 990000L))
       .orderBy("k", "q_e6")
   }

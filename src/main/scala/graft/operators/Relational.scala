@@ -251,28 +251,34 @@ object Relational {
       .withColumn(s"${side}_grams", size(col(s"${side}_gs")).cast("long"))
       .filter(col(s"${side}_grams") > 0)
 
+  /** A [[hashedGramArrays]] frame's columns renamed from one side prefix
+    * to another — a projection of the same (cached) frame, never a
+    * second gram generation or a second cache entry. */
+  private def renameSide(arr: DataFrame, from: String, to: String): DataFrame =
+    arr.select(Seq("id", "gs", "grams").map(c => col(s"${from}_$c").as(s"${to}_$c")): _*)
+
   /** The PPJoin pair plan plus the frames it persisted: the one-shot
     * verbs leave those cached (the Dedup convention), while
     * [[fuzzyJoinIncremental]] unpersists them once its result is
-    * checkpointed. */
+    * checkpointed. `lArrGiven` is the left side's gram arrays when the
+    * caller already persisted them (`l_*` columns); they are then
+    * neither rebuilt nor cached again. */
   private def fuzzyJoinImpl(left: DataFrame, rightOpt: Option[DataFrame],
       lIdCol: String, lStrCol: String, rIdCol: String, rStrCol: String,
       thresholdNum: Long, thresholdDen: Long,
-      n: Int, maxGramFreq: Long): (DataFrame, Seq[DataFrame]) = {
+      n: Int, maxGramFreq: Long,
+      lArrGiven: Option[DataFrame] = None): (DataFrame, Seq[DataFrame]) = {
     require(thresholdDen > 0 && thresholdNum >= 0, "threshold must be >= 0")
     // gram ARRAYS are the one persisted artifact: freq, both prefixes and
     // the verification all derive from them, so the gram generation runs
     // ONCE per side instead of once per consumer
     def gramArrays(df: DataFrame, idC: String, strC: String, side: String) =
-      hashedGramArrays(df, idC, strC, side, n)
-    val lArr = gramArrays(left, lIdCol, lStrCol, "l")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      hashedGramArrays(df, idC, strC, side, n).persist(StorageLevel.MEMORY_AND_DISK)
+    val lArr = lArrGiven.getOrElse(gramArrays(left, lIdCol, lStrCol, "l"))
     // self mode: the right stream is a RENAME of the cached left frame —
     // gram generation and persistence happen once
-    val rCached = rightOpt.map(right => gramArrays(right, rIdCol, rStrCol, "r")
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val rArr = rCached.getOrElse(lArr.select(col("l_id").as("r_id"),
-      col("l_gs").as("r_gs"), col("l_grams").as("r_grams")))
+    val rCached = rightOpt.map(right => gramArrays(right, rIdCol, rStrCol, "r"))
+    val rArr = rCached.getOrElse(renameSide(lArr, "l", "r"))
     def explodedGrams(side: String) =
       (if (side == "l") lArr else rArr)
         .select(col(s"${side}_id"), col(s"${side}_grams"),
@@ -453,8 +459,14 @@ object Relational {
       thresholdNum: Long, thresholdDen: Long,
       n: Int = 3, maxGramFreq: Long = 0L): DataFrame = {
     require(thresholdDen > 0 && thresholdNum >= 0, "threshold must be >= 0")
-    val bArr = hashedGramArrays(newDf, idCol, strCol, "b", n)
+    // the batch's gram arrays are cached ONCE, under the `l_*` names the
+    // new×new fuzzyJoinImpl reads; the mixed side reads them renamed. Two
+    // separately built copies would differ only in column names, and
+    // Spark's cache treats such plans as one entry: the second persist
+    // is refused with a warning and either unpersist drops the other
+    val lArr = hashedGramArrays(newDf, idCol, strCol, "l", n)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val bArr = renameSide(lArr, "l", "b")
     val bg = bArr.select(col("b_id"), col("b_grams"),
       explode(col("b_gs")).as("g"))
     // df lookup under the FROZEN store order: the store's (g, df) rows
@@ -518,11 +530,12 @@ object Relational {
         col("jaccard_e6"))
     // new×new: the fuzzySelfPairs plan over the batch alone
     val (newNew, newNewCaches) = fuzzyJoinImpl(newDf, None, idCol, strCol,
-      idCol, strCol, thresholdNum, thresholdDen, n, maxGramFreq)
+      idCol, strCol, thresholdNum, thresholdDen, n, maxGramFreq, Some(lArr))
     val result = mixedPairs.unionByName(newNew)
     // steady-state ingestion: eager bounded pair frame, caches released
+    // (newNewCaches holds lArr)
     val out = result.localCheckpoint(eager = true, storageLevel = StorageLevel.MEMORY_AND_DISK)
-    (Seq(bArr, bPrefix, oArr) ++ newNewCaches).foreach(_.unpersist())
+    (Seq(bPrefix, oArr) ++ newNewCaches).foreach(_.unpersist())
     out
   }
 

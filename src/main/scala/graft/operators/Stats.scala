@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Warehouse.literalCol
+import graft.functions.GraftFunctions.ilog2FpCol
 
 /** Approximate aggregates — the 100 TB answer to "how many distinct users"
   * and "what's the p95": HyperLogLog++ and a mergeable quantile sketch,
@@ -45,33 +49,23 @@ object Stats {
 
   /** Heavy hitters (frequent items) of a string column via the mergeable
     * Misra-Gries sketch ([[graft.functions.MisraGriesAgg]]): at most `k`
-    * (item, est_count) rows with the guarantee
+    * (item, est_count) rows per group with the guarantee
     * `true − n/(k+1) ≤ est ≤ true` — every item with frequency > n/(k+1)
     * is present. Single pass, map-side partial aggregation, shuffle
-    * volume numPartitions × k independent of cardinality — the scalable
-    * complement to [[approxDistinct]] for "WHAT are the top values", not
-    * just how many. While distinct items ≤ k the counters are exact.
+    * volume numPartitions × k (× groups) independent of cardinality — the
+    * scalable complement to [[approxDistinct]] for "WHAT are the top
+    * values", not just how many. While distinct items ≤ k the counters
+    * are exact. With `groupCols` (top domains per language, top error
+    * codes per service) the rows lead with the group columns; with none
+    * it is one global sketch (`groupBy()` plans as `agg`).
     */
-  def heavyHitters(df: DataFrame, valueCol: String, k: Int = 64): DataFrame = {
-    df.agg(graft.functions.GraftFunctions.heavyHitters(col(valueCol), k).as("hh"))
-      .select(explode(col("hh")).as("h"))
-      .select(col("h.item").as("item"), col("h.est_count").as("est_count"))
-  }
-
-  /** Per-group heavy hitters: the Misra-Gries sketch as a grouped
-    * aggregate — top values of `valueCol` within every `groupCols` group
-    * (e.g. top domains per language, top error codes per service), one
-    * row per (group, item). Same guarantee and shuffle bound as
-    * [[heavyHitters]], per group.
-    */
-  def heavyHittersByGroup(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, k: Int = 64): DataFrame = {
-    require(groupCols.nonEmpty, "heavyHittersByGroup: need group columns")
-    df.groupBy(groupCols.map(col): _*)
+  def heavyHitters(df: DataFrame, valueCol: String, k: Int = 64,
+      groupCols: Seq[String] = Nil): DataFrame = {
+    val g = groupCols.map(col)
+    df.groupBy(g: _*)
       .agg(graft.functions.GraftFunctions.heavyHitters(col(valueCol), k).as("hh"))
-      .select(groupCols.map(col) :+ explode(col("hh")).as("h"): _*)
-      .select(groupCols.map(col) :+ col("h.item").as("item") :+
-        col("h.est_count").as("est_count"): _*)
+      .select(g :+ explode(col("hh")).as("h"): _*)
+      .select(g :+ col("h.item").as("item") :+ col("h.est_count").as("est_count"): _*)
   }
 
   /** Join-key skew profile: the operational question behind every slow
@@ -165,44 +159,46 @@ object Stats {
 
   // ---- distribution drift ----------------------------------------------
 
-  /** Fixed-point PSI term from the four per-bin integers — shared by the
-    * numeric and categorical drift forms so the two cannot diverge.
-    * Population Stability Index per bin, in LOG2 units (PSI₂ = PSI /
-    * ln 2) and e9 fixed point:
+  /** The PSI tail shared by the numeric and categorical drift forms, so
+    * the two cannot diverge: over a frame of (`keyCol`, raw_a, raw_b)
+    * counts, add-one smoothing (ca, cb ≥ 1 — the standard empty-bin
+    * guard, which also keeps the log total), both sides' totals Na/Nb,
+    * then one Population Stability Index term per key, in LOG2 units
+    * (PSI₂ = PSI / ln 2) and e9 fixed point:
     *
     *   psi2_e9 = (pa − pb) · log2(pa / pb) · 10^9
     *           = (ca·Nb − cb·Na) · (ilog2Fp(ca·Nb) − ilog2Fp(cb·Na))
     *             · 10^9 / (Na · Nb · 2^20)
     *
-    * with add-one smoothed counts (ca, cb ≥ 1 — the standard empty-bin
-    * guard, which also keeps the log total). Every operation is integer
-    * (the wide products ride in decimal(38,0), the BM25 precedent), so
-    * any engine replays each term — and the integer-summable total —
-    * bit-identically. No transcendental libm call anywhere: cross-engine
-    * `ln` is NOT bit-stable, `Kernels.ilog2Fp` is.
+    * Every operation is integer (the wide products ride in
+    * decimal(38,0), the BM25 precedent), so any engine replays each
+    * term — and the integer-summable total — bit-identically. No
+    * transcendental libm call anywhere: cross-engine `ln` is NOT
+    * bit-stable, `Kernels.ilog2Fp` is. `div` is Spark's truncating
+    * integral division on decimals (= DuckDB `//` on HUGEINT for these
+    * non-negative terms — the skewProfile precedent); the term is
+    * mathematically ≥ 0 because (pa − pb) and log(pa/pb) always share a
+    * sign, so truncation == floor in both engines. Domain bound: Na·Nb
+    * must stay below 2^62 (counts to ~1.5e9 a side — drift-compare
+    * daily partitions, not raw century-scale tables).
+    *
+    * Returns (`keyCol`, n_a, n_b, psi2_e9) ordered by `keyCol`.
     */
-  /** Appends the term to a frame already carrying n_a/n_b/__na/__nb
-    * columns. `div` (Spark's truncating integral division on decimals =
-    * DuckDB `//` on HUGEINT for these non-negative terms — the
-    * skewProfile precedent); the term is mathematically ≥ 0 because
-    * (pa − pb) and log(pa/pb) always share a sign, so truncation ==
-    * floor in both engines. Domain bound: Na·Nb must stay below 2^62
-    * (counts to ~1.5e9 a side — drift-compare daily partitions, not raw
-    * century-scale tables).
-    */
-  private def withPsi2E9(df: DataFrame): DataFrame = {
-    val x = col("n_a") * col("__nb")
-    val y = col("n_b") * col("__na")
-    df
-      .withColumn("__x", x)
-      .withColumn("__y", y)
-      .withColumn("__dl", graft.functions.GraftFunctions.ilog2FpCol(col("__x")) -
-        graft.functions.GraftFunctions.ilog2FpCol(col("__y")))
+  private def psiFromCounts(counts: DataFrame, keyCol: String): DataFrame =
+    counts
+      .select(col(keyCol),
+        (coalesce(col("raw_a"), lit(0L)) + 1L).as("n_a"),
+        (coalesce(col("raw_b"), lit(0L)) + 1L).as("n_b"))
+      .withColumn("__na", sum(col("n_a")).over())
+      .withColumn("__nb", sum(col("n_b")).over())
+      .withColumn("__x", col("n_a") * col("__nb"))
+      .withColumn("__y", col("n_b") * col("__na"))
+      .withColumn("__dl", ilog2FpCol(col("__x")) - ilog2FpCol(col("__y")))
       .withColumn("psi2_e9", expr(
         "CAST((CAST(__x - __y AS decimal(38,0)) * __dl * 1000000000) div " +
           "(CAST(__na AS decimal(38,0)) * __nb * 1048576) AS long)"))
-      .drop("__x", "__y", "__dl", "__na", "__nb")
-  }
+      .select(col(keyCol), col("n_a"), col("n_b"), col("psi2_e9"))
+      .orderBy(keyCol)
 
   /** Numeric distribution drift between two snapshots: both sides binned
     * on the SAME fixed [lo, hi] × nBins grid (out-of-range values clamp
@@ -217,7 +213,7 @@ object Stats {
     */
   def driftNumeric(before: DataFrame, after: DataFrame, valueCol: String,
       lo: Double, hi: Double, nBins: Int = 10): DataFrame =
-    driftFromCounts(
+    driftAgainstStore(
       histogramStore(before, valueCol, lo, hi, nBins),
       histogramStore(after, valueCol, lo, hi, nBins), nBins)
 
@@ -229,9 +225,19 @@ object Stats {
     * [[updateHistogramStore]], and compare any two ranges later with
     * [[driftAgainstStore]] — drift over any window without rescanning
     * raw history (the 39c signature-store pattern for distributions).
+    *
+    * With `keyCol` it is one histogram per group as a narrow (k, bin, n)
+    * frame (`k` = the key as a string), exactly mergeable per (k, bin) —
+    * so per-language/per-source value distributions roll up through the
+    * same discipline and [[quantilesFromHistogramStore]] answers "p95
+    * length per language" over any accumulated range. NULL keys drop (a
+    * NULL group is not a trackable series). The store verbs below read
+    * the key from the store's own columns, so every one of them serves
+    * both shapes — the global store is the keyed store with no key.
     */
   def histogramStore(df: DataFrame, valueCol: String,
-      lo: Double, hi: Double, nBins: Int = 10): DataFrame = {
+      lo: Double, hi: Double, nBins: Int = 10,
+      keyCol: Option[String] = None): DataFrame = {
     require(nBins >= 2 && hi > lo, s"need nBins >= 2 and hi > lo")
     // clamp in DOUBLE space BEFORE floor/cast: a wild outlier (3e10, or
     // Infinity) would otherwise blow the int cast under ANSI mode
@@ -239,20 +245,32 @@ object Stats {
     // monitor exists precisely to survive corrupt rows. NaN clamps to
     // the top bin (NaN sorts greatest in both engines).
     val raw = (col(valueCol).cast("double") - lit(lo)) * lit(nBins) / lit(hi - lo)
-    df.filter(col(valueCol).isNotNull)
-      .select(floor(least(lit((nBins - 1).toDouble), greatest(lit(0.0), raw)))
-        .cast("int").as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n"))
+    val key = keyCol.toSeq.map(c => col(c).cast("string").as("k"))
+    df.filter((valueCol +: keyCol.toSeq).map(col(_).isNotNull).reduce(_ && _))
+      .select(key :+ floor(least(lit((nBins - 1).toDouble), greatest(lit(0.0), raw)))
+        .cast("int").as("bin"): _*)
+      .groupBy(perBin(key.map(_ => "k")): _*).agg(count(lit(1)).as("n"))
   }
 
+  /** The key columns of a histogram store: `k` for the keyed
+    * (k, bin, n) shape, none for the global (bin, n) shape. */
+  private def storeKeys(store: DataFrame): Seq[String] =
+    if (store.columns.contains("k")) Seq("k") else Nil
+
+  /** A store's grouping: its keys, then the bin. */
+  private def perBin(keys: Seq[String]): Seq[Column] = (keys :+ "bin").map(col)
+
   /** Merge a new batch's histogram into a persisted store frame: counts
-    * add per bin (exact mergeability — no error term, unlike sketch
-    * stores). Both sides must share the grid contract.
+    * add per (key, bin) (exact mergeability — no error term, unlike
+    * sketch stores; order-free). Both sides must share the grid
+    * contract and the store's shape.
     */
-  def updateHistogramStore(store: DataFrame, batch: DataFrame): DataFrame =
-    store.select(col("bin"), col("n"))
-      .unionByName(batch.select(col("bin"), col("n")))
-      .groupBy("bin").agg(sum(col("n")).cast("long").as("n"))
+  def updateHistogramStore(store: DataFrame, batch: DataFrame): DataFrame = {
+    val keys = storeKeys(store)
+    val cols = perBin(keys) :+ col("n")
+    store.select(cols: _*).unionByName(batch.select(cols: _*))
+      .groupBy(perBin(keys): _*).agg(sum(col("n")).cast("long").as("n"))
+  }
 
   /** MERGEABLE QUANTILE TRACKING — percentiles answered FROM a rolled-up
     * [[histogramStore]], so quantile monitoring composes with the same
@@ -262,7 +280,8 @@ object Stats {
     * (exact per-group quantiles need the group's order —
     * [[groupedQuantiles]]' sort — and approx sketches here aren't
     * engine-replayable; the histogram is both mergeable AND exact about
-    * which bin the rank lands in).
+    * which bin the rank lands in). A keyed store answers per key, each
+    * group ranked against its own counts.
     *
     * Rank is the percentile_disc convention in INTEGER arithmetic —
     * rk = (q_e6·N + 999999) div 10⁶, the [[groupedQuantiles]] rational
@@ -271,56 +290,53 @@ object Stats {
     * lo_e6 + (bin·width_e6) div nBins (all longs — no float edge
     * arithmetic to diverge between engines). ERROR CONTRACT: the true
     * quantile lies in [edge_lo_e6, edge_hi_e6] — one bin width, set by
-    * the grid you chose at store time.
+    * the grid you chose at store time. Loud contracts: grid membership
+    * and N ≤ 9·10¹² per group.
     *
-    * Scale shape: the store is ≤ nBins rows BY ENFORCED contract
-    * (out-of-grid bins refuse loudly), so the cumulative window is a
-    * bounded single-partition pass over a broadcast-sized frame — the
+    * Scale shape: each group's slice is ≤ nBins rows BY ENFORCED
+    * contract (out-of-grid bins refuse loudly), so the cumulative
+    * window — partitioned by the key, a single partition for the global
+    * store — is a bounded pass over a frame of groups × nBins rows; the
     * corpus-sized work already happened in [[histogramStore]]'s one
     * groupBy per batch.
     *
-    * Returns (q_e6, n_total, rk, bin, edge_lo_e6, edge_hi_e6), one row
-    * per requested quantile (empty store → empty result).
+    * Returns ([k,] q_e6, n_total, rk, bin, edge_lo_e6, edge_hi_e6), one
+    * row per (group, requested quantile) (empty store → empty result).
     */
   def quantilesFromHistogramStore(store: DataFrame, lo: Double, hi: Double,
       nBins: Int, qE6: Seq[Long]): DataFrame = {
     require(nBins >= 2 && nBins <= 100000 && hi > lo,
       s"need 2 <= nBins <= 100000 and hi > lo, got ($lo, $hi, $nBins)")
-    require(qE6.nonEmpty && qE6.forall(q => q > 0 && q <= 1000000L),
-      s"quantiles must be in (0, 1000000] millionths: $qE6")
+    requireQuantiles(qE6)
     val loE6 = Math.round(lo * 1e6)
     val widthE6 = Math.round((hi - lo) * 1e6)
     require(widthE6 <= Long.MaxValue / nBins && math.abs(loE6) <=
       Long.MaxValue - widthE6,
       s"grid exceeds micro-unit long range: lo=$lo hi=$hi nBins=$nBins")
-    import org.apache.spark.sql.expressions.Window
-    val s = store
-      .select(expr(
+    val keys = storeKeys(store).map(col)
+    val perKey = Window.partitionBy(keys: _*)
+    val cum = store
+      .select(keys :+ expr(
         s"IF(bin >= 0 AND bin < $nBins, bin, assert_true(false, " +
           s"'quantilesFromHistogramStore: bin outside [0, $nBins) — " +
           "the shared grid contract; rebuild the store'))")
-        .cast("int").as("bin"), col("n").cast("long").as("n"))
-      .groupBy("bin").agg(sum("n").as("n"))
-    val cum = s
-      .withColumn("cum", sum("n").over(Window.orderBy("bin")
+        .cast("int").as("bin") :+ col("n").cast("long").as("n"): _*)
+      .groupBy(keys :+ col("bin"): _*).agg(sum("n").as("n"))
+      .withColumn("cum", sum("n").over(perKey.orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n_total", sum("n").over(
-        Window.partitionBy(lit(1)))) // <= nBins rows by the loud contract
+      .withColumn("n_total", sum("n").over(perKey))
       .withColumn("n_total", expr(
         "IF(n_total <= 9000000000000L, n_total, assert_true(false, " +
-          "'quantilesFromHistogramStore: total count exceeds 9*10^12 — " +
+          "'quantilesFromHistogramStore: a group exceeds 9*10^12 counts — " +
           "q_e6 * N would wrap; split the store'))").cast("long"))
-    val qs = store.sparkSession.range(1)
-      .select(explode(array(qE6.map(lit): _*)).as("q_e6"))
-    cum.crossJoin(broadcast(qs))
-      .withColumn("rk", expr("(q_e6 * n_total + 999999) div 1000000"))
+    withQuantileRanks(cum, qE6)
       .where(col("cum") >= col("rk") && col("cum") - col("n") < col("rk"))
-      .select(col("q_e6"), col("n_total"), col("rk"),
+      .select(keys ++ Seq(col("q_e6"), col("n_total"), col("rk"),
         col("bin").cast("long").as("bin"),
         expr(s"${loE6}L + (CAST(bin AS BIGINT) * ${widthE6}L) div ${nBins}L")
           .as("edge_lo_e6"),
         expr(s"${loE6}L + ((CAST(bin AS BIGINT) + 1L) * ${widthE6}L) " +
-          s"div ${nBins}L").as("edge_hi_e6"))
+          s"div ${nBins}L").as("edge_hi_e6")): _*)
   }
 
   /** WINSORIZE by STORED percentiles — the outlier-clipping
@@ -329,102 +345,76 @@ object Stats {
     * the pLow bin's LOWER edge and the pHigh bin's UPPER edge from
     * [[quantilesFromHistogramStore]] (conservative outward — a value
     * inside either boundary bin is never moved), so the whole verb is
-    * one broadcast of a 1-row bounds frame + a stateless map over the
+    * one broadcast of a small bounds frame + a stateless map over the
     * corpus. Values quantize to micro-units by the cents convention
     * (round(v·10⁶) — both engines round identically on the clean
     * inputs the convention covers); a NULL value yields NULL quantized
-    * and winsorized columns (never silently pinned to a bound —
-    * Spark's greatest/least skip NULLs, guarded here). Bound error =
-    * one bin width each side, the store's documented contract.
+    * and winsorized columns (never silently pinned to a bound). Bound
+    * error = one bin width each side, the store's documented contract.
     *
-    * Returns the input plus (`<valueCol>_e6`, `<valueCol>_winsor_e6`,
-    * `<valueCol>_clipped`).
-    */
-  def winsorizeByHistogramStore(df: DataFrame, valueCol: String,
-      store: DataFrame, lo: Double, hi: Double, nBins: Int,
-      pLowE6: Long, pHighE6: Long): DataFrame = {
-    require(pLowE6 < pHighE6,
-      s"winsorize needs pLow < pHigh (got $pLowE6, $pHighE6)")
-    val qs = quantilesFromHistogramStore(store, lo, hi, nBins,
-      Seq(pLowE6, pHighE6))
-    // an EMPTY store answers no quantiles — without the guard the NULL
-    // bounds row would make every value pass through with
-    // clipped=false, the silent-no-op failure mode the loud-contract
-    // rule exists to prevent
-    val bounds = qs.agg(
-        min(when(col("q_e6") === lit(pLowE6), col("edge_lo_e6")))
-          .as("__wlo0"),
-        min(when(col("q_e6") === lit(pHighE6), col("edge_hi_e6")))
-          .as("__whi0"))
-      .select(
-        expr("IF(__wlo0 IS NOT NULL AND __whi0 IS NOT NULL, __wlo0, " +
-          "assert_true(false, 'winsorizeByHistogramStore: the store " +
-          "answered no quantiles (empty or mismatched grid) — clipping " +
-          "would silently no-op'))").cast("long").as("__wlo"),
-        expr("IF(__wlo0 IS NOT NULL AND __whi0 IS NOT NULL, __whi0, " +
-          "assert_true(false, 'winsorizeByHistogramStore: the store " +
-          "answered no quantiles (empty or mismatched grid) — clipping " +
-          "would silently no-op'))").cast("long").as("__whi"))
-    val vE6 = s"CAST(round(`${valueCol.replace("`", "``")}` * 1000000) AS bigint)"
-    df.crossJoin(broadcast(bounds))
-      .withColumn(s"${valueCol}_e6", expr(vE6))
-      .withColumn(s"${valueCol}_winsor_e6",
-        // Spark's greatest/least SKIP nulls — an unguarded clamp would
-        // quietly pin a NULL value to the lower bound
-        when(col(s"${valueCol}_e6").isNotNull,
-          least(greatest(col(s"${valueCol}_e6"), col("__wlo")),
-            col("__whi"))))
-      .withColumn(s"${valueCol}_clipped",
-        col(s"${valueCol}_e6") =!= col(s"${valueCol}_winsor_e6"))
-      .drop("__wlo", "__whi")
-  }
-
-  /** GROUPED winsorize — per-key clip bands off the GROUPED rollup
-    * ("clip each language's lengths to its own [p10, p90]"): the
-    * [[winsorizeByHistogramStore]] compose per group, bounds from
-    * [[groupedQuantilesFromStore]] joined back broadcast (the bounds
-    * frame is ≤ groups rows). Coverage is explicit, not silent: rows
+    * A keyed store clips each `keyCol` group to its OWN band ("clip each
+    * language's lengths to its own [p10, p90]"), its bounds joined back
+    * broadcast (≤ groups rows). Coverage is explicit, not silent: rows
     * whose group has NO store entry pass through UNCLIPPED with
-    * `calibrated = false` (a new language appearing mid-stream must
-    * not kill the pipeline, but it must not pretend to be clipped
-    * either); an entirely empty store still refuses loudly — every
-    * row uncalibrated is the silent no-op, not a coverage state.
-    * NULL values yield NULL outputs, never a pin.
+    * `calibrated = false` (a new language appearing mid-stream must not
+    * kill the pipeline, but it must not pretend to be clipped either);
+    * the global form has one band and every row is calibrated. A store
+    * that answers no quantiles at all (empty or a mismatched grid)
+    * refuses at call time — every row uncalibrated is the silent no-op,
+    * not a coverage state — as does a `keyCol` that does not match the
+    * store's shape.
     *
     * Returns the input plus (`<valueCol>_e6`, `<valueCol>_winsor_e6`,
     * `<valueCol>_clipped`, `calibrated`).
     */
-  def winsorizeByGroupedStore(df: DataFrame, keyCol: String,
-      valueCol: String, store: DataFrame, lo: Double, hi: Double,
-      nBins: Int, pLowE6: Long, pHighE6: Long): DataFrame = {
+  def winsorizeByHistogramStore(df: DataFrame, valueCol: String,
+      store: DataFrame, lo: Double, hi: Double, nBins: Int,
+      pLowE6: Long, pHighE6: Long,
+      keyCol: Option[String] = None): DataFrame = {
     require(pLowE6 < pHighE6,
       s"winsorize needs pLow < pHigh (got $pLowE6, $pHighE6)")
-    val qs = groupedQuantilesFromStore(store, lo, hi, nBins,
-      Seq(pLowE6, pHighE6))
-    val bounds = qs.groupBy("k").agg(
-      min(when(col("q_e6") === lit(pLowE6), col("edge_lo_e6")))
-        .as("__wlo"),
-      min(when(col("q_e6") === lit(pHighE6), col("edge_hi_e6")))
-        .as("__whi"))
-    require(!bounds.isEmpty,
-      "winsorizeByGroupedStore: the store answered no quantiles for " +
+    val keys = storeKeys(store)
+    require(keys.nonEmpty == keyCol.isDefined,
+      s"winsorizeByHistogramStore: keyCol $keyCol does not match the " +
+        s"store's shape (${store.columns.mkString(", ")}) — a keyed " +
+        "(k, bin, n) store needs keyCol, a (bin, n) store takes none")
+    val bounds = quantilesFromHistogramStore(store, lo, hi, nBins,
+        Seq(pLowE6, pHighE6))
+      .groupBy(keys.map(col): _*).agg(
+        min(when(col("q_e6") === lit(pLowE6), col("edge_lo_e6"))).as("__wlo"),
+        min(when(col("q_e6") === lit(pHighE6), col("edge_hi_e6"))).as("__whi"))
+      // the global aggregate answers one all-NULL row over an empty store
+      .where(col("__wlo").isNotNull && col("__whi").isNotNull)
+    // ≤ groups rows, read once: the refusal and the broadcast band both
+    // use them, so the store's quantile pass runs once per call
+    val rows = bounds.collect()
+    require(rows.nonEmpty,
+      "winsorizeByHistogramStore: the store answered no quantiles for " +
         "any group (empty or mismatched grid) — clipping would " +
         "silently no-op everywhere")
-    val vE6 = s"CAST(round(`${valueCol.replace("`", "``")}` * 1000000) AS bigint)"
-    df.withColumn("__wk", col(keyCol).cast("string"))
-      .join(broadcast(bounds.withColumnRenamed("k", "__wk")),
-        Seq("__wk"), "left")
-      .withColumn(s"${valueCol}_e6", expr(vE6))
+    val band = broadcast(df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), bounds.schema))
+    val banded = keyCol.fold(df.crossJoin(band))(kc =>
+      df.withColumn("__wk", literalCol(kc).cast("string"))
+        .join(band.withColumnRenamed("k", "__wk"), Seq("__wk"), "left"))
+    val (e6, winsor) = (s"${valueCol}_e6", s"${valueCol}_winsor_e6")
+    banded
+      .withColumn(e6, scaledLong(valueCol, 1000000))
+      // Spark's greatest/least SKIP nulls: an uncalibrated row (NULL
+      // bounds) passes through unclipped, and the isNotNull guard keeps
+      // a NULL value from being pinned to a bound
+      .withColumn(winsor, when(literalCol(e6).isNotNull,
+        least(greatest(literalCol(e6), col("__wlo")), col("__whi"))))
+      .withColumn(s"${valueCol}_clipped", literalCol(e6) =!= literalCol(winsor))
       .withColumn("calibrated", col("__wlo").isNotNull)
-      .withColumn(s"${valueCol}_winsor_e6",
-        when(col(s"${valueCol}_e6").isNull, lit(null).cast("long"))
-          .when(!col("calibrated"), col(s"${valueCol}_e6"))
-          .otherwise(least(greatest(col(s"${valueCol}_e6"),
-            col("__wlo")), col("__whi"))))
-      .withColumn(s"${valueCol}_clipped",
-        col(s"${valueCol}_e6") =!= col(s"${valueCol}_winsor_e6"))
       .drop("__wk", "__wlo", "__whi")
   }
+
+  /** `valueCol` × `scale`, rounded half away from zero to a long — the
+    * cents (100) and micro-unit (10⁶) conventions. The column is read
+    * by its literal name, so a name with a dot or backtick is safe. */
+  private def scaledLong(valueCol: String, scale: Int): Column =
+    round(literalCol(valueCol) * scale).cast("bigint")
 
   /** COARSEN a histogram store to a wider grid — the only EXACT grid
     * evolution (refining would need the raw data back): bins merge in
@@ -434,9 +424,8 @@ object Stats {
     * rescanning history. `nBins % factor == 0` required (a partial
     * last run would silently widen the top bin's span); quantile reads
     * off the coarsened store carry the proportionally wider one-bin
-    * error, by the [[quantilesFromHistogramStore]] contract. Works for
-    * the grouped (k, bin, n) form too — the optional key column passes
-    * through the regroup.
+    * error, by the [[quantilesFromHistogramStore]] contract. A keyed
+    * store regroups per key.
     */
   def coarsenHistogramStore(store: DataFrame, nBins: Int,
       factor: Int): DataFrame = {
@@ -444,132 +433,28 @@ object Stats {
       s"coarsenHistogramStore: need factor >= 1 dividing nBins " +
         s"(got nBins=$nBins, factor=$factor) — a partial last run " +
         "would silently widen the top bin")
-    val keyed = store.columns.contains("k")
-    val binned = store.withColumn("bin", expr(
-      s"IF(bin >= 0 AND bin < $nBins, CAST(bin div $factor AS int), " +
-        s"assert_true(false, 'coarsenHistogramStore: bin outside " +
-        s"[0, $nBins) — the shared grid contract'))"))
-    val grouped =
-      if (keyed) binned.groupBy("k", "bin")
-      else binned.groupBy("bin")
-    grouped.agg(sum(col("n")).cast("long").as("n"))
-  }
-
-  /** GROUPED histogram store — the per-key form of [[histogramStore]]:
-    * one fixed-grid histogram per group as a narrow (k, bin, n) frame,
-    * exactly mergeable per (k, bin) — so per-language/per-source value
-    * distributions roll up through the same day/partition discipline
-    * and [[groupedQuantilesFromStore]] answers "p95 length per
-    * language" over any accumulated range without rescanning raw data.
-    * Same clamp-before-cast outlier handling as the global form; NULL
-    * keys drop (a NULL group is not a trackable series).
-    */
-  def groupedHistogramStore(df: DataFrame, keyCol: String,
-      valueCol: String, lo: Double, hi: Double, nBins: Int = 10)
-      : DataFrame = {
-    require(nBins >= 2 && hi > lo, s"need nBins >= 2 and hi > lo")
-    val raw = (col(valueCol).cast("double") - lit(lo)) * lit(nBins) / lit(hi - lo)
-    df.filter(col(valueCol).isNotNull && col(keyCol).isNotNull)
-      .select(col(keyCol).cast("string").as("k"),
-        floor(least(lit((nBins - 1).toDouble), greatest(lit(0.0), raw)))
-          .cast("int").as("bin"))
-      .groupBy("k", "bin").agg(count(lit(1)).as("n"))
-  }
-
-  /** Merge a batch's [[groupedHistogramStore]] into the accumulated
-    * store — counts add per (k, bin); exact, order-free.
-    */
-  def updateGroupedHistogramStore(store: DataFrame, batch: DataFrame)
-      : DataFrame =
-    store.select(col("k"), col("bin"), col("n"))
-      .unionByName(batch.select(col("k"), col("bin"), col("n")))
-      .groupBy("k", "bin").agg(sum(col("n")).cast("long").as("n"))
-
-  /** Per-group quantiles FROM a grouped histogram store — the
-    * [[quantilesFromHistogramStore]] contract per key: integer
-    * percentile_disc rank (q_e6·n_total + 999999) div 10⁶ against the
-    * group's cumulative bin counts, exact micro-unit edges, error = one
-    * bin width. Same loud contracts (grid membership, per-group
-    * N ≤ 9·10¹²).
-    *
-    * Scale shape: the cumulative sum is a window PARTITIONED BY GROUP
-    * over a frame bounded by groups × nBins (each group's slice ≤
-    * nBins rows by the enforced grid guard) — no partition-less
-    * window, no corpus-sized sort; the corpus-scale work happened in
-    * the per-batch groupBy.
-    *
-    * Returns (k, q_e6, n_total, rk, bin, edge_lo_e6, edge_hi_e6).
-    */
-  def groupedQuantilesFromStore(store: DataFrame, lo: Double, hi: Double,
-      nBins: Int, qE6: Seq[Long]): DataFrame = {
-    require(nBins >= 2 && nBins <= 100000 && hi > lo,
-      s"need 2 <= nBins <= 100000 and hi > lo, got ($lo, $hi, $nBins)")
-    require(qE6.nonEmpty && qE6.forall(q => q > 0 && q <= 1000000L),
-      s"quantiles must be in (0, 1000000] millionths: $qE6")
-    val loE6 = Math.round(lo * 1e6)
-    val widthE6 = Math.round((hi - lo) * 1e6)
-    require(widthE6 <= Long.MaxValue / nBins && math.abs(loE6) <=
-      Long.MaxValue - widthE6,
-      s"grid exceeds micro-unit long range: lo=$lo hi=$hi nBins=$nBins")
-    import org.apache.spark.sql.expressions.Window
-    val s = store
-      .select(col("k"), expr(
-        s"IF(bin >= 0 AND bin < $nBins, bin, assert_true(false, " +
-          s"'groupedQuantilesFromStore: bin outside [0, $nBins) — " +
-          "the shared grid contract; rebuild the store'))")
-        .cast("int").as("bin"), col("n").cast("long").as("n"))
-      .groupBy("k", "bin").agg(sum("n").as("n"))
-    val byK = Window.partitionBy("k")
-    val cum = s
-      .withColumn("cum", sum("n").over(byK.orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n_total", sum("n").over(byK))
-      .withColumn("n_total", expr(
-        "IF(n_total <= 9000000000000L, n_total, assert_true(false, " +
-          "'groupedQuantilesFromStore: a group exceeds 9*10^12 counts — " +
-          "q_e6 * N would wrap; split the store'))").cast("long"))
-    val qs = store.sparkSession.range(1)
-      .select(explode(array(qE6.map(lit): _*)).as("q_e6"))
-    cum.crossJoin(broadcast(qs))
-      .withColumn("rk", expr("(q_e6 * n_total + 999999) div 1000000"))
-      .where(col("cum") >= col("rk") && col("cum") - col("n") < col("rk"))
-      .select(col("k"), col("q_e6"), col("n_total"), col("rk"),
-        col("bin").cast("long").as("bin"),
-        expr(s"${loE6}L + (CAST(bin AS BIGINT) * ${widthE6}L) div ${nBins}L")
-          .as("edge_lo_e6"),
-        expr(s"${loE6}L + ((CAST(bin AS BIGINT) + 1L) * ${widthE6}L) " +
-          s"div ${nBins}L").as("edge_hi_e6"))
+    store.withColumn("bin", expr(
+        s"IF(bin >= 0 AND bin < $nBins, CAST(bin div $factor AS int), " +
+          s"assert_true(false, 'coarsenHistogramStore: bin outside " +
+          s"[0, $nBins) — the shared grid contract'))"))
+      .groupBy(perBin(storeKeys(store)): _*)
+      .agg(sum(col("n")).cast("long").as("n"))
   }
 
   /** Drift of a fresh batch histogram against a persisted baseline
     * store — [[driftNumeric]] with the baseline side already reduced to
-    * counts, so the raw baseline data is never rescanned.
+    * counts, so the raw baseline data is never rescanned: enumerate the
+    * full grid, join both (bin, n) count frames, one PSI₂ term per bin.
     */
   def driftAgainstStore(store: DataFrame, batch: DataFrame,
-      nBins: Int): DataFrame =
-    driftFromCounts(store, batch, nBins)
-
-  /** Shared drift tail over two (bin, n) count frames: enumerate the
-    * full grid, smooth, one PSI₂ term per bin.
-    */
-  private def driftFromCounts(aCounts: DataFrame, bCounts: DataFrame,
       nBins: Int): DataFrame = {
-    val a = aCounts.select(col("bin"), col("n").as("raw_a"))
-    val b = bCounts.select(col("bin"), col("n").as("raw_b"))
-    val spark = aCounts.sparkSession
+    val spark = store.sparkSession
     import spark.implicits._
-    val bins = spark.createDataset(0 until nBins).toDF("bin")
-    val joined = bins
-      .join(broadcast(a), Seq("bin"), "left")
-      .join(broadcast(b), Seq("bin"), "left")
-      .select(col("bin"),
-        (coalesce(col("raw_a"), lit(0L)) + 1L).as("n_a"),
-        (coalesce(col("raw_b"), lit(0L)) + 1L).as("n_b"))
-      .withColumn("__na", sum(col("n_a")).over())
-      .withColumn("__nb", sum(col("n_b")).over())
-    withPsi2E9(joined)
-      .select(col("bin"), col("n_a"), col("n_b"), col("psi2_e9"))
-      .orderBy("bin")
+    psiFromCounts(spark.createDataset(0 until nBins).toDF("bin")
+      .join(broadcast(store.select(col("bin"), col("n").as("raw_a"))),
+        Seq("bin"), "left")
+      .join(broadcast(batch.select(col("bin"), col("n").as("raw_b"))),
+        Seq("bin"), "left"), "bin")
   }
 
   /** Categorical distribution drift between two snapshots: per-value
@@ -607,17 +492,9 @@ object Stats {
     } catch {
       case t: Throwable => a0.unpersist(); b0.unpersist(); throw t
     }
-    val a = a0.select(col("value"), col("c").as("raw_a"))
-    val b = b0.select(col("value"), col("c").as("raw_b"))
-    val joined = a.join(b, Seq("value"), "full")
-      .select(col("value"),
-        (coalesce(col("raw_a"), lit(0L)) + 1L).as("n_a"),
-        (coalesce(col("raw_b"), lit(0L)) + 1L).as("n_b"))
-      .withColumn("__na", sum(col("n_a")).over())
-      .withColumn("__nb", sum(col("n_b")).over())
-    val out = withPsi2E9(joined)
-      .select(col("value"), col("n_a"), col("n_b"), col("psi2_e9"))
-      .orderBy("value")
+    val out = psiFromCounts(a0.select(col("value"), col("c").as("raw_a"))
+        .join(b0.select(col("value"), col("c").as("raw_b")), Seq("value"), "full"),
+        "value")
       .localCheckpoint(eager = true)
     a0.unpersist(); b0.unpersist()
     out
@@ -645,14 +522,22 @@ object Stats {
     * over [[kAnonymityClasses]].
     */
   def kAnonymity(df: DataFrame, quasiCols: Seq[String], k: Long): DataFrame =
-    kAnonymityClasses(df, quasiCols, k)
-      .agg(
-        count(lit(1)).as("n_classes"),
-        sum(col("class_size")).cast("long").as("n_records"),
-        sum(when(col("risky"), 1L).otherwise(0L)).as("n_risky_classes"),
-        sum(when(col("risky"), col("class_size")).otherwise(0L)).cast("long")
-          .as("n_risky_records"),
-        min(col("class_size")).as("achieved_k"))
+    auditSummary(kAnonymityClasses(df, quasiCols, k), "class_size", "achieved_k")
+
+  /** The privacy-audit summary of a (…, class_size, [stat,] risky) class
+    * frame, shared by [[kAnonymity]] and [[lDiversity]]: class and record
+    * counts, the risky classes and their records, and `achieved` =
+    * min(`statCol`) — the level the dataset provably reaches.
+    */
+  private def auditSummary(classes: DataFrame, statCol: String,
+      achieved: String): DataFrame =
+    classes.agg(
+      count(lit(1)).as("n_classes"),
+      sum(col("class_size")).cast("long").as("n_records"),
+      sum(when(col("risky"), 1L).otherwise(0L)).as("n_risky_classes"),
+      sum(when(col("risky"), col("class_size")).otherwise(0L)).cast("long")
+        .as("n_risky_records"),
+      min(col(statCol)).as(achieved))
 
   /** l-DIVERSITY equivalence classes — the standard follow-up to
     * [[kAnonymityClasses]] (Machanavajjhala et al. 2007, "l-Diversity:
@@ -685,14 +570,8 @@ object Stats {
     */
   def lDiversity(df: DataFrame, quasiCols: Seq[String],
       sensitiveCol: String, l: Long): DataFrame =
-    lDiversityClasses(df, quasiCols, sensitiveCol, l)
-      .agg(
-        count(lit(1)).as("n_classes"),
-        sum(col("class_size")).cast("long").as("n_records"),
-        sum(when(col("risky"), 1L).otherwise(0L)).as("n_risky_classes"),
-        sum(when(col("risky"), col("class_size")).otherwise(0L)).cast("long")
-          .as("n_risky_records"),
-        min(col("l_distinct")).as("achieved_l"))
+    auditSummary(lDiversityClasses(df, quasiCols, sensitiveCol, l),
+      "l_distinct", "achieved_l")
 
   /** GROUPED QUANTILES — per-group order statistics, the calibration step
     * behind per-language/per-source quality cutoffs ("keep the top 10%
@@ -716,21 +595,17 @@ object Stats {
   def groupedQuantiles(df: DataFrame, groupCol: String, valueCol: String,
       qE6: Seq[Long], exact: Boolean = false,
       approxAccuracy: Int = 10000): DataFrame = {
-    require(qE6.nonEmpty && qE6.forall(q => q > 0 && q <= 1000000L),
-      s"quantiles must be in (0, 1000000] millionths: $qE6")
+    requireQuantiles(qE6)
     val base = df
       .select(col(groupCol).as("grp"), col(valueCol).cast("double").as("v"))
       .filter(col("v").isNotNull)
     if (exact) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("grp").orderBy("v")
-      val counts = base.groupBy("grp").agg(count(lit(1)).as("n"))
-      base
-        .withColumn("rk", row_number().over(w))
-        .join(counts, Seq("grp"))
-        .crossJoin(broadcast(df.sparkSession.range(1)
-          .select(explode(array(qE6.map(lit): _*)).as("q_e6"))))
-        .filter(col("rk") === expr("(q_e6 * n + 999999) div 1000000"))
+      val counts = base.groupBy("grp").agg(count(lit(1)).as("n_total"))
+      withQuantileRanks(base
+          .withColumn("__pos", row_number().over(
+            Window.partitionBy("grp").orderBy("v")))
+          .join(counts, Seq("grp")), qE6)
+        .filter(col("__pos") === col("rk"))
         .select(col("grp"), col("q_e6"), col("v").as("value"))
         .orderBy("grp", "q_e6")
     } else {
@@ -745,6 +620,22 @@ object Stats {
         .orderBy("grp", "q_e6")
     }
   }
+
+  /** The quantile-list contract of [[groupedQuantiles]] and
+    * [[quantilesFromHistogramStore]]: quantiles in MILLIONTHS, each in
+    * (0, 10⁶]. */
+  private def requireQuantiles(qE6: Seq[Long]): Unit =
+    require(qE6.nonEmpty && qE6.forall(q => q > 0 && q <= 1000000L),
+      s"quantiles must be in (0, 1000000] millionths: $qE6")
+
+  /** `df` (carrying a per-group count `n_total`) crossed with the
+    * quantile list as a broadcast `q_e6` column, each row with its
+    * percentile_disc rank rk = (q_e6·n_total + 999999) div 10⁶ — ⌈q·n⌉
+    * in integer arithmetic, never a float rank. */
+  private def withQuantileRanks(df: DataFrame, qE6: Seq[Long]): DataFrame =
+    df.crossJoin(broadcast(df.sparkSession.range(1)
+        .select(explode(array(qE6.map(lit): _*)).as("q_e6"))))
+      .withColumn("rk", expr("(q_e6 * n_total + 999999) div 1000000"))
 
   /** MARKET-BASKET association pairs (Agrawal & Srikant VLDB 1994,
     * the 2-itemset core of Apriori): items co-occurring in one basket
@@ -917,8 +808,8 @@ object Stats {
         .cast("long"))
     def term(kc: Column, r: Column, c: Column): Column =
       when(kc === lit(0L), lit(0L)).otherwise(
-        kc * (graft.functions.GraftFunctions.ilog2FpCol(kc * n) -
-          graft.functions.GraftFunctions.ilog2FpCol(r * c)))
+        kc * (ilog2FpCol(kc * n) -
+          ilog2FpCol(r * c)))
     val core = lit(2L) * (term(k, r1, c1) + term(r1 - k, r1, n - c1) +
       term(c1 - k, n - r1, c1) + term(n - r1 - c1 + k, n - r1, n - c1))
     if (nullAboveN)
@@ -1016,8 +907,8 @@ object Stats {
     val scored = cells
       .join(broadcast(ma), "a").join(broadcast(mb), "b")
       .withColumn("n", lit(n))
-      .withColumn("__l1", graft.functions.GraftFunctions.ilog2FpCol(col("cnt") * col("n")))
-      .withColumn("__l2", graft.functions.GraftFunctions.ilog2FpCol(col("n_a") * col("n_b")))
+      .withColumn("__l1", ilog2FpCol(col("cnt") * col("n")))
+      .withColumn("__l2", ilog2FpCol(col("n_a") * col("n_b")))
       .withColumn("pmi_u20", col("__l1") - col("__l2"))
     (cells, scored)
   }
@@ -1052,7 +943,7 @@ object Stats {
   def benfordProfile(df: DataFrame, keyCol: String, valueCol: String)
       : DataFrame = {
     val base = df.select(col(keyCol).cast("string").as("k"),
-        expr(s"CAST(round(`$valueCol` * 100) AS bigint)").as("vc"))
+        scaledLong(valueCol, 100).as("vc"))
       .where(col("k").isNotNull && col("vc").isNotNull && col("vc") =!= 0L)
       .withColumn("digit", expr(
         "CAST(substring(CAST(abs(vc) AS string), 1, 1) AS bigint)"))

@@ -245,8 +245,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
         Seq((2L, hot)).toDF("vec_id", "embedding"), "embedding", okModel,
         thresholdPermille = 800).collect()
     }
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     assert(root(exScore).contains("dimension-scaled"))
     // an in-bound high-dimension corpus still scores exactly: the
     // identical 1000-dim vector hits at cosine 1
@@ -258,7 +256,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental embedding near-dup probes the vector store, no old-old") {
-    import spark.implicits._
     val emb = wh.loadTable("embeddings")
     val store = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
     // batch: exact copies of two stored vectors (cosine 1.0) + themselves

@@ -648,9 +648,7 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     val ex = intercept[Exception] {
       inc(df(slices(0)), store1).collect()
     }
-    def rootMsg(t: Throwable): String =
-      (t.getMessage + Option(t.getCause).map(rootMsg).getOrElse(""))
-    assert(rootMsg(ex).contains("append-order"),
+    assert(root(ex).contains("append-order"),
       s"expected the loud contract violation, got: ${ex.getMessage}")
   }
 
@@ -695,8 +693,6 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "l_e6", "b_e6", "seas", "rn", "last_us", "last_id")
     def msgOf(df: org.apache.spark.sql.DataFrame): String = {
       val ex = intercept[Exception] { df.collect() }
-      def root(t: Throwable): String =
-        t.getMessage + Option(t.getCause).map(root).getOrElse("")
       root(ex)
     }
     assert(msgOf(EventAnalytics.holtWintersForecast(
@@ -719,8 +715,6 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
 
   test("Holt-Winters verbs refuse a store of another slot count and name a bad parameter") {
     import spark.implicits._
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     // a store trained with 2 slots: forecasting it with 3 would index
     // past its seasonals, with 1 it would silently read the wrong slot
     val store = Seq((1L, 100L, -7L, Seq(5L, -3L), 4L, 1700000000000000L, 9L))
@@ -927,8 +921,6 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
         EventAnalytics.acfStore(b, "uid", "ts", "eid", "v", 4),
         a, "uid", "ts", "eid", "v", 4).collect()
     }
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     assert(root(ex).contains("append-order"))
     // the long-safe value contract raises, never wraps
     val hot = Seq((1L, 1L, ts(0), 40000.0)).toDF("eid", "uid", "ts", "v")
@@ -1017,8 +1009,6 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
         EventAnalytics.trendStore(b, "uid", "ts", "eid", "v"),
         a, "uid", "ts", "eid", "v").collect()
     }
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     assert(root(ex).contains("append-order"))
   }
 
@@ -1077,8 +1067,6 @@ class EventAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     val ex = intercept[Exception] {
       EventAnalytics.changepoint(hot, "uid", "ts", "eid", "v", 0L).collect()
     }
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     assert(root(ex).contains("segment contrast"))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.lang.ref.WeakReference
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite

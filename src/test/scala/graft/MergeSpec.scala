@@ -218,8 +218,6 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     assert((rep.getLong(0), rep.getLong(1), rep.getLong(2), rep.getLong(3),
       rep.getLong(4)) === ((5L, 2L, 3L, 2L, 1L)))
     // a NULL key anywhere in the request raises — malformed erasure list
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       Merge.forgetKeys(target,
         Seq(Some(1L), None).toDF("k"), Seq("k")).collect()

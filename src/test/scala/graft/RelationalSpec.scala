@@ -382,7 +382,6 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fuzzySelfPairs == the bipartite self join filtered to undirected pairs") {
-    import spark.implicits._
     val docs = wh.loadTable("documents")
       .filter(col("text").isNotNull && length(col("text")) >= 40)
       .filter(col("doc_id") < 120)
@@ -835,7 +834,6 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
 
   test("bloomPrefilteredJoin: coercible key types keep row-identity; cross-family refused") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // int keys vs long keys — the equi-join coerces them equal, and the
     // probe hash must agree (un-normalized xxhash64 hashes int and long
     // DIFFERENTLY and would silently drop every matching row)
@@ -1022,7 +1020,6 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     val hist = rows.filterNot(r => isNew(r._1)).toDF("id", "s")
     val batch = rows.filter(r => isNew(r._1)).toDF("id", "s")
     val store = Relational.fuzzyGramStore(hist, "id", "s", n = 3)
-    def key(r: Row) = (r.getLong(0), r.getLong(1))
     def row(r: Row) = (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5))
     val got = Relational.fuzzyJoinIncremental(batch, "id", "s", store, hist,
@@ -1044,6 +1041,44 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
       "sub-n-gram strings excluded on both paths")
     assert(full.exists(p => !isNew(p._1) && !isNew(p._2)),
       "one-shot has old-old pairs the incremental must not emit")
+  }
+
+  test("fuzzyJoinIncremental asks Spark's cache for no plan twice") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // a persist of a plan that is already cached (say, the same gram
+    // arrays under other column names) is a no-op that only logs this
+    // warning, and an unpersist of either frame drops the shared entry
+    val rows = IncrementalFixtures.fuzzyRows
+    val isNew = IncrementalFixtures.fuzzyIsNew _
+    val hist = rows.filterNot(r => isNew(r._1)).toDF("id", "s")
+    val batch = rows.filter(r => isNew(r._1)).toDF("id", "s")
+    val store = Relational.fuzzyGramStore(hist, "id", "s", n = 3)
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("cache-requests", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        logged.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    val n = try Relational.fuzzyJoinIncremental(batch, "id", "s", store, hist,
+        thresholdNum = 4, thresholdDen = 5, n = 3).count()
+      finally {
+        logger.removeAppender(appender)
+        logger.setLevel(level)
+        appender.stop()
+      }
+    assert(n > 0, "the fixture yields pairs")
+    val repeated = logged.toArray.toSeq.filter(_.toString.contains("already cached"))
+    assert(repeated.isEmpty, s"repeated cache requests: $repeated")
   }
 
   test("editDistanceJoinIncremental: a re-delivered history id supersedes its old row") {

@@ -401,8 +401,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(got(2L) === ((20L, 2L, 0L)), "identical vectors tie to min id")
     assert(got(3L) === ((30L, 1L, 0L)), "a singleton is its own medoid")
     // |component| > 1 violates the unit contract loudly
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       Similarity.clusterMedoid(
         Seq((1L, 1L, Seq(1.5f, 0.0f))).toDF("c", "id", "v"),
@@ -413,8 +411,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
 
   test("clusterMedoid: ragged dimensions and n*d overflow refuse loudly") {
     import spark.implicits._
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     // two members of one cluster with different dimensions: a silent
     // zip_with would NULL the score (NULL sorts first and would win
     // the argmin) — must refuse instead

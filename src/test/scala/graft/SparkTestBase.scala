@@ -36,6 +36,12 @@ trait SparkTestBase {
     e.union(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 
+  /** The messages of `t` and of its whole cause chain, concatenated: a
+    * refusal raised inside a Spark job arrives wrapped, so specs match
+    * its text here. */
+  def root(t: Throwable): String =
+    t.getMessage + Option(t.getCause).map(root).getOrElse("")
+
   def cachedRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** How many cached RDDs absent from `before` are still cached, polled

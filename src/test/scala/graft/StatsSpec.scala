@@ -73,8 +73,6 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     val four = Seq(("p", "r"), ("p", "s"), ("q", "r"), ("q", "s"))
       .toDF("a", "b")
     // 4 distinct cells > maxCells=3 → the categorical contract refuses
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       Stats.pmiProfile(four, "a", "b", maxCells = 3L).collect()
     }
@@ -98,15 +96,15 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     // group b: all 5.0 (single bin: band [0e6, 10e6])
     val corpus = ((0 until 100).map(v => ("a", v.toDouble)) ++
       Seq.fill(10)(("b", 5.0))).toDF("g", "v")
-    val store = Stats.groupedHistogramStore(corpus, "g", "v", 0.0, 100.0, 10)
+    val store = Stats.histogramStore(corpus, "v", 0.0, 100.0, 10, keyCol = Some("g"))
     val probe = Seq(("a", Some(95.0)), ("a", Some(50.0)), ("b", Some(95.0)),
       ("zz", Some(95.0)), ("a", Option.empty[Double])).toDF("g", "v")
-    val got = Stats.winsorizeByGroupedStore(probe, "g", "v", store,
-        0.0, 100.0, 10, 100000L, 900000L)
+    val got = Stats.winsorizeByHistogramStore(probe, "v", store,
+        0.0, 100.0, 10, 100000L, 900000L, keyCol = Some("g"))
       .collect().map(r => (r.getString(0),
         if (r.isNullAt(1)) None else Some(r.getDouble(1))) ->
-        ((if (r.isNullAt(4)) None else Some(r.getLong(4))),
-          r.getBoolean(3))).toMap
+        ((if (r.isNullAt(3)) None else Some(r.getLong(3))),
+          r.getBoolean(5))).toMap
     assert(got(("a", Some(95.0))) === ((Some(90000000L), true)),
       "group a clips at ITS p90 edge")
     assert(got(("a", Some(50.0))) === ((Some(50000000L), true)))
@@ -118,20 +116,16 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
       "NULL value: NULL out even in a calibrated group")
     // an entirely empty store refuses — all-uncalibrated is the silent
     // no-op, not a coverage state
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
-      Stats.winsorizeByGroupedStore(probe, "g", "v",
+      Stats.winsorizeByHistogramStore(probe, "v",
         Seq.empty[(String, Int, Long)].toDF("k", "bin", "n"),
-        0.0, 100.0, 10, 100000L, 900000L)
+        0.0, 100.0, 10, 100000L, 900000L, keyCol = Some("g"))
     }
     assert(root(ex).contains("no quantiles for any group"))
   }
 
   test("winsorizeByHistogramStore: an empty store refuses, never no-ops") {
     import spark.implicits._
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       Stats.winsorizeByHistogramStore(
         Seq(1.0, 2.0).toDF("v"),
@@ -154,8 +148,6 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     assert(got(2000000000L).isEmpty,
       "past 10^9 the tolerant mode reads NULL instead of killing the read")
     // the strict default still refuses
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       df.select(Stats.llrU20(col("k"), col("r"), col("c"),
         col("n")).as("llr")).collect()
@@ -198,8 +190,6 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
           r.getLong(5)))).toMap
     assert(gm === got, "merged store == one-shot, bin-exact")
     // a bin outside the grid contract refuses loudly
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       Stats.quantilesFromHistogramStore(
         Seq((7, 3L)).toDF("bin", "n"), 0.0, 10.0, 5, Seq(500000L)).collect()
@@ -214,9 +204,9 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     val vals = ((0 until 10).map(v => (Some("a"), v.toDouble)) ++
       (0 until 4).map(_ => (Some("b"), 0.0)) ++
       Seq((Option.empty[String], 5.0))).toDF("g", "v")
-    val store = Stats.groupedHistogramStore(vals, "g", "v", 0.0, 10.0, 5)
+    val store = Stats.histogramStore(vals, "v", 0.0, 10.0, 5, keyCol = Some("g"))
     assert(store.filter(col("k").isNull).count() === 0, "NULL keys drop")
-    val got = Stats.groupedQuantilesFromStore(store, 0.0, 10.0, 5,
+    val got = Stats.quantilesFromHistogramStore(store, 0.0, 10.0, 5,
         Seq(500000L, 1000000L))
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
@@ -228,10 +218,10 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
       "group b: all mass in bin 0, independent of group a")
     assert(got(("b", 1000000L)) === ((4L, 4L, 0L, 0L, 2000000L)))
     // mergeability per (k, bin)
-    val merged = Stats.updateGroupedHistogramStore(
-      Stats.groupedHistogramStore(vals.filter($"v" < 5), "g", "v", 0.0, 10.0, 5),
-      Stats.groupedHistogramStore(vals.filter($"v" >= 5), "g", "v", 0.0, 10.0, 5))
-    val gm = Stats.groupedQuantilesFromStore(merged, 0.0, 10.0, 5,
+    val merged = Stats.updateHistogramStore(
+      Stats.histogramStore(vals.filter($"v" < 5), "v", 0.0, 10.0, 5, keyCol = Some("g")),
+      Stats.histogramStore(vals.filter($"v" >= 5), "v", 0.0, 10.0, 5, keyCol = Some("g")))
+    val gm = Stats.quantilesFromHistogramStore(merged, 0.0, 10.0, 5,
         Seq(500000L, 1000000L))
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
@@ -316,8 +306,6 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException] {
       Stats.coarsenHistogramStore(store, 6, 4) // 4 does not divide 6
     }
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       Stats.coarsenHistogramStore(
         Seq((9, 1L)).toDF("bin", "n"), 6, 2).collect()
@@ -396,6 +384,41 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
       "the nine constants sum to exactly 10^6")
   }
 
+  test("benfordProfile and winsorize read a value column named with a backtick") {
+    import spark.implicits._
+    val df = Seq(("a", Some(1.0)), ("a", Some(0.25)), ("b", Some(-3.0)),
+      ("b", Option.empty[Double])).toDF("g", "amt`x")
+    val got = Stats.benfordProfile(df, "g", "amt`x").filter(col("cnt") > 0)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got === Set(("a", 1L, 1L), ("a", 2L, 1L), ("b", 3L, 1L)))
+    val store = Stats.histogramStore((0 until 10).map(_.toDouble).toDF("v"),
+      "v", 0.0, 10.0, 5)
+    val w = Stats.winsorizeByHistogramStore(df, "amt`x", store,
+        0.0, 10.0, 5, 100000L, 900000L)
+      .collect().map(r => (if (r.isNullAt(1)) None else Some(r.getDouble(1))) ->
+        (if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
+    assert(w === Map(Some(1.0) -> Some(1000000L), Some(0.25) -> Some(250000L),
+      Some(-3.0) -> Some(0L), None -> None))
+  }
+
+  test("winsorizeByHistogramStore: keyCol must match the store; global rows are calibrated") {
+    import spark.implicits._
+    val probe = Seq(("a", 1.0), ("b", 9.0)).toDF("g", "v")
+    val keyed = Stats.histogramStore(probe, "v", 0.0, 10.0, 5, keyCol = Some("g"))
+    val global = Stats.histogramStore(probe, "v", 0.0, 10.0, 5)
+    Seq(keyed -> None, global -> Some("g")).foreach { case (store, keyCol) =>
+      val ex = intercept[IllegalArgumentException] {
+        Stats.winsorizeByHistogramStore(probe, "v", store, 0.0, 10.0, 5,
+          100000L, 900000L, keyCol)
+      }
+      assert(ex.getMessage.contains("does not match the store's shape"))
+    }
+    val out = Stats.winsorizeByHistogramStore(probe, "v", global, 0.0, 10.0, 5,
+      100000L, 900000L)
+    assert(out.columns.last === "calibrated")
+    assert(out.collect().forall(_.getAs[Boolean]("calibrated")))
+  }
+
   test("approxDistinct stays within its rsd bound of the exact count") {
     val l = wh.loadTable("lineitem")
     val approx = Stats.approxDistinct(l, Seq("l_returnflag"), "l_orderkey", rsd = 0.02)
@@ -472,7 +495,7 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val df = Seq(("g1", "a"), ("g1", "a"), ("g1", "b"), ("g2", "c"))
       .toDF("g", "v")
-    val got = Stats.heavyHittersByGroup(df, Seq("g"), "v", k = 4)
+    val got = Stats.heavyHitters(df, "v", k = 4, groupCols = Seq("g"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(got === Set(("g1", "a", 2L), ("g1", "b", 1L), ("g2", "c", 1L)))
   }
@@ -762,7 +785,6 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("associationStore: two-batch merge reproduces the one-shot metrics") {
-    import spark.implicits._
     val li = wh.loadTable("lineitem").select("l_orderkey", "l_partkey")
     val s1 = Stats.associationStore(
       li.filter(col("l_orderkey") % 2 === 0), "l_orderkey", "l_partkey")

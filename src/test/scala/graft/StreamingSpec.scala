@@ -551,9 +551,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental simhash over foreachBatch: growing store == one-shot") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
-    import org.apache.spark.sql.functions.col
     val docs = wh.loadTable("documents").select("doc_id", "text")
       .filter($"doc_id" < 60)
     // stream the corpus in 3 slices; each batch dedups against the store
@@ -653,15 +651,15 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val rows = wh.loadTable("documents").select("lang", "n_chars")
       .collect().map(r => (r.getString(0), r.getLong(1).toDouble))
     val in = MemoryStream[(String, Double)]
-    var store = Stats.groupedHistogramStore(
+    var store = Stats.histogramStore(
         Seq.empty[(String, Double)].toDF("lang", "n_chars"),
-        "lang", "n_chars", 0.0, 4000.0, 100)
+        "n_chars", 0.0, 4000.0, 100, keyCol = Some("lang"))
       .localCheckpoint(true)
     val q = in.toDS().toDF("lang", "n_chars").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        store = Stats.updateGroupedHistogramStore(store,
-            Stats.groupedHistogramStore(batch, "lang", "n_chars",
-              0.0, 4000.0, 100))
+        store = Stats.updateHistogramStore(store,
+            Stats.histogramStore(batch, "n_chars",
+              0.0, 4000.0, 100, keyCol = Some("lang")))
           .localCheckpoint(true)
         ()
       }.start()
@@ -671,12 +669,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     q.stop()
     val qs = Seq(500000L, 900000L)
     def read(st: org.apache.spark.sql.DataFrame) =
-      Stats.groupedQuantilesFromStore(st, 0.0, 4000.0, 100, qs)
+      Stats.quantilesFromHistogramStore(st, 0.0, 4000.0, 100, qs)
         .collect().map(_.toSeq)
         .sortBy(r => (r.head.asInstanceOf[String], r(1).asInstanceOf[Long]))
-    val oneShot = read(Stats.groupedHistogramStore(
-      rows.toSeq.toDF("lang", "n_chars"), "lang", "n_chars",
-      0.0, 4000.0, 100))
+    val oneShot = read(Stats.histogramStore(
+      rows.toSeq.toDF("lang", "n_chars"), "n_chars",
+      0.0, 4000.0, 100, keyCol = Some("lang")))
     assert(read(store) === oneShot,
       "per-key percentiles off the streamed rollup == one-shot")
   }
@@ -1052,8 +1050,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       mem.addData(Event(1, ts(0), 1L, "m", 10.0), Event(2, ts(1), 1L, "m", -9.0))
       q1.processAllAvailable()
     } finally q1.stop()
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     for (m <- Seq(3, 1)) {
       val q = start(m)
       val ex = intercept[Exception] {

@@ -275,7 +275,6 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
 
   test("saveTableZordered: rows preserved, per-file boxes far tighter than natural") {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    import spark.implicits._
     val tmp = Files.createTempDirectory("graft-zorder").toString
     // 32x32 grid in random-ish row order (hash shuffle)
     val grid = spark.range(1024).select(
@@ -515,8 +514,6 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
     assert(w.listVersions("nv") === Seq(4L, 5L), "clean history kept")
     assert(w.loadTable("nv__forget_audit").count() === 2)
     // a NULL key refuses loudly BEFORE any version is touched
-    def root(t: Throwable): String =
-      t.getMessage + Option(t.getCause).map(root).getOrElse("")
     val ex = intercept[Exception] {
       w.forgetAndRewrite(tmp, "nv",
         Seq(Some(1), None).toDF("n_nationkey"), Seq("n_nationkey"))
@@ -598,7 +595,6 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("getSchema and loadTableStream resolve versioned tables") {
-    import org.apache.spark.sql.functions.col
     val tmp = Files.createTempDirectory("graft_ttv").toString
     val w = Warehouse(spark, tmp)
     val n = wh.loadTable("nation")
